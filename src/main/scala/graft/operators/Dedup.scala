@@ -517,15 +517,21 @@ object Dedup {
     fs.delete(tmp, true)
   }
 
+  /** The two `(dir, partCol)` stores of the two-table MinHash
+    * band-index layout — the shape [[compactIndexSegments]],
+    * [[autoCompactIndexSegments]] and [[recoverPendingSwap]] take.
+    */
+  private[graft] def minhashStores(path: String): Seq[(String, String)] =
+    Seq(s"$path/bands" -> "part", s"$path/sigs" -> "spart")
+
   /** [[compactIndexSegments]] over both tables of the two-table
     * MinHash band-index layout.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Int = {
-    val a = compactIndexSegments(spark, s"$path/bands", "part")
-    val b = compactIndexSegments(spark, s"$path/sigs", "spart")
-    math.max(a, b)
-  }
+                          path: String): Int =
+    minhashStores(path).map { case (dir, partCol) =>
+      compactIndexSegments(spark, dir, partCol)
+    }.max
 
   /** Auto-compaction policy (round 18): the streaming firewalls call
     * this at their natural quiescent point — after the AvailableNow
@@ -566,14 +572,6 @@ object Dedup {
     else 0
   }
 
-  /** [[autoCompactIndexSegments]] over the two-table MinHash layout. */
-  def autoCompactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Int = {
-    val a = autoCompactIndexSegments(spark, s"$path/bands", "part")
-    val b = autoCompactIndexSegments(spark, s"$path/sigs", "spart")
-    math.max(a, b)
-  }
-
   /** Complete a pending crashed compaction swap WITHOUT starting a
     * new merge. The firewalls call this BEFORE each stream invocation
     * (round 18): post-invocation auto-compaction alone would let a
@@ -599,14 +597,6 @@ object Dedup {
       fs.delete(tmp, true)
       false
     }
-  }
-
-  /** [[recoverPendingSwap]] over the two-table MinHash layout. */
-  def recoverPendingMinhashSwap(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Boolean = {
-    val a = recoverPendingSwap(spark, s"$path/bands", "part")
-    val b = recoverPendingSwap(spark, s"$path/sigs", "spart")
-    a || b
   }
 
   private def partOf(nParts: Int): Column =

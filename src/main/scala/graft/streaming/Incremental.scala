@@ -1,49 +1,126 @@
 package graft.streaming
 
-import graft.functions.TimeFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.{TextFns, TimeFns}
+import graft.operators.{Dedup, LanguageModel, Media, Similarity}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType,
+  StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Incremental / micro-batch execution (SURVEY §2.9): the reference is
   * cron-driven batch with hand-rolled cursors (`ingestion_cursors` +
-  * `startblock` resume). Structured Streaming subsumes that pattern:
-  * the checkpoint IS the cursor (exactly-once file offsets), and
-  * `Trigger.AvailableNow` gives "run as a job, process only what's
-  * new, stop" — the cron-friendly shape.
+  * `startblock` resume, `merlin_etl.py:159-175`). Structured Streaming
+  * subsumes that pattern: the checkpoint IS the cursor (exactly-once
+  * file offsets), and `Trigger.AvailableNow` gives "run as a job,
+  * process only what's new, stop" — the cron-friendly shape.
   *
-  * Two surfaces:
-  *  - [[ingestIncrement]]: file-source stream → 6h-bucket-partitioned
-  *    append, checkpointed. Re-running is a no-op until new files
-  *    arrive; each run appends exactly the delta. This is the
-  *    engine-native replacement for the reference's cursor loop.
-  *  - [[userCursors]]: arbitrary keyed state via mapGroupsWithState —
-  *    the running per-user max-event cursor (the same GREATEST-merge
-  *    semantics as `merlin_etl.py:159-175`, but inside the engine).
+  * Every stream this object runs to completion goes through one
+  * runner, [[runAvailableNow]], whose contract the per-stream docs do
+  * not restate:
+  *  - replay-safe `__batch` overwrite: `foreachBatch` is at-least-once
+  *    on side effects, so per-batch output lands under
+  *    `__batch=<batchId>/` with dynamic partition overwrite
+  *    ([[writeBatch]]) and a batch replayed after a crash between its
+  *    write and its checkpoint commit rewrites its own partitions
+  *    instead of duplicating rows (readers that don't want the
+  *    provenance column just don't select it). Index probes exclude
+  *    the current `__batch`, so a replay reproduces its original
+  *    decisions instead of colliding with its own appended rows.
+  *    [[ingestIncrement]], [[weightedReservoirStream]] and
+  *    [[certifiedTopKStream]] document their own sink layouts.
+  *  - recovery before start: any crashed compaction swap of the
+  *    stream's index stores is completed before the stream starts
+  *    ([[graft.operators.Dedup.recoverPendingSwap]]) — a replayed
+  *    batch must never probe a live tree missing merged segments.
+  *  - compaction after: once the stream ends, at its quiescent point,
+  *    each store is segment-merged when its committed batch count
+  *    reaches `spark.graft.index.autoCompactSegments`
+  *    ([[graft.operators.Dedup.autoCompactIndexSegments]]), bounding
+  *    the per-probe listing cost flat in stream lifetime.
+  *
+  * The composed firewalls ([[curationFirewallStream]],
+  * [[mediaFirewallStream]]) call the same per-batch step functions as
+  * the standalone firewalls, so a composed stage and its standalone
+  * stream cannot diverge. The keyed-state and windowed surfaces
+  * ([[heavyHittersStream]], [[streamingTop100]], [[userCursors]],
+  * [[slidingActivity]], …) return streaming frames for the caller to
+  * sink.
   */
 object Incremental {
+
+  private val DocsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+  private val EmbeddedDocsSchema = DocsSchema.add("embedding", ArrayType(FloatType))
+  private val PayloadSchema = StructType(Seq(
+    StructField("id", LongType), StructField("payload", BinaryType)))
+  private def vectorSchema(idCol: String, vecCol: String): StructType =
+    StructType(Seq(StructField(idCol, LongType),
+      StructField(vecCol, ArrayType(FloatType))))
+
+  /** The AvailableNow runner behind every stream this object runs to
+    * completion (contract in the object doc). `stores` are the
+    * stream's on-disk index stores as `(dir, partCol)`.
+    */
+  private def runAvailableNow(spark: SparkSession, srcDir: String,
+                              schema: StructType, checkpointDir: String,
+                              stores: Seq[(String, String)] = Nil)(
+                              body: (DataFrame, Long) => Unit): Unit = {
+    graft.plans.GraftExtensions.ensureRegistered(spark)
+    stores.foreach { case (dir, partCol) =>
+      Dedup.recoverPendingSwap(spark, dir, partCol)
+    }
+    spark.readStream.schema(schema).parquet(srcDir)
+      .writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .start()
+      .awaitTermination()
+    stores.foreach { case (dir, partCol) =>
+      Dedup.autoCompactIndexSegments(spark, dir, partCol)
+    }
+  }
+
+  /** The replay-safe micro-batch write: `df` lands under
+    * `dir/<partCols>/__batch=<batchId>/` with dynamic partition
+    * overwrite.
+    */
+  private def writeBatch(df: DataFrame, dir: String, batchId: Long,
+                         partCols: String*): Unit =
+    df.withColumn("__batch", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols :+ "__batch": _*).parquet(dir)
+
+  /** Existence probe through the Hadoop FileSystem API — a
+    * java.io.File check only sees the local filesystem, so on HDFS/S3
+    * an existing index would read as absent and its probe would
+    * silently admit duplicates.
+    */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** One micro-batch pass: consume new event files from `srcDir`,
     * append them to `destDir` partitioned by the 6h snapshot bucket,
     * checkpoint at `checkpointDir`, and stop when caught up.
+    * Re-running is a no-op until new files arrive; each run appends
+    * exactly the delta — the engine-native replacement for the
+    * reference's cursor loop.
     */
   def ingestIncrement(spark: SparkSession, srcDir: String, destDir: String,
-                      checkpointDir: String): Unit = {
-    val stream = spark.readStream.schema(graft.Tables.eventsSchema).parquet(srcDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+                      checkpointDir: String): Unit =
+    runAvailableNow(spark, srcDir, graft.Tables.eventsSchema, checkpointDir) {
+      (batch, _) =>
         batch.withColumn("bucket_unix", TimeFns.bucket6h(col("ts")))
           .write.mode("append").partitionBy("bucket_unix").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming verbatim-leak decontamination: consume new document
     * files from `srcDir`, drop every doc sharing an exact `k`-gram
-    * with the STATIC holdout, append survivors to `destDir` — the
+    * with the STATIC holdout, write survivors to `destDir` — the
     * "benchmark firewall" run continuously in front of a training-data
     * lake instead of as a batch sweep.
     *
@@ -52,9 +129,8 @@ object Incremental {
     * premise — the same premise as [[graft.operators.Decontam]]); each
     * micro-batch then runs the identical Bloom-prune → confirm-join →
     * anti-join composition via `foreachBatch`, so per-batch semantics
-    * are EXACTLY the batch operator's (exact at any fpp) and the
-    * checkpoint gives exactly-once file consumption. Stateless per
-    * batch — no streaming state beyond the source offsets.
+    * are EXACTLY the batch operator's (exact at any fpp). Stateless
+    * per batch — no streaming state beyond the source offsets.
     *
     * @param holdoutToks static (…, __toks) frame of held-out docs
     * @return survivors schema: (doc_id, text)
@@ -63,38 +139,22 @@ object Incremental {
                      holdoutToks: DataFrame, destDir: String,
                      checkpointDir: String, k: Int = 8,
                      fpp: Double = 0.01): Unit = {
-    import graft.functions.TextFns
     import graft.operators.Decontam
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // shared derivation with the batch operator — same gram unit,
     // same hash, same Bloom sizing (incl. the runtime-filter cap
     // raise), so stream and sweep can never diverge
     val holdoutGrams = Decontam.holdoutGramSet(holdoutToks, k)
     val nHoldout = math.max(holdoutGrams.count(), 1L)
     val bloom = Decontam.buildBloom(holdoutGrams, nHoldout, fpp)
-
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val leaked = Decontam.docGramHashes(
-            batch.select(col("doc_id"),
-              TextFns.tokens(col("text")).as("__toks")), k)
-          .filter(call_function("graft_bloom_contains", lit(bloom), col("gram")))
-          .join(holdoutGrams, Seq("gram"), "left_semi")
-          .select(col("doc_id")).distinct()
-        batch.join(leaked, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text"))
-          .write.mode("append").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      val leaked = Decontam.docGramHashes(
+          batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")), k)
+        .filter(call_function("graft_bloom_contains", lit(bloom), col("gram")))
+        .join(holdoutGrams, Seq("gram"), "left_semi")
+        .select(col("doc_id")).distinct()
+      writeBatch(batch.join(leaked, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("text")), destDir, batchId)
+    }
   }
 
   /** Streaming partial-copy decontamination — the winnow twin of
@@ -106,12 +166,7 @@ object Incremental {
     * the per-batch scan both go through [[graft.operators.Decontam
     * .docWinnowFps]], so stream and batch sweep can never diverge on
     * the fingerprint unit. Stateless beyond source offsets; the
-    * Bloom is built ONCE at query start. Survivors land partitioned
-    * by micro-batch id (`__batch=`) with dynamic overwrite —
-    * foreachBatch is at-least-once on side effects, so a replayed
-    * batch overwrites its own partition instead of duplicating rows
-    * (readers that don't want the provenance column just don't
-    * select it).
+    * Bloom is built ONCE at query start.
     *
     * No corpus-docfreq boilerplate cap here: a stream has no corpus
     * to measure frequency over — pre-compute the cap into
@@ -126,38 +181,22 @@ object Incremental {
                            checkpointDir: String, k: Int = 8, w: Int = 10,
                            minShared: Int = 1, fpp: Double = 0.01): Unit = {
     import graft.operators.Decontam
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val holdoutFps = Decontam.docWinnowFps(holdoutDocs, col("text"), k, w)
       .select(col("fp")).distinct().localCheckpoint()
     val nHoldout = math.max(holdoutFps.count(), 1L)
     val bloom = Decontam.buildBloom(
       holdoutFps.select(col("fp").as("gram")), nHoldout, fpp)
-
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val leaked = Decontam.docWinnowFps(batch, col("text"), k, w)
-          .filter(call_function("graft_bloom_contains", lit(bloom), col("fp")))
-          .join(holdoutFps, Seq("fp"), "left_semi")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") >= minShared)
-          .select(col("doc_id"))
-        batch.join(leaked, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      val leaked = Decontam.docWinnowFps(batch, col("text"), k, w)
+        .filter(call_function("graft_bloom_contains", lit(bloom), col("fp")))
+        .join(holdoutFps, Seq("fp"), "left_semi")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= minShared)
+        .select(col("doc_id"))
+      writeBatch(batch.join(leaked, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("text")), destDir, batchId)
+    }
   }
 
   /** Streaming model-based quality filter — the learned-classifier
@@ -167,8 +206,8 @@ object Incremental {
     * score and the draw are pure per-row expressions, so the whole
     * filter is STATELESS beyond source offsets and — because the
     * Pareto U comes from the content hash, not an RNG — a replayed
-    * batch makes the identical keep decision; combined with the
-    * `__batch=` dynamic-overwrite sink, the output is exactly-once.
+    * batch makes the identical keep decision, which is what makes
+    * the `__batch` overwrite exactly-once here.
     * Streaming keep set ≡ the batch filter over the same docs by
     * construction (the SAME `score`/`paretoKeep` columns — there is
     * no stream-specific scoring path to diverge).
@@ -180,29 +219,43 @@ object Incremental {
                           destDir: String, checkpointDir: String,
                           alpha: Double = 9.0): Unit = {
     import graft.operators.QualityClassifier
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("model_score", QualityClassifier.score(
-            graft.functions.TextFns.tokens(col("text")), weights, bias))
-          .filter(QualityClassifier.paretoKeep(
-            col("text"), col("model_score"), alpha))
-          .select(col("doc_id"), col("text"), col("model_score"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      writeBatch(batch
+        .withColumn("model_score", QualityClassifier.score(
+          TextFns.tokens(col("text")), weights, bias))
+        .filter(QualityClassifier.paretoKeep(
+          col("text"), col("model_score"), alpha))
+        .select(col("doc_id"), col("text"), col("model_score")), destDir, batchId)
+    }
+  }
+
+  /** Pin a frozen holdout once per stream call — semanticDecontam
+    * collects it per call, and a per-batch re-collect of an unchanging
+    * frame is waste.
+    */
+  private def freezeHoldout(holdout: DataFrame): DataFrame =
+    holdout.select(col("vec_id"), col("embedding")).localCheckpoint()
+
+  /** The frozen-holdout semantic decontamination step on an
+    * (`idCol`, embedding, …) frame, shared by [[semanticDecontamStream]]
+    * and [[curationFirewallStream]]'s stage 5: rows whose
+    * nearest-holdout cosine reaches `eps` drop.
+    */
+  private def semanticDecontamKeep(df: DataFrame, idCol: String,
+                                   frozenHoldout: DataFrame,
+                                   eps: Double): DataFrame = {
+    val keptIds = Similarity.semanticDecontam(
+        df.filter(col("embedding").isNotNull)
+          .select(col(idCol).as("vec_id"), col("embedding")),
+        frozenHoldout, eps)
+      .filter(col("kept")).select(col("vec_id").as(idCol))
+    // null-embedding arrivals PASS THROUGH rather than vanish: the
+    // scorer's inner join on the (null) nearest id would silently
+    // drop them, and a firewall must never silently lose data it
+    // cannot judge (the substrScrubStream null-text convention) —
+    // an unembeddable doc is not evidence of contamination
+    df.filter(col("embedding").isNull)
+      .unionByName(df.join(keptIds, Seq(idCol), "left_semi"))
   }
 
   /** Streaming semantic-decontamination firewall — the frozen-holdout
@@ -214,8 +267,7 @@ object Incremental {
     * argument) and every micro-batch scores through the same operator
     * call, so stream ≡ batch is by shared code, not reimplementation
     * (IncrementalSpec pins output ≡ batch-over-union). Stateless
-    * beyond source offsets; `__batch=` dynamic overwrite ⇒
-    * exactly-once on replay. The 100 TB shape: benchmark sets change
+    * beyond source offsets. The 100 TB shape: benchmark sets change
     * rarely — a NEW holdout means a new stream (and a batch back-scrub
     * of the already-admitted corpus), exactly like retraining the
     * quality/perplexity firewalls' frozen models.
@@ -225,39 +277,25 @@ object Incremental {
   def semanticDecontamStream(spark: SparkSession, srcDir: String,
                              holdout: DataFrame, eps: Double,
                              destDir: String, checkpointDir: String): Unit = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    val vecSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    // pin the holdout once — semanticDecontam collects it per call,
-    // and a per-batch re-collect of an unchanging frame is waste
-    val frozenHoldout = holdout
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
-    val q = spark.readStream.schema(vecSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // null-embedding arrivals PASS THROUGH rather than vanish: the
-        // scorer's inner join on the (null) nearest id would silently
-        // drop them, and a firewall must never silently lose data it
-        // cannot judge (the substrScrubStream null-text convention) —
-        // an unembeddable doc is not evidence of contamination
-        val scored = graft.operators.Similarity.semanticDecontam(
-          batch.filter(col("embedding").isNotNull), frozenHoldout, eps)
-        batch.filter(col("embedding").isNull)
-          .unionByName(batch.join(
-            scored.filter(col("kept")).select("vec_id"), Seq("vec_id"),
-            "left_semi"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
+    val frozenHoldout = freezeHoldout(holdout)
+    runAvailableNow(spark, srcDir, vectorSchema("vec_id", "embedding"),
+        checkpointDir) { (batch, batchId) =>
+      writeBatch(semanticDecontamKeep(batch, "vec_id", frozenHoldout, eps),
+        destDir, batchId)
+    }
+  }
+
+  /** The frozen-model perplexity ceiling on a tokenized
+    * (doc_id, __toks, …) frame, shared by [[perplexityFilterStream]]
+    * and [[curationFirewallStream]]'s stage 4: docs above `maxPpl`
+    * drop; docs with < 2 tokens carry no perplexity and pass.
+    */
+  private def perplexityKeep(toks: DataFrame, model: LanguageModel.BigramModel,
+                             maxPpl: Double): DataFrame = {
+    val dropped = LanguageModel.perplexityOf(
+        toks.select(col("doc_id"), col("__toks")), model)
+      .filter(col("ppl") > maxPpl).select(col("doc_id"))
+    toks.join(dropped, Seq("doc_id"), "left_anti")
   }
 
   /** Streaming perplexity firewall — the frozen-model twin of the
@@ -269,40 +307,19 @@ object Incremental {
     * are pinned at training, so each micro-batch joins against
     * materialized key-bounded frames — no per-batch re-training.
     * Docs with < 2 tokens carry no perplexity and pass, identical to
-    * the batch stage. Stateless beyond source offsets; `__batch=`
-    * dynamic overwrite ⇒ exactly-once.
+    * the batch stage. Stateless beyond source offsets.
     *
     * @return survivors schema: (doc_id, text)
     */
   def perplexityFilterStream(spark: SparkSession, srcDir: String,
-                             model: graft.operators.LanguageModel.BigramModel,
+                             model: LanguageModel.BigramModel,
                              maxPpl: Double, destDir: String,
-                             checkpointDir: String): Unit = {
-    import graft.operators.LanguageModel
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dropped = LanguageModel.perplexityOf(
-          batch.select(col("doc_id"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks")),
-          model)
-          .filter(col("ppl") > maxPpl).select(col("doc_id"))
-        batch.join(dropped, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("text"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                             checkpointDir: String): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      writeBatch(perplexityKeep(
+          batch.withColumn("__toks", TextFns.tokens(col("text"))), model, maxPpl)
+        .select(col("doc_id"), col("text")), destDir, batchId)
+    }
 
   /** Streaming DSIR firewall — the frozen-model twin of the batch
     * importance selection ([[graft.queries.Retrieval.dsir]]): incoming
@@ -316,7 +333,7 @@ object Incremental {
     * rows, passed as driver data and rebroadcast per batch; scoring
     * is the shared [[graft.queries.Retrieval.dsirScores]] map, so
     * batch and stream cannot diverge. Stateless beyond source
-    * offsets; `__batch=` dynamic overwrite ⇒ exactly-once.
+    * offsets.
     *
     * @param lambdaRows the trained λ table, `(bigram, λ_micro)`
     * @return survivors schema: (doc_id, text, logw_micro)
@@ -324,32 +341,17 @@ object Incremental {
   def dsirFilterStream(spark: SparkSession, srcDir: String,
                        lambdaRows: Seq[(String, Long)],
                        minLogwMicro: Long, destDir: String,
-                       checkpointDir: String): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import batch.sparkSession.implicits._
-        val lambda = lambdaRows.toDF("f", "lambda_micro")
-        graft.queries.Retrieval.dsirScores(
+                       checkpointDir: String): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val lambda = lambdaRows.toDF("f", "lambda_micro")
+      writeBatch(graft.queries.Retrieval.dsirScores(
           batch.select(col("doc_id"), col("text"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks")),
+            TextFns.tokens(col("text")).as("__toks")),
           lambda, Seq("doc_id", "text"))
-          .filter(col("logw_micro") >= minLogwMicro)
-          .select(col("doc_id"), col("text"), col("logw_micro"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+        .filter(col("logw_micro") >= minLogwMicro)
+        .select(col("doc_id"), col("text"), col("logw_micro")), destDir, batchId)
+    }
 
   /** Streaming weighted reservoir — the online form of
     * [[graft.operators.Packing.weightedSample]] (Efraimidis–Spirakis
@@ -387,90 +389,77 @@ object Incremental {
     */
   def weightedReservoirStream(spark: SparkSession, srcDir: String,
                               reservoirDir: String, checkpointDir: String,
-                              k: Int = 50): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = latestReservoirVersion(batch.sparkSession, reservoirDir)
-        // replay wedge guard: a committed __v == batchId means this
-        // batch's merge already landed (the crash fell between the
-        // marker write and the checkpoint commit). Re-merging would
-        // read __v=batchId while overwriting the same path — Spark
-        // rejects that — and the pre-batch snapshot may be pruned;
-        // the committed snapshot IS this batch's deterministic
-        // result, so the replay is a no-op. (if/else, NOT an early
-        // return — `return` in a closure throws NonLocalReturnControl,
-        // which on the streaming thread would fail the query.)
-        //
-        // ONLY equality is a legitimate replay: under the documented
-        // crash window prev can never be strictly ahead of the batch
-        // being delivered. prev > batchId means the streaming
-        // checkpoint was lost/reset while the reservoir dir survived
-        // (batch ids restarted at 0) — silently skipping would commit
-        // every new batch up to the old version as processed and DROP
-        // its data, so fail loudly instead.
-        if (prev.exists(_ > batchId)) {
-          throw new IllegalStateException(
-            s"weightedReservoirStream: committed reservoir snapshot __v=${prev.get} " +
-            s"is ahead of delivered batch $batchId — streaming checkpoint and " +
-            s"reservoir dir '$reservoirDir' are out of sync (checkpoint reset/loss " +
-            "with a surviving reservoir). Refusing to skip new data: clear the " +
-            "reservoir dir or restore the matching checkpoint.")
-        } else if (!prev.contains(batchId)) {
-          val staged = batch.select(col("doc_id"),
-            size(graft.functions.TextFns.tokens(col("text")))
-              .cast("long").as("n_tokens"))
-          // weight clamped to MaxSampleWeight, NOT normalize=true: the
-          // merge compares key_micro ACROSS batches, so the key must
-          // stay a pure function of (id, weight) — a per-batch max
-          // rescale would make keys incomparable between batches. The
-          // clamp keeps the key pure and defuses the poison pill a
-          // single ≥1e6-token doc would otherwise arm (raise_error in
-          // the key → batch never commits → every restart replays and
-          // re-raises); docs at/beyond the clamp tie at max weight
-          // (id-ordered among themselves), which is the documented
-          // resolution limit, not data loss.
-          val batchTop = graft.operators.Packing.weightedSample(
-            staged, col("doc_id"),
-            least(col("n_tokens") + 1,
-              lit(graft.operators.Packing.MaxSampleWeight.toLong)), k)
-            .select(col("doc_id"), col("n_tokens"), col("key_micro"))
-          val merged = prev match {
-            case None => batchTop
-            case Some(v) => batchTop.unionByName(
-                batch.sparkSession.read.parquet(s"$reservoirDir/__v=$v"))
-              .dropDuplicates("doc_id")
-              .orderBy(col("key_micro").desc, col("doc_id").asc)
-              .limit(k)
-          }
-          // new snapshot dir — the read set above is never touched, so
-          // a crash at ANY point leaves the previous committed snapshot
-          // intact and the replayed batch simply re-merges onto it. The
-          // explicit marker (created only after the write returns) is
-          // the commit record — the session disables _SUCCESS files
-          merged.write.mode("overwrite").parquet(s"$reservoirDir/__v=$batchId")
-          val fs = new org.apache.hadoop.fs.Path(reservoirDir)
-            .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          fs.createNewFile(new org.apache.hadoop.fs.Path(
-            s"$reservoirDir/__v=$batchId", CommitMarker))
-          // prune superseded snapshots (best-effort: a crash here only
-          // leaves extra committed dirs; reads always pick the latest)
-          reservoirVersions(batch.sparkSession, reservoirDir)
-            .filter(_ < batchId)
-            .foreach(v => fs.delete(
-              new org.apache.hadoop.fs.Path(s"$reservoirDir/__v=$v"), true))
+                              k: Int = 50): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      val prev = latestReservoirVersion(batch.sparkSession, reservoirDir)
+      // replay wedge guard: a committed __v == batchId means this
+      // batch's merge already landed (the crash fell between the
+      // marker write and the checkpoint commit). Re-merging would
+      // read __v=batchId while overwriting the same path — Spark
+      // rejects that — and the pre-batch snapshot may be pruned;
+      // the committed snapshot IS this batch's deterministic
+      // result, so the replay is a no-op. (if/else, NOT an early
+      // return — `return` in a closure throws NonLocalReturnControl,
+      // which on the streaming thread would fail the query.)
+      //
+      // ONLY equality is a legitimate replay: under the documented
+      // crash window prev can never be strictly ahead of the batch
+      // being delivered. prev > batchId means the streaming
+      // checkpoint was lost/reset while the reservoir dir survived
+      // (batch ids restarted at 0) — silently skipping would commit
+      // every new batch up to the old version as processed and DROP
+      // its data, so fail loudly instead.
+      if (prev.exists(_ > batchId)) {
+        throw new IllegalStateException(
+          s"weightedReservoirStream: committed reservoir snapshot __v=${prev.get} " +
+          s"is ahead of delivered batch $batchId — streaming checkpoint and " +
+          s"reservoir dir '$reservoirDir' are out of sync (checkpoint reset/loss " +
+          "with a surviving reservoir). Refusing to skip new data: clear the " +
+          "reservoir dir or restore the matching checkpoint.")
+      } else if (!prev.contains(batchId)) {
+        val staged = batch.select(col("doc_id"),
+          size(TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
+        // weight clamped to MaxSampleWeight, NOT normalize=true: the
+        // merge compares key_micro ACROSS batches, so the key must
+        // stay a pure function of (id, weight) — a per-batch max
+        // rescale would make keys incomparable between batches. The
+        // clamp keeps the key pure and defuses the poison pill a
+        // single ≥1e6-token doc would otherwise arm (raise_error in
+        // the key → batch never commits → every restart replays and
+        // re-raises); docs at/beyond the clamp tie at max weight
+        // (id-ordered among themselves), which is the documented
+        // resolution limit, not data loss.
+        val batchTop = graft.operators.Packing.weightedSample(
+          staged, col("doc_id"),
+          least(col("n_tokens") + 1,
+            lit(graft.operators.Packing.MaxSampleWeight.toLong)), k)
+          .select(col("doc_id"), col("n_tokens"), col("key_micro"))
+        val merged = prev match {
+          case None => batchTop
+          case Some(v) => batchTop.unionByName(
+              batch.sparkSession.read.parquet(s"$reservoirDir/__v=$v"))
+            .dropDuplicates("doc_id")
+            .orderBy(col("key_micro").desc, col("doc_id").asc)
+            .limit(k)
         }
+        // new snapshot dir — the read set above is never touched, so
+        // a crash at ANY point leaves the previous committed snapshot
+        // intact and the replayed batch simply re-merges onto it. The
+        // explicit marker (created only after the write returns) is
+        // the commit record — the session disables _SUCCESS files
+        merged.write.mode("overwrite").parquet(s"$reservoirDir/__v=$batchId")
+        val fs = new org.apache.hadoop.fs.Path(reservoirDir)
+          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        fs.createNewFile(new org.apache.hadoop.fs.Path(
+          s"$reservoirDir/__v=$batchId", CommitMarker))
+        // prune superseded snapshots (best-effort: a crash here only
+        // leaves extra committed dirs; reads always pick the latest)
+        reservoirVersions(batch.sparkSession, reservoirDir)
+          .filter(_ < batchId)
+          .foreach(v => fs.delete(
+            new org.apache.hadoop.fs.Path(s"$reservoirDir/__v=$v"), true))
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Marker file recording a fully-written reservoir snapshot
     * (written AFTER the parquet write returns — the session disables
@@ -521,7 +510,7 @@ object Incremental {
     * first-occurrence order; the reference's copy is canonical by
     * contract — the same frozen-model reduction as the
     * DSIR/perplexity/phrase firewalls. Stateless beyond source
-    * offsets; `__batch=` dynamic overwrite ⇒ exactly-once.
+    * offsets.
     *
     * @param dupGramRows frozen duplicated-gram hashes as a driver
     *                    Seq — this signature is for SMALL frozen sets
@@ -557,35 +546,18 @@ object Incremental {
   private def substrScrubStreamCore(spark: SparkSession, srcDir: String,
                                     destDir: String, checkpointDir: String,
                                     k: Int,
-                                    gramsOf: SparkSession => DataFrame): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dupGrams = gramsOf(batch.sparkSession)
-        // coalesce: a null-text doc tokenizes to null __toks and the
-        // splice would emit null n_tokens/clean_text. The firewall's
-        // contract is "remove already-seen spans"; a null text holds
-        // no span and passes through as an empty doc — the same
-        // null-text pass-through as phraseFilterStream.
-        graft.operators.Dedup.scrubByFrozenGrams(
-          batch.select(col("doc_id"),
-            graft.functions.TextFns.tokens(coalesce(col("text"), lit("")))
-              .as("__toks")),
-          dupGrams, k)
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                                    gramsOf: SparkSession => DataFrame): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      // coalesce: a null-text doc tokenizes to null __toks and the
+      // splice would emit null n_tokens/clean_text. The firewall's
+      // contract is "remove already-seen spans"; a null text holds
+      // no span and passes through as an empty doc — the same
+      // null-text pass-through as phraseFilterStream.
+      writeBatch(Dedup.scrubByFrozenGrams(
+        batch.select(col("doc_id"),
+          TextFns.tokens(coalesce(col("text"), lit(""))).as("__toks")),
+        gramsOf(batch.sparkSession), k), destDir, batchId)
+    }
 
   /** Streaming phrase firewall: drop (or tag) arriving documents that
     * contain any of a frozen list of exact phrases — the
@@ -595,40 +567,23 @@ object Incremental {
     * tokenization, same overlap-counted sliding-window match as the
     * batch `phrase_match` query, so the two paths cannot diverge on
     * semantics); docs matching NO phrase pass through. No join, no
-    * shuffle, no state beyond source offsets; exactly-once by
-    * `__batch` dynamic overwrite.
+    * shuffle, no state beyond source offsets.
     */
   def phraseFilterStream(spark: SparkSession, srcDir: String,
                          phrases: Seq[(Int, Seq[String])], destDir: String,
-                         checkpointDir: String): Unit = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // coalesce: a null-text doc tokenizes to null and the match
-        // predicate evaluates null — without the coalesce, filter(!null)
-        // silently DROPPED such rows as if contaminated. The firewall's
-        // contract is "drop docs that MATCH a phrase"; a null text
-        // matches nothing and passes through.
-        batch
-          .withColumn("__toks", graft.functions.TextFns.tokens(col("text")))
-          .filter(!coalesce(graft.queries.Retrieval.containsAnyPhrase(
-            col("__toks"), phrases.map(_._2)), lit(false)))
-          .select(col("doc_id"), col("text"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                         checkpointDir: String): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
+      // coalesce: a null-text doc tokenizes to null and the match
+      // predicate evaluates null — without the coalesce, filter(!null)
+      // silently DROPPED such rows as if contaminated. The firewall's
+      // contract is "drop docs that MATCH a phrase"; a null text
+      // matches nothing and passes through.
+      writeBatch(batch
+        .withColumn("__toks", TextFns.tokens(col("text")))
+        .filter(!coalesce(graft.queries.Retrieval.containsAnyPhrase(
+          col("__toks"), phrases.map(_._2)), lit(false)))
+        .select(col("doc_id"), col("text")), destDir, batchId)
+    }
 
   /** Streaming MinHash-LSH index maintenance: arriving documents'
     * banded signatures append into the
@@ -637,8 +592,7 @@ object Incremental {
     * `Dedup.minhashIndexRows` derivation: same shingling, signature
     * expression, and banding as the batch build and the batch pair
     * sweep) + a partitioned append under `part=<p>/__batch=<n≥0>/`
-    * with dynamic overwrite (exactly-once on replay; the batch seed
-    * lives at `__batch=-1`). Combined with
+    * (the batch seed lives at `__batch=-1`). Combined with
     * [[graft.operators.Dedup.minhashProbe]] this is incremental
     * near-dup dedup: each new batch probes the ever-growing index at
     * batch-joined cost, then appends itself — no state beyond source
@@ -647,39 +601,17 @@ object Incremental {
     */
   def minhashIndexStream(spark: SparkSession, srcDir: String, indexDir: String,
                          checkpointDir: String, shingleLen: Int = 3,
-                         bands: Int = 16, rowsPerBand: Int = 8): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingMinhashSwap(spark, indexDir)
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendToMinhashIndex(
-          batch.select(col("doc_id"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks")),
-          indexDir, batchId, shingleLen, bands, rowsPerBand)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18):
-    // segment-merge once the committed batch count reaches the
-    // spark.graft.index.autoCompactSegments threshold, bounding the
-    // per-probe listing cost flat in stream lifetime
-    graft.operators.Dedup.autoCompactMinhashIndex(spark, indexDir)
-  }
+                         bands: Int = 16, rowsPerBand: Int = 8): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
+        Dedup.minhashStores(indexDir)) { (batch, batchId) =>
+      appendToMinhashIndex(
+        batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")),
+        indexDir, batchId, shingleLen, bands, rowsPerBand)
+    }
 
   /** One micro-batch's append into the two-table LSH index layout
-    * (the SHARED `Dedup.minhashIndexFrames` derivation; dynamic
-    * overwrite under `__batch=<n>` ⇒ exactly-once on replay) — used
-    * by both [[minhashIndexStream]] and [[minhashDedupStream]].
+    * (the SHARED `Dedup.minhashIndexFrames` derivation) — used by
+    * [[minhashIndexStream]] and [[minhashStep]].
     */
   private def appendToMinhashIndex(toks: DataFrame, indexDir: String,
                                    batchId: Long, shingleLen: Int,
@@ -690,11 +622,10 @@ object Incremental {
     // against an EXISTING index must fail loud here — appending under
     // the wrong partitioning and relabeling the sidecar would make
     // every later probe silently miss the previously-indexed rows
-    graft.operators.Dedup.declareIndexGeometry(toks.sparkSession, indexDir,
-      graft.operators.Dedup.minhashGeometry(shingleLen, bands, rowsPerBand,
-        graft.operators.Dedup.MinhashParts))
-    val (bandRows, sigRows) = graft.operators.Dedup.minhashIndexFrames(
-      toks, shingleLen, bands, rowsPerBand, graft.operators.Dedup.MinhashParts)
+    Dedup.declareIndexGeometry(toks.sparkSession, indexDir,
+      Dedup.minhashGeometry(shingleLen, bands, rowsPerBand, Dedup.MinhashParts))
+    val (bandRows, sigRows) = Dedup.minhashIndexFrames(
+      toks, shingleLen, bands, rowsPerBand, Dedup.MinhashParts)
     // repartition on the layout key before writing — the batch
     // builder's discipline (writeMinhashIndex). Without it every
     // session task writes into every `part=` directory, so each
@@ -704,48 +635,37 @@ object Incremental {
     // tiny-split scheduling over all of them: at corpus scale the
     // FILE COUNT, not the byte count, becomes the probe's wall.
     // One batch-sized shuffle buys one file per partition per batch.
-    bandRows.repartition(col("part"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part", "__batch").parquet(s"$indexDir/bands")
-    sigRows.repartition(col("spart"))
-      .sortWithinPartitions(col("doc_id"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("spart", "__batch").parquet(s"$indexDir/sigs")
+    writeBatch(bandRows.repartition(col("part"))
+      .sortWithinPartitions(col("band"), col("bucket")),
+      s"$indexDir/bands", batchId, "part")
+    writeBatch(sigRows.repartition(col("spart"))
+      .sortWithinPartitions(col("doc_id")),
+      s"$indexDir/sigs", batchId, "spart")
   }
 
   /** Shared Hamming-index micro-batch append: banded survivor rows
-    * under `part=/__batch=` dynamic overwrite plus the geometry
-    * sidecar — all four perceptual firewalls route here so an
-    * unseeded stream creates an index indistinguishable from a batch
+    * under `part=/__batch=` plus the geometry sidecar — every
+    * perceptual firewall routes here so an unseeded stream creates an
+    * index indistinguishable from a batch
     * [[graft.operators.Dedup.writeHammingIndex]] build.
     */
   private def appendToHammingIndex(sigs: DataFrame, indexDir: String,
                                    batchId: Long, maxDist: Int,
-                                   alignCols: Seq[String] = Nil): Unit = {
+                                   alignCols: Seq[String]): Unit = {
     // declared BEFORE the rows land — the appendToMinhashIndex rule
-    graft.operators.Dedup.declareIndexGeometry(sigs.sparkSession, indexDir,
-      graft.operators.Dedup.hammingGeometry(maxDist,
-        graft.operators.Dedup.HammingParts, alignCols))
-    graft.operators.Dedup.hammingIndexRows(
-        sigs, maxDist, graft.operators.Dedup.HammingParts, alignCols)
+    Dedup.declareIndexGeometry(sigs.sparkSession, indexDir,
+      Dedup.hammingGeometry(maxDist, Dedup.HammingParts, alignCols))
+    writeBatch(Dedup.hammingIndexRows(sigs, maxDist, Dedup.HammingParts, alignCols)
       // one file per partition per batch — the appendToMinhashIndex
       // file-compaction rule (and writeHammingIndex's own layout)
       .repartition(col("part"))
-      .sortWithinPartitions(col("chunk"), col("piece"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part", "__batch").parquet(s"$indexDir/bands")
+      .sortWithinPartitions(col("chunk"), col("piece")),
+      s"$indexDir/bands", batchId, "part")
   }
 
-  /** Streaming MinHash near-dup firewall — the production use of the
-    * on-disk LSH band index: arriving documents are admitted iff they
-    * are NOT an estimated-Jaccard-≥θ near-dup of an already-admitted
-    * document; admitted documents join the index themselves. The
-    * lexical twin of [[semanticDedupStream]], with the same
-    * three-step per-micro-batch shape:
+  /** The MinHash firewall step on a tokenized micro-batch
+    * (doc_id, __toks, …), shared by [[minhashDedupStream]] and
+    * [[curationFirewallStream]]'s stage 2:
     *
     *  1. dedup WITHIN the batch by the full batch rule — the SHARED
     *     candidate sweep ([[graft.operators.Dedup
@@ -758,13 +678,43 @@ object Incremental {
     *     against the index ([[graft.operators.Dedup.minhashProbe]] —
     *     partition-pruned to the ≤64 parts the batch's bands hash
     *     into, never a corpus scan);
-    *  3. append survivors' banded rows under `part=<p>/__batch=<n>/`
-    *     (dynamic overwrite ⇒ exactly-once) and the surviving
-    *     documents under `__batch=<n>/` in destDir.
+    *  3. append the survivors' banded rows to the index.
     *
-    * Replay safety: the probe excludes `__batch = <current>`, so a
-    * replayed micro-batch reproduces its original decisions instead
-    * of colliding with its own appended signatures.
+    * Returns the survivors, pinned.
+    */
+  private def minhashStep(toks: DataFrame, indexDir: String, batchId: Long,
+                          threshold: Double, shingleLen: Int, bands: Int,
+                          rowsPerBand: Int): DataFrame = {
+    val pairs = Dedup.minhashCandidatesOfTokens(
+        toks.select(col("doc_id"), col("__toks")), shingleLen, bands, rowsPerBand)
+      .filter(col("est_jaccard") >= threshold)
+    val batchKept = toks.join(
+      Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
+      Seq("doc_id"), "left_anti")
+    // an unseeded index means the first batch has nothing to collide with
+    val indexHits =
+      if (!exists(toks.sparkSession, s"$indexDir/bands"))
+        batchKept.limit(0).select(col("doc_id"))
+      else Dedup.minhashProbe(
+          batchKept.select(col("doc_id"), col("__toks")), indexDir,
+          shingleLen, bands, rowsPerBand, excludeBatch = Some(batchId))
+        .filter(col("est_jaccard") >= threshold)
+        .select(col("probe_id").as("doc_id")).distinct()
+    // decide once — the index append and the caller's output must see
+    // the SAME survivor set, not re-run the probe
+    val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+    appendToMinhashIndex(survivors.select(col("doc_id"), col("__toks")),
+      indexDir, batchId, shingleLen, bands, rowsPerBand)
+    survivors
+  }
+
+  /** Streaming MinHash near-dup firewall — the production use of the
+    * on-disk LSH band index: arriving documents are admitted iff they
+    * are NOT an estimated-Jaccard-≥θ near-dup of an already-admitted
+    * document; admitted documents join the index themselves
+    * ([[minhashStep]]) and land under `__batch=<n>/` in destDir. The
+    * lexical twin of [[semanticDedupStream]].
     *
     * Every step is deterministic (xxhash64 end to end), so unlike the
     * eps-chain caveat in SemDeDup the whole stream is EXACTLY
@@ -777,62 +727,109 @@ object Incremental {
   def minhashDedupStream(spark: SparkSession, srcDir: String, indexDir: String,
                          destDir: String, checkpointDir: String,
                          threshold: Double = 0.5, shingleLen: Int = 3,
-                         bands: Int = 16, rowsPerBand: Int = 8): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingMinhashSwap(spark, indexDir)
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.Dedup
-        val toks = batch.select(col("doc_id"), col("text"),
-          graft.functions.TextFns.tokens(col("text")).as("__toks"))
-        val pairs = Dedup.minhashCandidatesOfTokens(
-          toks.select(col("doc_id"), col("__toks")),
-          shingleLen, bands, rowsPerBand)
-          .filter(col("est_jaccard") >= threshold)
-        val batchKept = toks.join(
-          Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        // Existence probe through the Hadoop FileSystem API (the
-        // [[semanticDedupStream]] keeper-probe lesson): an unseeded
-        // index means the first batch has nothing to collide with.
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-        val indexExists = bandsPath
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          .exists(bandsPath)
-        val indexHits =
-          if (!indexExists) batchKept.limit(0).select(col("doc_id"))
-          else Dedup.minhashProbe(
-            batchKept.select(col("doc_id"), col("__toks")), indexDir,
-            shingleLen, bands, rowsPerBand,
-            excludeBatch = Some(batchId))
-            .filter(col("est_jaccard") >= threshold)
-            .select(col("probe_id").as("doc_id")).distinct()
-        // decide once — the index append and the kept-corpus write
-        // below must see the SAME survivor set, not re-run the probe
-        val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        appendToMinhashIndex(
-          survivors.select(col("doc_id"), col("__toks")),
-          indexDir, batchId, shingleLen, bands, rowsPerBand)
-        survivors.select(col("doc_id"), col("text"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
+                         bands: Int = 16, rowsPerBand: Int = 8): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
+        Dedup.minhashStores(indexDir)) { (batch, batchId) =>
+      val toks = batch.withColumn("__toks", TextFns.tokens(col("text")))
+      writeBatch(minhashStep(toks, indexDir, batchId, threshold, shingleLen,
+          bands, rowsPerBand).select(col("doc_id"), col("text")),
+        destDir, batchId)
+    }
+
+  /** Keepers-index geometry of a SemDeDup stream (round 17): the
+    * keepers layout is keyed by the frozen quantizer's assignment AND
+    * the admission eps — a probe/appender under a different quantizer
+    * prunes to clusters the index never populated (the silent-miss
+    * class), and a different eps breaks the pairwise-below-eps keeper
+    * invariant. Computed ONCE per stream call from one driver collect.
+    * `kind` stays "ivf" — the keepers ARE a writeIvfIndex layout, and
+    * a batch-built IVF index seeds the stream directly (its sidecar
+    * carries no eps yet; the absent key is trusted and the stream's
+    * declaration adds it).
+    */
+  private def keeperGeometry(centroids: DataFrame, eps: Double): Map[String, String] = {
+    val (ids, vecs) = Similarity.collectQuantizer(centroids)
+    Similarity.ivfGeometryOf(ids, vecs) + ("eps" -> eps.toString)
+  }
+
+  /** The SemDeDup keeper step on an embedded (vec_id, embedding)
+    * micro-batch, shared by [[semanticDedupStream]] and
+    * [[curationFirewallStream]]'s stage 2b:
+    *
+    *  1. dedup WITHIN the batch by the full batch rule
+    *     ([[graft.operators.Similarity.semanticDedup]]: same
+    *     assignment, same pair blocking, same connected-components
+    *     grouping, same least-prototypical keep — no stream-specific
+    *     scoring path to diverge);
+    *  2. drop batch survivors within `eps` of an existing keeper in
+    *     their cluster (the batch side is micro-batch-sized and
+    *     BROADCAST into the keeper scan, pruned to the batch's
+    *     clusters), after checking the keepers index's geometry;
+    *  3. append the remainder to `keepersDir` under
+    *     `centroid=<id>/__batch=<n>/` as (`corpusId`, `vecCol`).
+    *
+    * The geometry is validated whenever the keepers index exists,
+    * even when the batch has no clusters or admits nothing, so a
+    * mis-parameterized stream fails loud on any batch. Returns the
+    * admitted keepers (vec_id, cluster, __v), pinned.
+    */
+  private def semKeeperStep(embedded: DataFrame, centroids: DataFrame,
+                            eps: Double, keepersDir: String,
+                            geometry: Map[String, String], batchId: Long,
+                            corpusId: String = "vec_id",
+                            vecCol: String = "embedding"): DataFrame = {
+    val s = embedded.sparkSession
+    val (dec, release) = Similarity.semanticDedupReleasable(embedded, centroids, eps)
+    val survivors = dec.filter(col("keep"))
+      .select(col("vec_id"), col("cluster"))
+      .join(embedded.select(col("vec_id"), col("embedding").as("__v")), Seq("vec_id"))
+      .localCheckpoint() // micro-batch-sized; read thrice below
+    release() // scored pin served the eager checkpoint above
+    // driver list bounded by nCentroids
+    val clusters = survivors.select(col("cluster")).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    val keepersExist = exists(s, keepersDir)
+    val keeperDup =
+      if (!keepersExist || clusters.isEmpty)
+        survivors.limit(0).select(col("vec_id"))
+      else {
+        // geometry check before the probe: a different quantizer
+        // prunes to clusters the index never populated — fail loud
+        // instead of silently admitting duplicates
+        Dedup.requireIndexGeometry(s, keepersDir, geometry)
+        s.read.parquet(keepersDir)
+          .filter(col("centroid").isin(clusters: _*) &&
+            col("__batch") =!= batchId)
+          .select(col("centroid").cast("long").as("cluster"),
+            col(vecCol).as("__kv"))
+          .join(broadcast(survivors), Seq("cluster"))
+          // round-6 comparison — the same quantization the batch
+          // pair rule applies (Similarity.cosinePairsBlocked)
+          .filter(round(Similarity.cosine(col("__v"), col("__kv")), 6) >= eps)
+          .select(col("vec_id")).distinct()
       }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactMinhashIndex(spark, indexDir)
+    val admitted = survivors.join(keeperDup, Seq("vec_id"), "left_anti")
+      .localCheckpoint() // micro-batch-sized; read twice below
+    // skip BOTH the declare and the write when the batch admits no
+    // keepers (round 18): an unconditional declare on an empty batch
+    // — e.g. an empty AvailableNow run against an unseeded stream —
+    // creates keepersDir containing only the geometry sidecar, the
+    // next batch's exists() guard then passes, and the data-less
+    // parquet read fails schema inference, wedging the stream.
+    // Dynamic overwrite touches no partitions on empty data anyway.
+    if (!admitted.isEmpty) {
+      // declare-before-append: validates again (cheap, one FS read)
+      // then stamps the quantizer checksum + eps the keepers now carry
+      Dedup.declareIndexGeometry(s, keepersDir, geometry)
+      writeBatch(admitted.select(col("vec_id").as(corpusId), col("__v").as(vecCol),
+          col("cluster").as("centroid"))
+        // one file per cluster per batch (file-compaction rule)
+        .repartition(col("centroid")), keepersDir, batchId, "centroid")
+    } else if (keepersExist)
+      // validate-only: a mis-parameterized stream must still fail
+      // loud even when its batch happens to admit nothing
+      Dedup.requireIndexGeometry(s, keepersDir, geometry)
+    admitted
   }
 
   /** COMPOSED streaming curation firewall — [[graft.pipelines.Corpus
@@ -857,21 +854,14 @@ object Incremental {
     *     later-stage fate — the batch pipeline's sequential-stage
     *     semantics, where a dup of a later-dropped junk doc is still
     *     a dup (stage 1 runs before quality there too).
-    *  2. NEAR-DUP — [[minhashDedupStream]]'s exact rule, inlined:
-    *     within-batch candidates → component min-id keeps, then the
-    *     band-index probe, then survivors join the index.
+    *  2. NEAR-DUP — [[minhashDedupStream]]'s step ([[minhashStep]]).
     *  2b. SEMDEDUP (opt-in, `semanticEps`+`semanticCentroids`) — the
     *     batch pipeline's stage-2b ([[graft.pipelines.Corpus.prepare]])
-    *     as [[semanticDedupStream]]'s per-batch rule: within-batch
-    *     SemDeDup under the FROZEN quantizer (same assignment, pair
-    *     blocking, components, least-prototypical keep), then drop
-    *     survivors within eps of an already-admitted keeper in their
-    *     cluster (keeper scan pruned to the batch's clusters),
-    *     survivors appending themselves to the keepers index at
-    *     `indexDir/semkeep` (the writeIvfIndex layout). The quantizer
-    *     MUST be frozen — retraining it re-keys the keeper layout,
-    *     which is a rebuild, not maintenance. Docs without an
-    *     embedding pass untouched (the stage-5 rule).
+    *     as [[semanticDedupStream]]'s step ([[semKeeperStep]]), the
+    *     keepers at `indexDir/semkeep`. The quantizer MUST be frozen —
+    *     retraining it re-keys the keeper layout, which is a rebuild,
+    *     not maintenance. Docs without an embedding pass untouched
+    *     (the stage-5 rule).
     *  3. QUALITY — `TextFns.qualityScoreOf ≥ minQuality`, the batch
     *     stage-3 rule, map-only.
     *  4. PPL (opt-in, `pplModel`+`maxPpl`) — the frozen-model
@@ -884,10 +874,7 @@ object Incremental {
     *
     * The single tokenization pass is staged per batch and reused by
     * shingling, quality, and perplexity — the batch pipeline's
-    * discipline. Replay safety: both state probes exclude
-    * `__batch = <current>` and all writes are dynamic partition
-    * overwrites, so a replayed micro-batch reproduces its original
-    * decisions exactly-once. Per-stage counts land under
+    * discipline. Per-stage counts land under
     * `destDir/_accounting/__batch=<n>/` (underscore-prefixed, so
     * corpus readers of `destDir` never see it); disabled stages
     * record -1, the [[graft.pipelines.Corpus.PrepareStats]]
@@ -905,66 +892,34 @@ object Incremental {
                              rowsPerBand: Int = 8,
                              semanticEps: Double = 0.0,
                              semanticCentroids: DataFrame = null,
-                             pplModel: graft.operators.LanguageModel.BigramModel = null,
+                             pplModel: LanguageModel.BigramModel = null,
                              maxPpl: Double = 0.0,
                              decontamHoldout: DataFrame = null,
-                             decontamEps: Double = 0.8,
-                             withStats: Boolean = true): Unit = {
-    import graft.operators.Dedup
-    import graft.functions.TextFns
-    graft.plans.GraftExtensions.ensureRegistered(spark)
+                             decontamEps: Double = 0.8): Unit = {
     require(semanticEps <= 0.0 || semanticCentroids != null,
       "curationFirewallStream: semanticEps > 0 needs a FROZEN semanticCentroids " +
         "quantizer (train once outside the stream — retraining re-keys the " +
         "keeper layout, which is a rebuild, not maintenance)")
-    // keepers-index geometry (the semanticDedupStream rule): quantizer
-    // checksum + eps, computed once per stream call
+    val semDedupOn = semanticEps > 0.0
     val semKeeperGeo =
-      if (semanticEps <= 0.0) Map.empty[String, String]
-      else {
-        val (ids, vecs) =
-          graft.operators.Similarity.collectQuantizer(semanticCentroids)
-        graft.operators.Similarity.ivfGeometryOf(ids, vecs) +
-          ("eps" -> semanticEps.toString)
-      }
+      if (semDedupOn) keeperGeometry(semanticCentroids, semanticEps)
+      else Map.empty[String, String]
     val ExactParts = 64
-    // pin the frozen holdout once (the semanticDecontamStream lesson:
-    // a per-batch re-collect of an unchanging frame is waste)
     val frozenHoldout =
-      if (decontamHoldout == null) null
-      else decontamHoldout.select(col("vec_id"), col("embedding")).localCheckpoint()
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/exact", "part")
-    graft.operators.Dedup.recoverPendingMinhashSwap(spark, indexDir)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/semkeep", "centroid")
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      if (decontamHoldout == null) null else freezeHoldout(decontamHoldout)
+    val exactStatePath = s"$indexDir/exact"
+    val keepPath = s"$indexDir/semkeep"
+    val stores = (exactStatePath -> "part") +: Dedup.minhashStores(indexDir) :+
+      (keepPath -> "centroid")
+    runAvailableNow(spark, srcDir, EmbeddedDocsSchema, checkpointDir, stores) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        val hconf = s.sparkContext.hadoopConfiguration
-        def exists(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).exists(hp)
-        }
         // pin the micro-batch once: the accounting count and the
         // stage chain consume it several times, and an unbuffered
         // batch frame re-reads the source files per consumer (the ×10
         // rehearsal measured 2-3 source scans per trigger without it)
-        val staged = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nInput = if (withStats) staged.count() else -1L
+        val staged = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        val nInput = staged.count()
 
         // single staged tokenization, reused by stages 2-4
         val toks = staged.withColumn("__toks", TextFns.tokens(col("text")))
@@ -980,13 +935,11 @@ object Incremental {
           .withColumn("__fp", TextFns.fingerprint(col("text")))
           .withColumn("__part", pmod(col("__fp"), lit(ExactParts)).cast("int"))
           .localCheckpoint()
-        val exactStatePath = s"$indexDir/exact"
         val exactGeometry = Map("kind" -> "exact_fp", "parts" -> ExactParts.toString)
         val exactKept =
-          if (!exists(exactStatePath)) within // already pinned above
+          if (!exists(s, exactStatePath)) within // already pinned above
           else {
-            graft.operators.Dedup.requireIndexGeometry(s, exactStatePath,
-              exactGeometry)
+            Dedup.requireIndexGeometry(s, exactStatePath, exactGeometry)
             // reads the pinned `within`, so the prune list costs one
             // scan of the materialized frame, not a pipeline re-run
             val parts = within.select(col("__part")).distinct()
@@ -997,104 +950,24 @@ object Incremental {
               .select(col("fp").as("__fp"))
             within.join(seen, Seq("__fp"), "left_anti").localCheckpoint()
           }
-        exactKept.select(col("__fp").as("fp"), col("__part").as("part"))
+        writeBatch(exactKept.select(col("__fp").as("fp"), col("__part").as("part"))
           // one file per partition per batch — the appendToMinhashIndex
           // file-compaction rule (this store is probed every batch)
-          .repartition(col("part"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("part", "__batch").parquet(exactStatePath)
-        graft.operators.Dedup.writeIndexGeometry(s, exactStatePath, exactGeometry)
+          .repartition(col("part")), exactStatePath, batchId, "part")
+        Dedup.writeIndexGeometry(s, exactStatePath, exactGeometry)
 
-        // ---- stage 2: near-dup (the minhashDedupStream rule) ----
-        val pairs = Dedup.minhashCandidatesOfTokens(
-          exactKept.select(col("doc_id"), col("__toks")),
+        // ---- stage 2: near-dup ----------------------------------
+        val nearKept = minhashStep(exactKept, indexDir, batchId, jaccard,
           shingleLen, bands, rowsPerBand)
-          .filter(col("est_jaccard") >= jaccard)
-        val batchKept = exactKept.join(
-          Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        val bandsPath = s"$indexDir/bands"
-        val indexHits =
-          if (!exists(bandsPath)) batchKept.limit(0).select(col("doc_id"))
-          else Dedup.minhashProbe(
-            batchKept.select(col("doc_id"), col("__toks")), indexDir,
-            shingleLen, bands, rowsPerBand, excludeBatch = Some(batchId))
-            .filter(col("est_jaccard") >= jaccard)
-            .select(col("probe_id").as("doc_id")).distinct()
-        val nearKept = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        appendToMinhashIndex(nearKept.select(col("doc_id"), col("__toks")),
-          indexDir, batchId, shingleLen, bands, rowsPerBand)
 
         // ---- stage 2b (opt-in): SemDeDup firewall ---------------
-        // the batch pipeline's stage 2b as semanticDedupStream's
-        // per-batch rule; keepers live at indexDir/semkeep in the
-        // writeIvfIndex layout, probes prune to the batch's clusters
-        val semDedupOn = semanticEps > 0.0
         val semKept =
           if (!semDedupOn) nearKept
           else {
-            val embedded = nearKept.filter(col("embedding").isNotNull)
-              .select(col("doc_id").as("vec_id"), col("embedding"))
-            // 1. within-batch dedup by the full batch rule (same
-            //    assignment, blocking, components, keep rule)
-            val (dec, releaseSem) = graft.operators.Similarity
-              .semanticDedupReleasable(embedded, semanticCentroids, semanticEps)
-            val surv = dec.filter(col("keep"))
-              .select(col("vec_id"), col("cluster"))
-              .join(embedded.select(col("vec_id"),
-                col("embedding").as("__v")), Seq("vec_id"))
-              .localCheckpoint() // micro-batch-sized; read thrice below
-            releaseSem() // scored pin served the eager checkpoint
-            // 2. drop survivors within eps of an existing keeper in
-            //    their cluster — pruned to the batch's clusters
-            //    (driver list bounded by nCentroids), replay-safe
-            val clusters = surv.select(col("cluster")).distinct()
-              .collect().map(_.getLong(0)).toSeq
-            val keepPath = s"$indexDir/semkeep"
-            val keeperDup =
-              if (!exists(keepPath) || clusters.isEmpty)
-                surv.limit(0).select(col("vec_id"))
-              else {
-                // geometry check before the probe: a different frozen
-                // quantizer (or eps) prunes to clusters the keepers
-                // index never populated — fail loud (round 17)
-                graft.operators.Dedup.requireIndexGeometry(s, keepPath,
-                  semKeeperGeo)
-                s.read.parquet(keepPath)
-                  .filter(col("centroid").isin(clusters: _*) &&
-                    col("__batch") =!= batchId)
-                  .select(col("centroid").cast("long").as("cluster"),
-                    col("embedding").as("__kv"))
-                  .join(broadcast(surv), Seq("cluster"))
-                  // round-6 comparison — the same quantization the
-                  // batch pair rule applies (Similarity.cosinePairsBlocked)
-                  .filter(round(graft.operators.Similarity.cosine(
-                    col("__v"), col("__kv")), 6) >= semanticEps)
-                  .select(col("vec_id")).distinct()
-              }
-            // 3. the remainder join the keepers index themselves
-            val keepers = surv.join(keeperDup, Seq("vec_id"), "left_anti")
-              .localCheckpoint()
-            // skip the write when nothing survived: a partitioned
-            // empty write would create a schemaless parquet dir the
-            // next batch's exists()-guarded read cannot open (dynamic
-            // overwrite touches no partitions on empty data anyway).
-            // The sidecar declaration rides the same guard so an
-            // empty declare never creates a data-less directory.
-            if (!keepers.isEmpty) {
-              graft.operators.Dedup.declareIndexGeometry(s, keepPath,
-                semKeeperGeo)
-              keepers.select(col("vec_id"), col("__v").as("embedding"),
-                  col("cluster").as("centroid"))
-                // one file per cluster per batch (file-compaction rule)
-                .repartition(col("centroid"))
-                .withColumn("__batch", lit(batchId))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("centroid", "__batch").parquet(keepPath)
-            }
+            val keepers = semKeeperStep(
+              nearKept.filter(col("embedding").isNotNull)
+                .select(col("doc_id").as("vec_id"), col("embedding")),
+              semanticCentroids, semanticEps, keepPath, semKeeperGeo, batchId)
             // fingerprint-less docs pass untouched — never silently
             // lose data the scorer cannot judge (the stage-5 rule)
             nearKept.filter(col("embedding").isNull)
@@ -1109,62 +982,86 @@ object Incremental {
 
         // ---- stage 4 (opt-in): frozen perplexity ceiling --------
         val pplOn = pplModel != null && maxPpl > 0.0
-        val pplKept =
-          if (!pplOn) qualKept
-          else {
-            val dropped = graft.operators.LanguageModel.perplexityOf(
-              qualKept.select(col("doc_id"), col("__toks")), pplModel)
-              .filter(col("ppl") > maxPpl).select(col("doc_id"))
-            qualKept.join(dropped, Seq("doc_id"), "left_anti")
-          }
+        val pplKept = if (!pplOn) qualKept else perplexityKeep(qualKept, pplModel, maxPpl)
 
         // ---- stage 5 (opt-in): semantic decontamination ---------
         val semOn = frozenHoldout != null
-        val finalKept =
-          if (!semOn) pplKept
-          else {
-            val embedded = pplKept.filter(col("embedding").isNotNull)
-              .select(col("doc_id").as("vec_id"), col("embedding"))
-            val keptIds = graft.operators.Similarity.semanticDecontam(
-              embedded, frozenHoldout, decontamEps)
-              .filter(col("kept")).select(col("vec_id").as("doc_id"))
-            pplKept.filter(col("embedding").isNull)
-              .unionByName(pplKept.join(keptIds, Seq("doc_id"), "left_semi"))
-          }
-        val out = finalKept.localCheckpoint()
+        val out = (if (!semOn) pplKept
+          else semanticDecontamKeep(pplKept, "doc_id", frozenHoldout, decontamEps))
+          .localCheckpoint()
 
-        if (withStats) {
-          import s.implicits._
-          Seq((nInput, exactKept.count(), nearKept.count(),
+        import s.implicits._
+        // one count of `out` serves both the after_semantic and the
+        // kept slot; lazy keeps the action where the tuple reaches it
+        lazy val nOut = out.count()
+        writeBatch(Seq((nInput, exactKept.count(), nearKept.count(),
             if (semDedupOn) semKept.count() else -1L,
             qualKept.count(),
             if (pplOn) pplKept.count() else -1L,
-            if (semOn) out.count() else -1L,
-            out.count()))
-            .toDF("input", "after_exact", "after_neardup", "after_semdedup",
-              "after_quality", "after_ppl", "after_semantic", "kept")
-            .withColumn("__batch", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch").parquet(s"$destDir/_accounting")
-        }
-        out.select(col("doc_id"), col("text"), col("embedding"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
+            if (semOn) nOut else -1L,
+            nOut))
+          .toDF("input", "after_exact", "after_neardup", "after_semdedup",
+            "after_quality", "after_ppl", "after_semantic", "kept"),
+          s"$destDir/_accounting", batchId)
+        writeBatch(out.select(col("doc_id"), col("text"), col("embedding")),
+          destDir, batchId)
         staged.unpersist(blocking = false)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18):
-    // every state store this firewall maintains gets the LSM
-    // segment-merge once its committed batch count reaches the
-    // spark.graft.index.autoCompactSegments threshold
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/exact", "part")
-    graft.operators.Dedup.autoCompactMinhashIndex(spark, indexDir)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/semkeep", "centroid")
+    }
+  }
+
+  /** dHash fingerprints of decoded images: canonical 9×8 resize →
+    * native [[graft.plans.DHash64]], projected as `idCols :+ sh`; rows
+    * whose fingerprint is null never reach an index (the Media family
+    * decode-or-drop convention).
+    */
+  private def dhashSigs(decoded: DataFrame, idCols: Column*): DataFrame =
+    Media.resizeImages(decoded, 9, 8)
+      .select(idCols :+ call_function("graft_dhash64", col("pixels"),
+        col("width"), col("height"), col("channels")).as("sh"): _*)
+      .filter(col("sh").isNotNull)
+
+  /** The Hamming firewall step on a (doc_id, [alignCols], sh)
+    * signature frame, shared by the image, audio and video firewalls
+    * and [[mediaFirewallStream]]:
+    *
+    *  1. dedup WITHIN the batch by the full batch rule (the SHARED
+    *     [[graft.operators.Dedup.hammingPairsOfSignatures]] pigeonhole
+    *     sweep + [[graft.operators.Dedup.componentLosers]] min-id
+    *     keeps — no stream-specific rule to diverge);
+    *  2. drop batch survivors with a Hamming-≤maxDist match against
+    *     the index ([[graft.operators.Dedup.hammingProbe]] —
+    *     partition-pruned to the ≤64 parts the batch's pieces hash
+    *     into, never a corpus scan);
+    *  3. append the survivors' banded rows to the index.
+    *
+    * With `alignCols` (video frames) a pair of docs matches when at
+    * least `minFrames` aligned signatures match. Returns the
+    * survivors, pinned.
+    */
+  private def hammingStep(sig: DataFrame, indexDir: String, batchId: Long,
+                          maxDist: Int, alignCols: Seq[String] = Nil,
+                          minFrames: Int = 1): DataFrame = {
+    def docPairs(pairs: DataFrame, a: String, b: String): DataFrame =
+      if (alignCols.isEmpty) pairs
+      else pairs.groupBy(col(a), col(b)).agg(count(lit(1)).as("__fm"))
+        .filter(col("__fm") >= minFrames)
+    val pairs = docPairs(
+      Dedup.hammingPairsOfSignatures(sig, maxDist, alignCols = alignCols), "id_a", "id_b")
+    val batchKept = sig.join(
+      Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
+      Seq("doc_id"), "left_anti")
+    val indexHits =
+      if (!exists(sig.sparkSession, s"$indexDir/bands"))
+        batchKept.limit(0).select(col("doc_id"))
+      else docPairs(Dedup.hammingProbe(batchKept, indexDir, maxDist,
+          excludeBatch = Some(batchId), alignCols = alignCols), "probe_id", "index_id")
+        .select(col("probe_id").as("doc_id")).distinct()
+    // decide once — the index append and the caller's output must see
+    // the SAME survivor set, not re-run the probe
+    val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+    appendToHammingIndex(survivors, indexDir, batchId, maxDist, alignCols)
+    survivors
   }
 
   /** COMPOSED streaming MEDIA firewall — [[graft.pipelines.MediaCorpus
@@ -1178,114 +1075,60 @@ object Incremental {
     *  1. DECODE — [[graft.operators.Media.decodeImages]], one codec
     *     pass per batch staged for all downstream consumers;
     *     undecodable payloads drop here (the 2_decoded account).
-    *  2. NEAR-DUP — the batch rule exactly: decoded survivors lose to
-    *     within-batch Hamming-component minima and to
-    *     already-admitted index matches; unlike [[phashDedupStream]]
-    *     (fingerprint-only firewall), rows that decode but carry NO
-    *     fingerprint pass this stage untouched — the
-    *     [[graft.pipelines.MediaCorpus.prepare]] anti-join semantics
-    *     (a doc the fingerprinter cannot judge is not evidence of
-    *     duplication), at the cost that such rows are also not
-    *     indexable against future arrivals.
+    *  2. NEAR-DUP — [[phashDedupStream]]'s step ([[hammingStep]]):
+    *     decoded survivors lose to within-batch Hamming-component
+    *     minima and to already-admitted index matches; unlike
+    *     [[phashDedupStream]] (fingerprint-only firewall), rows that
+    *     decode but carry NO fingerprint pass this stage untouched —
+    *     the [[graft.pipelines.MediaCorpus.prepare]] anti-join
+    *     semantics (a doc the fingerprinter cannot judge is not
+    *     evidence of duplication), at the cost that such rows are also
+    *     not indexable against future arrivals.
     *  3. FEATURE FLOOR — codegen'd brightness against [lo, hi].
     *
     * The admitted output is MANIFEST-shaped (`id, brightness,
     * n_pixels`) — placement + features, never pixels; at 100 TB the
     * pixels stay in the lake and only decisions leave the stream.
-    * Replay-safe like every firewall here: the index probe excludes
-    * the current `__batch`, all writes dynamic-overwrite.
     */
   def mediaFirewallStream(spark: SparkSession, srcDir: String,
                           indexDir: String, destDir: String,
                           checkpointDir: String, maxDist: Int = 3,
                           minBrightness: Double = 0.0,
-                          maxBrightness: Double = 255.0,
-                          withStats: Boolean = true): Unit = {
-    val imgSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.BinaryType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/bands", "part")
-    val q = spark.readStream.schema(imgSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, Media}
-        val s = batch.sparkSession
-        graft.plans.GraftExtensions.ensureRegistered(s)
-        // pin the raw batch once (the curationFirewallStream lesson:
-        // the accounting count and the decode would otherwise each
-        // scan the source files)
-        val staged = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nInput = if (withStats) staged.count() else -1L
-        // one codec pass per batch, three consumers (fingerprint,
-        // floor, manifest) — batch-sized, so localCheckpoint
-        val decoded = Media.decodeImages(staged).localCheckpoint()
-        val nDecoded = if (withStats) decoded.count() else -1L
+                          maxBrightness: Double = 255.0): Unit =
+    runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
+        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // pin the raw batch once (the curationFirewallStream lesson:
+      // the accounting count and the decode would otherwise each
+      // scan the source files)
+      val staged = batch.persist(StorageLevel.MEMORY_AND_DISK)
+      val nInput = staged.count()
+      // one codec pass per batch, three consumers (fingerprint,
+      // floor, manifest) — batch-sized, so localCheckpoint
+      val decoded = Media.decodeImages(staged).localCheckpoint()
+      val nDecoded = decoded.count()
 
-        val sig = Media.resizeImages(decoded, 9, 8)
-          .select(col("id").as("doc_id"),
-            call_function("graft_dhash64", col("pixels"), col("width"),
-              col("height"), col("channels")).as("sh"))
-          .filter(col("sh").isNotNull)
-        val pairs = Dedup.hammingPairsOfSignatures(sig, maxDist)
-        val losers = Dedup.componentLosers(pairs)
-          .select(col("node").as("id")).localCheckpoint()
-        val sigKept = sig.join(
-          losers.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-        val indexExists = bandsPath
-          .getFileSystem(s.sparkContext.hadoopConfiguration).exists(bandsPath)
-        val indexHits = (
-          if (!indexExists) sigKept.limit(0).select(col("doc_id"))
-          else Dedup.hammingProbe(sigKept, indexDir, maxDist,
-            excludeBatch = Some(batchId))
-            .select(col("probe_id").as("doc_id")).distinct())
-          .localCheckpoint()
-        // admitted fingerprints join the index (decide once — same
-        // survivor set for append and output)
-        appendToHammingIndex(
-          sigKept.join(indexHits, Seq("doc_id"), "left_anti"),
-          indexDir, batchId, maxDist)
-        // the batch pipeline's anti-join: decoded rows lose only by id
-        val deduped = decoded
-          .join(losers, Seq("id"), "left_anti")
-          .join(indexHits.withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti")
+      val sig = dhashSigs(decoded, col("id").as("doc_id"))
+      val survivors = hammingStep(sig, indexDir, batchId, maxDist)
+      // the batch pipeline's anti-join: decoded rows lose only by id
+      val dropped = sig.join(survivors, Seq("doc_id"), "left_anti")
+        .select(col("doc_id").as("id"))
+      val deduped = decoded.join(dropped, Seq("id"), "left_anti")
 
-        val feats = Media.imageFeatures(deduped)
-        val kept = feats
-          .filter(col("brightness").between(minBrightness, maxBrightness))
-          .withColumn("n_pixels",
-            (col("width") * col("height") * col("channels")).cast("long"))
-          .select(col("id"), col("brightness"), col("n_pixels"))
-          .localCheckpoint()
+      val kept = Media.imageFeatures(deduped)
+        .filter(col("brightness").between(minBrightness, maxBrightness))
+        .withColumn("n_pixels",
+          (col("width") * col("height") * col("channels")).cast("long"))
+        .select(col("id"), col("brightness"), col("n_pixels"))
+        .localCheckpoint()
 
-        if (withStats) {
-          import s.implicits._
-          Seq((nInput, nDecoded, deduped.count(), kept.count()))
-            .toDF("input", "decoded", "after_neardup", "after_feature")
-            .withColumn("__batch", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch").parquet(s"$destDir/_accounting")
-        }
-        kept.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-        staged.unpersist(blocking = false)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/bands", "part")
-  }
+      import s.implicits._
+      writeBatch(Seq((nInput, nDecoded, deduped.count(), kept.count()))
+        .toDF("input", "decoded", "after_neardup", "after_feature"),
+        s"$destDir/_accounting", batchId)
+      writeBatch(kept, destDir, batchId)
+      staged.unpersist(blocking = false)
+    }
 
   /** Streaming perceptual-image near-dup firewall — the multimodal
     * twin of [[minhashDedupStream]], over the on-disk Hamming index
@@ -1293,25 +1136,11 @@ object Incremental {
     * images are admitted iff their dHash fingerprint is NOT within
     * Hamming distance `maxDist` of an already-admitted image's; the
     * LAION-style ingest-time image dedup a 100 TB multimodal corpus
-    * runs continuously. Same three-step per-micro-batch shape:
-    *
-    *  1. decode → canonical 9×8 resize → native
-    *     [[graft.plans.DHash64]] fingerprint (decode-or-drop: rows
-    *     whose payload doesn't decode, or whose fingerprint is null,
-    *     never reach the index — the Media family convention), then
-    *     dedup WITHIN the batch by the full batch rule (the SHARED
-    *     [[graft.operators.Dedup.hammingPairsOfSignatures]] pigeonhole
-    *     sweep + [[graft.operators.Dedup.componentLosers]] min-id
-    *     keeps — no stream-specific rule to diverge);
-    *  2. drop batch survivors with a Hamming-≤maxDist match against
-    *     the index ([[graft.operators.Dedup.hammingProbe]] —
-    *     partition-pruned to the ≤64 parts the batch's pieces hash
-    *     into, never a corpus scan);
-    *  3. append survivors' banded rows under `part=<p>/__batch=<n>/`
-    *     (dynamic overwrite ⇒ exactly-once on replay; the probe
-    *     excludes `__batch = <current>`, so a replayed batch
-    *     reproduces its original decisions) and the surviving
-    *     `(doc_id, sh)` rows under `__batch=<n>/` in destDir.
+    * runs continuously. Per micro-batch: decode → [[dhashSigs]]
+    * (decode-or-drop: rows whose payload doesn't decode, or whose
+    * fingerprint is null, never reach the index), then
+    * [[hammingStep]]; the surviving `(doc_id, sh)` rows land under
+    * `__batch=<n>/` in destDir.
     *
     * Every step is deterministic (stub-codec decode, integer dHash,
     * xxhash64 banding), so the whole stream is exactly reproducible:
@@ -1322,65 +1151,20 @@ object Incremental {
     */
   def phashDedupStream(spark: SparkSession, srcDir: String, indexDir: String,
                        destDir: String, checkpointDir: String,
-                       maxDist: Int = 3): Unit = {
-    val imgSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.BinaryType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/bands", "part")
-    val q = spark.readStream.schema(imgSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, Media}
-        graft.plans.GraftExtensions.ensureRegistered(batch.sparkSession)
-        val sig = Media.resizeImages(Media.decodeImages(batch), 9, 8)
-          .select(col("id").as("doc_id"),
-            call_function("graft_dhash64", col("pixels"), col("width"),
-              col("height"), col("channels")).as("sh"))
-          .filter(col("sh").isNotNull)
-        val pairs = Dedup.hammingPairsOfSignatures(sig, maxDist)
-        val batchKept = sig.join(
-          Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        // unseeded-start probe guard — the minhashDedupStream idiom
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-        val indexExists = bandsPath
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          .exists(bandsPath)
-        val indexHits =
-          if (!indexExists) batchKept.limit(0).select(col("doc_id"))
-          else Dedup.hammingProbe(batchKept, indexDir, maxDist,
-            excludeBatch = Some(batchId))
-            .select(col("probe_id").as("doc_id")).distinct()
-        // decide once — the index append and the kept write below
-        // must see the SAME survivor set, not re-run the probe
-        val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        appendToHammingIndex(survivors, indexDir, batchId, maxDist)
-        survivors.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/bands", "part")
-  }
+                       maxDist: Int = 3): Unit =
+    runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
+        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+      val sig = dhashSigs(Media.decodeImages(batch), col("id").as("doc_id"))
+      writeBatch(hammingStep(sig, indexDir, batchId, maxDist), destDir, batchId)
+    }
 
   /** Streaming ACOUSTIC near-dup firewall — [[phashDedupStream]] with
     * the energy-envelope fingerprint ([[graft.plans.AudioHash64]]):
     * arriving encoded clips are admitted iff their hash is not within
     * Hamming `maxDist` of an admitted clip's, through the same on-disk
-    * Hamming band index (decode-or-drop, within-batch sweep + min-id
-    * keeps, partition-pruned probe, `part/__batch` append with replay
-    * exclusion). The within-batch sweep runs the CAPPED default —
+    * Hamming band index and [[hammingStep]] (decode-or-drop,
+    * within-batch sweep + min-id keeps, partition-pruned probe).
+    * The within-batch sweep runs the CAPPED default —
     * acoustic fingerprints are the family's low-entropy member
     * (BASELINE ×30: the uncapped sweep is output-bound by
     * construction on clustered corpora), the
@@ -1388,56 +1172,15 @@ object Incremental {
     */
   def audioPhashDedupStream(spark: SparkSession, srcDir: String,
                             indexDir: String, destDir: String,
-                            checkpointDir: String, maxDist: Int = 3): Unit = {
-    val clipSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.BinaryType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/bands", "part")
-    val q = spark.readStream.schema(clipSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, Media}
-        graft.plans.GraftExtensions.ensureRegistered(batch.sparkSession)
-        val sig = Media.decodeAudio(batch)
-          .select(col("id").as("doc_id"),
-            call_function("graft_audiohash64", col("samples")).as("sh"))
-          .filter(col("sh").isNotNull)
-        val pairs = Dedup.hammingPairsOfSignatures(sig, maxDist)
-        val batchKept = sig.join(
-          Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        // unseeded-start probe guard — the minhashDedupStream idiom
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-        val indexExists = bandsPath
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          .exists(bandsPath)
-        val indexHits =
-          if (!indexExists) batchKept.limit(0).select(col("doc_id"))
-          else Dedup.hammingProbe(batchKept, indexDir, maxDist,
-            excludeBatch = Some(batchId))
-            .select(col("probe_id").as("doc_id")).distinct()
-        // decide once — the index append and the kept write below
-        // must see the SAME survivor set, not re-run the probe
-        val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        appendToHammingIndex(survivors, indexDir, batchId, maxDist)
-        survivors.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/bands", "part")
-  }
+                            checkpointDir: String, maxDist: Int = 3): Unit =
+    runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
+        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+      val sig = Media.decodeAudio(batch)
+        .select(col("id").as("doc_id"),
+          call_function("graft_audiohash64", col("samples")).as("sh"))
+        .filter(col("sh").isNotNull)
+      writeBatch(hammingStep(sig, indexDir, batchId, maxDist), destDir, batchId)
+    }
 
   /** Streaming TEMPORAL VIDEO near-dup firewall — the clip-level twin
     * that completes the image/audio/video fingerprint triple: an
@@ -1449,90 +1192,38 @@ object Incremental {
     * key of the band join itself ([[graft.operators.Dedup
     * .hammingProbe]] `alignCols`): pieces shared by misaligned frames
     * never become candidates, so probe exchange volume stays
-    * per-frame at any clip length. Same three-step per-micro-batch
-    * shape and replay-exclusion contract as its siblings; frames
-    * sample every `stride`-th (the [[graft.operators.Media
-    * .sampleFrames]] rule), and clips whose payload fails the
-    * container walk contribute no frames and are dropped (the
-    * decode-or-drop convention).
+    * per-frame at any clip length. Same [[hammingStep]] as its
+    * siblings; frames sample every `stride`-th (the
+    * [[graft.operators.Media.sampleFrames]] rule), and clips whose
+    * payload fails the container walk contribute no frames and are
+    * dropped (the decode-or-drop convention).
     */
   def videoPhashDedupStream(spark: SparkSession, srcDir: String,
                             indexDir: String, destDir: String,
                             checkpointDir: String, maxDist: Int = 3,
-                            stride: Int = 2, minFrames: Int = 2): Unit = {
-    val clipSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.BinaryType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/bands", "part")
-    val q = spark.readStream.schema(clipSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{Dedup, Media}
-        graft.plans.GraftExtensions.ensureRegistered(batch.sparkSession)
-        // composite key = clip·1000 + frame (the videoPhashPairsOf
-        // contract, same in-plan assert_true guard rationale: the
-        // fixture path samples ≤ a handful of frames; a longer clip
-        // fails loudly instead of corrupting pairs)
-        val keyGuard = coalesce(
-          assert_true(col("frame_index") < 1000,
-            lit("videoPhashDedupStream: frame_index >= 1000 would " +
-              "corrupt the clip*1000 + frame composite key"))
-            .cast(org.apache.spark.sql.types.LongType),
-          lit(0L))
-        val frames = Media.sampleFrames(batch, stride)
-          .select((col("id") * 1000 + col("frame_index") + keyGuard).as("key"),
-            col("payload"))
-        val sig = Media.resizeImages(Media.decodeImages(frames, idCol = "key"), 9, 8)
-          .select((col("id") / 1000).cast(org.apache.spark.sql.types.LongType)
-              .as("doc_id"),
-            (col("id") % 1000).as("frame"),
-            call_function("graft_dhash64", col("pixels"), col("width"),
-              col("height"), col("channels")).as("sh"))
-          .filter(col("sh").isNotNull)
-          .localCheckpoint()
-        // within-batch clip dedup: aligned-frame pairs → ≥minFrames
-        // rollup → component losers (min-id keeps), the batch rule
-        val framePairs = Dedup.hammingPairsOfSignatures(sig, maxDist,
-          alignCols = Seq("frame"))
-        val clipPairs = framePairs.groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("__fm"))
-          .filter(col("__fm") >= minFrames)
-        val batchKept = sig.join(
-          Dedup.componentLosers(clipPairs).withColumnRenamed("node", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
-        val indexExists = bandsPath
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-          .exists(bandsPath)
-        val indexHits =
-          if (!indexExists) batchKept.limit(0).select(col("doc_id"))
-          else Dedup.hammingProbe(batchKept, indexDir, maxDist,
-            excludeBatch = Some(batchId), alignCols = Seq("frame"))
-            .groupBy(col("probe_id"), col("index_id"))
-            .agg(count(lit(1)).as("__fm"))
-            .filter(col("__fm") >= minFrames)
-            .select(col("probe_id").as("doc_id")).distinct()
-        val survivors = batchKept.join(indexHits, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        appendToHammingIndex(survivors, indexDir, batchId, maxDist,
-          alignCols = Seq("frame"))
-        survivors.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/bands", "part")
-  }
+                            stride: Int = 2, minFrames: Int = 2): Unit =
+    runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
+        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+      // composite key = clip·1000 + frame (the videoPhashPairsOf
+      // contract, same in-plan assert_true guard rationale: the
+      // fixture path samples ≤ a handful of frames; a longer clip
+      // fails loudly instead of corrupting pairs)
+      val keyGuard = coalesce(
+        assert_true(col("frame_index") < 1000,
+          lit("videoPhashDedupStream: frame_index >= 1000 would " +
+            "corrupt the clip*1000 + frame composite key"))
+          .cast(LongType),
+        lit(0L))
+      val frames = Media.sampleFrames(batch, stride)
+        .select((col("id") * 1000 + col("frame_index") + keyGuard).as("key"),
+          col("payload"))
+      val sig = dhashSigs(Media.decodeImages(frames, idCol = "key"),
+          (col("id") / 1000).cast(LongType).as("doc_id"),
+          (col("id") % 1000).as("frame"))
+        .localCheckpoint()
+      writeBatch(hammingStep(sig, indexDir, batchId, maxDist,
+        alignCols = Seq("frame"), minFrames = minFrames), destDir, batchId)
+    }
 
   /** Streaming BM25 index maintenance: new documents' postings append
     * into the [[graft.queries.Retrieval.writeBm25Index]] layout as
@@ -1540,9 +1231,7 @@ object Incremental {
     * `bm25PostingRows` derivation, so batch build and incremental
     * append cannot diverge on tokenization, tf math, or term
     * bucketing) + a partitioned append under
-    * `bucket=<b>/__batch=<n≥0>/` with dynamic overwrite, so a
-    * replayed micro-batch overwrites its own sub-partitions instead
-    * of double-indexing (exactly-once; the batch seed lives at
+    * `bucket=<b>/__batch=<n≥0>/` (the batch seed lives at
     * `__batch=-1` and never collides). Between refreshes, probes see
     * the new postings but build-time df/stats — the standard
     * stale-statistics trade of segmented search indexes;
@@ -1552,45 +1241,24 @@ object Incremental {
     */
   def bm25IndexStream(spark: SparkSession, srcDir: String, indexDir: String,
                       checkpointDir: String,
-                      nBuckets: Int = graft.queries.Retrieval.Bm25Buckets): Unit = {
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, s"$indexDir/postings", "bucket")
-    val q = spark.readStream.schema(docsSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // declare-before-append (round 17): an appender running with a
-        // different nBuckets against an existing index would bucket new
-        // postings under the wrong partitioning AND rebrand the sidecar
-        // — fail loud here, before any rows land
-        graft.operators.Dedup.declareIndexGeometry(batch.sparkSession, indexDir,
-          graft.queries.Retrieval.bm25Geometry(nBuckets))
-        graft.queries.Retrieval.bm25PostingRows(
-          batch.select(col("doc_id"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks")),
+                      nBuckets: Int = graft.queries.Retrieval.Bm25Buckets): Unit =
+    runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
+        Seq(s"$indexDir/postings" -> "bucket")) { (batch, batchId) =>
+      // declare-before-append (round 17): an appender running with a
+      // different nBuckets against an existing index would bucket new
+      // postings under the wrong partitioning AND rebrand the sidecar
+      // — fail loud here, before any rows land
+      Dedup.declareIndexGeometry(batch.sparkSession, indexDir,
+        graft.queries.Retrieval.bm25Geometry(nBuckets))
+      writeBatch(graft.queries.Retrieval.bm25PostingRows(
+          batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")),
           nBuckets)
-          // one term-sorted file per bucket per batch — the
-          // writeBm25Index layout (file-compaction rule)
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket", "__batch").parquet(s"$indexDir/postings")
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(
-      spark, s"$indexDir/postings", "bucket")
-  }
+        // one term-sorted file per bucket per batch — the
+        // writeBm25Index layout (file-compaction rule)
+        .repartition(col("bucket"))
+        .sortWithinPartitions(col("term"), col("doc_id")),
+        s"$indexDir/postings", batchId, "bucket")
+    }
 
   /** Streaming IVF index maintenance: new vectors append into the
     * [[graft.operators.Similarity.writeIvfIndex]] partition layout as
@@ -1601,30 +1269,21 @@ object Incremental {
     * [[graft.operators.Similarity.probeIvfIndex]] (partition pruning
     * reads only probed `centroid=` directories; appended files join
     * their directory transparently). Rows land under
-    * `centroid=<id>/__batch=<n>/` with dynamic overwrite, so a
-    * replayed micro-batch (foreachBatch is at-least-once on side
-    * effects) overwrites its own sub-partitions instead of
-    * double-indexing its vectors; probes select explicit columns, so
+    * `centroid=<id>/__batch=<n>/`; probes select explicit columns, so
     * the extra partition level is invisible to them. The quantizer is
     * static by design — re-training centroids re-keys the layout,
     * which is a rebuild ([[graft.operators.Similarity.writeIvfIndex]]),
     * not maintenance — and is collected to driver arrays ONCE at
     * query start, not per batch. Stateless beyond source offsets.
     *
-    * @param vecSchema schema of the source parquet (id + vector col)
+    * @param corpusId id column of the source parquet
+    * @param vecCol   vector column of the source parquet
     */
   def ivfIndexStream(spark: SparkSession, srcDir: String,
                      centroids: DataFrame, destDir: String,
                      checkpointDir: String, nAssign: Int = 1,
                      corpusId: String = "neighbor_id",
                      vecCol: String = "embedding"): Unit = {
-    import graft.operators.Similarity
-    val vecSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(corpusId,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(vecCol,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
     // the quantizer collects ONCE here (nCentroids-bounded arrays);
     // each micro-batch reuses the collected object — no per-batch
     // driver job, and (for a two-level frame) the same approximate
@@ -1633,64 +1292,31 @@ object Incremental {
     // geometry sidecar computed once, from the SAME collected arrays
     // (no second centroid collect — the round-17 advisor fix)
     val geometry = Similarity.ivfGeometryOf(cq.ids, cq.vecs)
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, destDir, "centroid")
-    val q = spark.readStream.schema(vecSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // declare-before-append (round 17): a re-trained/different
-        // quantizer re-keys the layout — that is a REBUILD
-        // (writeIvfIndex), never maintenance; appending under it and
-        // rebranding the sidecar would make every later probe pass the
-        // geometry check while missing the previously-indexed vectors
-        graft.operators.Dedup.declareIndexGeometry(batch.sparkSession, destDir,
-          geometry)
-        Similarity.ivfIndexRowsQ(batch, cq, nAssign, corpusId, vecCol)
-          // one file per centroid per batch (file-compaction rule)
-          .repartition(col("centroid"))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("centroid", "__batch").parquet(destDir)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(spark, destDir, "centroid")
+    runAvailableNow(spark, srcDir, vectorSchema(corpusId, vecCol), checkpointDir,
+        Seq(destDir -> "centroid")) { (batch, batchId) =>
+      // declare-before-append (round 17): a re-trained/different
+      // quantizer re-keys the layout — that is a REBUILD
+      // (writeIvfIndex), never maintenance; appending under it and
+      // rebranding the sidecar would make every later probe pass the
+      // geometry check while missing the previously-indexed vectors
+      Dedup.declareIndexGeometry(batch.sparkSession, destDir, geometry)
+      writeBatch(Similarity.ivfIndexRowsQ(batch, cq, nAssign, corpusId, vecCol)
+        // one file per centroid per batch (file-compaction rule)
+        .repartition(col("centroid")), destDir, batchId, "centroid")
+    }
   }
 
   /** Streaming SemDeDup — the semantic twin of the exact/winnow/
     * model/ppl firewalls, closing the one batch family without a
     * streaming counterpart. Incoming vectors are admitted iff they
     * are NOT within cosine `eps` of any already-kept vector in their
-    * cluster; admitted vectors become keepers themselves. State is
-    * the on-disk keepers index in the [[graft.operators.Similarity
-    * .writeIvfIndex]] layout (`centroid=<id>/__batch=<n>/`), so a
-    * batch-built index seeds the stream directly and each micro-batch
-    * reads ONLY the `centroid=` directories its vectors assign to
-    * (partition pruning — never the whole keeper set).
-    *
-    * Per micro-batch:
-    *  1. dedup WITHIN the batch by the full batch rule
-    *     ([[graft.operators.Similarity.semanticDedup]]: same
-    *     assignment, same pair blocking, same connected-components
-    *     grouping, same least-prototypical keep — no stream-specific
-    *     scoring path to diverge);
-    *  2. drop batch survivors within `eps` of an existing keeper in
-    *     their cluster (the batch side is micro-batch-sized and
-    *     BROADCAST into the pruned keeper scan);
-    *  3. append the remainder under `centroid=<id>/__batch=<n>/`
-    *     with dynamic overwrite.
-    *
-    * Replay safety: keepers written by the CURRENT batch id are
-    * excluded from step 2's reference set, so a replayed micro-batch
-    * (foreachBatch is at-least-once) reproduces its original
-    * decisions instead of seeing its own output and dropping
-    * everything; its re-write then lands on its own partitions —
-    * exactly-once net effect.
+    * cluster; admitted vectors become keepers themselves
+    * ([[semKeeperStep]]). State is the on-disk keepers index in the
+    * [[graft.operators.Similarity.writeIvfIndex]] layout
+    * (`centroid=<id>/__batch=<n>/`), so a batch-built index seeds the
+    * stream directly and each micro-batch reads ONLY the `centroid=`
+    * directories its vectors assign to (partition pruning — never the
+    * whole keeper set).
     *
     * Invariant (spec-asserted): at every point, same-cluster keepers
     * are pairwise below `eps` — the same guarantee the batch rule
@@ -1706,112 +1332,15 @@ object Incremental {
                           checkpointDir: String, eps: Double,
                           corpusId: String = "vec_id",
                           vecCol: String = "embedding"): Unit = {
-    import graft.operators.Similarity
-    // keeper-index geometry (round 17): the keepers layout is keyed by
-    // the frozen quantizer's assignment AND the admission eps — a
-    // probe/appender under a different quantizer prunes to clusters
-    // the index never populated (the silent-miss class), and a
-    // different eps breaks the pairwise-below-eps keeper invariant.
-    // Checksum computed ONCE per stream call from one driver collect.
-    // `kind` stays "ivf" — the keepers ARE a writeIvfIndex layout, and
-    // a batch-built IVF index seeds the stream directly (its sidecar
-    // carries no eps yet; the absent key is trusted and the stream's
-    // declaration adds it).
-    val keeperGeo = {
-      val (ids, vecs) = Similarity.collectQuantizer(centroids)
-      Similarity.ivfGeometryOf(ids, vecs) + ("eps" -> eps.toString)
+    val geometry = keeperGeometry(centroids, eps)
+    runAvailableNow(spark, srcDir, vectorSchema(corpusId, vecCol), checkpointDir,
+        Seq(keepersDir -> "centroid")) { (batch, batchId) =>
+      val embedded = batch
+        .select(col(corpusId).as("vec_id"), col(vecCol).as("embedding"))
+        .localCheckpoint() // micro-batch-sized
+      semKeeperStep(embedded, centroids, eps, keepersDir, geometry, batchId,
+        corpusId, vecCol)
     }
-    val vecSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(corpusId,
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(vecCol,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    // complete any crashed compaction swap BEFORE the stream starts:
-    // a replayed batch must never probe a live tree missing merged
-    // segments (round 18 — see Dedup.recoverPendingSwap)
-    graft.operators.Dedup.recoverPendingSwap(spark, keepersDir, "centroid")
-    val q = spark.readStream.schema(vecSchema).parquet(srcDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = batch0.localCheckpoint() // micro-batch-sized
-        // 1. within-batch dedup by the full batch rule
-        val (dec, release) = Similarity.semanticDedupReleasable(
-          batch, centroids, eps, corpusId, vecCol)
-        val survivors = dec.filter(col("keep"))
-          .select(col("vec_id"), col("cluster"))
-          .join(batch.select(col(corpusId).as("vec_id"),
-            col(vecCol).as("__v")), Seq("vec_id"))
-          .localCheckpoint() // micro-batch-sized; read twice below
-        release() // scored pin served the eager checkpoint above
-        // 2. drop survivors within eps of an existing keeper in their
-        // cluster. The keeper scan prunes to the batch's clusters
-        // (driver list bounded by nCentroids) and excludes rows this
-        // same batch id wrote (replay safety).
-        val clusters = survivors.select(col("cluster")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        // Existence probe through the Hadoop FileSystem API — a
-        // java.io.File check only sees the local filesystem, so on
-        // HDFS/S3 an existing keepers index would read as absent and
-        // step 2 would silently admit semantic duplicates.
-        val keepersPath = new org.apache.hadoop.fs.Path(keepersDir)
-        val keepersExist = keepersPath
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(keepersPath)
-        val keeperDup =
-          if (!keepersExist || clusters.isEmpty)
-            survivors.limit(0).select(col("vec_id"))
-          else {
-            // geometry check before the probe (round 17): a different
-            // quantizer prunes to clusters the index never populated
-            // — fail loud instead of silently admitting duplicates
-            graft.operators.Dedup.requireIndexGeometry(spark, keepersDir,
-              keeperGeo)
-            spark.read.parquet(keepersDir)
-              .filter(col("centroid").isin(clusters: _*) &&
-                col("__batch") =!= batchId)
-              .select(col("centroid").cast("long").as("cluster"),
-                col(vecCol).as("__kv"))
-              .join(broadcast(survivors), Seq("cluster"))
-              // round-6 comparison — the same quantization the batch
-              // pair rule applies (Similarity.cosinePairsBlocked)
-              .filter(round(Similarity.cosine(col("__v"), col("__kv")), 6) >= eps)
-              .select(col("vec_id")).distinct()
-          }
-        val admitted = survivors.join(keeperDup, Seq("vec_id"), "left_anti")
-          .select(col("vec_id").as(corpusId), col("__v").as(vecCol),
-            col("cluster").as("centroid"))
-          .localCheckpoint() // micro-batch-sized; read twice below
-        // skip BOTH the declare and the write when the batch admits no
-        // keepers (the curationFirewallStream semkeep guard, round 18):
-        // an unconditional declare on an empty batch — e.g. an empty
-        // AvailableNow run against an unseeded stream — creates
-        // keepersDir containing only the geometry sidecar, the next
-        // batch's keepersExist guard then passes, and the data-less
-        // parquet read fails schema inference, wedging the stream.
-        // Dynamic overwrite touches no partitions on empty data anyway.
-        if (!admitted.isEmpty) {
-          // declare-before-append: validates again (cheap, one FS
-          // read) then stamps the quantizer checksum + eps the
-          // keepers now carry
-          graft.operators.Dedup.declareIndexGeometry(spark, keepersDir, keeperGeo)
-          admitted
-            // one file per cluster per batch (file-compaction rule)
-            .repartition(col("centroid"))
-            .withColumn("__batch", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("centroid", "__batch").parquet(keepersDir)
-        } else if (keepersExist)
-          // validate-only: a mis-parameterized stream must still fail
-          // loud even when its batch happens to admit nothing
-          graft.operators.Dedup.requireIndexGeometry(spark, keepersDir, keeperGeo)
-      }
-      .start()
-    q.awaitTermination()
-    // post-invocation maintenance at the quiescent point (round 18)
-    graft.operators.Dedup.autoCompactIndexSegments(spark, keepersDir, "centroid")
   }
 
   /** Continuously-maintained per-group heavy hitters: the
@@ -1868,10 +1397,8 @@ object Incremental {
     * emitted ranks are EXACT or the batch refuses loudly.
     *
     * Per micro-batch, inside `foreachBatch`:
-    *  1. the batch lands in `stateDir/lake` partitioned by BATCH ID
-    *     with dynamic overwrite — a replayed batch (foreachBatch is
-    *     at-least-once on side effects) overwrites its own partition,
-    *     keeping lake counts exact;
+    *  1. the batch lands in `stateDir/lake` through the replay-safe
+    *     `__batch` write, keeping lake counts exact;
     *  2. the per-group MG summary table is advanced as a VERSION
     *     `stateDir/summaries/v=<batchId>` = COMBINE(previous version,
     *     batch MG aggregate): counters add per (group, item), then the
@@ -1898,12 +1425,8 @@ object Incremental {
   def certifiedTopKStream(spark: SparkSession, srcDir: String, stateDir: String,
                           outDir: String, checkpointDir: String,
                           k: Int = 10, capacity: Int = 256): Unit = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("grp",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("item",
-        org.apache.spark.sql.types.StringType)))
+    val schema = StructType(Seq(
+      StructField("grp", StringType), StructField("item", StringType)))
     val lakeDir = s"$stateDir/lake"
     val summDir = s"$stateDir/summaries"
 
@@ -1915,94 +1438,86 @@ object Incremental {
         .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
     }
 
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val s = batch0.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        import s.implicits._
-        // micro-batch-sized; consumed by the lake write, the summary
-        // merge, and the touched-group set
-        val batch = batch0.filter(col("item").isNotNull).localCheckpoint()
+    runAvailableNow(spark, srcDir, schema, checkpointDir) { (batch0, batchId) =>
+      val s = batch0.sparkSession
+      import org.apache.spark.sql.expressions.Window
+      import s.implicits._
+      // micro-batch-sized; consumed by the lake write, the summary
+      // merge, and the touched-group set
+      val batch = batch0.filter(col("item").isNotNull).localCheckpoint()
 
-        // 1. idempotent lake append
-        batch.withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(lakeDir)
+      // 1. idempotent lake append
+      writeBatch(batch, lakeDir, batchId)
 
-        // 2. versioned MG COMBINE
-        val prevV = versions(s).filter(_ < batchId).sorted.lastOption
-        val prev = prevV.map(v => s.read.parquet(s"$summDir/v=$v"))
-          .getOrElse(Seq.empty[(String, String, Long)].toDF("grp", "item", "w"))
-        val bSumm = batch.groupBy(col("grp"))
-          .agg(call_function("graft_mg", col("item"), lit(capacity)).as("__mg"))
-          .select(col("grp"), explode(col("__mg")))
-          .toDF("grp", "item", "w")
-        val wRank = Window.partitionBy(col("grp"))
-          .orderBy(col("w").desc, col("item").asc)
-        val wGrp = Window.partitionBy(col("grp"))
-        val merged = prev.unionByName(bSumm)
-          .groupBy(col("grp"), col("item")).agg(sum(col("w")).as("w"))
-          .withColumn("__rnk", row_number().over(wRank))
-          .withColumn("__wth",
-            max(when(col("__rnk") === capacity + 1, col("w"))).over(wGrp))
-          .withColumn("w", col("w") - coalesce(col("__wth"), lit(0L)))
-          .filter(col("w") > 0).select(col("grp"), col("item"), col("w"))
-        merged.write.mode("overwrite").parquet(s"$summDir/v=$batchId")
-        // GC: keep the current and one prior version (the only one a
-        // restart can replay from under AvailableNow's one-batch redo)
-        versions(s).filter(v => v < batchId && !prevV.contains(v)).foreach { v =>
-          val p = new org.apache.hadoop.fs.Path(s"$summDir/v=$v")
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-
-        // 3. exact recount + certification for touched groups
-        val touched = batch.select(col("grp")).distinct()
-        val lake = s.read.parquet(lakeDir)
-          .join(touched, Seq("grp"), "left_semi")
-          .filter(col("item").isNotNull)
-        val cands = s.read.parquet(s"$summDir/v=$batchId")
-          .join(touched, Seq("grp"), "left_semi").select(col("grp"), col("item"))
-        val confirmed = lake.join(cands, Seq("grp", "item"), "left_semi")
-          .groupBy(col("grp"), col("item")).agg(count(lit(1)).as("n"))
-          .localCheckpoint() // candidate-sized; feeds certify + output
-        val ranked = confirmed.withColumn("rnk", row_number().over(
-          Window.partitionBy(col("grp")).orderBy(col("n").desc, col("item").asc)))
-        // certification starts from TOUCHED, not from the candidates:
-        // a touched group whose merged summary collapsed to zero
-        // entries (possible when a batch carries > capacity distinct
-        // singletons) would otherwise produce no cert row at all and
-        // its stale stored result would silently stand as "exact".
-        // With no candidates every aggregate below is null → __ok
-        // coalesces to false → the group is refused loudly.
-        val cert = touched
-          .join(ranked.groupBy(col("grp"))
-            .agg(sum(col("n")).as("__sum"),
-              max(when(col("rnk") === k, col("n"))).as("__kth"),
-              count(lit(1)).as("__cand")), Seq("grp"), "left")
-          .join(lake.groupBy(col("grp")).agg(count(lit(1)).as("__n")), "grp")
-          .withColumn("__ok", coalesce(
-            col("__sum") === col("__n") ||
-              (col("__cand") >= k && col("__kth") * capacity > col("__n")),
-            lit(false)))
-        val bad = cert.filter(!col("__ok")).select(col("grp"))
-          .collect().map(_.getString(0))
-        if (bad.nonEmpty)
-          throw new IllegalStateException(
-            s"MG capacity $capacity cannot certify exact top-$k for groups: " +
-              bad.sorted.mkString(", ") + ". Retry with a larger capacity.")
-
-        // 4. idempotent per-group result refresh
-        ranked.filter(col("rnk") <= k)
-          .select(col("grp"), col("item"), col("n"),
-            col("rnk").cast("long").as("rnk"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("grp").parquet(outDir)
-        ()
+      // 2. versioned MG COMBINE
+      val prevV = versions(s).filter(_ < batchId).sorted.lastOption
+      val prev = prevV.map(v => s.read.parquet(s"$summDir/v=$v"))
+        .getOrElse(Seq.empty[(String, String, Long)].toDF("grp", "item", "w"))
+      val bSumm = batch.groupBy(col("grp"))
+        .agg(call_function("graft_mg", col("item"), lit(capacity)).as("__mg"))
+        .select(col("grp"), explode(col("__mg")))
+        .toDF("grp", "item", "w")
+      val wRank = Window.partitionBy(col("grp"))
+        .orderBy(col("w").desc, col("item").asc)
+      val wGrp = Window.partitionBy(col("grp"))
+      val merged = prev.unionByName(bSumm)
+        .groupBy(col("grp"), col("item")).agg(sum(col("w")).as("w"))
+        .withColumn("__rnk", row_number().over(wRank))
+        .withColumn("__wth",
+          max(when(col("__rnk") === capacity + 1, col("w"))).over(wGrp))
+        .withColumn("w", col("w") - coalesce(col("__wth"), lit(0L)))
+        .filter(col("w") > 0).select(col("grp"), col("item"), col("w"))
+      merged.write.mode("overwrite").parquet(s"$summDir/v=$batchId")
+      // GC: keep the current and one prior version (the only one a
+      // restart can replay from under AvailableNow's one-batch redo)
+      versions(s).filter(v => v < batchId && !prevV.contains(v)).foreach { v =>
+        val p = new org.apache.hadoop.fs.Path(s"$summDir/v=$v")
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       }
-      .start()
-    q.awaitTermination()
+
+      // 3. exact recount + certification for touched groups
+      val touched = batch.select(col("grp")).distinct()
+      val lake = s.read.parquet(lakeDir)
+        .join(touched, Seq("grp"), "left_semi")
+        .filter(col("item").isNotNull)
+      val cands = s.read.parquet(s"$summDir/v=$batchId")
+        .join(touched, Seq("grp"), "left_semi").select(col("grp"), col("item"))
+      val confirmed = lake.join(cands, Seq("grp", "item"), "left_semi")
+        .groupBy(col("grp"), col("item")).agg(count(lit(1)).as("n"))
+        .localCheckpoint() // candidate-sized; feeds certify + output
+      val ranked = confirmed.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("grp")).orderBy(col("n").desc, col("item").asc)))
+      // certification starts from TOUCHED, not from the candidates:
+      // a touched group whose merged summary collapsed to zero
+      // entries (possible when a batch carries > capacity distinct
+      // singletons) would otherwise produce no cert row at all and
+      // its stale stored result would silently stand as "exact".
+      // With no candidates every aggregate below is null → __ok
+      // coalesces to false → the group is refused loudly.
+      val cert = touched
+        .join(ranked.groupBy(col("grp"))
+          .agg(sum(col("n")).as("__sum"),
+            max(when(col("rnk") === k, col("n"))).as("__kth"),
+            count(lit(1)).as("__cand")), Seq("grp"), "left")
+        .join(lake.groupBy(col("grp")).agg(count(lit(1)).as("__n")), "grp")
+        .withColumn("__ok", coalesce(
+          col("__sum") === col("__n") ||
+            (col("__cand") >= k && col("__kth") * capacity > col("__n")),
+          lit(false)))
+      val bad = cert.filter(!col("__ok")).select(col("grp"))
+        .collect().map(_.getString(0))
+      if (bad.nonEmpty)
+        throw new IllegalStateException(
+          s"MG capacity $capacity cannot certify exact top-$k for groups: " +
+            bad.sorted.mkString(", ") + ". Retry with a larger capacity.")
+
+      // 4. idempotent per-group result refresh
+      ranked.filter(col("rnk") <= k)
+        .select(col("grp"), col("item"), col("n"),
+          col("rnk").cast("long").as("rnk"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("grp").parquet(outDir)
+    }
   }
 
   /** Windowed rollup of the incrementally-built table — bucket
@@ -2187,7 +1702,9 @@ object Incremental {
   final case class UserCursor(user_id: Long, last_event_id: Long, events_seen: Long)
 
   /** Keyed streaming state: per-user monotonic cursor (max event id +
-    * count), updated per micro-batch via mapGroupsWithState. Returns
+    * count), updated per micro-batch via mapGroupsWithState — the
+    * GREATEST-merge semantics of `merlin_etl.py:159-175`, inside the
+    * engine. Returns
     * the streaming DataFrame; callers attach a sink (tests use the
     * memory sink in update mode).
     */

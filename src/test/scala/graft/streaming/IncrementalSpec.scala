@@ -1392,6 +1392,26 @@ class IncrementalSpec extends SparkSpec {
     assert(after2 == ((1L to 30L).toSet - 7L - 25L), s"run2 survivors: $after2")
   }
 
+  test("decontamStream: a batch replayed after its write but before its commit duplicates nothing") {
+    val ss = spark; import ss.implicits._
+    val base = Files.createTempDirectory("decontam_replay").toString
+    val src = base + "/src"; val dest = base + "/dest"; val ck = base + "/ck"
+    val holdout = Seq((100L, "held out item says alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), graft.functions.TextFns.tokens(col("text")).as("__toks"))
+    (1 to 10).map(i => (i.toLong, s"intro body $i outro")).toDF("doc_id", "text")
+      .write.parquet(src)
+    Incremental.decontamStream(ss, src, holdout, dest, ck)
+    // a crash between the sink write and the checkpoint commit: the
+    // offset log holds batch 0 but its commit record is gone, so the
+    // rerun replays batch 0 onto the output it already wrote
+    val commit = new org.apache.hadoop.fs.Path(ck + "/commits/0")
+    assert(commit.getFileSystem(ss.sparkContext.hadoopConfiguration).delete(commit, false))
+    Incremental.decontamStream(ss, src, holdout, dest, ck)
+    val ids = ss.read.parquet(dest).select("doc_id").as[Long].collect().toSeq.sorted
+    assert(ids == (1L to 10L), s"the replay duplicated survivors: $ids")
+  }
+
   test("winnowDecontamStream drops partially-edited copies across incremental runs, matching batch") {
     val ss = spark; import ss.implicits._
     import org.apache.spark.sql.functions._
@@ -2192,5 +2212,21 @@ class IncrementalSpec extends SparkSpec {
     Incremental.semanticDedupStream(ss, base + "/src", centsA,
       base + "/keep", base + "/ck4", eps = 0.9)
     assert(ss.read.parquet(base + "/keep").count() >= 2)
+    // the composed firewall's keepers index (indexDir/semkeep) too, on
+    // a batch whose embeddings are all null: no cluster is probed, yet
+    // the mismatch must still fail loud
+    val cur = base + "/cur"
+    def curate(cents: org.apache.spark.sql.DataFrame) =
+      Incremental.curationFirewallStream(ss, cur + "/src", cur + "/idx",
+        cur + "/kept", cur + "/ck", semanticEps = 0.9, semanticCentroids = cents)
+    Seq((1L, "a first document about one topic", Array(1.0f, 0.05f)))
+      .toDF("doc_id", "text", "embedding").write.parquet(cur + "/src")
+    curate(centsA)
+    Seq((2L, "another document that carries no embedding", null.asInstanceOf[Array[Float]]))
+      .toDF("doc_id", "text", "embedding").write.mode("append").parquet(cur + "/src")
+    val e3 = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      curate(centsB))
+    assert(e3.getCause.getMessage.contains("quantizer"),
+      s"composed mismatch must name the quantizer checksum: ${e3.getCause.getMessage}")
   }
 }
