@@ -34,8 +34,7 @@ object Bench {
     // Bench measures the long-lived service shape: static inputs
     // resolve once into a core-count-partitioned columnar cache
     // (see Tables.enableInputCache — the cold pass pays the build).
-    // SPARK_GRAFT_NO_INPUT_CACHE=1 is the dev A/B kill switch.
-    if (!sys.env.contains("SPARK_GRAFT_NO_INPUT_CACHE")) Tables.enableInputCache()
+    Tables.enableInputCache()
 
     // Per-query JOB counter (round-14): the artifact embeds a
     // job_overhead_ms probe, but consuming it requires knowing how
@@ -94,10 +93,9 @@ object Bench {
     // the way a service startup would. Wall time is COUNTED INTO
     // cold_total below (reported separately as prewarm_sec), so
     // cold_total remains "process start → full suite done once".
-    // Skipped for SPARK_GRAFT_BENCH_ONLY subsets (dev loops) and via
-    // SPARK_GRAFT_NO_PREWARM=1 (the serial-cold A/B hook).
+    // Skipped for SPARK_GRAFT_BENCH_ONLY subsets (dev loops).
     val (prewarmSec, prewarmFailures) =
-      if (sys.env.contains("SPARK_GRAFT_NO_PREWARM") || only.nonEmpty) (0.0, 0)
+      if (only.nonEmpty) (0.0, 0)
       else {
         val t0 = System.nanoTime()
         val tasks = Prewarm.run(spark, sfDir)
@@ -141,7 +139,7 @@ object Bench {
     // code, via a worktree A/B) reads as uniform inflation worst on
     // the cheapest queries. 50 one-task jobs quantify that floor;
     // compare this field across rounds before reading any sub-second
-    // query as a regression. tools/JobOverhead is the dedicated probe.
+    // query as a regression.
     val jobOverheadMs = {
       spark.sparkContext.parallelize(Seq(1), 1).count() // warm
       val t0 = System.nanoTime()

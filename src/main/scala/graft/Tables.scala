@@ -150,12 +150,10 @@ object Tables {
     * columnar cache's string materialization measurably loses to
     * re-decoding parquet for explode-heavy consumers — re-confirmed
     * after the codegen-cache fix: simhash 2.2 s from the file scan vs
-    * 4.2 s from cache). SPARK_GRAFT_CACHE_ALL_TABLES=1 is the dev A/B
-    * hook for re-testing that boundary.
+    * 4.2 s from cache).
     */
   private val cacheable: Set[String] =
-    if (sys.env.contains("SPARK_GRAFT_CACHE_ALL_TABLES")) schemas.keySet
-    else Set("lineitem", "orders", "customer",
+    Set("lineitem", "orders", "customer",
       "supplier", "part", "nation", "region", "events")
 
   /** Input-cache build thunks for [[graft.Prewarm]] — one per

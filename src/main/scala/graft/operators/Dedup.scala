@@ -121,40 +121,6 @@ object Dedup {
         estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
   }
 
-  /** The slim-banded A/B variant of [[minhashCandidatesOfTokens]] —
-    * kept runnable (not just described in the comment above) so the
-    * crossover can be re-measured whenever a bigger fixture exists:
-    * the banded self-join ships (band, bucket, doc_id) triples only
-    * (a ~32× smaller shuffle payload), signatures stage once per doc
-    * and re-attach per DISTINCT pair by id equi-join. Identical
-    * output by construction (same banding, same distinct-pair set,
-    * same fold — DedupSpec asserts ≡). Not a query path: the fused
-    * form wins at every measured scale so far (sf0.1 1.11 → 1.23 s,
-    * ×10 5.74 → 5.62 s — a wash); this exists to keep that decision
-    * falsifiable.
-    */
-  private[graft] def minhashCandidatesOfTokensSlim(
-      toks: DataFrame, shingleLen: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 8): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sigs = minhashSigs(toks, shingleLen, numHashes).localCheckpoint()
-    val banded = bandedOfSigs(sigs, bands, rowsPerBand)
-      .select(col("band"), col("bucket"), col("doc_id"))
-    val l = banded.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-    val r = banded.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
-    val pairs = l.hint("shuffle_hash").join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    pairs
-      .hint("shuffle_hash").join(
-        sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .hint("shuffle_hash").join(
-        sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
-  }
-
   /** Signature-agreement Jaccard estimate — the fold shared by the
     * self-join pair sweep and the on-disk index probe.
     */

@@ -22,11 +22,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Corpus {
 
-  /** Opt-in eager staging of the shared token frame in the LAZY
-    * prepare path — see the staging comment inside [[prepare]].
-    */
-  val EagerStageKey = "spark.graft.prepare.eagerStage"
-
   final case class PrepareStats(input: Long, afterExact: Long,
                                 afterNearDup: Long, afterQuality: Long,
                                 afterModel: Long = -1L,
@@ -147,17 +142,12 @@ object Corpus {
       .withColumn("__q", TextFns.qualityScoreOf(col("text"), col("__toks")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     pinned += exact
-    // Opt-in eager staging for the LAZY path (round 18): the ×10
-    // per-stage attribution measured the source scan + tokenization
-    // re-deriving in 8 concurrent consumer subtrees (22.7 s of stage
-    // wall) because a persist() only fills on first touch and the
-    // lazy path has no action before the single final job races its
-    // consumers. ONE staging count here fills the cache before the
-    // chain runs. Default OFF: the zero-accounting-actions contract
-    // (CorpusSpec) stays the default behavior, and at gate-fixture
-    // scale the rescans are cheaper than the extra job.
-    if (!withStats && docs.sparkSession.conf
-      .get(EagerStageKey, "false").toBoolean) { exact.count(); () }
+    // No staging count on the LAZY path, although a persist() only
+    // fills on first touch (at ×10 the source scan + tokenization
+    // re-derived in 8 concurrent consumer subtrees, 22.7 s of stage
+    // wall, round 18): the zero-accounting-actions contract
+    // (CorpusSpec) holds, and at gate-fixture scale the rescans are
+    // cheaper than the extra job.
 
     // 2. near-dup pruning: pair graph → component LOSERS (every
     //    non-minimum member of a duplicate cluster — the same

@@ -97,11 +97,7 @@ object MediaCorpus {
         call_function("graft_dhash64", col("pixels"), col("width"),
           col("height"), col("channels")).as("sh"))
       .filter(col("sh").isNotNull)
-      // eager when accounted (the counts touch it anyway) or when the
-      // lazy path opts into eager staging (Corpus.EagerStageKey — the
-      // round-18 shared-frame-rescan knob, same rationale)
-      .localCheckpoint(eager = withStats || images.sparkSession.conf
-        .get(graft.pipelines.Corpus.EagerStageKey, "false").toBoolean)
+      .localCheckpoint(eager = withStats)
     // pair-stage width: the lazy path estimates the corpus size from
     // the optimizer instead of counting (~4 KB/payload; the
     // [session, 4096] clamp bounds both directions — the

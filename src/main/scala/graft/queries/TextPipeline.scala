@@ -53,8 +53,8 @@ object TextPipeline {
       val toks = tokenizedDocs(s, dir).select(col("doc_id"), col("__toks"))
       // scale-adaptive pair-stage width, the Corpus.prepare rule
       // (~1 partition / 1000 docs, session width as floor): the raw
-      // operator's fixed-width plan spills 80+ GB at ×30 (Profile
-      // stage ledger) while small fixtures keep their exact plans via
+      // operator's fixed-width plan spills 80+ GB at ×30 (per-stage
+      // ledger) while small fixtures keep their exact plans via
       // the 0 path. The count reads the memoized persisted tokenized
       // frame — one cheap job, paid once per (session, dir) alongside
       // the pair build itself.

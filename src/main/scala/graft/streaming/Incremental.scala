@@ -28,8 +28,8 @@ import org.apache.spark.storage.StorageLevel
   *    provenance column just don't select it). Index probes exclude
   *    the current `__batch`, so a replay reproduces its original
   *    decisions instead of colliding with its own appended rows.
-  *    [[ingestIncrement]], [[weightedReservoirStream]] and
-  *    [[certifiedTopKStream]] document their own sink layouts.
+  *    [[weightedReservoirStream]] and [[certifiedTopKStream]]
+  *    document their own sink layouts.
   *  - recovery before start: any crashed compaction swap of the
   *    stream's index stores is completed before the stream starts
   *    ([[graft.operators.Dedup.recoverPendingSwap]]) — a replayed
@@ -104,18 +104,18 @@ object Incremental {
   }
 
   /** One micro-batch pass: consume new event files from `srcDir`,
-    * append them to `destDir` partitioned by the 6h snapshot bucket,
-    * checkpoint at `checkpointDir`, and stop when caught up.
-    * Re-running is a no-op until new files arrive; each run appends
-    * exactly the delta — the engine-native replacement for the
-    * reference's cursor loop.
+    * write them to `destDir` partitioned by the 6h snapshot bucket
+    * (`bucket_unix`, then `__batch`), checkpoint at `checkpointDir`,
+    * and stop when caught up. Re-running is a no-op until new files
+    * arrive; each run adds exactly the delta — the engine-native
+    * replacement for the reference's cursor loop.
     */
   def ingestIncrement(spark: SparkSession, srcDir: String, destDir: String,
                       checkpointDir: String): Unit =
     runAvailableNow(spark, srcDir, graft.Tables.eventsSchema, checkpointDir) {
-      (batch, _) =>
-        batch.withColumn("bucket_unix", TimeFns.bucket6h(col("ts")))
-          .write.mode("append").partitionBy("bucket_unix").parquet(destDir)
+      (batch, batchId) =>
+        writeBatch(batch.withColumn("bucket_unix", TimeFns.bucket6h(col("ts"))),
+          destDir, batchId, "bucket_unix")
     }
 
   /** Streaming verbatim-leak decontamination: consume new document

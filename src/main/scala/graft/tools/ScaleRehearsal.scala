@@ -362,77 +362,6 @@ object ScaleRehearsal {
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_summary","replicas":$r,"overhead_pre_ms":$overheadPreMs,"overhead_post_ms":$overheadPostMs,"queries":$summary}""")
 
-    // Skewed-source calibration point (round-13): quality_percentile's
-    // scale claim is exactly about corpora where ONE source dominates
-    // (a window partition is one task). Derive documents-only fixtures
-    // with half the corpus forced into a single giant source at both
-    // scales, then A/B the bucketed form against the plain
-    // percent_rank window form. SPARK_GRAFT_SCALE_SKEW=1 opt-in.
-    if (sys.env.get("SPARK_GRAFT_SCALE_SKEW").contains("1")) {
-      def skew(src: String, dst: String): Unit =
-        if (!exists(spark, dst))
-          spark.read.parquet(src)
-            .withColumn("source", when(pmod(col("doc_id"), lit(2)) === 0,
-              lit("giant-crawl")).otherwise(col("source")))
-            .repartition(32).write.mode("overwrite").parquet(dst)
-      val skewBase = s"$out-skewbase"; val skewBig = s"$out-skewdocs"
-      skew(s"$base/documents.parquet", s"$skewBase/documents.parquet")
-      skew(s"$out/documents.parquet", s"$skewBig/documents.parquet")
-      // the pre-round-13 window form, kept here as the A/B contrast
-      def windowForm(dir: String): DataFrame = {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("score_micro"))
-        Tables.documents(spark, dir)
-          .withColumn("__toks", graft.functions.TextFns.tokens(col("text")))
-          .select(col("source"), col("doc_id"),
-            round(graft.functions.TextFns.qualityScoreOf(col("text"), col("__toks")) * 1e6)
-              .cast("long").as("score_micro"))
-          .withColumn("pctile_micro",
-            round(percent_rank().over(w) * 1e6).cast("long"))
-          .orderBy(col("doc_id"))
-      }
-      def bucketedForm(dir: String): DataFrame =
-        graft.SparkEntry.queries("quality_percentile")(spark, dir)
-      for ((nm, dir) <- Seq(("skew_base", skewBase), (s"skew_x$r", skewBig));
-           (form, fn) <- Seq(("bucketed", bucketedForm _), ("window", windowForm _))) {
-        val t0 = System.nanoTime()
-        fn(dir).write.format("noop").mode("overwrite").save()
-        val first = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        fn(dir).write.format("noop").mode("overwrite").save()
-        val second = (System.nanoTime() - t1) / 1e9
-        println(f"""{"metric":"skew_percentile","fixture":"$nm","form":"$form","first_sec":$first%.2f,"second_sec":$second%.2f}""")
-      }
-      // the two forms must agree row-for-row on the skewed fixture
-      val diff = bucketedForm(skewBig).except(windowForm(skewBig)).count() +
-        windowForm(skewBig).except(bucketedForm(skewBig)).count()
-      println(s"""{"metric":"skew_percentile_equiv","fixture":"skew_x$r","diff_rows":$diff}""")
-    }
-
-    // Minhash fused-vs-slim shuffle-payload A/B (round-13): the code
-    // comment in Dedup.minhashCandidatesOfTokens predicts the slim
-    // (band, bucket, doc_id)-only exchange wins once sig traffic
-    // dominates; measure both at ×R. SPARK_GRAFT_SCALE_MINHASH_AB=1.
-    if (sys.env.get("SPARK_GRAFT_SCALE_MINHASH_AB").contains("1")) {
-      import graft.operators.Dedup
-      def toksOf(dir: String) =
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks"))
-      for ((nm, dir) <- Seq(("base", base), (s"x$r", out));
-           (form, fn) <- Seq(
-             ("fused", (t: DataFrame) => Dedup.minhashCandidatesOfTokens(t)),
-             ("slim", (t: DataFrame) => Dedup.minhashCandidatesOfTokensSlim(t)))) {
-        val t0 = System.nanoTime()
-        fn(toksOf(dir)).write.format("noop").mode("overwrite").save()
-        val first = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        fn(toksOf(dir)).write.format("noop").mode("overwrite").save()
-        val second = (System.nanoTime() - t1) / 1e9
-        println(f"""{"metric":"minhash_ab","fixture":"$nm","form":"$form","first_sec":$first%.2f,"second_sec":$second%.2f}""")
-      }
-    }
-
     // Auto-quantizer quality evidence (round-13): the wall ratios
     // above show the auto path's cost; this block shows what it does
     // to RESULT quality at ×R, against ground truth the fixture
@@ -485,44 +414,6 @@ object ScaleRehearsal {
       println(s"""{"metric":"scale_quality","artifact":"$qout","all_pass":$allPass}""")
     }
 
-    // Ngram pair-build A/B (round-15): the Bloom-singleton-pruned
-    // default vs the pre-round-15 join form, both scales, same
-    // session — the measured evidence for the heaviest-shuffle
-    // optimization pass. (A collect_list no-join form was measured
-    // first in this block and REJECTED: 83 s vs 25 s steady at ×10 —
-    // ObjectHashAggregate sort-based fallback on singleton-dominated
-    // gram streams; negative result recorded in BASELINE r15.)
-    // SPARK_GRAFT_SCALE_NGRAM_AB=1 opt-in.
-    if (sys.env.get("SPARK_GRAFT_SCALE_NGRAM_AB").contains("1")) {
-      import graft.operators.Dedup
-      def toksOf(dir: String) =
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"),
-            graft.functions.TextFns.tokens(col("text")).as("__toks"))
-      def widthOf(dir: String): Int = {
-        val derived = math.min(4096L,
-          spark.read.parquet(s"$dir/documents.parquet").count() / 1000L).toInt
-        if (derived > spark.sessionState.conf.numShufflePartitions) derived else 0
-      }
-      for ((nm, dir) <- Seq(("base", base), (s"x$r", out));
-           (form, fn) <- Seq(
-             ("bloom", (t: DataFrame, w: Int) =>
-               Dedup.ngramJaccardPairsOfTokens(t, n = 3, threshold = 0.5, pairParts = w)),
-             ("join", (t: DataFrame, w: Int) =>
-               Dedup.ngramJaccardPairsOfTokensJoined(t, n = 3, threshold = 0.5, pairParts = w)))) {
-        val w = widthOf(dir)
-        mem.reset()
-        val t0 = System.nanoTime()
-        fn(toksOf(dir), w).write.format("noop").mode("overwrite").save()
-        val first = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        fn(toksOf(dir), w).write.format("noop").mode("overwrite").save()
-        val second = (System.nanoTime() - t1) / 1e9
-        org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(spark.sparkContext)
-        val mb = 1024.0 * 1024.0
-        println(f"""{"metric":"ngram_ab","fixture":"$nm","form":"$form","pair_parts":$w,"first_sec":$first%.2f,"second_sec":$second%.2f,"spill_mem_mb":${mem.spill.get / mb}%.0f,"spill_disk_mb":${mem.spillDisk.get / mb}%.0f}""")
-      }
-    }
     spark.stop()
   }
 }

@@ -443,15 +443,9 @@ object StreamRehearsal {
         .select(col("vec_id"), col("embedding")).localCheckpoint()
       // frozen SemDeDup quantizer at the production auto size — the
       // same train-once setup cost as the ppl model and the holdout.
-      // SPARK_GRAFT_STREAM_SEMDEDUP=0 disables the stage: the
-      // round-16-shaped scenario, for wave-drift A/Bs that isolate
-      // the probe-strategy switch from the new stage's cost.
-      val semDedupOn = !sys.env.get("SPARK_GRAFT_STREAM_SEMDEDUP").contains("0")
-      val semCents =
-        if (!semDedupOn) null
-        else graft.operators.Similarity.kmeansCentroidsAuto(
-          spark.read.parquet(s"$fixture/embeddings.parquet")
-            .select(col("embedding"))).localCheckpoint()
+      val semCents = graft.operators.Similarity.kmeansCentroidsAuto(
+        spark.read.parquet(s"$fixture/embeddings.parquet")
+          .select(col("embedding"))).localCheckpoint()
       val src = s"$work/cf_src"; val idx = s"$work/cf_idx"
       val dest = s"$work/cf_kept"; val ck = s"$work/cf_ck"
       for (w <- 0 until waves) {
@@ -459,7 +453,7 @@ object StreamRehearsal {
           .write.mode("append").parquet(src)
         timed(s"wave_$w")(
           Incremental.curationFirewallStream(spark, src, idx, dest, ck,
-            semanticEps = if (semDedupOn) 0.4 else 0.0,
+            semanticEps = 0.4,
             semanticCentroids = semCents,
             pplModel = model, maxPpl = 1e5,
             decontamHoldout = holdout, decontamEps = 0.8))

@@ -99,21 +99,6 @@ class CorpusSpec extends SparkSpec {
         s"withStats must add exactly the input count + the fused stage " +
           s"aggregate: lazy=$lazy1 accounted=$acct")
       r1(); r2(); r3()
-      // round-18 eager-staging knob: the lazy path gains EXACTLY the
-      // one staging action (filling the shared token frame's cache
-      // before the chain races its consumers), same result frame,
-      // accounted path untouched by the knob
-      ss.conf.set(Corpus.EagerStageKey, "true")
-      try {
-        val (lazyEager, s4, r4) = measure(withStats = false)
-        assert(s4 == Corpus.PrepareStats(-1, -1, -1, -1))
-        assert(lazyEager == lazy1 + 1,
-          s"eager staging must add exactly one action: " +
-            s"lazy=$lazy1 eager=$lazyEager")
-        val (acct2, _, r5) = measure(withStats = true)
-        assert(acct2 == acct, "accounted path must ignore the knob")
-        r4(); r5()
-      } finally ss.conf.unset(Corpus.EagerStageKey)
     } finally ss.listenerManager.unregister(ql)
   }
 

@@ -37,6 +37,18 @@ class IncrementalSpec extends SparkSpec {
     Incremental.ingestIncrement(spark, flat, dest, ckpt)
     assert(spark.read.parquet(dest).count() == total)
 
+    // a crash between the sink write and the checkpoint commit: the
+    // last batch's commit record is gone, so the rerun replays it onto
+    // the rows it already wrote — which must not double them
+    val fs = new org.apache.hadoop.fs.Path(ckpt)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val last = fs.listStatus(new org.apache.hadoop.fs.Path(ckpt + "/commits"))
+      .map(_.getPath).filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    assert(fs.delete(last, false))
+    Incremental.ingestIncrement(spark, flat, dest, ckpt)
+    assert(spark.read.parquet(dest).count() == total,
+      "the replayed batch duplicated its events")
+
     // bucket partitioning materialized for pruning
     val buckets = spark.read.parquet(dest).select("bucket_unix").distinct().count()
     assert(buckets >= 1)
