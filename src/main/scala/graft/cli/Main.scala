@@ -15,8 +15,10 @@ import graft.sources.{ExplorerClient, FileTransport, HttpTransport}
   *   MERLINSCAN_BASE_URL  explorer API base
   *   MERLINSCAN_API_KEY   api key (required for HTTP)
   *   ETL_RATE_LIMIT_QPS   default 3.0
-  *   GRAFT_FIXTURE_DIR    when set, serve the API from JSON fixtures
-  *                        instead of HTTP (offline/testing)
+  *   GRAFT_FIXTURE_DIR    when set, serve the API from a directory of
+  *                        JSON pages (fixtures or dumped responses)
+  *                        instead of HTTP; a bare path or a URI on any
+  *                        Hadoop filesystem (file:, hdfs:, s3a:, ...)
   *   TELEGRAM_BOT_TOKEN / TELEGRAM_CHAT_ID   report delivery
   */
 object Main {
@@ -140,20 +142,13 @@ object Main {
       case "block_by_time" =>
         val r = Ingest.blockByTime(spark, store, client,
           f("unix-ts").toLong, f.getOrElse("closest", "after"))
-        s"""{"block_number":${r.blockNumber.getOrElse(-1L)},"status":"${r.status}","message":"${r.message}"}"""
+        s"""{"block_number":${r.blockNumber.getOrElse(-1L)},"status":"${Ingest.jsonEscape(r.status)}",""" +
+          s""""message":"${Ingest.jsonEscape(r.message)}"}"""
       case "holders_snapshot" =>
-        // --parallel-from-dir <dump>: bulk/offline backfill through the
-        // partition-parallel DSv2 merlin reader instead of the page loop
-        val r = f.get("parallel-from-dir") match {
-          case Some(dump) => Ingest.holdersSnapshotParallel(spark, store, dump, f("token"),
-            java.time.Instant.parse(f("bucket-start-utc")), f("trigger-id"),
-            f.getOrElse("page-size", "100").toInt, f.getOrElse("max-pages", "10000").toInt,
-            f.getOrElse("default-decimals", "18").toInt)
-          case None => Ingest.holdersSnapshot(spark, store, client, f("token"),
-            java.time.Instant.parse(f("bucket-start-utc")), f("trigger-id"),
-            f.getOrElse("page-size", "100").toInt, f.getOrElse("max-pages", "10000").toInt,
-            f.getOrElse("default-decimals", "18").toInt)
-        }
+        val r = Ingest.holdersSnapshot(spark, store, client, f("token"),
+          java.time.Instant.parse(f("bucket-start-utc")), f("trigger-id"),
+          f.getOrElse("page-size", "100").toInt, f.getOrElse("max-pages", "10000").toInt,
+          f.getOrElse("default-decimals", "18").toInt)
         s"""{"rows":${r.rows},"pages":${r.pages},"token":"${r.token}","decimals":${r.decimals}}"""
       case "wallet_tokentx" =>
         val r = Ingest.walletTokenTx(spark, store, client, f("wallet"), f("token"),
@@ -174,8 +169,7 @@ object Main {
         val r = Ingest.holdersAndTop100(spark, store, client, f("token"), asOf,
           f.getOrElse("page-size", "500").toInt, f.getOrElse("max-pages", "100000").toInt,
           f.getOrElse("k", "100").toInt,
-          if (f.get("report").exists(_.toBoolean)) Some(notifier) else None,
-          parallelDumpDir = f.get("parallel-from-dir"))
+          if (f.get("report").exists(_.toBoolean)) Some(notifier) else None)
         s"""{"rows":${r.snapshot.rows},"pages":${r.snapshot.pages},""" +
           s""""token":"${r.snapshot.token}","decimals":${r.snapshot.decimals},""" +
           s""""top100_rows":${r.top100Rows},"bucket_start_utc":"${r.bucketStartUtc}","trigger_id":"${r.triggerId}"}"""

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.domain.MerlStore
 import graft.functions.AmountFns
-import graft.sources.{Envelope, ExplorerClient, HadoopTransport}
+import graft.sources.ExplorerClient
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,25 +28,25 @@ import scala.jdk.CollectionConverters._
   */
 object Ingest {
 
-  /** Cursor-metadata JSON for a probe envelope. Status/message are
-    * free text from the explorer — escape them (quotes, backslashes,
-    * control chars) so the stored metadata is always valid JSON; one
-    * shared helper for the sequential loop AND the parallel replay,
-    * so the two paths cannot drift.
+  /** The body of a JSON string literal holding `v`: quotes,
+    * backslashes and control chars escaped. Explorer status/message
+    * fields are free text, so every JSON document that embeds them
+    * (cursor metadata, job stats, the CLI's output) goes through this.
     */
-  private[pipelines] def probeMetaJson(status: String, message: String): String = {
-    def esc(v: String): String = {
-      val sb = new StringBuilder
-      v.foreach {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      sb.toString
+  private[graft] def jsonEscape(v: String): String = {
+    val sb = new StringBuilder
+    v.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
     }
-    s"""{"status":"${esc(status)}","message":"${esc(message)}"}"""
+    sb.toString
   }
+
+  /** Cursor-metadata JSON for a probe envelope. */
+  private[pipelines] def probeMetaJson(status: String, message: String): String =
+    s"""{"status":"${jsonEscape(status)}","message":"${jsonEscape(message)}"}"""
 
   /** `parse_int` (`merlin_etl.py:184-188`): null on failure. */
   def parseLong(s: String): Option[Long] =
@@ -78,7 +78,8 @@ object Ingest {
         .withColumn("inserted_at", current_timestamp())
       store.upsertBlockCheck(df)
       store.jobFinish(jobId, "success",
-        stats = Some(s"""{"block_number":${block.getOrElse(-1L)},"status":"${env.status}"}"""))
+        stats = Some(
+          s"""{"block_number":${block.getOrElse(-1L)},"status":"${jsonEscape(env.status)}"}"""))
       BlockByTimeResult(block, env.status, env.message)
     } catch {
       case e: Throwable =>
@@ -110,8 +111,7 @@ object Ingest {
         if (!env.ok || env.resultItems.isEmpty) done = true
         else {
           for (it <- env.resultItems) {
-            // Schema-drift-tolerant field coalescing (merlin_etl.py:276-284),
-            // shared with the DSv2 reader via [[HolderFields]]
+            // Schema-drift-tolerant field coalescing (merlin_etl.py:276-284)
             val addr = graft.sources.HolderFields.addr(it)
             val qty = graft.sources.HolderFields.qty(it)
             graft.sources.HolderFields.dec(it)
@@ -144,110 +144,6 @@ object Ingest {
     }
   }
 
-  /** E2 ingest over a DUMPED page directory via the partition-parallel
-    * DSv2 `merlin` source ([[graft.sources.MerlinSource]]) — the bulk/
-    * offline-backfill twin of [[holdersSnapshot]] (SURVEY S1's named
-    * v2). Produces a byte-identical `holders_raw` state to the
-    * sequential loop (IngestSpec proves it on shared fixtures) while
-    * the page PARSE work scales with the cluster.
-    *
-    * The two order-dependent pieces of the loop are reconstructed from
-    * per-page metadata (ONE tiny aggregate — one row per dumped page,
-    * bounded by `maxPages`, planning-scale not data-scale):
-    *
-    *  - '''Termination''': the loop stops at the first `!ok`/empty
-    *    page and AFTER the first short page. Both are visible in the
-    *    per-page RAW item counts (the reader emits items before any
-    *    null-drop, so a dropped row can never masquerade as a short
-    *    page); the replayed cutoff keeps exactly the pages the loop
-    *    would have processed. Pages past the cutoff were read
-    *    speculatively and are filtered — bounded waste, no wrong rows.
-    *  - '''Sticky decimals''': within a page, `last(decimals_obs)
-    *    ignoreNulls` over `(page, idx)` — a PER-PAGE window, so it
-    *    parallelizes; across pages, the carry-in value per page is
-    *    computed on the driver from per-page last-observed values and
-    *    broadcast as a literal map. Together they give each row the
-    *    exact "latest observation at or before me" the sequential
-    *    loop gave it.
-    */
-  def holdersSnapshotParallel(spark: SparkSession, store: MerlStore, dumpDir: String,
-                              token: String, bucketStartUtc: java.time.Instant,
-                              triggerId: String, pageSize: Int = 100,
-                              maxPages: Int = 10000, defaultDecimals: Int = 18,
-                              pagesPerPartition: Int = 8): SnapshotResult = {
-    import org.apache.spark.sql.expressions.Window
-    val jobId = store.jobStart("holders_6h")
-    try {
-      val raw = spark.read.format("merlin")
-        .option("dir", dumpDir).option("contractaddress", token)
-        .option("pagesize", pageSize).option("maxpages", maxPages)
-        .option("pagesperpartition", pagesPerPartition)
-        .load()
-
-      val meta = raw.groupBy(col("page")).agg(
-          count(lit(1)).as("cnt"),
-          max(when(col("decimals_obs").isNotNull, struct(col("idx"), col("decimals_obs"))))
-            .getField("decimals_obs").as("last_dec"))
-        .collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getInt(2)))))
-        .toMap
-
-      // Replay the sequential loop's control flow over the metadata.
-      val carryIn = scala.collection.mutable.Map.empty[Int, Int]
-      var sticky = defaultDecimals
-      var lastKept = 0
-      var pages = 0
-      var p = 1
-      var continue = true
-      while (continue && p <= maxPages) {
-        meta.get(p) match {
-          case Some((cnt, lastDec)) if cnt > 0 =>
-            carryIn(p) = sticky
-            lastDec.foreach(sticky = _)
-            lastKept = p
-            pages += 1
-            if (cnt < pageSize) continue = false else p += 1
-          case _ => continue = false
-        }
-      }
-
-      val w = Window.partitionBy(col("page")).orderBy(col("idx"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val carryLit = typedLit(carryIn.toMap)
-      val frame = raw.filter(col("page") <= lit(lastKept))
-        .withColumn("dec_eff", coalesce(
-          last(col("decimals_obs"), ignoreNulls = true).over(w),
-          element_at(carryLit, col("page"))))
-        .filter(col("holder_address").isNotNull && col("quantity_raw").isNotNull)
-        .select(
-          lit(triggerId).as("trigger_id"),
-          lit(token.toLowerCase).as("contract_address"),
-          lower(col("holder_address")).as("holder_address"),
-          col("dec_eff").cast(IntegerType).as("token_decimal"),
-          col("quantity_raw"))
-        .withColumn("bucket_start_utc", lit(java.sql.Timestamp.from(bucketStartUtc)))
-        .withColumn("bucket_unix", unix_timestamp(col("bucket_start_utc")))
-        .withColumn("quantity_18d", AmountFns.scale18(col("quantity_raw")))
-
-      val rows =
-        if (lastKept == 0) 0L
-        else {
-          frame.persist()
-          try {
-            val c = frame.count()
-            if (c > 0) store.upsertHolders(frame)
-            c
-          } finally frame.unpersist(blocking = false)
-        }
-      store.jobFinish(jobId, "success",
-        stats = Some(s"""{"rows":$rows,"pages":$pages,"token":"$token","decimals":$sticky}"""))
-      SnapshotResult(rows, pages, token, sticky)
-    } catch {
-      case e: Throwable =>
-        store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
-    }
-  }
-
   final case class HoldersTop100Result(snapshot: SnapshotResult, top100Rows: Long,
                                        bucketStartUtc: java.time.Instant, triggerId: String)
 
@@ -263,20 +159,12 @@ object Ingest {
   def holdersAndTop100(spark: SparkSession, store: MerlStore, client: ExplorerClient,
                        token: String, asOf: java.time.Instant,
                        pageSize: Int = 500, maxPages: Int = 100000, k: Int = 100,
-                       notifier: Option[Report.Notifier] = None,
-                       parallelDumpDir: Option[String] = None): HoldersTop100Result = {
+                       notifier: Option[Report.Notifier] = None): HoldersTop100Result = {
     val bucketStart = java.time.Instant.ofEpochSecond(asOf.getEpochSecond / 21600 * 21600)
     val triggerId = java.time.format.DateTimeFormatter.ofPattern("yyyy/MM/dd-HH:mm")
       .withZone(java.time.ZoneOffset.UTC).format(asOf)
-    // Behind-a-flag DSv2 path: a dump directory routes the snapshot
-    // through the partition-parallel merlin reader instead of the
-    // driver-side page loop (identical resulting state — IngestSpec).
-    val snap = parallelDumpDir match {
-      case Some(d) => holdersSnapshotParallel(spark, store, d, token, bucketStart,
-        triggerId, pageSize, maxPages)
-      case None => holdersSnapshot(spark, store, client, token, bucketStart, triggerId,
-        pageSize, maxPages)
-    }
+    val snap = holdersSnapshot(spark, store, client, token, bucketStart, triggerId,
+      pageSize, maxPages)
     val top = graft.domain.Top100.computeForToken(store.read("holders_raw"), token, k)
     store.refreshTop100(top)
     // count THIS bucket's refreshed rows — the table keeps earlier
@@ -388,128 +276,6 @@ object Ingest {
     }
   }
 
-  /** E1 ingest over a DUMPED page directory via the partition-parallel
-    * DSv2 `merlin` source in tokentx mode — the bulk/offline-backfill
-    * twin of [[walletTokenTx]] (SURVEY S6's v2), producing identical
-    * `wallet_transactions` + cursor state to the sequential loop on
-    * the same dump (MerlinSourceSpec proves it) while the page PARSE
-    * work scales with the cluster.
-    *
-    * The order dependence is stronger here than for holders: page
-    * N+1's REQUEST — its `startblock` param, hence its dump filename —
-    * carries the running max block of pages 1..N. So the source parses
-    * every candidate (page, startblock) file in parallel, and this
-    * function replays the chain over a per-file metadata aggregate
-    * (raw count + max parsed block; one row per dumped file,
-    * planning-scale): start at (1, cursor), follow (page+1,
-    * max-so-far) while pages are full, stop at the first missing/!ok/
-    * empty file or after a short page — exactly the sequential control
-    * flow. Files the chain never visits (stale runs, pages past
-    * termination) were parsed speculatively and are filtered — bounded
-    * waste, never wrong rows. The terminating probe's status/message
-    * (the cursor metadata the reference records, merlin_etl.py:463) is
-    * re-read with ONE bounded driver-side call.
-    */
-  def walletTokenTxParallel(spark: SparkSession, store: MerlStore, dumpDir: String,
-                            wallet: String, token: String, startBlock: Long = 0,
-                            pageSize: Int = 100, maxPages: Int = 100000,
-                            pagesPerPartition: Int = 8): TokenTxResult = {
-    val stream = s"tokentx:${wallet.toLowerCase}:${token.toLowerCase}"
-    val initBlock = store.cursorGet(stream).map(_._1).filter(_ > 0)
-      .map(math.max(_, startBlock)).getOrElse(startBlock)
-    val jobId = store.jobStart("wallet_tx_hourly")
-    try {
-      val raw = spark.read.format("merlin")
-        .option("mode", "tokentx").option("dir", dumpDir)
-        .option("address", wallet).option("contractaddress", token)
-        .option("pagesize", pageSize).option("maxpages", maxPages)
-        .option("pagesperpartition", pagesPerPartition)
-        .load()
-
-      val meta = raw.groupBy(col("page"), col("start_block")).agg(
-          count(lit(1)).as("cnt"),
-          max(coalesce(col("block_number").try_cast(LongType), lit(0L))).as("max_blk"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
-        .toMap
-
-      // Replay the sequential loop's control flow over the metadata.
-      var lastBlock = initBlock
-      var page = 1
-      var pages = 0
-      var lastDonePage = 0
-      var done = false
-      var lastProbe: Option[(Int, Long)] = None
-      val kept = scala.collection.mutable.Map.empty[Int, Long]
-      var totalRows = 0L
-      while (!done && pages < maxPages) {
-        lastProbe = Some((page, lastBlock))
-        meta.get((page, lastBlock)) match {
-          case Some((cnt, maxBlk)) if cnt > 0 =>
-            kept(page) = lastBlock
-            totalRows += cnt
-            lastBlock = math.max(lastBlock, maxBlk)
-            pages += 1
-            lastDonePage = page
-            if (cnt < pageSize) done = true else page += 1
-          case _ => done = true
-        }
-      }
-
-      // The final probe's envelope → cursor metadata (one bounded
-      // read; a missing file resolves to the explorer's no-data
-      // envelope, exactly what the sequential loop's probe saw).
-      val metaJson = lastProbe match {
-        case Some((p, s)) =>
-          val env = new ExplorerClient(new HadoopTransport(dumpDir))
-            .tokenTxPage(wallet, token, s, p, pageSize)
-          probeMetaJson(env.status, env.message)
-        case None => "{}"
-      }
-
-      // Keep exactly the chain's (page, startblock) files, then mirror
-      // the sequential loop's per-field parse-with-default semantics
-      // as codegen'd expressions (try_cast ≡ parse_int-style
-      // null-on-failure).
-      val keptLit = typedLit(kept.toMap)
-      val parsed = raw
-        .filter(element_at(keptLit, col("page")) === col("start_block"))
-        .select(
-          lit(wallet.toLowerCase).as("wallet_address"),
-          lit(token.toLowerCase).as("contract_address"),
-          coalesce(col("block_number").try_cast(LongType), lit(0L)).as("block_number"),
-          coalesce(col("time_stamp").try_cast(LongType), lit(0L)).as("block_time_unix"),
-          col("tx_hash"),
-          col("nonce").try_cast(LongType).as("nonce"),
-          col("block_hash"),
-          coalesce(lower(col("from_address")), lit("")).as("from_address"),
-          coalesce(lower(col("to_address")), lit("")).as("to_address"),
-          when(col("value_raw").isNull || col("value_raw") === "", "0")
-            .otherwise(col("value_raw")).as("value_raw"),
-          col("token_name"),
-          col("token_symbol"),
-          coalesce(col("token_decimal").try_cast(IntegerType), lit(18)).as("token_decimal"),
-          coalesce(col("transaction_index").try_cast(IntegerType), lit(0)).as("transaction_index"),
-          col("gas").try_cast(LongType).as("gas"),
-          col("gas_price"),
-          col("gas_used").try_cast(LongType).as("gas_used"),
-          col("cumulative_gas_used").try_cast(LongType).as("cumulative_gas_used"),
-          col("input"),
-          col("confirmations").try_cast(LongType).as("confirmations"))
-
-      if (totalRows > 0)
-        store.appendWalletTransactions(txEnrich(parsed),
-          contracts = Some(Seq(token.toLowerCase)))
-      store.cursorUpsert(stream, Some(lastBlock), Some(lastDonePage), metaJson)
-      store.jobFinish(jobId, "success", stats = Some(
-        s"""{"rows":$totalRows,"pages":$pages,"wallet":"$wallet","token":"$token","last_block":$lastBlock}"""))
-      TokenTxResult(totalRows, pages, wallet, token, lastBlock)
-    } catch {
-      case e: Throwable =>
-        store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
-    }
-  }
-
   private val txIngestSchema = StructType(Seq(
     StructField("wallet_address", StringType), StructField("contract_address", StringType),
     StructField("block_number", LongType), StructField("block_time_unix", LongType),
@@ -525,9 +291,8 @@ object Ingest {
   private def txFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
     txEnrich(spark.createDataFrame(rows.asJava, txIngestSchema))
 
-  /** Shared post-parse enrichment of a txIngestSchema-shaped frame —
-    * ONE definition for the sequential loop and the DSv2 parallel
-    * path, so the derived columns cannot drift.
+  /** Derived columns of a txIngestSchema-shaped frame: block time,
+    * 18-decimal value, decimal gas price, ingest timestamp.
     */
   private def txEnrich(df: DataFrame): DataFrame =
     df.withColumn("wallet_name", lit(null).cast(StringType))

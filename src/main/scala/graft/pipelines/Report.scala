@@ -180,11 +180,13 @@ object Report {
     val flows = Activity.flows(w, col("wallet_address"), col("value_18d"),
       inflow = col("wallet_address") === col("to_address"),
       outflow = col("wallet_address") === col("from_address")).cache()
-    val totals = Activity.totals(flows).collect().head
-    val movers = Activity.topMovers(flows, 10)
-      .select(col("entity"), col("in_amt").cast("string"),
-        col("out_amt").cast("string"), col("txs"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    val (totals, movers) =
+      try (Activity.totals(flows).collect().head,
+        Activity.topMovers(flows, 10)
+          .select(col("entity"), col("in_amt").cast("string"),
+            col("out_amt").cast("string"), col("txs"))
+          .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq)
+      finally flows.unpersist()
     val asOfStr = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm'Z'")
       .withZone(java.time.ZoneOffset.UTC).format(asOf)
     ActivityData(asOfStr, totals.getAs[Long]("wallets"), totals.getAs[Long]("total_txs"),

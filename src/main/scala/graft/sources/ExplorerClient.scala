@@ -10,16 +10,14 @@ import scala.jdk.CollectionConverters._
   * Split for testability:
   *  - [[ExplorerTransport]] — how bytes are fetched. [[HttpTransport]]
   *    is the real client (retry/backoff + rate limit per
-  *    `merlin_etl.py:55-84`); [[FileTransport]] serves canned JSON
-  *    fixtures from a directory keyed by the request params, so every
-  *    pipeline is testable offline (this container has zero egress).
+  *    `merlin_etl.py:55-84`); [[FileTransport]] serves JSON pages from
+  *    a directory keyed by the request params, so every pipeline runs
+  *    offline against fixtures or a dump of earlier responses.
   *  - [[ExplorerClient]] — envelope parsing and endpoint surface.
   *
   * Ingest is driver-side by design: the API is rate-limited to ~3 QPS
   * (BASELINE.md), so the bottleneck is the remote end, never Spark.
-  * The 100 TB path is the already-ingested Parquet tables; a DSv2
-  * `TableProvider` with one InputPartition per page range is the v2
-  * evolution if a bulk endpoint ever appears.
+  * The 100 TB path is the already-ingested Parquet tables.
   */
 trait ExplorerTransport {
   /** GET with query params, returning the response body as UTF-8. */
@@ -102,17 +100,16 @@ class HttpTransport(baseUrl: String, apiKey: String, qps: Double = 3.0,
   }
 }
 
-/** Fixture transport: params → `<dir>/<k1=v1&k2=v2 ...>.json` with
-  * keys sorted and values sanitized. Missing fixture ⇒ a status-0
+/** Directory transport: params → `<dir>/<k1=v1&k2=v2 ...>.json` with
+  * keys sorted and values sanitized. Missing file ⇒ a status-0
   * envelope (the explorer's "no data" shape), which every page loop
   * treats as termination — so partial fixture sets behave like a
-  * short API history.
+  * short API history. `dir` resolves through the Hadoop FileSystem
+  * API, so a bare path and a `file:`, `hdfs:` or `s3a:` URI all work;
+  * the FileSystem is resolved once, when the transport is built.
   */
 object FileTransport {
-  /** The dump filename a given request resolves to — ONE definition
-    * shared by [[FileTransport]], [[HadoopTransport]] and the DSv2
-    * planner so file naming cannot drift between writer and readers.
-    */
+  /** The filename a given request resolves to. */
   def name(params: Map[String, String]): String =
     params.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("&")
       .replaceAll("[^A-Za-z0-9&=_.-]", "_") + ".json"
@@ -124,44 +121,24 @@ object FileTransport {
 }
 
 class FileTransport(dir: String) extends ExplorerTransport {
+  private val root = new org.apache.hadoop.fs.Path(dir)
+  private val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
+
   override def get(params: Map[String, String]): String = {
-    val p = java.nio.file.Paths.get(dir, FileTransport.name(params))
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    else FileTransport.NoData
+    val p = new org.apache.hadoop.fs.Path(root, FileTransport.name(params))
+    if (fs.exists(p)) {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    } else FileTransport.NoData
   }
 
   /** The fixture filename a given request resolves to (test helper). */
   def fixtureName(params: Map[String, String]): String = FileTransport.name(params)
 }
 
-/** [[FileTransport]] resolved through the Hadoop FileSystem API: the
-  * same dump-file naming, but `dir` may live on any Hadoop-supported
-  * filesystem (`file:`, `hdfs:`, `s3a:`, …) — the layout a
-  * 1000-executor backfill actually uses. Constructed executor-side by
-  * the DSv2 readers (transports are not serialized).
-  */
-class HadoopTransport(dir: String) extends ExplorerTransport {
-  override def get(params: Map[String, String]): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, FileTransport.name(params))
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-        new String(out.toByteArray, "UTF-8")
-      } finally in.close()
-    } else FileTransport.NoData
-  }
-}
-
 /** Field-name coalescing for explorer schema drift
   * (`merlin_etl.py:276-284`): holder pages arrive with any of several
-  * key spellings per field. ONE definition shared by the driver-side
-  * page loop ([[graft.pipelines.Ingest.holdersSnapshot]]) and the
-  * partition-parallel DSv2 reader ([[MerlinSource]]) so the two paths
-  * cannot drift apart.
+  * key spellings per field.
   */
 object HolderFields {
   val Addr: Seq[String] = Seq("TokenHolderAddress", "tokenHolderAddress",
@@ -174,39 +151,18 @@ object HolderFields {
   def dec(it: Map[String, String]): Option[Int] =
     Dec.flatMap(it.get).headOption.flatMap(v => scala.util.Try(v.trim.toInt).toOption)
 
-  /** The exact request params `ExplorerClient.holderPage` sends — the
-    * DSv2 planner uses these to locate dumped page files.
-    */
+  /** The exact request params `ExplorerClient.holderPage` sends. */
   def pageParams(token: String, page: Int, pageSize: Int): Map[String, String] =
     Map("module" -> "token", "action" -> "tokenholderlist",
       "contractaddress" -> token, "page" -> page.toString,
       "offset" -> pageSize.toString)
 }
 
-/** Raw `account.tokentx` item surface — the schema-name → envelope-key
-  * mapping and the exact request params, shared by the sequential page
-  * loop ([[graft.pipelines.Ingest.walletTokenTx]] via
-  * `ExplorerClient.tokenTxPage`) and the partition-parallel DSv2
-  * reader ([[MerlinSource]] tokentx mode) so the two paths cannot
-  * drift apart.
-  */
+/** Request surface of `account.tokentx` pages. */
 object TxFields {
-  /** DSv2 column name → raw envelope key, in schema order. */
-  val Keys: Seq[(String, String)] = Seq(
-    "block_number" -> "blockNumber", "time_stamp" -> "timeStamp",
-    "tx_hash" -> "hash", "nonce" -> "nonce", "block_hash" -> "blockHash",
-    "from_address" -> "from", "to_address" -> "to", "value_raw" -> "value",
-    "token_name" -> "tokenName", "token_symbol" -> "tokenSymbol",
-    "token_decimal" -> "tokenDecimal", "transaction_index" -> "transactionIndex",
-    "gas" -> "gas", "gas_price" -> "gasPrice", "gas_used" -> "gasUsed",
-    "cumulative_gas_used" -> "cumulativeGasUsed", "input" -> "input",
-    "confirmations" -> "confirmations")
-
   /** The exact request params `ExplorerClient.tokenTxPage` sends. The
-    * `startblock` value is the loop's RUNNING max block — page N+1's
-    * filename depends on page N's contents, which is why the DSv2
-    * planner lists candidate files by pattern and replays the chain
-    * from per-page metadata instead of probing filenames directly.
+    * `startblock` value is the loop's RUNNING max block, so page N+1's
+    * request (and its dumped filename) depends on page N's contents.
     */
   def pageParams(wallet: String, token: String, startBlock: Long,
                  page: Int, pageSize: Int): Map[String, String] =

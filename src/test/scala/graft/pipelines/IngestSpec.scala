@@ -60,6 +60,24 @@ class IngestSpec extends SparkSpec {
 
     val jobs = store.read("job_runs").filter(col("job_name") === "holders_6h")
     assert(jobs.count() == 2 && jobs.filter(col("status") === "success").count() == 2)
+
+    // an error envelope after page 1 stops the loop there: the full
+    // page 3 behind it is never requested, so none of its rows land
+    val (fx2, store2, t2, client2) = freshDirs()
+    write(fx2, t2, holderParams("0xerr", 1, 2),
+      """{"status":"1","message":"OK","result":[
+        |{"TokenHolderAddress":"0xA1","TokenHolderQuantity":"1","decimals":"18"},
+        |{"TokenHolderAddress":"0xA2","TokenHolderQuantity":"2"}]}""".stripMargin)
+    write(fx2, t2, holderParams("0xerr", 2, 2), """{"status":"0","message":"NOTOK","result":[]}""")
+    write(fx2, t2, holderParams("0xerr", 3, 2),
+      """{"status":"1","message":"OK","result":[
+        |{"TokenHolderAddress":"0xGHOST","TokenHolderQuantity":"9"},
+        |{"TokenHolderAddress":"0xGHOST2","TokenHolderQuantity":"9"}]}""".stripMargin)
+    val rErr = Ingest.holdersSnapshot(spark, store2, client2, "0xerr", bucket, "2024/01/15-06",
+      pageSize = 2, maxPages = 10)
+    assert(rErr.rows == 2 && rErr.pages == 1)
+    assert(store2.read("holders_raw").select("holder_address").collect()
+      .map(_.getString(0)).sorted.toSeq == Seq("0xa1", "0xa2"))
   }
 
   test("tokentx: pagination with running startblock, cursor resume, insert-ignore") {
@@ -92,6 +110,31 @@ class IngestSpec extends SparkSpec {
     val r3 = Ingest.walletTokenTx(spark, store, client, "0xW1", "0xabc", 0, pageSize = 2)
     assert(r3.rows == 3 && r3.lastBlock == 25, "pages re-served after cursor loss")
     assert(store.read("wallet_transactions").count() == 3, "insert-ignore must hold on replay")
+
+    // a second wallet: page 2 re-serves page 1's last row (the request
+    // starts AT the running max block), which insert-ignore drops within
+    // the run; page 3 is short and holds a sparse item (empty value, no
+    // to/gas/timeStamp) that parses with the loop's defaults
+    write(fx, t, txParams("0xW2", "0xabc", 0, 1, 2),
+      """{"status":"1","message":"OK","result":[
+        |{"blockNumber":"10","timeStamp":"1700000000","hash":"0xk1","from":"0xW2","to":"0xX","value":"100"},
+        |{"blockNumber":"20","timeStamp":"1700000600","hash":"0xk2","from":"0xY","to":"0xW2","value":"200"}]}""".stripMargin)
+    write(fx, t, txParams("0xW2", "0xabc", 20, 2, 2),
+      """{"status":"1","message":"OK","result":[
+        |{"blockNumber":"20","timeStamp":"1700000600","hash":"0xk2","from":"0xY","to":"0xW2","value":"200"},
+        |{"blockNumber":"25","timeStamp":"1700001200","hash":"0xk3","from":"0xW2","to":"0xZ","value":"300"}]}""".stripMargin)
+    write(fx, t, txParams("0xW2", "0xabc", 25, 3, 2),
+      """{"status":"1","message":"OK","result":[{"blockNumber":"30","hash":"0xk4","value":""}]}""")
+    val rW2 = Ingest.walletTokenTx(spark, store, client, "0xW2", "0xabc", 0, pageSize = 2)
+    assert(rW2.rows == 5 && rW2.pages == 3 && rW2.lastBlock == 30)
+    val w2 = store.read("wallet_transactions").filter(col("wallet_address") === "0xw2")
+    assert(w2.count() == 4, "the overlap row is stored once")
+    assert(store.cursorGet("tokentx:0xw2:0xabc").contains((30L, 3)))
+    val sparse = w2.filter(col("tx_hash") === "0xk4")
+      .select("value_raw", "to_address", "gas", "block_time_unix", "token_decimal",
+        "transaction_index").collect().head
+    assert(sparse.getString(0) == "0" && sparse.getString(1) == "" && sparse.isNullAt(2))
+    assert(sparse.getLong(3) == 0L && sparse.getInt(4) == 18 && sparse.getInt(5) == 0)
 
     val addrs = store.read("wallet_transactions")
       .select("wallet_address", "from_address", "to_address")
@@ -226,6 +269,19 @@ class IngestSpec extends SparkSpec {
       .select("unix_ts", "closest", "block_number")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(rows.toSeq == Seq((1700000000L, "before", 12399L)), "update-on-conflict keeps latest")
+
+    // explorer free text with a quote and a backslash still yields
+    // valid JSON in the job's stats
+    probe("""{"status":"0\"\\","message":"bad \"key\" \\ retry","result":"12399"}""")
+    val r3 = Ingest.blockByTime(spark, store, client, 1700000000L, "before")
+    assert(r3.status == "0\"\\" && r3.message == "bad \"key\" \\ retry")
+    val ss = spark; import ss.implicits._
+    val stats = store.read("job_runs").filter(col("job_name") === "block_check_hourly")
+      .select("stats").collect().map(_.getString(0)).toSeq
+    assert(stats.size == 3)
+    val parsed = spark.read.option("mode", "FAILFAST").json(stats.toDS())
+    assert(parsed.select("status").collect().map(_.getString(0)).toSet ==
+      Set("1", "0\"\\"), s"stats must be valid JSON: $stats")
   }
 
   test("probeMetaJson escapes free-text explorer messages into valid JSON") {

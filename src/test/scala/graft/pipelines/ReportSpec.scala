@@ -157,7 +157,10 @@ class ReportSpec extends SparkSpec {
       .parquet(store.path("wallet_transactions"))
 
     val notifier = new Report.StringNotifier
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     val msg = Report.activityReport(spark, store, "0xABC", asOf, notifier)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the report must release the frame it caches")
     assert(notifier.messages.size == 1 && notifier.messages.head._2 == "HTML")
     assert(msg.contains("<b>Active wallets:</b> <code>2</code>"))
     assert(msg.contains("<b>TX rows:</b> <code>2</code>"))

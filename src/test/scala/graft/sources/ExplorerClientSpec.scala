@@ -60,6 +60,9 @@ class ExplorerClientSpec extends AnyFunSuite {
     assert(env.ok && env.resultItems == Seq(Map("address" -> "0xA", "quantity" -> "5")))
     val missing = client.call(params + ("page" -> "2"))
     assert(!missing.ok && missing.resultItems.isEmpty)
+    // the directory resolves through the Hadoop FileSystem API: a
+    // file: URI reads the same envelope as the bare path
+    assert(new ExplorerClient(new FileTransport("file:" + dir)).call(params) == env)
   }
 
   test("Envelope parses scalar results (block probe shape)") {
