@@ -127,7 +127,7 @@ object Bench {
     def jsonNum(xs: Seq[(String, Double)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def jsonStr(xs: Seq[(String, String)]): String =
-      xs.map { case (k, v) => "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\\n\\r\\t]", " ") + "\"" }
+      xs.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
         .mkString("{", ",", "}")
 
     val total     = steady.map(_._2._1).sum

@@ -34,21 +34,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val oracles = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     // one machine-readable summary line on BOTH streams (round 18):
@@ -57,7 +45,7 @@ object Verify {
     // a parse failure be reconstructed from either log
     val summary = s"""{"metric":"verify","dumped":$dumped,"failed":$failed,""" +
       s""""oracles":${oracles.size},"failed_names":${failedNames
-        .map(q).mkString("[", ",", "]")}}"""
+        .map(Json.str).mkString("[", ",", "]")}}"""
     println(summary)
     System.err.println(summary)
   }

@@ -1,7 +1,7 @@
 package graft.cli
 
-import graft.GraftSession
-import graft.domain.{MerlStore, Top100}
+import graft.{GraftSession, Json}
+import graft.domain.MerlStore
 import graft.pipelines.{Ingest, Report}
 import graft.sources.{ExplorerClient, FileTransport, HttpTransport}
 
@@ -142,24 +142,23 @@ object Main {
       case "block_by_time" =>
         val r = Ingest.blockByTime(spark, store, client,
           f("unix-ts").toLong, f.getOrElse("closest", "after"))
-        s"""{"block_number":${r.blockNumber.getOrElse(-1L)},"status":"${Ingest.jsonEscape(r.status)}",""" +
-          s""""message":"${Ingest.jsonEscape(r.message)}"}"""
+        s"""{"block_number":${r.blockNumber.getOrElse(-1L)},"status":${Json.str(r.status)},""" +
+          s""""message":${Json.str(r.message)}}"""
       case "holders_snapshot" =>
         val r = Ingest.holdersSnapshot(spark, store, client, f("token"),
           java.time.Instant.parse(f("bucket-start-utc")), f("trigger-id"),
           f.getOrElse("page-size", "100").toInt, f.getOrElse("max-pages", "10000").toInt,
           f.getOrElse("default-decimals", "18").toInt)
-        s"""{"rows":${r.rows},"pages":${r.pages},"token":"${r.token}","decimals":${r.decimals}}"""
+        s"""{"rows":${r.rows},"pages":${r.pages},"token":${Json.str(r.token)},"decimals":${r.decimals}}"""
       case "wallet_tokentx" =>
         val r = Ingest.walletTokenTx(spark, store, client, f("wallet"), f("token"),
           f.getOrElse("startblock", "0").toLong,
           f.getOrElse("page-size", "100").toInt, f.getOrElse("max-pages", "100000").toInt)
-        s"""{"rows":${r.rows},"pages":${r.pages},"wallet":"${r.wallet}","token":"${r.token}","last_block":${r.lastBlock}}"""
+        s"""{"rows":${r.rows},"pages":${r.pages},"wallet":${Json.str(r.wallet)},""" +
+          s""""token":${Json.str(r.token)},"last_block":${r.lastBlock}}"""
       case "top100" =>
-        val t = Top100.computeForToken(store.read("holders_raw"), f("token"),
-          f.getOrElse("k", "100").toInt)
-        store.refreshTop100(t)
-        s"""{"token":"${f("token")}","rows":${store.read("refined_wallet_top100").count()}}"""
+        val rows = Ingest.refineTop100(store, f("token"), f.getOrElse("k", "100").toInt)
+        s"""{"token":${Json.str(f("token"))},"rows":$rows}"""
       case "holders_and_top100" =>
         // run_holders_and_top100.sh one-shot: snapshot → refine →
         // optional report. --asof pins the bucket for reproducible
@@ -171,7 +170,7 @@ object Main {
           f.getOrElse("k", "100").toInt,
           if (f.get("report").exists(_.toBoolean)) Some(notifier) else None)
         s"""{"rows":${r.snapshot.rows},"pages":${r.snapshot.pages},""" +
-          s""""token":"${r.snapshot.token}","decimals":${r.snapshot.decimals},""" +
+          s""""token":${Json.str(r.snapshot.token)},"decimals":${r.snapshot.decimals},""" +
           s""""top100_rows":${r.top100Rows},"bucket_start_utc":"${r.bucketStartUtc}","trigger_id":"${r.triggerId}"}"""
       case "report_snapshot" =>
         Report.snapshotReport(spark, store, f("token"), notifier)
@@ -188,7 +187,7 @@ object Main {
       case Some(o) => println(o)
       case None =>
         // the reference's overlap notice, as the CLI's JSON shape
-        println(s"""{"skipped":"lock_held","lock":"${f("lock-file")}"}""")
+        println(s"""{"skipped":"lock_held","lock":${Json.str(f("lock-file"))}}""")
     }
     spark.stop()
   }

@@ -1,8 +1,11 @@
 package graft.domain
 
-import org.apache.hadoop.fs.Path
+import graft.operators.Dedup
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet-backed table store implementing the reference's write-side
   * operators (SURVEY §2.8) on Spark's immutable-write model:
@@ -17,15 +20,18 @@ import org.apache.spark.sql.functions._
   *    merlin_etl.py:441-447) becomes left-anti-join append on the
   *    natural key, including the reference's
   *    `COALESCE(transaction_index, 0)` key component (schema.sql:123).
-  *  - M5 — cursor GREATEST-merge (merlin_etl.py:159-175) as a
-  *    full-outer merge rewrite of the (tiny) cursors table.
-  *  - M6 — job audit bracket (merlin_etl.py:133-151) as append +
-  *    keyed rewrite of the (tiny) job_runs table.
-  *
-  * Small bookkeeping tables (cursors, job_runs, block_check) use
-  * [[rewrite]]: materialize the merged frame into a staging directory,
-  * then atomically swap — never overwrite a path being lazily read.
-  * Big tables never take this path.
+  *  - M5 — cursor GREATEST-merge (merlin_etl.py:159-175), M6 — job
+  *    audit bracket (merlin_etl.py:133-151) and the block_check
+  *    upsert (schema.sql:29) as APPEND-ONLY LOGS in the index stores'
+  *    `<partCol>=<p>/__batch=<n>/` layout: a mutation appends only its
+  *    own rows as one new segment (a crash leaves it whole or absent
+  *    and never touches the others) and [[read]] resolves the log,
+  *    ordering events by `__seq`, the write's [[MerlStore.nextSeq]].
+  *    The one partition, `__log=0`, is known to every writer
+  *    (`jobFinish` has only the job id) and keeps listings flat in the
+  *    number of streams and jobs. Segments merge through the index
+  *    stores' crash-tested [[Dedup.autoCompactIndexSegments]] and
+  *    [[Dedup.recoverPendingSwap]].
   */
 class MerlStore(spark: SparkSession, root: String) {
 
@@ -33,32 +39,46 @@ class MerlStore(spark: SparkSession, root: String) {
 
   def path(table: String): String = s"$root/$table"
 
+  private def fileSystem(p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+
   def exists(table: String): Boolean = {
     val p = new Path(path(table))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    fileSystem(p).exists(p)
   }
 
-  def read(table: String): DataFrame = spark.read.parquet(path(table))
+  /** The table's current rows; a log resolves to one row per key. */
+  def read(table: String): DataFrame = Logs.get(table) match {
+    case None => spark.read.parquet(path(table))
+    case Some(log) =>
+      Maintenance.synchronized(Dedup.recoverPendingSwap(spark, path(table), LogPart))
+      val events = spark.read.schema(log.schema.add("__seq", LongType)).parquet(path(table))
+      log.resolve(events).select(log.schema.fieldNames.map(col).toSeq: _*)
+  }
 
-  private def readOrEmpty(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(table)) read(table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Staging-then-swap rewrite for SMALL bookkeeping tables. The
-    * staging write fully materializes `df` (which may lazily read the
-    * current table) before the old directory is dropped.
+  /** Append `events` to the log `table` as one new segment. Every
+    * segment carries the full log schema: compaction infers it from
+    * one segment's footer.
     */
-  private def rewrite(table: String, df: DataFrame): Unit = {
-    val p = new Path(path(table))
-    val staging = new Path(path(table) + ".staging")
-    // Bookkeeping tables are tiny by contract (one row per stream /
-    // job / probe): one output file, not one per shuffle partition —
-    // the next read is then a single-split scan instead of a
-    // small-files listing.
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.rename(staging, p)
+  private def append(table: String, events: DataFrame): Unit = {
+    val (dir, seq, schema) = (path(table), nextSeq(), Logs(table).schema)
+    val row = schema.map(f => (if (events.columns.contains(f.name)) col(f.name) else lit(null))
+      .cast(f.dataType).as(f.name))
+    Dedup.writeBatch(events.select(row: _*).withColumn("__seq", lit(seq))
+      .withColumn(LogPart, lit(0)).coalesce(1), dir, seq, LogPart)
+    Maintenance.synchronized(Dedup.autoCompactIndexSegments(spark, dir, LogPart))
+  }
+
+  /** The latest `bucket_unix` partition of `token` in a
+    * (contract_address, bucket_unix)-partitioned table, from one
+    * listing of the token's directory (no Spark job).
+    */
+  def latestBucket(table: String, token: String): Option[Long] = {
+    val dir = new Path(path(table), "contract_address=" + ExternalCatalogUtils.escapePathName(token))
+    try fileSystem(dir).listStatus(dir).map(_.getPath.getName).collect {
+      case n if n.startsWith("bucket_unix=") => n.stripPrefix("bucket_unix=").toLong
+    }.maxOption
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   // ---- M1 / M3 / M4: partition-overwrite upserts --------------------
@@ -161,19 +181,13 @@ class MerlStore(spark: SparkSession, root: String) {
       .parquet(path("wallet_transactions"))
   }
 
-  // ---- block_check: small-table update-on-conflict ------------------
+  // ---- block_check: update-on-conflict log -------------------------
 
-  /** Block-probe upsert on (unix_ts, closest) (schema.sql:29): new
-    * rows win over conflicting old rows; table is small (one row per
-    * probe hour).
+  /** Block-probe upsert on (unix_ts, closest) (schema.sql:29): the
+    * batch's rows are appended, and the newest row per key wins on
+    * [[read]].
     */
-  def upsertBlockCheck(batch: DataFrame): Unit = {
-    val deduped = batch.dropDuplicates(Seq("unix_ts", "closest"))
-    val existing = readOrEmpty("block_check", Schemas.blockCheck)
-    val kept = existing.join(deduped.select("unix_ts", "closest"),
-      Seq("unix_ts", "closest"), "left_anti")
-    rewrite("block_check", kept.unionByName(deduped, allowMissingColumns = true))
-  }
+  def upsertBlockCheck(batch: DataFrame): Unit = append("block_check", batch)
 
   // ---- M5: cursor GREATEST-merge ------------------------------------
 
@@ -182,26 +196,10 @@ class MerlStore(spark: SparkSession, root: String) {
     * (GREATEST of old and new, nulls as 0), metadata is replaced by
     * the incoming value, updated_at_utc refreshed. Accepts a frame of
     * (stream, last_scanned_block, last_page, metadata) rows so a whole
-    * ingest batch checkpoints in one write.
+    * ingest batch checkpoints in one append.
     */
-  def mergeCursors(incoming: DataFrame): Unit = {
-    val existing = readOrEmpty("ingestion_cursors", Schemas.ingestionCursors)
-    val o = existing.select(col("stream"),
-      col("last_scanned_block").as("__ob"), col("last_page").as("__op"),
-      col("metadata").as("__om"))
-    val n = incoming.select(col("stream"),
-      col("last_scanned_block").as("__nb"), col("last_page").as("__np"),
-      col("metadata").as("__nm"))
-    val merged = o.join(n, Seq("stream"), "full_outer").select(
-      col("stream"),
-      greatest(coalesce(col("__ob"), lit(0L)), coalesce(col("__nb"), lit(0L)))
-        .as("last_scanned_block"),
-      greatest(coalesce(col("__op"), lit(0)), coalesce(col("__np"), lit(0)))
-        .as("last_page"),
-      current_timestamp().as("updated_at_utc"),
-      coalesce(col("__nm"), col("__om"), lit("{}")).as("metadata"))
-    rewrite("ingestion_cursors", merged)
-  }
+  def mergeCursors(incoming: DataFrame): Unit =
+    append("ingestion_cursors", incoming.withColumn("updated_at_utc", current_timestamp()))
 
   /** Single-stream convenience mirroring the reference's per-call API. */
   def cursorUpsert(stream: String, lastBlock: Option[Long],
@@ -215,8 +213,7 @@ class MerlStore(spark: SparkSession, root: String) {
   def cursorGet(stream: String): Option[(Long, Int)] =
     if (!exists("ingestion_cursors")) None
     else read("ingestion_cursors").filter(col("stream") === stream)
-      .select(coalesce(col("last_scanned_block"), lit(0L)),
-        coalesce(col("last_page"), lit(0)))
+      .select(col("last_scanned_block"), col("last_page"))
       .collect().headOption.map(r => (r.getLong(0), r.getInt(1)))
 
   // ---- M6: job audit bracket ----------------------------------------
@@ -228,14 +225,10 @@ class MerlStore(spark: SparkSession, root: String) {
   def jobStart(jobName: String): String = {
     import spark.implicits._
     val id = java.util.UUID.randomUUID().toString
-    val row = Seq((id, jobName)).toDF("job_id", "job_name")
+    append("job_runs", Seq((id, jobName, "running", "{}"))
+      .toDF("job_id", "job_name", "status", "stats")
       .withColumn("scheduled_for", current_timestamp())
-      .withColumn("started_at", current_timestamp())
-      .withColumn("finished_at", lit(null).cast("timestamp"))
-      .withColumn("status", lit("running"))
-      .withColumn("stats", lit("{}"))
-      .withColumn("error", lit(null).cast("string"))
-    row.write.mode(SaveMode.Append).parquet(path("job_runs"))
+      .withColumn("started_at", current_timestamp()))
     id
   }
 
@@ -244,22 +237,16 @@ class MerlStore(spark: SparkSession, root: String) {
     */
   def jobFinish(jobId: String, status: String,
                 stats: Option[String] = None, error: Option[String] = None): Unit = {
-    val updated = read("job_runs").withColumns(Map(
-      "finished_at" -> when(col("job_id") === jobId, current_timestamp())
-        .otherwise(col("finished_at")),
-      "status" -> when(col("job_id") === jobId, lit(status)).otherwise(col("status")),
-      "stats" -> when(col("job_id") === jobId, coalesce(lit(stats.orNull), col("stats")))
-        .otherwise(col("stats")),
-      "error" -> when(col("job_id") === jobId, coalesce(lit(error.orNull), col("error")))
-        .otherwise(col("error"))))
-    rewrite("job_runs", updated)
+    import spark.implicits._
+    append("job_runs", Seq((jobId, status, stats, error))
+      .toDF("job_id", "status", "stats", "error")
+      .withColumn("finished_at", current_timestamp()))
   }
 
   /** Drop every table under this store root (test/fixture hygiene). */
   def destroy(): Unit = {
     val p = new Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
+    if (fileSystem(p).exists(p)) fileSystem(p).delete(p, true)
   }
 }
 
@@ -277,4 +264,46 @@ object MerlStore {
   def withAudit(df: DataFrame): DataFrame =
     df.withColumn("inserted_at", current_timestamp())
       .withColumn("updated_at", current_timestamp())
+
+  private val LogPart = "__log"
+
+  private final case class Log(schema: StructType, resolve: DataFrame => DataFrame)
+
+  /** The newest non-null value of column `c`. */
+  private def newest(c: String): Column =
+    max_by(col(c), when(col(c).isNotNull, col("__seq")))
+
+  /** Each log's resolution: a cursor is GREATEST per stream (nulls as
+    * 0) with the newest metadata; a job is its start row overlaid with
+    * the newest non-null finish fields, and a finish for an unknown id
+    * adds no row; block_check keeps the newest row per key.
+    */
+  private val Logs: Map[String, Log] = Map(
+    "ingestion_cursors" -> Log(Schemas.ingestionCursors, _.groupBy("stream").agg(
+      max(coalesce(col("last_scanned_block"), lit(0L))).as("last_scanned_block"),
+      max(coalesce(col("last_page"), lit(0))).as("last_page"),
+      newest("updated_at_utc").as("updated_at_utc"),
+      coalesce(newest("metadata"), lit("{}")).as("metadata"))),
+    "job_runs" -> Log(Schemas.jobRuns, events => events.groupBy("job_id")
+      .agg(newest("job_name").as("job_name"),
+        Schemas.jobRuns.fieldNames.toSeq.drop(2).map(c => newest(c).as(c)): _*)
+      .filter(col("job_name").isNotNull)),
+    "block_check" -> Log(Schemas.blockCheck, events => events.groupBy("unix_ts", "closest")
+      .agg(max_by(struct(events.columns.map(col).toSeq: _*), col("__seq")).as("r"))
+      .select("r.*")))
+
+  /** Serializes swap recovery and compaction in the JVM: the swap
+    * assumes one maintainer per log.
+    */
+  private object Maintenance
+
+  private val lastTick = new java.util.concurrent.atomic.AtomicLong
+  private val writerTag = new java.security.SecureRandom().nextInt(1 << 10).toLong
+
+  /** A millisecond tick that never repeats or steps back in the JVM,
+    * over a random per-JVM tag, so two processes appending in the same
+    * millisecond still write distinct segments.
+    */
+  private def nextSeq(): Long =
+    (lastTick.updateAndGet(t => math.max(t + 1, System.currentTimeMillis())) << 10) | writerTag
 }

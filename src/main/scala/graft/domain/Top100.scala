@@ -62,10 +62,4 @@ object Top100 {
         current_timestamp().as("inserted_at"),
         col("bucket_unix"))
   }
-
-  /** Single-token surface matching the reference CLI
-    * (top100_compute.sql takes `-v token=0x...`).
-    */
-  def computeForToken(holders: DataFrame, token: String, k: Int = 100): DataFrame =
-    compute(holders.filter(lower(col("contract_address")) === token.toLowerCase), k)
 }

@@ -325,6 +325,16 @@ object Dedup {
         "zero corpus-side exchange)")
   }
 
+  /** The replay-safe segment write: `df` lands under
+    * `dir/<partCols>/__batch=<batchId>/` with dynamic partition
+    * overwrite, replacing only its own segment.
+    */
+  private[graft] def writeBatch(df: DataFrame, dir: String, batchId: Long,
+                                partCols: String*): Unit =
+    df.withColumn("__batch", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols :+ "__batch": _*).parquet(dir)
+
   /** Maintenance compaction for a streaming-maintained on-disk index
     * layout (`<partCol>=<p>/__batch=<n>/` — the MinHash bands/sigs,
     * Hamming bands, BM25 postings, IVF lists, exact-fingerprint

@@ -1,6 +1,7 @@
 package graft.pipelines
 
-import graft.domain.MerlStore
+import graft.Json
+import graft.domain.{MerlStore, Top100}
 import graft.functions.AmountFns
 import graft.sources.ExplorerClient
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -28,25 +29,9 @@ import scala.jdk.CollectionConverters._
   */
 object Ingest {
 
-  /** The body of a JSON string literal holding `v`: quotes,
-    * backslashes and control chars escaped. Explorer status/message
-    * fields are free text, so every JSON document that embeds them
-    * (cursor metadata, job stats, the CLI's output) goes through this.
-    */
-  private[graft] def jsonEscape(v: String): String = {
-    val sb = new StringBuilder
-    v.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
   /** Cursor-metadata JSON for a probe envelope. */
   private[pipelines] def probeMetaJson(status: String, message: String): String =
-    s"""{"status":"${jsonEscape(status)}","message":"${jsonEscape(message)}"}"""
+    s"""{"status":${Json.str(status)},"message":${Json.str(message)}}"""
 
   /** `parse_int` (`merlin_etl.py:184-188`): null on failure. */
   def parseLong(s: String): Option[Long] =
@@ -55,7 +40,6 @@ object Ingest {
     Option(s).flatMap(v => scala.util.Try(v.trim.toInt).toOption)
 
   private def jl(v: Option[Long]): Any = v.map(java.lang.Long.valueOf).orNull
-  private def ji(v: Option[Int]): Any = v.map(java.lang.Integer.valueOf).orNull
 
   final case class BlockByTimeResult(blockNumber: Option[Long], status: String, message: String)
 
@@ -68,18 +52,14 @@ object Ingest {
     try {
       val env = client.blockByTime(unixTs, closest)
       val block = env.resultScalar.flatMap(parseLong)
-      val schema = StructType(Seq(
-        StructField("unix_ts", LongType), StructField("closest", StringType),
-        StructField("block_number", LongType), StructField("api_status", StringType),
-        StructField("api_message", StringType)))
-      val row = Row(unixTs, closest, jl(block), env.status, env.message)
-      val df = spark.createDataFrame(Seq(row).asJava, schema)
+      import spark.implicits._
+      store.upsertBlockCheck(Seq((unixTs, closest, block, env.status, env.message))
+        .toDF("unix_ts", "closest", "block_number", "api_status", "api_message")
         .withColumn("ts_utc", timestamp_seconds(col("unix_ts")))
-        .withColumn("inserted_at", current_timestamp())
-      store.upsertBlockCheck(df)
+        .withColumn("inserted_at", current_timestamp()))
       store.jobFinish(jobId, "success",
         stats = Some(
-          s"""{"block_number":${block.getOrElse(-1L)},"status":"${jsonEscape(env.status)}"}"""))
+          s"""{"block_number":${block.getOrElse(-1L)},"status":${Json.str(env.status)}}"""))
       BlockByTimeResult(block, env.status, env.message)
     } catch {
       case e: Throwable =>
@@ -136,7 +116,8 @@ object Ingest {
         .withColumn("quantity_18d", AmountFns.scale18(col("quantity_raw")))
       if (rows.nonEmpty) store.upsertHolders(df)
       store.jobFinish(jobId, "success",
-        stats = Some(s"""{"rows":${rows.size},"pages":$pages,"token":"$token","decimals":$decimals}"""))
+        stats = Some(
+          s"""{"rows":${rows.size},"pages":$pages,"token":${Json.str(token)},"decimals":$decimals}"""))
       SnapshotResult(rows.size, pages, token, decimals)
     } catch {
       case e: Throwable =>
@@ -165,16 +146,23 @@ object Ingest {
       .withZone(java.time.ZoneOffset.UTC).format(asOf)
     val snap = holdersSnapshot(spark, store, client, token, bucketStart, triggerId,
       pageSize, maxPages)
-    val top = graft.domain.Top100.computeForToken(store.read("holders_raw"), token, k)
-    store.refreshTop100(top)
-    // count THIS bucket's refreshed rows — the table keeps earlier
-    // bucket partitions (dynamic overwrite touches only this one)
-    val rows = store.read("refined_wallet_top100")
-      .filter(org.apache.spark.sql.functions.col("contract_address") === token.toLowerCase)
-      .filter(org.apache.spark.sql.functions.col("bucket_unix") === bucketStart.getEpochSecond)
-      .count()
+    val rows = refineTop100(store, token, k)
     notifier.foreach(n => Report.snapshotReport(spark, store, token, n))
     HoldersTop100Result(snap, rows, bucketStart, triggerId)
+  }
+
+  /** The refine step for one token (`run_top100.sh` →
+    * `top100_compute.sql -v token=…`): rank the token's latest holders
+    * bucket, refresh that bucket's Top-100 partition, and return the
+    * refreshed partition's row count; both reads prune to the one
+    * (token, bucket) partition. A token with no snapshot counts 0.
+    */
+  def refineTop100(store: MerlStore, token: String, k: Int = 100): Long = {
+    val t = token.toLowerCase
+    store.latestBucket("holders_raw", t).fold(0L) { bucket =>
+      store.refreshTop100(Top100.compute(Report.bucketRows(store, "holders_raw", t, bucket), k))
+      Report.bucketRows(store, "refined_wallet_top100", t, bucket).count()
+    }
   }
 
   final case class TokenTxResult(rows: Long, pages: Int, wallet: String,
@@ -182,20 +170,15 @@ object Ingest {
 
   /** E1 main (`merlin_etl.py:346-479`): paged, resumable tokentx
     * ingest for (wallet, token). Pages buffer driver-side (the 3 QPS
-    * API is the bottleneck and a page is ≤100 rows) and land as ONE
-    * insert-ignore append plus ONE cursor merge per `flushPages`
-    * window (typically one per job) — the reference checkpoints after
-    * every page only because each Postgres page-insert is a cheap
-    * row-level round trip; on Spark a per-page write is an anti-join
-    * against the full accumulated table plus a cursors rewrite, i.e.
-    * O(pages × table) work per job, quadratic in history at scale.
-    * Batching drops crash-resume granularity from page to flush
-    * window, which M2's idempotent key makes safe: a replayed window
-    * re-fetches from the saved cursor and the anti-join drops every
-    * already-stored row. The append prunes the existing-side scan to
-    * this job's token partition (`contract_address` is the table's
-    * partition key), so dedup work scales with the token's history,
-    * not the whole table.
+    * API is the bottleneck) and land as ONE insert-ignore append plus
+    * ONE cursor merge per `flushPages` window (typically one per job):
+    * the reference checkpoints every page because a Postgres insert is
+    * a cheap row-level round trip, while here each append is an
+    * anti-join against the token's stored history. `flushPages` bounds
+    * driver memory (200 pages × 500 rows ≈ 100k rows) and is the
+    * crash-resume granularity, which M2's idempotent key makes safe: a
+    * replayed window re-fetches from the saved cursor and the
+    * anti-join drops every already-stored row.
     */
   def walletTokenTx(spark: SparkSession, store: MerlStore, client: ExplorerClient,
                     wallet: String, token: String, startBlock: Long = 0,
@@ -208,11 +191,6 @@ object Ingest {
     val buffered = ArrayBuffer.empty[Row]
     var pages = 0
     var totalRows = 0L
-    // Flush a buffered batch as ONE pruned anti-join append + ONE
-    // cursor merge. `flushPages` bounds driver memory on huge
-    // backfills (200 pages × 500 rows ≈ 100k buffered rows max) and is
-    // also the crash-resume granularity: a failure loses at most one
-    // flush window of fetching, never the whole job.
     def flush(lastDonePage: Int, meta: String): Unit = if (buffered.nonEmpty) {
       store.appendWalletTransactions(txFrame(spark, buffered.toSeq),
         contracts = Some(Seq(token.toLowerCase)))
@@ -268,7 +246,8 @@ object Ingest {
       if (buffered.nonEmpty) flush(lastDonePage, meta)
       else store.cursorUpsert(stream, Some(lastBlock), Some(lastDonePage), meta)
       store.jobFinish(jobId, "success", stats = Some(
-        s"""{"rows":$totalRows,"pages":$pages,"wallet":"$wallet","token":"$token","last_block":$lastBlock}"""))
+        s"""{"rows":$totalRows,"pages":$pages,"wallet":${Json.str(wallet)},""" +
+          s""""token":${Json.str(token)},"last_block":$lastBlock}"""))
       TokenTxResult(totalRows, pages, wallet, token, lastBlock)
     } catch {
       case e: Throwable =>

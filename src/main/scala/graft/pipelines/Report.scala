@@ -115,25 +115,31 @@ object Report {
   final case class SnapshotData(bucketUtc: String, totalHolders: Long, topRows: Long,
                                 top10: Seq[(Int, String, String)]) // (rnk, addr, balance)
 
-  /** Header + Top-10 query (`run_holders_and_report.sh:18-50`):
-    * latest-bucket scalar join, counts, rnk ≤ 10 slice.
+  /** Header + Top-10 query (`run_holders_and_report.sh:18-50`): the
+    * token's latest holders bucket (from the partition listing),
+    * counts, rnk ≤ 10 slice. Fails when the token has no snapshot.
     */
   def snapshotData(spark: SparkSession, store: MerlStore, token: String): SnapshotData = {
     val t = token.toLowerCase
-    val holders = store.read("holders_raw").filter(col("contract_address") === t)
-    val top100 = store.read("refined_wallet_top100").filter(col("contract_address") === t)
-    val latest = holders.agg(max(col("bucket_start_utc"))).collect().head.getTimestamp(0)
-    val totalHolders = holders.filter(col("bucket_start_utc") === latest).count()
-    val cur = top100.filter(col("bucket_start_utc") === latest)
+    val latest = store.latestBucket("holders_raw", t)
+    require(latest.nonEmpty, s"snapshotData: no holders snapshot for token $t")
+    val totalHolders = bucketRows(store, "holders_raw", t, latest.get).count()
+    val cur = bucketRows(store, "refined_wallet_top100", t, latest.get)
     val topRows = cur.count()
     val top10 = cur.orderBy(col("rnk").asc).limit(10)
       .select(col("rnk"), col("holder_address"), col("balance").cast("string"))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
-    val bucketUtc = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm'Z'") {
-      setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-    }.format(latest)
-    SnapshotData(bucketUtc, totalHolders, topRows, top10)
+    SnapshotData(MinuteUtc.format(java.time.Instant.ofEpochSecond(latest.get)),
+      totalHolders, topRows, top10)
   }
+
+  /** Token `t`'s rows of one bucket, both predicates partition filters. */
+  private[pipelines] def bucketRows(store: MerlStore, table: String, t: String,
+                                    bucket: Long): DataFrame =
+    store.read(table).filter(col("contract_address") === t && col("bucket_unix") === bucket)
+
+  private val MinuteUtc = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm'Z'")
+    .withZone(java.time.ZoneOffset.UTC)
 
   /** Render the snapshot message (`run_holders_and_report.sh:60-76`). */
   def renderSnapshot(d: SnapshotData, token: String, label: String = "MERL",
@@ -161,15 +167,17 @@ object Report {
   /** Totals + movers queries
     * (`ingest_activity_and_report.sh:20-55,65-101`): last-60-minutes
     * window over Top-100 wallets, per-wallet conditional sums, grand
-    * totals, GREATEST movers. `asOf` is an explicit parameter so runs
-    * are deterministic (SURVEY §7.4 #5); production passes now().
+    * totals, GREATEST movers. The Top-100 is the token's latest
+    * bucket (from the partition listing); a token without one fails.
+    * `asOf` is an explicit parameter so runs are deterministic
+    * (SURVEY §7.4 #5); production passes now().
     */
   def activityData(spark: SparkSession, store: MerlStore, token: String,
                    asOf: java.time.Instant): ActivityData = {
     val t = token.toLowerCase
-    val top100 = store.read("refined_wallet_top100").filter(col("contract_address") === t)
-    val latest = top100.agg(max(col("bucket_start_utc"))).collect().head.getTimestamp(0)
-    val watch = top100.filter(col("bucket_start_utc") === latest)
+    val latest = store.latestBucket("refined_wallet_top100", t)
+    require(latest.nonEmpty, s"activityData: no Top-100 for token $t")
+    val watch = bucketRows(store, "refined_wallet_top100", t, latest.get)
       .select(col("holder_address").as("wallet_address"))
     val asOfTs = java.sql.Timestamp.from(asOf)
     val w = store.read("wallet_transactions")
@@ -187,9 +195,7 @@ object Report {
             col("out_amt").cast("string"), col("txs"))
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq)
       finally flows.unpersist()
-    val asOfStr = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm'Z'")
-      .withZone(java.time.ZoneOffset.UTC).format(asOf)
-    ActivityData(asOfStr, totals.getAs[Long]("wallets"), totals.getAs[Long]("total_txs"),
+    ActivityData(MinuteUtc.format(asOf), totals.getAs[Long]("wallets"), totals.getAs[Long]("total_txs"),
       Option(totals.get(totals.fieldIndex("total_in"))).map(_.toString).getOrElse("0"),
       Option(totals.get(totals.fieldIndex("total_out"))).map(_.toString).getOrElse("0"),
       Option(totals.get(totals.fieldIndex("net_flow"))).map(_.toString).getOrElse("0"),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.{TextFns, TimeFns}
 import graft.operators.{Dedup, LanguageModel, Media, Similarity}
+import graft.operators.Dedup.writeBatch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
@@ -22,8 +23,8 @@ import org.apache.spark.storage.StorageLevel
   *  - replay-safe `__batch` overwrite: `foreachBatch` is at-least-once
   *    on side effects, so per-batch output lands under
   *    `__batch=<batchId>/` with dynamic partition overwrite
-  *    ([[writeBatch]]) and a batch replayed after a crash between its
-  *    write and its checkpoint commit rewrites its own partitions
+  *    ([[Dedup.writeBatch]]) and a batch replayed after a crash
+  *    between its write and its checkpoint commit rewrites its own partitions
   *    instead of duplicating rows (readers that don't want the
   *    provenance column just don't select it). Index probes exclude
   *    the current `__batch`, so a replay reproduces its original
@@ -82,16 +83,6 @@ object Incremental {
       Dedup.autoCompactIndexSegments(spark, dir, partCol)
     }
   }
-
-  /** The replay-safe micro-batch write: `df` lands under
-    * `dir/<partCols>/__batch=<batchId>/` with dynamic partition
-    * overwrite.
-    */
-  private def writeBatch(df: DataFrame, dir: String, batchId: Long,
-                         partCols: String*): Unit =
-    df.withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols :+ "__batch": _*).parquet(dir)
 
   /** Existence probe through the Hadoop FileSystem API — a
     * java.io.File check only sees the local filesystem, so on HDFS/S3

@@ -343,10 +343,8 @@ object ScaleRehearsal {
         val mb = 1024.0 * 1024.0
         println(f"""{"metric":"scale_rehearsal","dir":"$dir","query":"$name","first_sec":$first%.2f,"second_sec":$second%.2f,"peak_exec_mb":${mem.peakExec.get / mb}%.0f,"peak_heap_mb":${mem.peakHeap.get / mb}%.0f,"peak_task_mb":${mem.peakTask.get / mb}%.0f,"spill_mem_mb":${mem.spill.get / mb}%.0f,"spill_disk_mb":${mem.spillDisk.get / mb}%.0f}""")
       } catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .replace("\\", "\\\\").replace("\"", "\\\"")
-          .replaceAll("[\\n\\r\\t]", " ").take(300)
-        println(s"""{"metric":"scale_rehearsal","dir":"$dir","query":"$name","error":"$msg"}""")
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
+        println(s"""{"metric":"scale_rehearsal","dir":"$dir","query":"$name","error":${graft.Json.str(msg)}}""")
       }
     }
     val overheadPostMs = probeOverheadMs()

@@ -476,4 +476,60 @@ class ExplainSpec extends SparkSpec {
     assert(!adapted.contains("BatchEvalPython") && !adapted.contains("ScalaUDF"),
       s"decode must be the codegen'd built-in:\n$adapted")
   }
+
+  test("reports: every scan of the snapshot and activity reports prunes to the latest bucket_unix") {
+    import graft.domain.{MerlStore, Top100}
+    import graft.pipelines.Report
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val ss = spark; import ss.implicits._
+    val store = new MerlStore(spark,
+      java.nio.file.Files.createTempDirectory("explain_report").toString)
+    val asOf = java.time.Instant.parse("2024-01-15T12:30:00Z")
+    // two buckets of one token, each with its own Top-100 partition
+    for (b <- Seq("2024-01-15T06:00:00Z", "2024-01-15T12:00:00Z")) {
+      store.upsertHolders(Seq(("t", "0xabc", "0xw1", 18, "5"), ("t", "0xabc", "0xw2", 18, "3"))
+        .toDF("trigger_id", "contract_address", "holder_address", "token_decimal", "quantity_raw")
+        .withColumn("bucket_start_utc", lit(java.sql.Timestamp.from(java.time.Instant.parse(b))))
+        .withColumn("bucket_unix", unix_timestamp(col("bucket_start_utc"))))
+      store.refreshTop100(Top100.compute(store.read("holders_raw")))
+    }
+    Seq(("0xw1", "0xabc", "0xh1", "0xzz", "0xw1", "1000", java.sql.Timestamp.from(asOf)))
+      .toDF("wallet_address", "contract_address", "tx_hash", "from_address", "to_address",
+        "value_raw", "block_time_utc")
+      .withColumn("value_18d", graft.functions.AmountFns.scale18(col("value_raw")))
+      .write.partitionBy("contract_address").parquet(store.path("wallet_transactions"))
+
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = helper.collectWithSubqueries(p) {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+    }.flatten
+    def scansOf(report: => Unit): Map[String, Seq[FileSourceScanExec]] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try { report; org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(spark.sparkContext) }
+      finally spark.listenerManager.unregister(l)
+      plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(scans)
+        .groupBy(_.relation.location.rootPaths.head.getName)
+    }
+    def pruned(s: FileSourceScanExec): Boolean =
+      s.partitionFilters.exists(_.references.exists(_.name == "bucket_unix"))
+    val snap = scansOf(Report.snapshotData(spark, store, "0xABC"))
+    val act = scansOf(Report.activityData(spark, store, "0xABC", asOf))
+    for ((report, got, tables) <- Seq(("snapshot", snap, Seq("holders_raw", "refined_wallet_top100")),
+                                      ("activity", act, Seq("refined_wallet_top100")));
+         t <- tables) {
+      assert(got.get(t).exists(_.nonEmpty), s"$report report never scanned $t: ${got.keys}")
+      assert(got(t).forall(pruned),
+        s"$report report scans $t without a bucket_unix partition filter:\n${got(t).mkString("\n")}")
+    }
+  }
 }

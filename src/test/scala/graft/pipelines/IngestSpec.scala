@@ -255,6 +255,50 @@ class IngestSpec extends SparkSpec {
     assert(store.read("holders_raw").count() == 3)
   }
 
+  test("refine counts the refreshed (token, bucket) partition when a later bucket exists") {
+    val (fx, store, t, client) = freshDirs()
+    val ss = spark; import ss.implicits._
+    // token 0xabc already holds a LATER bucket (12:00Z) than the one
+    // this run ingests (06:00Z); token 0xdef holds three holders
+    def holders(token: String, bucket: String, qty: Seq[String]) =
+      qty.zipWithIndex.map { case (q, i) => ("t", token, s"0xh$i", 18, q) }
+        .toDF("trigger_id", "contract_address", "holder_address", "token_decimal", "quantity_raw")
+        .withColumn("bucket_start_utc", lit(java.sql.Timestamp.from(java.time.Instant.parse(bucket))))
+        .withColumn("bucket_unix", unix_timestamp(col("bucket_start_utc")))
+    store.upsertHolders(holders("0xabc", "2024-01-15T12:00:00Z", Seq("5", "4", "3")))
+    store.upsertHolders(holders("0xdef", "2024-01-15T06:00:00Z", Seq("9", "8", "7")))
+    write(fx, t, holderParams("0xABC", 1, 2),
+      """{"status":"1","message":"OK","result":[
+        |{"TokenHolderAddress":"0xW1","TokenHolderQuantity":"100"}]}""".stripMargin)
+
+    val r = Ingest.holdersAndTop100(spark, store, client, "0xABC",
+      java.time.Instant.parse("2024-01-15T08:30:00Z"), pageSize = 2, maxPages = 10, k = 2)
+    // the refresh ranks the latest bucket (12:00Z, k = 2 of 3 holders)
+    // and the count is that partition's, not the ingested bucket's
+    assert(r.top100Rows == 2)
+    val refreshed = store.read("refined_wallet_top100").filter(col("contract_address") === "0xabc")
+      .select("bucket_unix").distinct().collect().map(_.get(0).toString.toLong).toSeq
+    assert(refreshed == Seq(java.time.Instant.parse("2024-01-15T12:00:00Z").getEpochSecond))
+    // the CLI's top100 step counts one token's refreshed partition,
+    // not every token and bucket of the table
+    assert(Ingest.refineTop100(store, "0xDEF") == 3)
+    assert(store.read("refined_wallet_top100").count() == 5)
+    assert(Ingest.refineTop100(store, "0xnone") == 0)
+  }
+
+  test("tokentx job stats stay valid JSON for a wallet holding a quote and a backslash") {
+    val (_, store, _, client) = freshDirs()
+    val wallet = "0xW\"q\\"
+    val r = Ingest.walletTokenTx(spark, store, client, wallet, "0xabc", 0, pageSize = 2)
+    assert(r.rows == 0 && r.pages == 0)
+    val ss = spark; import ss.implicits._
+    val stats = store.read("job_runs").filter(col("job_name") === "wallet_tx_hourly")
+      .select("stats").collect().map(_.getString(0)).toSeq
+    val parsed = spark.read.option("mode", "FAILFAST").json(stats.toDS())
+    assert(parsed.select("wallet").collect().map(_.getString(0)).toSeq == Seq(wallet),
+      s"stats must be valid JSON: $stats")
+  }
+
   test("block_by_time: probe upserts on (unix_ts, closest)") {
     val (fx, store, t, client) = freshDirs()
     def probe(body: String) =

@@ -121,6 +121,30 @@ class ReportSpec extends SparkSpec {
     assert(msg.contains("<code>5,000.00</code> <i>(5.00K)</i>"))
   }
 
+  test("reports for a token without a snapshot fail with a named guard") {
+    val ss = spark; import ss.implicits._
+    val store = new MerlStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_none").toString)
+    val notifier = new Report.StringNotifier
+    val asOf = java.time.Instant.parse("2024-01-15T07:00:00Z")
+    def guards(): Unit = {
+      val snap = intercept[IllegalArgumentException](
+        Report.snapshotReport(spark, store, "0xNONE", notifier))
+      assert(snap.getMessage.contains("no holders snapshot for token 0xnone"))
+      val act = intercept[IllegalArgumentException](
+        Report.activityReport(spark, store, "0xNONE", asOf, notifier))
+      assert(act.getMessage.contains("no Top-100 for token 0xnone"))
+    }
+    guards() // empty store
+    store.upsertHolders(Seq(("t", "0xabc", "0xw1", 18, "5"))
+      .toDF("trigger_id", "contract_address", "holder_address", "token_decimal", "quantity_raw")
+      .withColumn("bucket_start_utc", lit(java.sql.Timestamp.from(asOf)))
+      .withColumn("bucket_unix", unix_timestamp(col("bucket_start_utc"))))
+    store.refreshTop100(Top100.compute(store.read("holders_raw")))
+    guards() // another token has both tables
+    assert(notifier.messages.isEmpty)
+  }
+
   test("store-backed activity report end to end with a string notifier") {
     val ss = spark; import ss.implicits._
     val store = new MerlStore(spark,
