@@ -107,14 +107,7 @@ object Tables {
     * input tables cache; mutable store tables ([[graft.domain.MerlStore]])
     * never pass through here and always re-list.
     */
-  private val resolved = new SessionCache[(String, String)]
-
-  /** Drop (and unpersist) every relation memoized for `spark` — the
-    * explicit lifecycle hook; application end evicts automatically.
-    */
-  def evictSession(spark: SparkSession): Unit = resolved.evictSession(spark)
-
-  private[graft] def cacheSize: Int = resolved.size
+  private val resolved = SessionCache.frames[(String, String)]
 
   /** Opt-in hot-table cache for long-lived service shapes (Bench):
     * static input tables are additionally REPARTITIONED to the core

@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *  - M2 — insert-ignore (`ON CONFLICT DO NOTHING`,
   *    merlin_etl.py:441-447) becomes left-anti-join append on the
   *    natural key, including the reference's
-  *    `COALESCE(transaction_index, 0)` key component (schema.sql:123).
+  *    `COALESCE(transaction_index, 0)` key component (schema.sql:123),
+  *    each append one `__batch` segment.
   *  - M5 — cursor GREATEST-merge (merlin_etl.py:159-175), M6 — job
   *    audit bracket (merlin_etl.py:133-151) and the block_check
   *    upsert (schema.sql:29) as APPEND-ONLY LOGS in the index stores'
@@ -47,9 +48,11 @@ class MerlStore(spark: SparkSession, root: String) {
     fileSystem(p).exists(p)
   }
 
-  /** The table's current rows; a log resolves to one row per key. */
+  /** The table's current rows; a log resolves to one row per key, and
+    * a segmented table hides its `__batch` column.
+    */
   def read(table: String): DataFrame = Logs.get(table) match {
-    case None => spark.read.parquet(path(table))
+    case None => spark.read.parquet(path(table)).drop("__batch")
     case Some(log) =>
       Maintenance.synchronized(Dedup.recoverPendingSwap(spark, path(table), LogPart))
       val events = spark.read.schema(log.schema.add("__seq", LongType)).parquet(path(table))
@@ -147,6 +150,11 @@ class MerlStore(spark: SparkSession, root: String) {
     * rows and duplicate them on replay. `contracts`, when given, is a
     * declared confinement that is VALIDATED against the batch (the
     * reference ingests per (wallet, token), merlin_etl.py:346).
+    *
+    * Each append is its own segment, `contract_address=<c>/__batch=<seq>/`,
+    * written by [[Dedup.writeBatch]], so two tokens' overlapping jobs
+    * never share a committer directory. The table is never compacted:
+    * a merge would rewrite its whole history.
     */
   def appendWalletTransactions(batch: DataFrame, contracts: Option[Seq[String]] = None): Unit = {
     val keyed = batch.withColumn("__ti0", coalesce(col("transaction_index"), lit(0)))
@@ -174,11 +182,8 @@ class MerlStore(spark: SparkSession, root: String) {
           .select(TxKey.map(col): _*)
         keyed.join(existing, TxKey, "left_anti")
       }
-    fresh.drop("__ti0")
-      .repartition(col("contract_address"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("contract_address")
-      .parquet(path("wallet_transactions"))
+    Dedup.writeBatch(fresh.drop("__ti0").repartition(col("contract_address")),
+      path("wallet_transactions"), nextSeq(), "contract_address")
   }
 
   // ---- block_check: update-on-conflict log -------------------------

@@ -879,18 +879,6 @@ object Similarity {
                     vecCol: String = "embedding"): DataFrame =
     semanticDedupReleasable(corpus, centroids, eps, corpusId, vecCol)._1
 
-  /** [[semanticDedupAuto]] with the pin surfaced — see
-    * [[semanticDedupReleasable]] for the lifecycle contract.
-    */
-  def semanticDedupAutoReleasable(corpus: DataFrame, eps: Double,
-                                  corpusId: String = "vec_id",
-                                  vecCol: String = "embedding",
-                                  maxIter: Int = 5, seed: Long = 42L)
-      : (DataFrame, () => Unit) =
-    semanticDedupReleasable(corpus,
-      kmeansCentroidsAuto(corpus.select(col(vecCol)), maxIter, seed, vecCol),
-      eps, corpusId, vecCol)
-
   /** [[semanticDedup]] with the quantizer trained at the production
     * [[autoCentroidCount]] size — the default path for a corpus of
     * unknown scale. The within-cluster pair scan is ∝ population² per

@@ -104,7 +104,7 @@ object MediaPipeline {
     * learned image embedding; everything downstream is
     * representation-agnostic.
     */
-  private val vecsCache = new graft.SessionCache[String]
+  private val vecsCache = graft.SessionCache.frames[String]
   private[graft] def mediaVecs(s: SparkSession, dir: String): DataFrame =
     vecsCache.getOrElseUpdate(s, dir) {
       Media.imageFeatures(
@@ -144,7 +144,7 @@ object MediaPipeline {
     * per (session, dir) — same production contract as the text IVF
     * path (a quantizer belongs to its corpus, not a query batch).
     */
-  private val centsCache = new graft.SessionCache[String]
+  private val centsCache = graft.SessionCache.frames[String]
   private def mediaCentroids(s: SparkSession, dir: String): DataFrame =
     centsCache.getOrElseUpdate(s, dir)(
       graft.operators.Similarity.kmeansCentroids(
@@ -172,6 +172,8 @@ object MediaPipeline {
       .orderBy(col("query_id"), col("rank"))
   }
 
+  private val autoCentsCache = graft.SessionCache.frames[String]
+
   /** [[mediaKnnIvf]] with the quantizer at the production
     * [[graft.operators.Similarity.autoCentroidCount]] size — constant
     * expected list population, so each probe's candidate work
@@ -185,28 +187,6 @@ object MediaPipeline {
     * just the ×R rehearsal. The fixed-quantizer gate stays for
     * cross-round comparability.
     */
-  /** [[mediaKnnIvfAuto]] with the auto-SIZED quantizer forced onto
-    * the FLAT trainer/assignment path — the ×R rehearsal's A/B
-    * contrast for the two-level rewrite (uncached, dev-only: the
-    * production path is [[mediaKnnIvfAuto]], which goes two-level at
-    * [[graft.operators.Similarity.HierThreshold]]).
-    */
-  private[graft] def mediaKnnIvfAutoFlat(s: SparkSession, dir: String): DataFrame = {
-    val vecs = mediaVecs(s, dir)
-    val probes = vecs.filter(col("id") % 400 === 0)
-      .withColumnRenamed("id", "query_id")
-    val corpus = vecs.withColumnRenamed("id", "neighbor_id")
-    val emb = vecs.select(col("embedding"))
-    val cents = graft.operators.Similarity.kmeansCentroids(emb,
-      k = graft.operators.Similarity.autoCentroidCount(emb.count())).localCheckpoint()
-    graft.operators.Similarity.ivfTopKWithCentroids(
-      probes, corpus, cents, k = 5, nProbe = 4, nAssign = 2)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast(LongType).as("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  private val autoCentsCache = new graft.SessionCache[String]
   def mediaKnnIvfAuto(s: SparkSession, dir: String): DataFrame = {
     val vecs = mediaVecs(s, dir)
     val probes = vecs.filter(col("id") % 400 === 0)
@@ -274,19 +254,17 @@ object MediaPipeline {
     * (the checkpoint itself is the remaining construction-time job,
     * documented at each call site).
     */
-  private val widthCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
+  private val widthCache = graft.SessionCache.values[String, Int]
 
   private def hammingWidth(s: SparkSession, sig: DataFrame,
                            memoKey: Option[String] = None): Int = {
-    def derive: Integer = {
+    def derive: Int = {
       val derived = math.min(4096L, sig.count() / 250L).toInt
       if (derived > s.sessionState.conf.numShufflePartitions) derived else 0
     }
     memoKey match {
-      case Some(k) => widthCache.computeIfAbsent(
-        (graft.SessionCache.idOf(s), k), _ => derive).intValue()
-      case None => derive.intValue()
+      case Some(k) => widthCache.getOrElseUpdate(s, k)(derive)
+      case None => derive
     }
   }
 
@@ -302,7 +280,7 @@ object MediaPipeline {
     * corpus-sized-class frame with a real release seam (SessionCache
     * eviction), lineage kept for executor-loss recovery.
     */
-  private val phashSigsCache = new graft.SessionCache[String]
+  private val phashSigsCache = graft.SessionCache.frames[String]
   private def phashSigs(s: SparkSession, dir: String): DataFrame =
     phashSigsCache.getOrElseUpdate(s, dir) {
       graft.plans.GraftExtensions.ensureRegistered(s)
@@ -322,21 +300,12 @@ object MediaPipeline {
   // entirely on one side and the probe would be vacuous; mod 3 on
   // id/40 interleaves family members across both sides). The
   // minhashIndexFor temp-dir idiom.
-  private val phashIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val phashIdxDirs = graft.SessionCache.dirs[String]
 
   private def phashIndexFor(s: SparkSession, dir: String): String =
-    phashIdxDirs.computeIfAbsent((graft.SessionCache.idOf(s), dir), { _ =>
-      val path = java.nio.file.Files.createTempDirectory("graft_ph_idx")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(path).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+    phashIdxDirs.getOrElseUpdate(s, dir)(graft.SessionCache.tempDir("graft_ph_idx") { path =>
       graft.operators.Dedup.writeHammingIndex(
-        phashSigs(s, dir).filter(col("doc_id") % 120 =!= 0), path.toString)
-      path.toString
+        phashSigs(s, dir).filter(col("doc_id") % 120 =!= 0), path)
     })
 
   /** Incremental perceptual near-dup through the ON-DISK Hamming band
@@ -357,7 +326,7 @@ object MediaPipeline {
   // bounded parts-collect + the band join), which un-checkpointed
   // re-ran the whole decode chain per consumer — and the frame is
   // (session, dir)-deterministic, the mediaVecs memo rationale
-  private val probeSigCache = new graft.SessionCache[String]
+  private val probeSigCache = graft.SessionCache.frames[String]
   def mediaPhashIndexed(s: SparkSession, dir: String): DataFrame = {
     val probeSig = probeSigCache.getOrElseUpdate(s, dir)(
       phashSigs(s, dir).filter(col("doc_id") % 120 === 0).localCheckpoint())

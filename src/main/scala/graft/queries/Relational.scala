@@ -73,18 +73,10 @@ object Relational {
     * semantics) with no single-partition global-sort window. The frame
     * is persisted and memoized per (session, dir) — the reference's M7
     * temp-table reuse — because three queries and the bench all
-    * consume it.
+    * consume it. A long-lived service releases it with the session's
+    * other entries through [[graft.SessionCache.evictSession]].
     */
-  private val flowsCache = new graft.SessionCache[String]
-
-  /** M7 cache lifecycle: unpersist and drop every flows frame memoized
-    * for `s`. Bench/tests can leave the cache to die with the session
-    * (application end evicts automatically — [[graft.SessionCache]]),
-    * but a long-lived service should call this at the end of each
-    * batch cycle or the persisted frames (and their plan lineage)
-    * accumulate for the session's lifetime.
-    */
-  def evictFlowsCache(s: SparkSession): Unit = flowsCache.evictSession(s)
+  private val flowsCache = graft.SessionCache.frames[String]
 
   /** Shared-frame build thunk for [[graft.Prewarm]]. */
   private[graft] def prewarmTasks(s: SparkSession, dir: String)

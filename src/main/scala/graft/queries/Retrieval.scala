@@ -155,34 +155,23 @@ object Retrieval {
   def bm25TopKViaIndex(s: SparkSession, dir: String): DataFrame =
     bm25TopKIndexed(s, indexFor(s, dir), Queries, TopK)
 
-  // Temp index dirs are deleted at JVM exit (batch mains — Verify,
+  // Temp index dirs, released with the session (batch mains — Verify,
   // Bench — are the only users of this binding; a long-lived service
   // calls writeBm25Index with its own durable path instead).
-  private val indexDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val indexDirs = graft.SessionCache.dirs[String]
 
   /** Prewarm hook: build (or find) the session's on-disk inverted
     * index for `dir` — the artifact [[bm25TopKViaIndex]] and
     * [[hybridRrf]] probe.
     */
-  private[queries] def warmBm25Index(s: SparkSession, dir: String): Unit = {
+  private[graft] def warmBm25Index(s: SparkSession, dir: String): Unit = {
     indexFor(s, dir); ()
   }
 
   private def indexFor(s: SparkSession, dir: String): String =
-    indexDirs.computeIfAbsent((graft.SessionCache.idOf(s), dir), { _ =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_bm25_idx")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(path).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+    indexDirs.getOrElseUpdate(s, dir)(graft.SessionCache.tempDir("graft_bm25_idx") { path =>
       writeBm25Index(
-        TextPipeline.tokenizedDocs(s, dir).select(col("doc_id"), col("__toks")),
-        path.toString)
-      path.toString
+        TextPipeline.tokenizedDocs(s, dir).select(col("doc_id"), col("__toks")), path)
     })
 
   /** Partition count of the on-disk inverted index: postings land in
@@ -484,7 +473,7 @@ object Retrieval {
       // every other frozen-model artifact.
       precomputedLambda = trainedDsirLambda(s, dir))
 
-  private val dsirLambdaCache = new graft.SessionCache[String]
+  private val dsirLambdaCache = graft.SessionCache.frames[String]
 
   /** The gated binding's trained λ, memoized per (session, corpus) —
     * also the prewarm hook, so a service startup overlaps training

@@ -42,11 +42,10 @@ object TextPipeline {
     * THREE gated queries consume the identical frame (ngram_jaccard,
     * dedup_components, decontamination) and recomputing the shingle
     * blocking join per consumer triples the most expensive stage of
-    * the text pipeline. Long-lived services call [[evictPairsCache]]
-    * per batch cycle (same lifecycle contract as
-    * [[Relational.evictFlowsCache]]).
+    * the text pipeline. Released with the session's other entries by
+    * [[graft.SessionCache.evictSession]].
     */
-  private val pairsCache = new graft.SessionCache[String]
+  private val pairsCache = graft.SessionCache.frames[String]
 
   private[queries] def ngramPairs05(s: SparkSession, dir: String): DataFrame =
     pairsCache.getOrElseUpdate(s, dir) {
@@ -93,15 +92,6 @@ object TextPipeline {
       "dsir_lambda" -> (() => { Retrieval.trainedDsirLambda(s, dir); () }),
       "bm25_index" -> (() => { Retrieval.warmBm25Index(s, dir); () })))
 
-  def evictPairsCache(s: SparkSession): Unit = {
-    pairsCache.evictSession(s)
-    toksCache.evictSession(s)
-    centsCache.evictSession(s)
-    semCache.evictSession(s)
-    semAutoCache.evictSession(s)
-    pplCache.evictSession(s)
-  }
-
   /** Tokenized documents (doc_id, text, lang, __toks), persisted and
     * memoized per (session, dir): tokenization is the text family's
     * single most repeated stage (TextFns cost contract — one regex
@@ -110,9 +100,9 @@ object TextPipeline {
     * lifecycle as [[pairsCache]]. Already spread across cores
     * (core-count partitions) when materialized.
     */
-  private val toksCache = new graft.SessionCache[String]
+  private val toksCache = graft.SessionCache.frames[String]
 
-  private[queries] def tokenizedDocs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def tokenizedDocs(s: SparkSession, dir: String): DataFrame =
     toksCache.getOrElseUpdate(s, dir)(
       Tables.spread(Tables.documents(s, dir))
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -178,28 +168,19 @@ object TextPipeline {
       .localCheckpoint()
       .orderBy(col("id_a"), col("id_b"))
 
-  // Temp LSH index dirs, one per (session, sfDir), deleted at JVM
-  // exit — same lifecycle as Retrieval's BM25 binding (batch mains
-  // are the only users; a service calls Dedup.writeMinhashIndex with
-  // its own durable path). Indexes every doc_id % 10 != 0 ("the
+  // Temp LSH index dirs, one per (session, sfDir), a SessionCache
+  // entry like Retrieval's BM25 binding (batch mains are the only
+  // users; a service calls Dedup.writeMinhashIndex with its own
+  // durable path). Indexes every doc_id % 10 != 0 ("the
   // already-ingested corpus"); the query probes the % 10 == 0 batch.
-  private val minhashIdxDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val minhashIdxDirs = graft.SessionCache.dirs[String]
 
   private def minhashIndexFor(s: SparkSession, dir: String): String =
-    minhashIdxDirs.computeIfAbsent((graft.SessionCache.idOf(s), dir), { _ =>
-      val path = java.nio.file.Files.createTempDirectory("graft_mh_idx")
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(path).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+    minhashIdxDirs.getOrElseUpdate(s, dir)(graft.SessionCache.tempDir("graft_mh_idx") { path =>
       Dedup.writeMinhashIndex(
         tokenizedDocs(s, dir).select(col("doc_id"), col("__toks"))
           .filter(col("doc_id") % 10 =!= 0),
-        path.toString, shingleLen = 3, bands = 32, rowsPerBand = 4)
-      path.toString
+        path, shingleLen = 3, bands = 32, rowsPerBand = 4)
     })
 
   /** Incremental near-dup dedup through the on-disk LSH band index
@@ -279,14 +260,12 @@ object TextPipeline {
     * belongs to its corpus like the IVF quantizer does (ivfCentroids'
     * memo rationale): training is an eager word-count aggregate +
     * driver-side merge learning, so re-training per query would re-run
-    * the corpus scan every call. Plain memo keyed by session id (the
-    * value is a merge list, not a DataFrame, so SessionCache's
-    * unpersist lifecycle doesn't apply; entries are trivially small).
+    * the corpus scan every call. A plain-value SessionCache entry (a
+    * merge list has nothing to unpersist; entries are trivially small).
     */
-  private val bpeMergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, String)]]()
-  private[queries] def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergesMemo.computeIfAbsent((graft.SessionCache.idOf(s), dir), _ =>
+  private val bpeMergesMemo = graft.SessionCache.values[String, Seq[(String, String)]]
+  private[graft] def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    bpeMergesMemo.getOrElseUpdate(s, dir)(
       graft.functions.Bpe.train(
         Tables.documents(s, dir).select(col("text")), col("text"),
         numMerges = 256, maxWords = 65536))
@@ -549,7 +528,7 @@ object TextPipeline {
     * job set every call. 16 rows — the memo is the trained model, the
     * persisted size is trivial.
     */
-  private val centsCache = new graft.SessionCache[String]
+  private val centsCache = graft.SessionCache.frames[String]
   private def ivfCentroids(s: SparkSession, dir: String): DataFrame =
     centsCache.getOrElseUpdate(s, dir)(
       Similarity.kmeansCentroids(
@@ -987,7 +966,7 @@ object TextPipeline {
     * [[Similarity.kmeansCentroids]] (same operator, trained
     * quantizer — the knn_ivf / knn_ivf_exact gating pattern).
     */
-  private val semCache = new graft.SessionCache[String]
+  private val semCache = graft.SessionCache.frames[String]
 
   def semanticDedupQ(s: SparkSession, dir: String): DataFrame =
     semCache.getOrElseUpdate(s, dir) {
@@ -1025,7 +1004,7 @@ object TextPipeline {
     * falls mechanically with the sizing rule at ×R).
     * Same memoized releasable lifecycle as the fixed twin.
     */
-  private val semAutoCache = new graft.SessionCache[String]
+  private val semAutoCache = graft.SessionCache.frames[String]
 
   def semanticDedupAutoQ(s: SparkSession, dir: String): DataFrame =
     semAutoCache.getOrElseUpdate(s, dir) {
@@ -1209,7 +1188,7 @@ object TextPipeline {
     * materializes (the [[graft.operators.LanguageModel
     * .selfPerplexityReleasable]] contract).
     */
-  private val pplCache = new graft.SessionCache[String]
+  private val pplCache = graft.SessionCache.frames[String]
 
   private def selfPpl(s: SparkSession, dir: String): DataFrame =
     pplCache.getOrElseUpdate(s, dir) {

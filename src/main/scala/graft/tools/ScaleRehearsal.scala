@@ -193,10 +193,6 @@ object ScaleRehearsal {
       "semantic_dedup_auto" -> ((s, dir) =>
         graft.operators.Similarity.semanticDedupAuto(
           Tables.embeddings(s, dir), eps = 0.4)),
-      // flat-trained auto-size contrast for the two-level rewrite
-      // (round-15): same probes/corpus/k, quantizer forced flat
-      "media_knn_ivf_auto_flat" -> ((s, dir) =>
-        graft.queries.MediaPipeline.mediaKnnIvfAutoFlat(s, dir)),
       // the production config for low-entropy fingerprint corpora
       // (round-15): the ×30 audio fixture collapses to 128 distinct
       // fingerprints over 60k clips, so the UNCAPPED gate sweep's
@@ -205,16 +201,6 @@ object ScaleRehearsal {
       "media_audio_phash_capped" -> ((s, dir) =>
         graft.queries.MediaPipeline.audioPhashPairsOf(s, dir,
           maxPieceFreq = 1000L)),
-      // two-level quantizer forced ON for the embeddings corpus (its
-      // auto k sits just under the production threshold at ×30) —
-      // the hier-vs-flat mechanics A/B on a genuinely continuous
-      // vector corpus, paired with `semantic_dedup_auto` (flat)
-      "semantic_dedup_auto_hier" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        graft.operators.Similarity.semanticDedup(emb,
-          graft.operators.Similarity.kmeansCentroidsAuto(
-            emb.select(col("embedding")), hierThreshold = 1), eps = 0.4)
-      }),
       // round-17 (VERDICT r16 gap #4): the two batch COMPOSITIONS at
       // ×R, withStats both ways. The gated entries
       // (corpus_prepare_semantic, media_prepare) run the accounted

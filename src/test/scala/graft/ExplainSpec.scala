@@ -318,7 +318,7 @@ class ExplainSpec extends SparkSpec {
     // (e.g. ContractSpec's quality sweep) may have left the memoized
     // token frame persisted, and a cached-relation scan prints its
     // build plan's exchanges too — suite-order-dependent counts
-    queries.TextPipeline.evictPairsCache(spark)
+    SessionCache.evictSession(spark)
     val p = plan("text_repetition")
     // the former shape paid FOUR aggregate exchanges (two explode →
     // two-level groupBy pipelines); the expression fold leaves only
@@ -392,7 +392,7 @@ class ExplainSpec extends SparkSpec {
     // warmed it, and the cached relation's internal (spread) exchange
     // prints into the formatted plan, inflating the string count this
     // contract bounds — assert the canonical COLD shape
-    graft.queries.TextPipeline.evictPairsCache(spark)
+    SessionCache.evictSession(spark)
     val p = plan("quality_model_score")
     // feature hash + weight fold + sigmoid all fold per-row; the only
     // exchanges are Tables.spread's round-robin (fixture parallelism)

@@ -44,4 +44,23 @@ class MerlStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("0xabc"))
     assert(store.read("wallet_transactions").count() == 2, "no partial write on rejection")
   }
+
+  test("appendWalletTransactions: two stores over one root append concurrently and lose no row") {
+    val root = Files.createTempDirectory("graft_store").toString
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val workers = Seq("0xaaa", "0xbbb").map { token =>
+      new Thread(() =>
+        try {
+          val store = new MerlStore(spark, root)
+          for (i <- 1 to 8)
+            store.appendWalletTransactions(
+              txBatch(Seq(("0xw1", token, s"0xh$i", "100", Integer.valueOf(i)))))
+        } catch { case e: Throwable => errors.add(e) })
+    }
+    workers.foreach(_.start()); workers.foreach(_.join())
+    assert(errors.isEmpty, s"a writer failed: ${errors.peek()}")
+    val rows = new MerlStore(spark, root).read("wallet_transactions")
+    assert(rows.count() == 16, "every batch of both writers must survive")
+    assert(!rows.columns.contains("__batch"), "read hides the segment column")
+  }
 }
