@@ -9,17 +9,14 @@ import scala.jdk.CollectionConverters._
   *  - the action is a noop-format write, which materializes every
   *    output column — `.count()` would let Catalyst prune unreferenced
   *    projections/windows and under-measure the real plan;
-  *  - the shared session artifacts build CONCURRENTLY first
-  *    ([[Prewarm]] — input caches, tokenized docs, pair graph, trained
-  *    models), the way a service startup overlaps them on idle cores;
-  *    the prewarm wall is reported as `prewarm_sec` and counted into
-  *    `cold_total`.
-  *  - the FULL suite then runs in pinned (alphabetical) order. The
-  *    first pass absorbs the remaining one-time costs that are
-  *    properties of the JVM, not the engine — Janino compile of each
-  *    distinct codegen shape, JIT warm-up, parquet footer caching —
-  *    and is reported as
-  *    `queries_cold`/`cold_total`. The second (steady) pass is the
+  *  - the FULL suite runs in pinned (alphabetical) order. The first
+  *    pass absorbs every one-time cost: each shared session artifact
+  *    (input caches, tokenized docs, pair graph, trained models) is
+  *    built inside the first query that touches it, and the JVM pays
+  *    Janino compile of each distinct codegen shape, JIT warm-up and
+  *    parquet footer caching. It is reported as `queries_cold`, and
+  *    `cold_total` (their sum) reads "process start → suite done
+  *    once". The second (steady) pass is the
   *    official `value`: it is what a long-lived service or a real
   *    cluster job (where codegen cost amortizes over thousands of
   *    tasks) observes. Both are emitted so regressions in either are
@@ -50,7 +47,7 @@ object Bench {
         jobCounter.incrementAndGet()
     })
     def drainJobs(): Long = {
-      org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBus.drainListeners(spark.sparkContext)
       jobCounter.get()
     }
 
@@ -87,25 +84,6 @@ object Bench {
     def pass(): Seq[(String, (Double, Long, Option[String]))] =
       ordered.map { case (name, fn) => name -> run(name, fn) }
 
-    // Concurrent shared-artifact build (see [[Prewarm]]): the same
-    // one-time jobs the cold pass would otherwise pay serially inside
-    // whichever query touches each first, overlapped on idle cores
-    // the way a service startup would. Wall time is COUNTED INTO
-    // cold_total below (reported separately as prewarm_sec), so
-    // cold_total remains "process start → full suite done once".
-    // Skipped for SPARK_GRAFT_BENCH_ONLY subsets (dev loops).
-    val (prewarmSec, prewarmFailures) =
-      if (only.nonEmpty) (0.0, 0)
-      else {
-        val t0 = System.nanoTime()
-        val tasks = Prewarm.run(spark, sfDir)
-        val s = (System.nanoTime() - t0) / 1e9
-        val failed = tasks.filterNot(_.ok)
-        System.err.println(f"[bench] prewarm $s%.1f s wall, ${failed.size} failed: " +
-          tasks.sortBy(-_.sec).map(t => f"${t.name}${if (t.ok) "" else "(FAILED)"}=${t.sec}%.1f").mkString(" "))
-        (s, failed.size)
-      }
-
     val cold = pass()
     // Three steady passes, per-query MIN: a query's time should
     // reflect its own plan, not the GC debt or JIT recompilation the
@@ -131,7 +109,7 @@ object Bench {
         .mkString("{", ",", "}")
 
     val total     = steady.map(_._2._1).sum
-    val coldTotal = prewarmSec + cold.map(_._2._1).sum
+    val coldTotal = cold.map(_._2._1).sum
     val steadyJobs = steady.map(_._2._2).sum
     // Per-job fixed-overhead probe — the artifact's own environment
     // normalizer: machine-wide scheduler drift (observed round 12:
@@ -168,7 +146,7 @@ object Bench {
     val steadyJson = jsonNum(steady.map { case (n, (t, _, _)) => n -> t })
     val steadyJobsJson = steady.map { case (n, (_, j, _)) => "\"" + n + "\":" + j }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"prewarm_sec":$prewarmSec,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"queries_cold":${jsonNum(cold.map { case (n, (t, _, _)) => n -> t })},"errors":${jsonStr(errors)},"sf":"$sfDir","queries_steady":$steadyJson,"queries":$steadyJson}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"queries_cold":${jsonNum(cold.map { case (n, (t, _, _)) => n -> t })},"errors":${jsonStr(errors)},"sf":"$sfDir","queries_steady":$steadyJson,"queries":$steadyJson}""")
     // Round number for per-round artifacts: one past the newest
     // BENCH_r{N}.json in cwd (this round's driver file doesn't exist
     // yet while Bench is running). Run from a foreign cwd that
@@ -212,7 +190,7 @@ object Bench {
     // Self-contained per-round bench artifact (round-12): the driver
     // keeps only a 2 KB stdout TAIL, which at 76+ queries truncates
     // the per-query maps out of its BENCH_r{N}.json — so the FULL
-    // record (both per-query maps, totals, prewarm, errors) is also
+    // record (both per-query maps, totals, errors) is also
     // written to a file the way Quality writes QUALITY_r{N}.json.
     // Named BENCH_FULL to never collide with the driver's own
     // tail-capture artifact of the same round.
@@ -220,7 +198,7 @@ object Bench {
       try {
         val path = f"BENCH_FULL_r$round%02d.json"
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-          s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"prewarm_sec":$prewarmSec,"prewarm_failures":$prewarmFailures,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"n_queries":${ordered.size},"n_errors":${errors.size},"sf":"$sfDir",
+          s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"n_queries":${ordered.size},"n_errors":${errors.size},"sf":"$sfDir",
              |"queries_cold":${jsonNum(cold.map { case (n, (t, _, _)) => n -> t })},
              |"queries_steady":$steadyJson,
              |"queries_steady_jobs":$steadyJobsJson,
@@ -235,7 +213,7 @@ object Bench {
     // above gets its head (the "value" field) truncated off. Emit a
     // second, short, self-contained total line LAST so tail-capture
     // always retains a parseable record of the official numbers.
-    val shortTotals = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"prewarm_sec":$prewarmSec,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"n_queries":${ordered.size},"n_errors":${errors.size},"sf":"$sfDir"}"""
+    val shortTotals = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"n_queries":${ordered.size},"n_errors":${errors.size},"sf":"$sfDir"}"""
     // ... and mirrored to stderr (round 18): two consecutive rounds of
     // driver-side artifacts arrived with "parsed": null while the run
     // itself was green — a second scrape path on the other stream lets

@@ -60,23 +60,10 @@ object GraftSession {
       // full bench: 32.4 s → 22.5 s steady total from this one line. A
       // long-lived service with a wide query inventory wants the same.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // FAIR root scheduling. On its own this does NOT reorder
-      // anything: with no allocation file every job lands in the one
-      // on-demand 'default' pool, whose internal mode is FIFO, and
-      // fair sharing only applies ACROSS pools. It becomes effective
-      // when a submitter names a pool per concurrent workload via the
-      // spark.scheduler.pool local property — [[Prewarm]] does (one
-      // pool per startup build), and a multi-tenant service would
-      // (one pool per tenant). Serial workloads schedule identically
-      // either way, so the conf is free; the concurrent-build win it
-      // enables is measured in BASELINE.md (r12 prewarm A/B).
-      .config("spark.scheduler.mode", "FAIR")
       // Id-free generated class names: the codegen stage id in the
       // class name is debugging sugar that makes otherwise-identical
       // sources unequal, defeating the source-keyed generated-class
-      // cache across queries sharing a subtree shape (and defeating
-      // [[Prewarm]]'s ahead-of-time compile, whose stage ids cannot
-      // match AQE's per-stage numbering).
+      // cache across queries sharing a subtree shape.
       .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Long-running streaming preset: RocksDB state store, so unbounded

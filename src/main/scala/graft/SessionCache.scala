@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** The one registry of per-session artifacts — the lifecycle home of
@@ -15,8 +15,9 @@ import scala.jdk.CollectionConverters._
   * directories (the BM25, MinHash and Hamming probes' indexes).
   *
   * Every [[SessionCache]] registers here and releases its own entries
-  * with the function it was built with: [[frames]] unpersist,
-  * [[dirs]] delete the directory tree, [[values]] release nothing.
+  * with the function it was built with: [[frames]] unpersist (unless
+  * another live entry reads the same cached data), [[dirs]] delete the
+  * directory tree, [[values]] release nothing.
   *
   * Lifecycle contract (cached DataFrames hold their session through
   * `queryExecution`, so entries DO pin a session until evicted; the
@@ -63,9 +64,8 @@ object SessionCache {
   private val liveDirs = ConcurrentHashMap.newKeySet[Path]()
   sys.addShutdownHook(liveDirs.forEach(p => deleteTree(p)))
 
-  /** A cache of frames, unpersisted on release. */
-  def frames[K]: SessionCache[K, DataFrame] =
-    new SessionCache[K, DataFrame](_.unpersist(blocking = false))
+  /** A cache of frames, released by [[releaseFrame]]. */
+  def frames[K]: SessionCache[K, DataFrame] = new SessionCache[K, DataFrame](releaseFrame)
 
   /** A cache of plain values; release is dropping the entry. */
   def values[K, V]: SessionCache[K, V] = new SessionCache[K, V](_ => ())
@@ -108,6 +108,24 @@ object SessionCache {
     sid
   }
 
+  /** Spark's cache manager keeps ONE cached relation for all
+    * same-result plans on a SparkContext, whatever their session, so
+    * unpersisting one session's frame would un-cache every other
+    * session's memoized frame over the same input. Unpersist only
+    * when no live entry (the released one is already removed) looks
+    * up the same cached data.
+    */
+  private def releaseFrame(df: DataFrame): Unit = {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val cm = df.sparkSession.sharedState.cacheManager
+    val data = cm.lookupCachedData(castToImpl(df))
+    val shared = data.exists(cd => caches.asScala.exists(_.holds {
+      case other: Dataset[_] => cm.lookupCachedData(castToImpl(other)).exists(_ eq cd)
+      case _ => false
+    }))
+    if (!shared) df.unpersist(blocking = false)
+  }
+
   private def deleteTree(path: Path): Unit = {
     liveDirs.remove(path)
     // a concurrent release may delete the same tree
@@ -135,6 +153,8 @@ final class SessionCache[K, V] private (release: V => Unit) {
           scala.util.Try(release(v))
         }
     }
+
+  private def holds(p: V => Boolean): Boolean = entries.values.asScala.exists(p)
 
   private[graft] def size: Int = entries.size
 }

@@ -127,11 +127,6 @@ object Tables {
     */
   private val inputCache = new java.util.concurrent.atomic.AtomicBoolean(false)
   def enableInputCache(): Unit = inputCache.set(true)
-  // test hook: the flag is process-global, so a spec that enables it
-  // must restore it or every later-resolving suite inherits cached
-  // relations (and plan-shape assertions break order-dependently)
-  private[graft] def disableInputCache(): Unit = inputCache.set(false)
-  private[graft] def inputCacheEnabled: Boolean = inputCache.get
 
   /** Only the RELATIONAL tables cache: their queries are scan/agg/join
     * shapes where the single-row-group serial decode dominates. The
@@ -148,18 +143,6 @@ object Tables {
   private val cacheable: Set[String] =
     Set("lineitem", "orders", "customer",
       "supplier", "part", "nation", "region", "events")
-
-  /** Input-cache build thunks for [[graft.Prewarm]] — one per
-    * cacheable table, so the columnar cache builds run on idle cores
-    * instead of serially inside each family's first query. No-ops
-    * when the input cache is disabled (each thunk then just resolves
-    * a lazy relation).
-    */
-  private[graft] def prewarmTasks(spark: SparkSession, dir: String)
-      : Seq[(String, () => Unit)] =
-    if (!inputCache.get) Nil
-    else cacheable.toSeq.sorted.map(n =>
-      s"cache_$n" -> (() => { table(spark, dir, n).count(); () }))
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     resolved.getOrElseUpdate(spark, (dir, name)) {

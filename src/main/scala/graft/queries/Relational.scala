@@ -78,11 +78,6 @@ object Relational {
     */
   private val flowsCache = graft.SessionCache.frames[String]
 
-  /** Shared-frame build thunk for [[graft.Prewarm]]. */
-  private[graft] def prewarmTasks(s: SparkSession, dir: String)
-      : Seq[(String, () => Unit)] =
-    Seq("activity_flows" -> (() => { flowsDec(s, dir).count(); () }))
-
   private def flowsDec(s: SparkSession, dir: String): DataFrame =
     flowsCache.getOrElseUpdate(s, dir)({
       val ev = Tables.events(s, dir)

@@ -160,14 +160,6 @@ object Retrieval {
   // calls writeBm25Index with its own durable path instead).
   private val indexDirs = graft.SessionCache.dirs[String]
 
-  /** Prewarm hook: build (or find) the session's on-disk inverted
-    * index for `dir` — the artifact [[bm25TopKViaIndex]] and
-    * [[hybridRrf]] probe.
-    */
-  private[graft] def warmBm25Index(s: SparkSession, dir: String): Unit = {
-    indexFor(s, dir); ()
-  }
-
   private def indexFor(s: SparkSession, dir: String): String =
     indexDirs.getOrElseUpdate(s, dir)(graft.SessionCache.tempDir("graft_bm25_idx") { path =>
       writeBm25Index(
@@ -475,11 +467,8 @@ object Retrieval {
 
   private val dsirLambdaCache = graft.SessionCache.frames[String]
 
-  /** The gated binding's trained λ, memoized per (session, corpus) —
-    * also the prewarm hook, so a service startup overlaps training
-    * with the other model builds.
-    */
-  private[queries] def trainedDsirLambda(s: SparkSession, dir: String): DataFrame =
+  /** The gated binding's trained λ, memoized per (session, corpus). */
+  private def trainedDsirLambda(s: SparkSession, dir: String): DataFrame =
     dsirLambdaCache.getOrElseUpdate(s, dir)(
       dsirLambda(TextPipeline.tokenizedDocs(s, dir)
           .select(col("doc_id"), col("lang"), col("__toks")),

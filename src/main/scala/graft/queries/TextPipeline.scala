@@ -63,35 +63,6 @@ object TextPipeline {
         pairParts = if (derived > session) derived else 0).persist()
     }
 
-  /** Shared-frame build thunks for [[graft.Prewarm]] — each
-    * materializes one session-scoped corpus artifact (M7 frames, the
-    * trained models) so a service's startup can overlap them on idle
-    * cores instead of paying them serially inside the first query
-    * that happens to touch each. Phase 0 must complete before phase 1
-    * (the phase-1 builds all read the tokenized frame).
-    */
-  private[graft] def prewarmTasks(s: SparkSession, dir: String)
-      : (Seq[(String, () => Unit)], Seq[(String, () => Unit)]) = (
-    // phase 0: tokenized docs (the dependency of every text build)
-    // plus the embedding-side builds, which touch no text at all and
-    // overlap fully
-    Seq(
-      "tokenized_docs" -> (() => { tokenizedDocs(s, dir).count(); () }),
-      "ivf_centroids" -> (() => { ivfCentroids(s, dir); () }),
-      "semantic_dedup" -> (() => { semanticDedupQ(s, dir); () }),
-      "semantic_dedup_auto" -> (() => { semanticDedupAutoQ(s, dir); () })),
-    // phase 1: the builds that read the tokenized frame
-    Seq(
-      "ngram_pairs" -> (() => { ngramPairs05(s, dir).count(); () }),
-      "self_perplexity" -> (() => { selfPpl(s, dir); () }),
-      "bpe_merges" -> (() => { bpeMerges(s, dir); () }),
-      // round-18: the DSIR λ model and the BM25 inverted index are
-      // session-scoped trained/built artifacts like the quantizer and
-      // the BPE merges — build them at startup too, not inside the
-      // first probing query's cold number
-      "dsir_lambda" -> (() => { Retrieval.trainedDsirLambda(s, dir); () }),
-      "bm25_index" -> (() => { Retrieval.warmBm25Index(s, dir); () })))
-
   /** Tokenized documents (doc_id, text, lang, __toks), persisted and
     * memoized per (session, dir): tokenization is the text family's
     * single most repeated stage (TextFns cost contract — one regex

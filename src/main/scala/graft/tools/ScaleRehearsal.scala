@@ -323,7 +323,7 @@ object ScaleRehearsal {
         val second = (System.nanoTime() - t1) / 1e9
         // listener events drain asynchronously; let the heartbeat-polled
         // stage metrics land before reading the peaks
-        org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(spark.sparkContext)
+        org.apache.spark.sql.graftbridge.ListenerBus.drainListeners(spark.sparkContext)
         results((dir, name)) = first
         steady((dir, name)) = second
         val mb = 1024.0 * 1024.0

@@ -570,14 +570,14 @@ object StreamRehearsal {
         Incremental.minhashIndexStream(spark, src, idx, ck)
         if ((w + 1) % 5 == 0) {
           val (bandFiles, bandSegs) = indexFiles()
-          org.apache.spark.sql.graftbridge.CodegenPrewarm
+          org.apache.spark.sql.graftbridge.ListenerBus
             .drainListeners(spark.sparkContext)
           spill.set(0)
           val t0 = System.nanoTime()
           val hits = graft.operators.Dedup.minhashProbe(probeToks, idx)
             .filter(col("est_jaccard") >= 0.5).count()
           val wall = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.graftbridge.CodegenPrewarm
+          org.apache.spark.sql.graftbridge.ListenerBus
             .drainListeners(spark.sparkContext)
           println(f"""{"metric":"probe_scale","wave":${w + 1},"indexed_docs":${(w + 1) * (nDocs / 5)},"probe_wall_sec":$wall%.2f,"hits":$hits,"bands_files":$bandFiles,"bands_segments":$bandSegs,"spill_mb":${spill.get / 1048576}}""")
         }

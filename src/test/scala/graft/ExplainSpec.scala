@@ -515,7 +515,7 @@ class ExplainSpec extends SparkSpec {
                       e: Exception): Unit = ()
       }
       spark.listenerManager.register(l)
-      try { report; org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(spark.sparkContext) }
+      try { report; org.apache.spark.sql.graftbridge.ListenerBus.drainListeners(spark.sparkContext) }
       finally spark.listenerManager.unregister(l)
       plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(scans)
         .groupBy(_.relation.location.rootPaths.head.getName)

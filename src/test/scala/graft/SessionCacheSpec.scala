@@ -80,7 +80,7 @@ class SessionCacheSpec extends SparkSpec {
     toks.count()
     val vecs = graft.queries.MediaPipeline.mediaVecs(s1, dir)
     vecs.count()
-    graft.queries.Retrieval.warmBm25Index(s1, dir)
+    graft.queries.Retrieval.bm25TopKViaIndex(s1, dir)
     val merges = graft.queries.TextPipeline.bpeMerges(s1, dir)
     assert(toks.storageLevel.useMemory && vecs.storageLevel.useMemory)
     val built = persistedIds -- base
@@ -102,6 +102,36 @@ class SessionCacheSpec extends SparkSpec {
     assert(Tables.table(s2, dir, "nation") eq other, "another session's entries survive")
     assert(graft.queries.TextPipeline.bpeMerges(s2, dir) eq otherMerges)
     SessionCache.evictSession(s1); SessionCache.evictSession(s2)
+  }
+
+  test("evictSession keeps a cached frame that another live session still reads") {
+    // a private copy of the sf0.001 documents: no session of another
+    // suite can hold a same-result frame over this path
+    val own = java.nio.file.Files.createTempDirectory("graft_shared_cache")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "documents.parquet"),
+      own.resolve("documents.parquet"))
+    val s1 = spark.newSession()
+    val s2 = spark.newSession()
+    val base = persistedIds
+    // same-result plans in two sessions share ONE cached relation
+    val toks1 = graft.queries.TextPipeline.tokenizedDocs(s1, own.toString)
+    val toks2 = graft.queries.TextPipeline.tokenizedDocs(s2, own.toString)
+    toks1.count(); toks2.count()
+    val built = persistedIds -- base
+    assert(built.nonEmpty, "the token frame must be persisted")
+
+    SessionCache.evictSession(s1)
+    assert(toks2.storageLevel.useMemory, "s2's memoized frame must stay cached")
+    assert(built.subsetOf(persistedIds),
+      s"s2's cached RDD must stay persisted: ${built -- persistedIds}")
+    assert(graft.queries.TextPipeline.tokenizedDocs(s2, own.toString) eq toks2)
+
+    SessionCache.evictSession(s2)
+    assert(!toks1.storageLevel.useMemory && !toks2.storageLevel.useMemory,
+      "the last holder's eviction un-caches the frame")
+    assert((persistedIds & built).isEmpty,
+      s"the cached RDD must leave getPersistentRDDs: ${persistedIds & built}")
+    org.apache.commons.io.FileUtils.deleteQuietly(own.toFile)
   }
 
   test("touching many caches from one session registers one application-end listener") {

@@ -74,7 +74,7 @@ class CorpusSpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     def drain(): Unit =
-      org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(ss.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBus.drainListeners(ss.sparkContext)
     ss.listenerManager.register(ql)
     try {
       def measure(withStats: Boolean): (Int, Corpus.PrepareStats, () => Unit) = {

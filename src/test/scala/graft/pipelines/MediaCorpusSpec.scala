@@ -72,7 +72,7 @@ class MediaCorpusSpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     def drain(): Unit =
-      org.apache.spark.sql.graftbridge.CodegenPrewarm.drainListeners(ss.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBus.drainListeners(ss.sparkContext)
     ss.listenerManager.register(ql)
     try {
       def measure(withStats: Boolean): (Int, MediaCorpus.MediaPrepareStats, () => Unit) = {
