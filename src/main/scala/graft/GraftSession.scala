@@ -23,7 +23,6 @@ object GraftSession {
 
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -139,9 +138,7 @@ object GraftSession {
   /** Session for driver-run mains: core count from SPARK_GRAFT_CPUS,
     * initial shuffle partitioning derived from the SPARK_GRAFT_SF_DIR
     * input size (see [[derivedShufflePartitions]]; core-count default
-    * when the dir is absent). SPARK_GRAFT_CONF ("k=v;k=v") applies
-    * ad-hoc overrides last — a dev hook for config A/B runs (e.g.
-    * measuring AQE barrier cost), not a production surface.
+    * when the dir is absent).
     */
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -154,10 +151,7 @@ object GraftSession {
       else base.config("spark.sql.shuffle.partitions",
         derivedShufflePartitions(nCpus, bytes).toString)
     }
-    val b = sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq).getOrElse(Nil)
-      .map(_.split("=", 2)).collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(sized) { case (bb, (k, v)) => bb.config(k, v) }
-    val s = b.getOrCreate()
+    val s = sized.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

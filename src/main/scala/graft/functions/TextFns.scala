@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Text-analysis expression helpers for large-scale training-data
   * pipelines: normalization, tokenization, quality scoring, language
@@ -82,7 +84,8 @@ object TextFns {
     * the plan as a foldable literal, one shared encoder per plan.
     */
   def bpeTokenCountLearned(text: Column, merges: Seq[(String, String)]): Column =
-    call_function("graft_bpe_count", text, lit(Bpe.serializeMerges(merges)))
+    ColumnBridge.column(graft.plans.BpeCount(
+      ColumnBridge.expression(text), Literal(Bpe.serializeMerges(merges))))
 
   /** Ratio of punctuation characters to total characters. */
   def punctRatio(text: Column): Column =

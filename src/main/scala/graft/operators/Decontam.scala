@@ -2,7 +2,10 @@ package graft.operators
 
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Benchmark decontamination by exact n-gram membership — the
@@ -88,7 +91,6 @@ object Decontam {
     */
   def buildBloom(grams: DataFrame, nItems: Long, fpp: Double): Array[Byte] = {
     val spark = grams.sparkSession
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val numBits = BloomFilter.optimalNumOfBits(nItems, fpp)
     // Raise the caps only for the duration of the build: they also size
     // Spark's own InjectRuntimeFilter blooms, so leaving them raised
@@ -104,11 +106,19 @@ object Decontam {
       }
     try
       grams
-        .agg(call_function("graft_bloom_agg",
-          col("gram"), lit(nItems), lit(numBits)).as("__bf"))
+        .agg(ColumnBridge.column(new BloomFilterAggregate(
+          ColumnBridge.expression(col("gram")), Literal(nItems), Literal(numBits))
+          .toAggregateExpression()).as("__bf"))
         .head.getAs[Array[Byte]](0)
     finally raised.foreach { case (conf, prev) => spark.conf.set(conf, prev) }
   }
+
+  /** Membership probe of a [[buildBloom]] filter over a long hash
+    * column — Spark's codegen'd `BloomFilterMightContain`, so a filter
+    * on it prunes pre-shuffle inside whole-stage codegen.
+    */
+  def mightContain(bloom: Array[Byte], hash: Column): Column =
+    ColumnBridge.column(BloomFilterMightContain(Literal(bloom), ColumnBridge.expression(hash)))
 
   /** Training docs leaking held-out content: (doc_id, n_leaked_grams)
     * for every `train`-split doc sharing ≥1 distinct k-gram with any
@@ -124,7 +134,6 @@ object Decontam {
   def leakedGrams(toks: DataFrame, k: Int = 8,
                   holdoutSplits: Seq[String] = Seq("val", "test"),
                   fpp: Double = 0.01): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(toks.sparkSession)
     val grams = distinctGramHashes(toks, k)
 
     // Holdout gram set: small by premise, consumed three times
@@ -139,7 +148,7 @@ object Decontam {
     // Corpus scan: membership test runs pre-shuffle in codegen; the
     // equi-join after it sees only true hits + the fpp sliver.
     grams.filter(col("split") === "train")
-      .filter(call_function("graft_bloom_contains", lit(bloom), col("gram")))
+      .filter(mightContain(bloom, col("gram")))
       .join(holdout, Seq("gram"))
       .groupBy(col("doc_id"))
       // grams are per-doc distinct already, so count(*) = distinct grams
@@ -153,10 +162,8 @@ object Decontam {
     */
   def docWinnowFps(docs: DataFrame, textCol: Column,
                    k: Int, w: Int): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(docs.sparkSession)
     docs
-      .withColumn("__key", explode(call_function("graft_winnow",
-        TextFns.normText(textCol), lit(k), lit(w))))
+      .withColumn("__key", explode(Dedup.winnow(TextFns.normText(textCol), k, w)))
       .withColumn("fp", call_function("shiftright", col("__key"),
         lit(graft.plans.WinnowFingerprints.PosBits)))
       .drop("__key").drop(textCol).dropDuplicates()
@@ -200,7 +207,7 @@ object Decontam {
     val nHoldout = math.max(holdout.count(), 1L)
     val bloom = buildBloom(holdout.select(col("fp").as("gram")), nHoldout, fpp)
     fps.filter(col("split") === "train")
-      .filter(call_function("graft_bloom_contains", lit(bloom), col("fp")))
+      .filter(mightContain(bloom, col("fp")))
       .join(holdout, Seq("fp"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_leaked_fps"))

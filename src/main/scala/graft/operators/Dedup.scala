@@ -4,6 +4,7 @@ import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Document deduplication operators for training-data pipelines:
   * exact, MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -152,10 +153,9 @@ object Dedup {
     */
   private[graft] def minhashSigs(toks: DataFrame, shingleLen: Int,
                                  numHashes: Int): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(toks.sparkSession)
     toks.select(col("doc_id"),
-      call_function("graft_minhash", col("__toks"),
-        lit(shingleLen), lit(numHashes)).as("sig"))
+      ColumnBridge.column(graft.plans.MinHashSig(
+        ColumnBridge.expression(col("__toks")), shingleLen, numHashes)).as("sig"))
       .filter(col("sig").isNotNull)
   }
 
@@ -816,7 +816,6 @@ object Dedup {
     // caps and widths; the ngram_jaccard hash gate re-pins it against
     // DuckDB every round.
     val spark = toks.sparkSession
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     // NOT pinned across the two consumers (round-19 negative A/B):
     // persisting this occurrence stream so the pair-join map reads it
     // instead of re-running the explode was measured NEUTRAL on an
@@ -875,7 +874,7 @@ object Dedup {
     val pairSrc = bloom match {
       case None => kept.limit(0)
       case Some(b) => kept.filter(
-        call_function("graft_bloom_contains", lit(b), col("gram")))
+        Decontam.mightContain(b, col("gram")))
     }
     // Pinned shuffled self-join — see minhashCandidates: the exploded
     // gram table must never be a broadcast build side, whatever the
@@ -1395,10 +1394,10 @@ object Dedup {
     * of each other — Dedup.exact's domain).
     */
   def simhashSignaturesOfTokens(toks: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(toks.sparkSession)
     toks
       .select(col("doc_id"),
-        call_function("graft_simhash64", col("__toks")).as("sh"))
+        ColumnBridge.column(graft.plans.SimHash64(
+          ColumnBridge.expression(col("__toks")))).as("sh"))
       .filter(col("sh").isNotNull) // empty-token docs drop, as before
   }
 
@@ -1422,6 +1421,13 @@ object Dedup {
     */
   // ---- Winnowing fingerprints (MOSS) ------------------------------
 
+  /** The native [[graft.plans.WinnowFingerprints]] expression over a
+    * string column: its selected fingerprints as `hash << 27 | pos`
+    * longs, ascending by position.
+    */
+  def winnow(text: Column, k: Int, w: Int): Column =
+    ColumnBridge.column(graft.plans.WinnowFingerprints(ColumnBridge.expression(text), k, w))
+
   /** Winnowing fingerprints per document (Schleimer et al. SIGMOD'03
     * via the native [[graft.plans.WinnowFingerprints]] expression):
     * (doc_id, pos, fp) — the ~2/(w+1)-sampled, position-robust
@@ -1436,7 +1442,6 @@ object Dedup {
     */
   def winnowFingerprints(docs: DataFrame, idCol: Column, textCol: Column,
                          k: Int = 5, w: Int = 8): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(docs.sparkSession)
     // NO spread before the rolling-hash explode (round-19 negative
     // A/B): the winnow map does run as single-task stages on the
     // single-row-group fixtures (two 0.45 s stages in the
@@ -1448,8 +1453,7 @@ object Dedup {
     // 0.39 s). At production scale the scan parallelizes from row
     // groups and the question disappears.
     docs.select(idCol.as("doc_id"),
-        explode(call_function("graft_winnow",
-          TextFns.normText(textCol), lit(k), lit(w))).as("__key"))
+        explode(winnow(TextFns.normText(textCol), k, w)).as("__key"))
       .select(col("doc_id"),
         col("__key").bitwiseAND(lit(graft.plans.WinnowFingerprints.PosMask))
           .as("pos"),

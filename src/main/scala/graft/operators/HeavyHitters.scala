@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Exact top-K frequent items without a full-cardinality shuffle —
   * the 100 TB answer to "top 50 tokens over a billion-word
@@ -63,6 +64,14 @@ object HeavyHitters {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Misra-Gries summary aggregate ([[graft.plans.MisraGriesSketch]])
+    * of a string item column: map<item, lower-bound weight> of at most
+    * `capacity` entries.
+    */
+  def mgSketch(item: Column, capacity: Int): Column =
+    ColumnBridge.column(graft.plans.MisraGriesSketch(
+      ColumnBridge.expression(item), Literal(capacity)).toAggregateExpression())
+
   /** Exact (item, n) top-K by frequency, ties broken by item asc.
     * Output columns: `item` (string), `n` (long), ordered by
     * (n desc, item asc), exactly `k` rows (fewer if < k distinct).
@@ -76,7 +85,6 @@ object HeavyHitters {
   private def exactTopKAt(items: DataFrame, itemCol: Column, k: Int,
                           capacity: Int): DataFrame = {
     val spark = items.sparkSession
-    GraftExtensions.ensureRegistered(spark)
     import spark.implicits._
     // nulls are skipped by the MG sketch AND by the recount — drop
     // them here too so the certification's N matches the bound's N
@@ -86,7 +94,7 @@ object HeavyHitters {
     // pass 1: N and the merged MG summary in one scan
     val row = it.agg(
       count(lit(1)).as("n"),
-      call_function("graft_mg", col("item"), lit(capacity)).as("mg")).head()
+      mgSketch(col("item"), capacity).as("mg")).head()
     val n = row.getLong(0)
     val cands = row.getMap[String, Long](1).keys.toSeq
 
@@ -146,7 +154,6 @@ object HeavyHitters {
                                   itemCol: Column, k: Int,
                                   capacity: Int): DataFrame = {
     val spark = items.sparkSession
-    GraftExtensions.ensureRegistered(spark)
     val it = items.select(groupCol.cast("string").as("grp"),
       itemCol.cast("string").as("item"))
       .filter(col("item").isNotNull) // keep certification N ≡ MG's N
@@ -154,7 +161,7 @@ object HeavyHitters {
     // pass 1: per-group N + MG summary; candidates stay distributed
     val summaries = it.groupBy(col("grp")).agg(
       count(lit(1)).as("__n"),
-      call_function("graft_mg", col("item"), lit(capacity)).as("__mg"))
+      mgSketch(col("item"), capacity).as("__mg"))
       .localCheckpoint() // group-count-sized; feeds candidates AND certification
     val cands = summaries.select(col("grp"),
       explode(map_keys(col("__mg"))).as("item"))

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Data-layout operators — the write-side half of 100 TB efficiency.
   * Read-side pruning (partition pruning, parquet min/max skipping,
@@ -30,13 +30,10 @@ import org.apache.spark.sql.functions._
 object Layout {
 
   /** Z-address over already-rank-space long columns (each masked to
-    * `63/n` low bits by the expression itself). Resolves through the
-    * `graft_zorder` registry entry — callers outside this object must
-    * run [[GraftExtensions.ensureRegistered]] (or build the session
-    * via `GraftSession`) before analysis, as with the other native
-    * functions. */
+    * `63/n` low bits by the expression itself). */
   def zOrderKeyRaw(cols: Seq[Column]): Column =
-    call_function("graft_zorder", cols.map(_.cast("long")): _*)
+    ColumnBridge.column(graft.plans.ZInterleave(
+      cols.map(c => ColumnBridge.expression(c.cast("long")))))
 
   /** Z-address with affine min→max normalization of each dimension
     * into the full rank space, so dimensions with tiny or huge domains
@@ -67,7 +64,6 @@ object Layout {
     */
   def clusterByZOrder(df: DataFrame, cols: Seq[String],
                       nPartitions: Int): DataFrame = {
-    GraftExtensions.ensureRegistered(df.sparkSession)
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("long")).as(s"__lo_$c"),
       max(col(c).cast("long")).as(s"__hi_$c")))
@@ -95,15 +91,11 @@ object Layout {
   def clusterByZOrderQuantile(df: DataFrame, cols: Seq[String],
                               nPartitions: Int,
                               buckets: Int = 1024): DataFrame = {
-    GraftExtensions.ensureRegistered(df.sparkSession)
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
     val bounds = df.stat.approxQuantile(cols.toArray, probs, 0.001)
     val ranked = cols.zip(bounds).map { case (c, b) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.plans.BucketIndex(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-            col(c).cast("double")),
-          b.toIndexedSeq))
+      ColumnBridge.column(graft.plans.BucketIndex(
+        ColumnBridge.expression(col(c).cast("double")), b.toIndexedSeq))
     }
     df.withColumn("__z", zOrderKeyRaw(ranked))
       .repartitionByRange(nPartitions, col("__z"))

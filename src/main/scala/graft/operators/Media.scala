@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Multimodal column plumbing: images/audio/video as opaque BINARY
   * payload columns plus a typed metadata struct, with decode /
@@ -220,14 +221,22 @@ object Media {
     * whole-stage codegen at any payload size (MediaSpec pins ≥1 MB).
     */
   def imageFeatures(decoded: DataFrame): DataFrame = {
-    // self-registering: analyzes on sessions built without the
-    // spark.sql.extensions config (driver smoke session, notebooks)
-    graft.plans.GraftExtensions.ensureRegistered(decoded.sparkSession)
+    val px = ColumnBridge.expression(col("pixels"))
     decoded
       .withColumn("brightness",
-        call_function("graft_byte_sum", col("pixels")).cast("double")
+        ColumnBridge.column(graft.plans.UnsignedByteSum(px)).cast("double")
           / greatest(length(col("pixels")), lit(1)))
-      .withColumn("histogram8", call_function("graft_byte_hist8", col("pixels")))
+      .withColumn("histogram8", ColumnBridge.column(graft.plans.ByteHistogram8(px)))
+  }
+
+  /** 64-bit dHash ([[graft.plans.DHash64]]) over a decoded frame's
+    * `pixels`, `width`, `height` and `channels` columns; the frame
+    * must be resized to 9×8 first ([[resizeImages]]), else NULL.
+    */
+  def dhash64: Column = {
+    def e(name: String) = ColumnBridge.expression(col(name))
+    ColumnBridge.column(graft.plans.DHash64(
+      e("pixels"), e("width"), e("height"), e("channels")))
   }
 
   // ---- audio -------------------------------------------------------
@@ -397,6 +406,12 @@ object Media {
       }
     }.toDF("id", "sample_rate", "n_samples", "samples")
   }
+
+  /** 64-bit audio fingerprint ([[graft.plans.AudioHash64]]) over a
+    * decoded clip's `samples` column; NULL under 65 samples.
+    */
+  def audioHash64: Column =
+    ColumnBridge.column(graft.plans.AudioHash64(ColumnBridge.expression(col("samples"))))
 
   /** Codegen'd clip features over the decoded samples column — the
     * speech-pipeline quality filters (drop silent / clipped / buzzing

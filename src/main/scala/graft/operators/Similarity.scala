@@ -24,20 +24,13 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 object Similarity {
 
   /** Sequential-fold dot product in double precision — the native
-    * codegen'd [[graft.plans.DotProduct]] expression (registered by
-    * GraftSession via SparkSessionExtensions). Bit-identical to the
-    * composed `aggregate(zip_with(...))` form ([[dotComposed]]) but
-    * stays inside whole-stage codegen instead of the interpreted
+    * codegen'd [[graft.plans.DotProduct]] expression. Bit-identical to
+    * the composed `aggregate(zip_with(...))` form but stays inside
+    * whole-stage codegen instead of the interpreted
     * higher-order-function path.
     */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
-  /** Built-ins-only dot product (same fold, interpreted) — for
-    * sessions without [[graft.plans.GraftExtensions]] registered.
-    */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+  def dot(a: Column, b: Column): Column = ColumnBridge.column(
+    graft.plans.DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -139,9 +132,6 @@ object Similarity {
     * the native one-pass codegen'd [[graft.plans.SignSketch]]
     * expression (bit-identical to [[signSketchComposed]], which ran
     * `bits` interpreted HOF folds per vector in the LSH hot loop).
-    * Built via [[ColumnBridge]] (like [[graft.plans.IvfAssign]]) —
-    * no function-registry lookup, so it analyzes on sessions built
-    * without [[graft.plans.GraftExtensions]] too.
     */
   def signSketch(vec: Column, bits: Int): Column =
     ColumnBridge.column(graft.plans.SignSketch(
@@ -1073,9 +1063,6 @@ object Similarity {
               vecCol: String = "embedding"): DataFrame = {
     require(tables >= 1 && bits * tables <= 30,
       s"sign sketch wider than 30 bits (${bits}x$tables) explodes the probe set")
-    // self-registering, same rationale as Media.imageFeatures: analyze
-    // on sessions built without the spark.sql.extensions config
-    graft.plans.GraftExtensions.ensureRegistered(queries.sparkSession)
     val masks = probeMasks(bits, probeDist)
     val tableIds = array((0 until tables).map(t => lit(t)): _*)
     val sliceMask = lit((1L << bits) - 1)

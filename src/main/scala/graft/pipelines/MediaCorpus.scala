@@ -61,7 +61,6 @@ object MediaCorpus {
               withStats: Boolean = true,
               maxPieceFreq: Long = Long.MaxValue)
       : (DataFrame, MediaPrepareStats, () => Unit) = {
-    graft.plans.GraftExtensions.ensureRegistered(images.sparkSession)
     def tally(df: DataFrame): Long = if (withStats) df.count() else -1L
     val input = tally(images)
 
@@ -94,8 +93,7 @@ object MediaCorpus {
     // materialized frame once it lands)
     val sigs = Media.resizeImages(decoded, 9, 8)
       .select(col("id").as("doc_id"),
-        call_function("graft_dhash64", col("pixels"), col("width"),
-          col("height"), col("channels")).as("sh"))
+        Media.dhash64.as("sh"))
       .filter(col("sh").isNotNull)
       .localCheckpoint(eager = withStats)
     // pair-stage width: the lazy path estimates the corpus size from

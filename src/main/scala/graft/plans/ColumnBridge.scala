@@ -2,10 +2,10 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into Spark's private[sql] Column constructor for expressions
-  * that carry non-literal Scala parameters (e.g. boundary arrays) and
-  * so cannot route through the function registry. Public Spark API
-  * offers call_function only for registry-constructible expressions.
+/** Bridge into Spark's private[sql] Column/Expression conversion: the
+  * one way graft's native Catalyst expressions enter a plan. An
+  * operator builds its expression tree directly, so it analyzes on any
+  * session and never writes to the session's function registry.
   */
 object ColumnBridge {
   def column(e: Expression): Column =

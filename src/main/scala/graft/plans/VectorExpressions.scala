@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
@@ -177,10 +175,6 @@ object SignSketch {
   * as [[graft.operators.Similarity.cosineWithNorms]] over `graft_dot`,
   * so assignments agree bit-for-bit with the composed form
   * (property-tested in SimilaritySpec).
-  *
-  * Carries non-literal Scala arrays → constructed via ColumnBridge,
-  * not the function registry (same route as the Layout boundary
-  * expressions).
   */
 case class IvfAssign(child: Expression, centroidIds: Array[Long],
                      centroidVecs: Array[Array[Float]], nAssign: Int)
@@ -539,171 +533,4 @@ case class IvfAssignHier(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): IvfAssignHier =
     copy(child = newChild)
-}
-
-/** Session extensions registering graft's native expressions
-  * (public `SparkSessionExtensions` API — applied by
-  * [[graft.GraftSession]]'s builder; callable via
-  * `call_function("graft_dot", a, b)`).
-  */
-object GraftExtensions {
-  private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot(a, b) takes exactly two arrays")
-        DotProduct(children.head, children(1))
-      }),
-    (new FunctionIdentifier("graft_byte_sum"),
-      new ExpressionInfo(classOf[UnsignedByteSum].getName, "graft_byte_sum"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_byte_sum(binary) takes exactly one argument")
-        UnsignedByteSum(children.head)
-      }),
-    (new FunctionIdentifier("graft_byte_hist8"),
-      new ExpressionInfo(classOf[ByteHistogram8].getName, "graft_byte_hist8"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_byte_hist8(binary) takes exactly one argument")
-        ByteHistogram8(children.head)
-      }),
-    (new FunctionIdentifier("graft_dhash64"),
-      new ExpressionInfo(classOf[DHash64].getName, "graft_dhash64"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "graft_dhash64(pixels, width, height, channels) takes four arguments")
-        DHash64(children.head, children(1), children(2), children(3))
-      }),
-    (new FunctionIdentifier("graft_audiohash64"),
-      new ExpressionInfo(classOf[AudioHash64].getName, "graft_audiohash64"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_audiohash64(samples) takes exactly one argument")
-        AudioHash64(children.head)
-      }),
-    (new FunctionIdentifier("graft_sum_uint"),
-      new ExpressionInfo(classOf[SumBigUInt].getName, "graft_sum_uint"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_sum_uint(digits) takes exactly one string column")
-        SumBigUInt(children.head)
-      }),
-    // Spark's own Bloom-filter Catalyst pair (the machinery behind
-    // InjectRuntimeFilter), surfaced as callable functions for the
-    // deliberate pre-shuffle membership pruning in
-    // [[graft.operators.Decontam]]: a distributed binary-buffer
-    // aggregate and a codegen'd membership predicate. Not registered
-    // by upstream's FunctionRegistry, hence the graft_ registration.
-    (new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_bloom_agg(hash, est_items, num_bits) takes exactly three arguments")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1), children(2))
-      }),
-    (new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_bloom_contains(bloom, hash) takes exactly two arguments")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))
-      }),
-    (new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_simhash64(tokens) takes exactly one array<string> column")
-        SimHash64(children.head)
-      }),
-    (new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_minhash(tokens, shingleLen, numHashes) takes three arguments")
-        require(children(1).foldable && children(2).foldable,
-          "graft_minhash shingleLen/numHashes must be literals")
-        MinHashSig(children.head,
-          children(1).eval(null).asInstanceOf[Number].intValue(),
-          children(2).eval(null).asInstanceOf[Number].intValue())
-      }),
-    (new FunctionIdentifier("graft_tok_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "graft_tok_stats"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_tok_stats(tokens) takes exactly one array<string> column")
-        TokenStats(children.head)
-      }),
-    (new FunctionIdentifier("graft_mg"),
-      new ExpressionInfo(classOf[MisraGriesSketch].getName, "graft_mg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_mg(item, capacity) takes exactly two arguments")
-        MisraGriesSketch(children.head, children(1))
-      }),
-    (new FunctionIdentifier("graft_bpe_count"),
-      new ExpressionInfo(classOf[BpeCount].getName, "graft_bpe_count"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_bpe_count(text, merges) takes exactly two arguments")
-        BpeCount(children.head, children(1))
-      }),
-    (new FunctionIdentifier("graft_signsketch"),
-      new ExpressionInfo(classOf[SignSketch].getName, "graft_signsketch"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_signsketch(vec, bits) takes exactly two arguments")
-        require(children(1).foldable, "graft_signsketch bits must be a literal")
-        SignSketch(children.head,
-          children(1).eval(null).asInstanceOf[Number].intValue())
-      }),
-    (new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_winnow(text, k, w) takes exactly three arguments")
-        require(children(1).foldable && children(2).foldable,
-          "graft_winnow k/w must be literals")
-        WinnowFingerprints(children.head,
-          children(1).eval(null).asInstanceOf[Number].intValue(),
-          children(2).eval(null).asInstanceOf[Number].intValue())
-      }),
-    (new FunctionIdentifier("graft_phrase_count"),
-      new ExpressionInfo(classOf[PhraseCount].getName, "graft_phrase_count"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_phrase_count(tokens, phrase) takes exactly two array<string> arguments")
-        PhraseCount(children.head, children(1))
-      }),
-    (new FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[ZInterleave].getName, "graft_zorder"),
-      (children: Seq[Expression]) => {
-        require(children.size >= 2 && children.size <= 4,
-          "graft_zorder(c1, c2[, c3[, c4]]) takes two to four long columns")
-        ZInterleave(children)
-      }))
-
-  /** Register the graft_* functions into an EXISTING session's
-    * registry — for operator entry points (e.g.
-    * [[graft.operators.Media.imageFeatures]],
-    * [[graft.queries.Domain]]) that must analyze on sessions built
-    * WITHOUT `spark.sql.extensions=graft.plans.GraftExtensions` (the
-    * driver's smoke session, user notebooks). Idempotent: already-
-    * registered names are left untouched.
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, info, builder) =>
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.functions.foreach(f => ext.injectFunction(f))
 }

@@ -5,6 +5,7 @@ import graft.domain.{MerlStore, SchemaAdapter, Top100}
 import graft.functions.AmountFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Merl-domain parity queries: the reference's data model and write
@@ -81,11 +82,12 @@ object Domain {
     * carry), rendered to the identical decimal string.
     */
   def top100Holdings(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(s)
     Top100.compute(holdersFixture(s, dir))
       .groupBy(col("contract_address"), col("bucket_unix").cast(LongType).as("bucket_unix"))
       .agg(count(lit(1)).as("n_top"),
-        call_function("graft_sum_uint", col("balance_raw")).as("total_raw"))
+        ColumnBridge.column(graft.plans.SumBigUInt(
+          ColumnBridge.expression(col("balance_raw"))).toAggregateExpression())
+          .as("total_raw"))
       .orderBy(col("contract_address"), col("bucket_unix"))
   }
 

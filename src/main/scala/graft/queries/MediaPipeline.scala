@@ -283,11 +283,9 @@ object MediaPipeline {
   private val phashSigsCache = graft.SessionCache.frames[String]
   private def phashSigs(s: SparkSession, dir: String): DataFrame =
     phashSigsCache.getOrElseUpdate(s, dir) {
-      graft.plans.GraftExtensions.ensureRegistered(s)
       Media.resizeImages(Media.decodeImages(imageFixture(s, dir)), 9, 8)
         .select(col("id").as("doc_id"),
-          call_function("graft_dhash64", col("pixels"), col("width"),
-            col("height"), col("channels")).as("sh"))
+          Media.dhash64.as("sh"))
         .filter(col("sh").isNotNull)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -374,14 +372,13 @@ object MediaPipeline {
   private[graft] def audioPhashPairsOf(s: SparkSession, dir: String,
                                        maxPieceFreq: Long): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(s)
     val clips = Tables.events(s, dir).select(col("event_id"))
       .filter(col("event_id") % 50 === 0)
       .as[Long].map(id => (id, Media.stubAudio(id, n = 130)))
       .toDF("id", "payload")
     val sig = Media.decodeAudio(clips)
       .select(col("id").as("doc_id"),
-        call_function("graft_audiohash64", col("samples")).as("sh"))
+        Media.audioHash64.as("sh"))
       .filter(col("sh").isNotNull)
       .localCheckpoint()
     graft.operators.Dedup.hammingPairsOfSignatures(
@@ -407,7 +404,6 @@ object MediaPipeline {
   private[graft] def audioMixPhashPairsOf(s: SparkSession, dir: String,
                                           maxPieceFreq: Long): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(s)
     val clips = Tables.events(s, dir).select(col("event_id"))
       .filter(col("event_id") % 50 === 0)
       .as[Long].map { id =>
@@ -419,7 +415,7 @@ object MediaPipeline {
       }.toDF("id", "payload")
     val sig = graft.operators.Media.decodeAudio(clips)
       .select(col("id").as("doc_id"),
-        call_function("graft_audiohash64", col("samples")).as("sh"))
+        Media.audioHash64.as("sh"))
       .filter(col("sh").isNotNull)
       .localCheckpoint()
     graft.operators.Dedup.hammingPairsOfSignatures(
@@ -482,7 +478,6 @@ object MediaPipeline {
                                        minFrames: Int = 2,
                                        widthKey: Option[String] = None)
       : DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(vids.sparkSession)
     // composite key = clip·1000 + frame survives the single-id
     // decode/resize stages, then splits back into (doc_id = clip,
     // frame); 8 bytes + frame per row, feeds both self-join sides of
@@ -502,8 +497,7 @@ object MediaPipeline {
     val sig = Media.resizeImages(Media.decodeImages(frames, idCol = "key"), 9, 8)
       .select((col("id") / 1000).cast(LongType).as("doc_id"),
         (col("id") % 1000).as("frame"),
-        call_function("graft_dhash64", col("pixels"), col("width"),
-          col("height"), col("channels")).as("sh"))
+        Media.dhash64.as("sh"))
       .filter(col("sh").isNotNull)
       .localCheckpoint()
     // frame is an ALIGNMENT key of the banded join itself (pieces

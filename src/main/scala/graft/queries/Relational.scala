@@ -342,7 +342,6 @@ object Relational {
     * normalization wrapper is spec-tested in LayoutSpec.
     */
   def zorderKey(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(s)
     Tables.lineitem(s, dir)
       .select(col("l_orderkey").cast(LongType).as("l_orderkey"),
         col("l_linenumber").cast(LongType).as("l_linenumber"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Retrieval + distribution-matched selection over the `documents`
   * corpus — the two search-shaped operators a training-data pipeline
@@ -307,7 +308,6 @@ object Retrieval {
     */
   def phrases(toks: DataFrame, batch: Seq[(Int, Seq[String])]): DataFrame = {
     val s = toks.sparkSession
-    graft.plans.GraftExtensions.ensureRegistered(s)
     import s.implicits._
     val ph = batch.toDF("phrase_id", "phrase")
     toks
@@ -329,7 +329,8 @@ object Retrieval {
     */
   def phraseCount(toks: org.apache.spark.sql.Column,
                   phrase: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_phrase_count", toks, phrase)
+    ColumnBridge.column(graft.plans.PhraseCount(
+      ColumnBridge.expression(toks), ColumnBridge.expression(phrase)))
 
   /** Built-ins-only matcher (same sliding-window overlap-counted
     * semantics, interpreted HOF) — the oracle-portable restatement

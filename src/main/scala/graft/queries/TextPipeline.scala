@@ -6,6 +6,7 @@ import graft.operators.{Dedup, Similarity}
 import graft.pipelines.Corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Training-data-pipeline queries (dedup / similarity / text analysis)
@@ -249,7 +250,6 @@ object TextPipeline {
     * against the published Sennrich et al. 2016 example.
     */
   def bpeTokens(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.ensureRegistered(s)
     val merges = bpeMerges(s, dir)
     Tables.spread(Tables.documents(s, dir))
       .select(
@@ -283,12 +283,12 @@ object TextPipeline {
     // former two explode → two-level groupBy pipelines (4 exchanges)
     // are now two struct columns in the scan projection; the ratios
     // are the same post-aggregation arithmetic as before
-    graft.plans.GraftExtensions.ensureRegistered(s)
+    def stats(toks: org.apache.spark.sql.Column) =
+      ColumnBridge.column(graft.plans.TokenStats(ColumnBridge.expression(toks)))
     tokenizedDocs(s, dir)
       .select(col("doc_id"),
-        call_function("graft_tok_stats", col("__toks")).as("w"),
-        call_function("graft_tok_stats",
-          TextFns.wordShinglesOf(col("__toks"), 2)).as("b"))
+        stats(col("__toks")).as("w"),
+        stats(TextFns.wordShinglesOf(col("__toks"), 2)).as("b"))
       .filter(col("w").isNotNull)
       .select(col("doc_id"),
         col("w.n").as("n_tokens"), col("w.d").as("n_distinct"),

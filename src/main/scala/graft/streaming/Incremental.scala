@@ -68,7 +68,6 @@ object Incremental {
                               schema: StructType, checkpointDir: String,
                               stores: Seq[(String, String)] = Nil)(
                               body: (DataFrame, Long) => Unit): Unit = {
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     stores.foreach { case (dir, partCol) =>
       Dedup.recoverPendingSwap(spark, dir, partCol)
     }
@@ -140,7 +139,7 @@ object Incremental {
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
       val leaked = Decontam.docGramHashes(
           batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")), k)
-        .filter(call_function("graft_bloom_contains", lit(bloom), col("gram")))
+        .filter(Decontam.mightContain(bloom, col("gram")))
         .join(holdoutGrams, Seq("gram"), "left_semi")
         .select(col("doc_id")).distinct()
       writeBatch(batch.join(leaked, Seq("doc_id"), "left_anti")
@@ -179,7 +178,7 @@ object Incremental {
       holdoutFps.select(col("fp").as("gram")), nHoldout, fpp)
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
       val leaked = Decontam.docWinnowFps(batch, col("text"), k, w)
-        .filter(call_function("graft_bloom_contains", lit(bloom), col("fp")))
+        .filter(Decontam.mightContain(bloom, col("fp")))
         .join(holdoutFps, Seq("fp"), "left_semi")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("__n"))
@@ -1007,8 +1006,7 @@ object Incremental {
     */
   private def dhashSigs(decoded: DataFrame, idCols: Column*): DataFrame =
     Media.resizeImages(decoded, 9, 8)
-      .select(idCols :+ call_function("graft_dhash64", col("pixels"),
-        col("width"), col("height"), col("channels")).as("sh"): _*)
+      .select(idCols :+ Media.dhash64.as("sh"): _*)
       .filter(col("sh").isNotNull)
 
   /** The Hamming firewall step on a (doc_id, [alignCols], sh)
@@ -1168,7 +1166,7 @@ object Incremental {
         Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
       val sig = Media.decodeAudio(batch)
         .select(col("id").as("doc_id"),
-          call_function("graft_audiohash64", col("samples")).as("sh"))
+          Media.audioHash64.as("sh"))
         .filter(col("sh").isNotNull)
       writeBatch(hammingStep(sig, indexDir, batchId, maxDist), destDir, batchId)
     }
@@ -1445,7 +1443,7 @@ object Incremental {
       val prev = prevV.map(v => s.read.parquet(s"$summDir/v=$v"))
         .getOrElse(Seq.empty[(String, String, Long)].toDF("grp", "item", "w"))
       val bSumm = batch.groupBy(col("grp"))
-        .agg(call_function("graft_mg", col("item"), lit(capacity)).as("__mg"))
+        .agg(graft.operators.HeavyHitters.mgSketch(col("item"), capacity).as("__mg"))
         .select(col("grp"), explode(col("__mg")))
         .toDF("grp", "item", "w")
       val wRank = Window.partitionBy(col("grp"))

@@ -332,13 +332,10 @@ class ExplainSpec extends SparkSpec {
   }
 
   test("vocab_topk_mg: the MG aggregate plans with a map-side partial") {
-    import org.apache.spark.sql.functions.{col, explode, lit}
-    import graft.plans.GraftExtensions
-    GraftExtensions.ensureRegistered(spark)
+    import org.apache.spark.sql.functions.{col, explode}
     val toks = Tables.documents(spark, dir)
       .select(explode(org.apache.spark.sql.functions.split(col("text"), " ")).as("t"))
-    val agg = toks.agg(org.apache.spark.sql.functions.call_function(
-      "graft_mg", col("t"), lit(64)))
+    val agg = toks.agg(graft.operators.HeavyHitters.mgSketch(col("t"), 64))
     val p = agg.queryExecution.explainString(ExplainMode.fromString("formatted"))
     // TypedImperativeAggregate must run as ObjectHashAggregate with a
     // partial phase: each partition ships ONE <=capacity summary, not

@@ -13,6 +13,15 @@ class SessionCacheSpec extends SparkSpec {
 
   private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** A private temp copy of some sf0.001 input files: no session of
+    * another suite can hold a same-result cached frame over its paths.
+    */
+  private def privateCopy(files: String*): java.nio.file.Path = {
+    val own = java.nio.file.Files.createTempDirectory("graft_session_cache")
+    files.foreach(f => java.nio.file.Files.copy(java.nio.file.Paths.get(dir, f), own.resolve(f)))
+    own
+  }
+
   private def bm25Dirs: Set[String] =
     Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSeq.flatten
       .filter(_.startsWith("graft_bm25_idx")).toSet
@@ -64,24 +73,26 @@ class SessionCacheSpec extends SparkSpec {
   }
 
   test("evictSession releases every kind of entry of one session and keeps the others'") {
+    val own = privateCopy(new java.io.File(dir).list().toSeq: _*)
+    val d = own.toString
     val s1 = spark.newSession()
     val s2 = spark.newSession()
     // the other session holds no persisted frame: the cache manager
     // shares one cached relation between same-result plans, whatever
     // their session
-    val other = Tables.table(s2, dir, "nation")
-    val otherMerges = graft.queries.TextPipeline.bpeMerges(s2, dir)
+    val other = Tables.table(s2, d, "nation")
+    val otherMerges = graft.queries.TextPipeline.bpeMerges(s2, d)
     val (base, baseDirs) = (persistedIds, bm25Dirs)
 
     // one memo of each kind: relation, persisted text and media
     // frames, a temp index directory and a plain value
-    val table = Tables.table(s1, dir, "nation")
-    val toks = graft.queries.TextPipeline.tokenizedDocs(s1, dir)
+    val table = Tables.table(s1, d, "nation")
+    val toks = graft.queries.TextPipeline.tokenizedDocs(s1, d)
     toks.count()
-    val vecs = graft.queries.MediaPipeline.mediaVecs(s1, dir)
+    val vecs = graft.queries.MediaPipeline.mediaVecs(s1, d)
     vecs.count()
-    graft.queries.Retrieval.bm25TopKViaIndex(s1, dir)
-    val merges = graft.queries.TextPipeline.bpeMerges(s1, dir)
+    graft.queries.Retrieval.bm25TopKViaIndex(s1, d)
+    val merges = graft.queries.TextPipeline.bpeMerges(s1, d)
     assert(toks.storageLevel.useMemory && vecs.storageLevel.useMemory)
     val built = persistedIds -- base
     assert(built.nonEmpty)
@@ -94,22 +105,19 @@ class SessionCacheSpec extends SparkSpec {
     assert(!toks.storageLevel.useMemory, "the token frame must be unpersisted")
     assert(!vecs.storageLevel.useMemory, "the media frame must be unpersisted")
     assert((bm25Dirs & idxDirs).isEmpty, s"the temp index directory must be deleted: $idxDirs")
-    assert(!(Tables.table(s1, dir, "nation") eq table), "a re-touch must rebuild the relation")
-    assert(!(graft.queries.TextPipeline.tokenizedDocs(s1, dir) eq toks))
-    assert(!(graft.queries.MediaPipeline.mediaVecs(s1, dir) eq vecs))
-    assert(!(graft.queries.TextPipeline.bpeMerges(s1, dir) eq merges))
+    assert(!(Tables.table(s1, d, "nation") eq table), "a re-touch must rebuild the relation")
+    assert(!(graft.queries.TextPipeline.tokenizedDocs(s1, d) eq toks))
+    assert(!(graft.queries.MediaPipeline.mediaVecs(s1, d) eq vecs))
+    assert(!(graft.queries.TextPipeline.bpeMerges(s1, d) eq merges))
 
-    assert(Tables.table(s2, dir, "nation") eq other, "another session's entries survive")
-    assert(graft.queries.TextPipeline.bpeMerges(s2, dir) eq otherMerges)
+    assert(Tables.table(s2, d, "nation") eq other, "another session's entries survive")
+    assert(graft.queries.TextPipeline.bpeMerges(s2, d) eq otherMerges)
     SessionCache.evictSession(s1); SessionCache.evictSession(s2)
+    org.apache.commons.io.FileUtils.deleteQuietly(own.toFile)
   }
 
   test("evictSession keeps a cached frame that another live session still reads") {
-    // a private copy of the sf0.001 documents: no session of another
-    // suite can hold a same-result frame over this path
-    val own = java.nio.file.Files.createTempDirectory("graft_shared_cache")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "documents.parquet"),
-      own.resolve("documents.parquet"))
+    val own = privateCopy("documents.parquet")
     val s1 = spark.newSession()
     val s2 = spark.newSession()
     val base = persistedIds

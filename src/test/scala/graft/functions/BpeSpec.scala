@@ -56,7 +56,6 @@ class BpeSpec extends SparkSpec {
 
   test("graft_bpe_count native expression equals the driver-side encoder on a mixed corpus") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     val rnd = new scala.util.Random(31)
     val vocab = Vector("low", "lower", "newest", "widest", "lowest", "news",
       "the", "sparking", "tokenizer", "42", "!", "a")
@@ -78,7 +77,6 @@ class BpeSpec extends SparkSpec {
 
   test("astral code points train and encode as whole symbols, distributed ≡ driver") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // 🚀 (U+1F680) and 😀 (U+1F600) are astral: 2 UTF-16 units each.
     // A per-Char split would learn lone-surrogate merge symbols that
     // die in the UTF-8 round trip to the codegen'd expression —
@@ -122,7 +120,6 @@ class BpeSpec extends SparkSpec {
 
   test("learned count is bounded: ≥ pre-token count, ≤ char-level count") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     val df = Seq((1L, "the lowest newest bid was 42 dollars!"),
       (2L, "zzz qqq xxyy")).toDF("doc_id", "text")
     val merges = Bpe.train(df.select(col("text")), col("text"), numMerges = 30)

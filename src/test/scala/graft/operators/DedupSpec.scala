@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 class DedupSpec extends SparkSpec {
 
@@ -174,9 +175,9 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "__toks")
     val k = 3; val m = 32
 
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     val fast = docs.select(col("doc_id"),
-        call_function("graft_minhash", col("__toks"), lit(k), lit(m)).as("sig"))
+        ColumnBridge.column(graft.plans.MinHashSig(
+          ColumnBridge.expression(col("__toks")), k, m)).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
 
     // the pre-round-8 pipeline: explode shingles → xxhash → m MIN cols

@@ -32,7 +32,6 @@ class LayoutSpec extends SparkSpec {
 
   test("codegen and interpreted paths agree") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     val df = Seq.tabulate(64)(i => (i * 2654435761L % (1L << 31), (i * 40503L) % (1L << 31)))
       .toDF("x", "y")
     val viaDf = df.select(Layout.zOrderKeyRaw(Seq(col("x"), col("y"))).as("z"))
@@ -80,7 +79,6 @@ class LayoutSpec extends SparkSpec {
 
     val back = ss.read.parquet(dir)
     assert(back.count() == 1024)
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // per-FILE key ranges from the data actually on disk
     val ranges = back
       .withColumn("f", input_file_name())

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 class MediaSpec extends SparkSpec {
 
@@ -35,20 +37,34 @@ class MediaSpec extends SparkSpec {
     assert(f.getSeq[Int](1) == Seq(0, 0, 0, 9, 0, 0, 0, 0))
   }
 
-  test("imageFeatures self-registers its functions on a session missing the extensions") {
-    val ss = spark; import ss.implicits._
-    // simulate a session built WITHOUT spark.sql.extensions: drop the
-    // functions from the registry; imageFeatures must restore them
-    // (GraftExtensions.ensureRegistered) instead of failing analysis
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = ss.sessionState.functionRegistry
-    reg.dropFunction(new FunctionIdentifier("graft_byte_sum"))
-    reg.dropFunction(new FunctionIdentifier("graft_byte_hist8"))
-    val flat = Array.fill(9)(100.toByte)
-    val payload = Media.ImageMagic ++ Array[Byte](0, 3, 0, 3, 1) ++ flat
-    val d = Media.decodeImages(Seq((7L, payload)).toDF("id", "payload"))
-    val f = Media.imageFeatures(d).select(col("brightness")).head()
-    assert(f.getDouble(0) == 100.0)
+  test("every native operator family analyzes on a fresh session and leaves its function registry alone") {
+    val ns = spark.newSession(); import ns.implicits._
+    val reg = ns.sessionState.functionRegistry
+    def graftFns = reg.listFunction().filter(_.funcName.startsWith("graft_"))
+    graftFns.foreach(reg.dropFunction)
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("id", "embedding")
+    val words = (1 to 9).map(i => s"w$i")
+    val toks = Seq((1L, "train", words), (2L, "val", words)).toDF("doc_id", "split", "__toks")
+    val payload = Media.ImageMagic ++ Array[Byte](0, 3, 0, 3, 1) ++ Array.fill(9)(100.toByte)
+    // bruteForceTopK runs first, so no other operator can have set up
+    // the session for it
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(
+        vecs.withColumnRenamed("id", "query_id"), vecs.withColumnRenamed("id", "neighbor_id"), 1)),
+      "imageFeatures" -> (() => Media.imageFeatures(
+        Media.decodeImages(Seq((7L, payload)).toDF("id", "payload")))),
+      "simhashSignaturesOfTokens" -> (() => Dedup.simhashSignaturesOfTokens(toks)),
+      "leakedGrams" -> (() => Decontam.leakedGrams(toks)),
+      "exactTopK" -> (() => HeavyHitters.exactTopK(
+        toks.select(explode(col("__toks")).as("t")), col("t"), 2)),
+      "zOrderKeyRaw" -> (() => vecs.select(Layout.zOrderKeyRaw(Seq(col("id"), col("id"))))))
+    val failed = ops.flatMap { case (name, op) =>
+      scala.util.Try(op().queryExecution.assertAnalyzed()).failed.toOption
+        .map(e => s"$name: ${e.getMessage.linesIterator.next()}")
+    }
+    assert(failed.isEmpty, s"operators failed analysis on a fresh session: $failed")
+    assert(graftFns.isEmpty,
+      s"operators wrote into the session's function registry: ${graftFns.map(_.funcName)}")
   }
 
   test("imageFeatures at a production-size payload (≥1 MB) through the native byte expressions") {
@@ -367,7 +383,6 @@ class MediaSpec extends SparkSpec {
 
   test("graft_dhash64: gradient-sign bits match hand computation; contract nulls") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // 9×8 grayscale ramp rising left→right: every comparison is
     // gray(x+1) > gray(x) → all 64 bits set (-1L)
     val ramp = Array.tabulate(72)(i => ((i % 9) * 10).toByte)
@@ -384,8 +399,8 @@ class MediaSpec extends SparkSpec {
     val dip = ramp.clone(); dip(4) = 25
     def dh(px: Array[Byte], w: Int, h: Int, c: Int): Option[Long] =
       Seq((1L, px)).toDF("id", "pixels")
-        .select(call_function("graft_dhash64", col("pixels"),
-          lit(w), lit(h), lit(c)).as("dh"))
+        .select(ColumnBridge.column(graft.plans.DHash64(ColumnBridge.expression(col("pixels")),
+          Literal(w), Literal(h), Literal(c))).as("dh"))
         .collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     assert(dh(ramp, 9, 8, 1).contains(-1L), "rising ramp: all 64 bits")
     assert(dh(fall, 9, 8, 1).contains(0L), "falling ramp: no bits")
@@ -400,7 +415,6 @@ class MediaSpec extends SparkSpec {
 
   test("media_phash_pairs: exact dups at Hamming 0, near-dups found, pairs feed CC") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // planted corpus: 1 and 2 identical images; 3 a one-pixel edit of
     // them (near-dup); 4 the inverted image (far)
     val base = Media.stubImage(7L)
@@ -411,8 +425,7 @@ class MediaSpec extends SparkSpec {
       .toDF("id", "payload")
     val sig = Media.resizeImages(Media.decodeImages(imgs), 9, 8)
       .select(col("id").as("doc_id"),
-        call_function("graft_dhash64", col("pixels"), col("width"),
-          col("height"), col("channels")).as("sh"))
+        Media.dhash64.as("sh"))
     val pairsDf = Dedup.hammingPairsOfSignatures(sig, maxDist = 3,
         maxPieceFreq = Long.MaxValue)
     val m = pairsDf.select("id_a", "id_b", "hamming")
@@ -433,12 +446,11 @@ class MediaSpec extends SparkSpec {
 
   test("graft_audiohash64: energy-delta bits match hand computation; contract nulls; codegen'd") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // n = 65 → every window is ONE sample, so e_k = |v_k| and the
     // bits are directly programmable from the sample magnitudes
     def ah(vs: Seq[Integer]): Option[Long] =
       Seq(Tuple1(vs)).toDF("samples")
-        .select(call_function("graft_audiohash64", col("samples")).as("ah"))
+        .select(Media.audioHash64.as("ah"))
         .collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     def boxed(vs: Seq[Int]): Seq[Integer] = vs.map(Integer.valueOf)
     val rising = boxed(0 to 64)
@@ -466,7 +478,7 @@ class MediaSpec extends SparkSpec {
     val clips = Seq((1L, Media.stubAudio(1L, n = 130)),
         (2L, Media.stubAudio(2L, n = 130))).toDF("id", "payload")
     val sigPlan = Media.decodeAudio(clips)
-      .select(call_function("graft_audiohash64", col("samples")).as("ah"))
+      .select(Media.audioHash64.as("ah"))
     assert(sigPlan.filter(col("ah").isNotNull).count() == 2,
       "stub clips must fingerprint")
     val plan = sigPlan.queryExecution.executedPlan.toString
@@ -481,11 +493,9 @@ class MediaSpec extends SparkSpec {
     // assert the codegen contract there (the zorder-test pattern:
     // codegen stages print as "*(n)" prefixes, so the Project line
     // carrying the expression must wear one)
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val imgs = graft.queries.MediaPipeline.imageFixture(spark, "/root/testdata/sf0.001")
     val sigPlan = Media.resizeImages(Media.decodeImages(imgs), 9, 8)
-      .select(call_function("graft_dhash64", col("pixels"), col("width"),
-        col("height"), col("channels")).as("sh"))
+      .select(Media.dhash64.as("sh"))
     assert(sigPlan.filter(col("sh").isNotNull).count() > 0,
       "fixture images must fingerprint")
     val executed = sigPlan.queryExecution.executedPlan.toString
@@ -540,7 +550,7 @@ class MediaSpec extends SparkSpec {
       (1000L, Media.mixAudio(3L, perturbAt = 64, perturbBy = 900)))
       .toDF("id", "payload")
     val sh = Media.decodeAudio(clips)
-      .select(col("id"), call_function("graft_audiohash64", col("samples")).as("sh"))
+      .select(col("id"), Media.audioHash64.as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sh.size == 41)
     assert(sh.values.toSet.size >= 40, "mix fingerprints must not collapse")

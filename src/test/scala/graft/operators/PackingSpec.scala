@@ -32,7 +32,6 @@ class PackingSpec extends SparkSpec {
 
   test("packByTokenBudget composes with learned-BPE counts (real model-token budgets)") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     import graft.functions.Bpe
     val docs = (1 to 30).map(i =>
       (i.toLong, Seq.fill(8)(Seq("lowest", "newest", "wide", "lower")(i % 4)).mkString(" ")))

@@ -67,7 +67,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("graft_signsketch is bit-identical to the composed HOF formulation") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(ss)
     // mixed dims, signs, magnitudes, zero vectors, an empty vector;
     // fixed seed keeps the fixture reproducible
     val rnd = new scala.util.Random(13)

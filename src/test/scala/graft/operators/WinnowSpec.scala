@@ -36,7 +36,6 @@ class WinnowSpec extends SparkSpec {
 
   test("graft_winnow matches the per-window reference on random strings, codegen and interpreted") {
     val ss = spark; import ss.implicits._
-    graft.plans.GraftExtensions.ensureRegistered(spark)
     val rnd = new scala.util.Random(31)
     val alphabet = "abcde "
     val texts = (0 until 50).map { i =>
@@ -46,7 +45,7 @@ class WinnowSpec extends SparkSpec {
     for ((k, w) <- Seq((3, 4), (5, 8), (8, 10))) {
       val got = texts.toDF("i", "t")
         .select(col("i"),
-          call_function("graft_winnow", col("t"), lit(k), lit(w)).as("fps"))
+          Dedup.winnow(col("t"), k, w).as("fps"))
         .as[(Int, Seq[Long])].collect().sortBy(_._1)
       texts.zip(got).foreach { case ((_, text), (i, keys)) =>
         assert(decode(keys) == reference(text, k, w),

@@ -1,7 +1,9 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** [[SumBigUInt]] (`graft_sum_uint`): exact integer SUM past the
   * Decimal(38) cliff, with SQL-SUM null handling and map-side partial
@@ -11,12 +13,15 @@ import org.apache.spark.sql.functions._
 class BigIntAggregatesSpec extends SparkSpec {
   import spark.implicits._
 
+  private def sumUint(c: Column): Column =
+    ColumnBridge.column(SumBigUInt(ColumnBridge.expression(c)).toAggregateExpression())
+
   test("exact past Decimal(38): 40-digit whale + small values sum digit-perfectly") {
     val whale = "9" * 40 // 10^40 - 1
     val df = Seq(("a", whale), ("a", "1"), ("a", "2"), ("b", "0"), ("b", "5"))
       .toDF("k", "v")
     val got = df.groupBy($"k")
-      .agg(call_function("graft_sum_uint", $"v").as("total"))
+      .agg(sumUint($"v").as("total"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     // 10^40 - 1 + 3 = 10^40 + 2
     assert(got == Map("a" -> ("1" + "0" * 39 + "2"), "b" -> "5"))
@@ -34,7 +39,7 @@ class BigIntAggregatesSpec extends SparkSpec {
     val df = Seq(("a", "10"), ("a", null), ("b", null), ("c", "-7"), ("c", "3"))
       .toDF("k", "v")
     val got = df.groupBy($"k")
-      .agg(call_function("graft_sum_uint", $"v").as("total"))
+      .agg(sumUint($"v").as("total"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("a" -> "10", "b" -> "0", "c" -> "-4"))
   }
@@ -47,14 +52,14 @@ class BigIntAggregatesSpec extends SparkSpec {
     val df = spark.range(0, 1024).repartition(64)
       .select(lit("g").as("k"), lit(big).as("v"))
     val got = df.groupBy($"k")
-      .agg(call_function("graft_sum_uint", $"v").as("total"))
+      .agg(sumUint($"v").as("total"))
       .collect()(0).getString(1)
     assert(got == "1024" + "0" * 38)
 
     // plan-shape: partial_graft_sum_uint before the exchange proves
     // map-side combine (shuffle is O(groups), not O(rows))
     val plan = df.groupBy($"k")
-      .agg(call_function("graft_sum_uint", $"v")).queryExecution.executedPlan.toString
+      .agg(sumUint($"v")).queryExecution.executedPlan.toString
     assert(plan.contains("partial_graft_sum_uint"),
       s"expected map-side partial aggregation in plan:\n$plan")
   }
