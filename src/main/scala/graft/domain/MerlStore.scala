@@ -1,6 +1,6 @@
 package graft.domain
 
-import graft.operators.Dedup
+import graft.store.SegmentStore
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -23,16 +23,16 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *    each append one `__batch` segment.
   *  - M5 — cursor GREATEST-merge (merlin_etl.py:159-175), M6 — job
   *    audit bracket (merlin_etl.py:133-151) and the block_check
-  *    upsert (schema.sql:29) as APPEND-ONLY LOGS in the index stores'
-  *    `<partCol>=<p>/__batch=<n>/` layout: a mutation appends only its
-  *    own rows as one new segment (a crash leaves it whole or absent
-  *    and never touches the others) and [[read]] resolves the log,
-  *    ordering events by `__seq`, the write's [[MerlStore.nextSeq]].
-  *    The one partition, `__log=0`, is known to every writer
-  *    (`jobFinish` has only the job id) and keeps listings flat in the
-  *    number of streams and jobs. Segments merge through the index
-  *    stores' crash-tested [[Dedup.autoCompactIndexSegments]] and
-  *    [[Dedup.recoverPendingSwap]].
+  *    upsert (schema.sql:29) as APPEND-ONLY LOGS, each a
+  *    [[SegmentStore]] like the firewall indexes: a mutation appends
+  *    only its own rows as one new segment (a crash leaves it whole or
+  *    absent and never touches the others) and [[read]] resolves the
+  *    log, ordering events by `__seq`, the write's
+  *    [[MerlStore.nextSeq]]. The one partition, `__log=0`, is known to
+  *    every writer (`jobFinish` has only the job id) and keeps
+  *    listings flat in the number of streams and jobs. Segments merge
+  *    through the store's crash-tested [[SegmentStore.autoCompact]]
+  *    and [[SegmentStore.recover]].
   */
 class MerlStore(spark: SparkSession, root: String) {
 
@@ -41,20 +41,21 @@ class MerlStore(spark: SparkSession, root: String) {
   def path(table: String): String = s"$root/$table"
 
   private def fileSystem(p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(table: String): Boolean = {
-    val p = new Path(path(table))
-    fileSystem(p).exists(p)
-  }
+  /** The segment store of a log or of `wallet_transactions`. */
+  private def segments(table: String): SegmentStore =
+    SegmentStore(spark, path(table), if (Logs.contains(table)) LogPart else "contract_address")
+
+  def exists(table: String): Boolean = segments(table).exists
 
   /** The table's current rows; a log resolves to one row per key, and
     * a segmented table hides its `__batch` column.
     */
   def read(table: String): DataFrame = Logs.get(table) match {
-    case None => spark.read.parquet(path(table)).drop("__batch")
+    case None => spark.read.parquet(path(table)).drop(SegmentStore.BatchCol)
     case Some(log) =>
-      Maintenance.synchronized(Dedup.recoverPendingSwap(spark, path(table), LogPart))
+      segments(table).recover()
       val events = spark.read.schema(log.schema.add("__seq", LongType)).parquet(path(table))
       log.resolve(events).select(log.schema.fieldNames.map(col).toSeq: _*)
   }
@@ -67,9 +68,9 @@ class MerlStore(spark: SparkSession, root: String) {
     val (dir, seq, schema) = (path(table), nextSeq(), Logs(table).schema)
     val row = schema.map(f => (if (events.columns.contains(f.name)) col(f.name) else lit(null))
       .cast(f.dataType).as(f.name))
-    Dedup.writeBatch(events.select(row: _*).withColumn("__seq", lit(seq))
+    SegmentStore.writeBatch(events.select(row: _*).withColumn("__seq", lit(seq))
       .withColumn(LogPart, lit(0)).coalesce(1), dir, seq, LogPart)
-    Maintenance.synchronized(Dedup.autoCompactIndexSegments(spark, dir, LogPart))
+    segments(table).autoCompact()
   }
 
   /** The latest `bucket_unix` partition of `token` in a
@@ -152,7 +153,7 @@ class MerlStore(spark: SparkSession, root: String) {
     * reference ingests per (wallet, token), merlin_etl.py:346).
     *
     * Each append is its own segment, `contract_address=<c>/__batch=<seq>/`,
-    * written by [[Dedup.writeBatch]], so two tokens' overlapping jobs
+    * written by [[SegmentStore.append]], so two tokens' overlapping jobs
     * never share a committer directory. The table is never compacted:
     * a merge would rewrite its whole history.
     */
@@ -182,8 +183,7 @@ class MerlStore(spark: SparkSession, root: String) {
           .select(TxKey.map(col): _*)
         keyed.join(existing, TxKey, "left_anti")
       }
-    Dedup.writeBatch(fresh.drop("__ti0").repartition(col("contract_address")),
-      path("wallet_transactions"), nextSeq(), "contract_address")
+    segments("wallet_transactions").append(fresh.drop("__ti0"), nextSeq())
   }
 
   // ---- block_check: update-on-conflict log -------------------------
@@ -296,11 +296,6 @@ object MerlStore {
     "block_check" -> Log(Schemas.blockCheck, events => events.groupBy("unix_ts", "closest")
       .agg(max_by(struct(events.columns.map(col).toSeq: _*), col("__seq")).as("r"))
       .select("r.*")))
-
-  /** Serializes swap recovery and compaction in the JVM: the swap
-    * assumes one maintainer per log.
-    */
-  private object Maintenance
 
   private val lastTick = new java.util.concurrent.atomic.AtomicLong
   private val writerTag = new java.security.SecureRandom().nextInt(1 << 10).toLong

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.store.SegmentStore
 
 /** Document deduplication operators for training-data pipelines:
   * exact, MinHash+LSH, SimHash, and exact n-gram Jaccard.
@@ -186,74 +187,6 @@ object Dedup {
     */
   val MinhashParts = 64
 
-  // ---- index-geometry sidecar (round 16) -------------------------
-  // Every on-disk index here prunes probes by partitions derived
-  // from its BUILD parameters (parts, band shape, radius). A probe
-  // run with different parameters prunes to the WRONG partitions and
-  // silently misses matches — the worst failure mode an
-  // exactness-gated index can have, surfaced by the ×30 large-batch
-  // profile. The build now writes its geometry to
-  // `<path>/_graft_geometry.json` (underscore-prefixed — invisible
-  // to parquet readers) and probes fail loud on any mismatch.
-  // Indexes built before the sidecar existed have no file; probes
-  // then trust the caller, the pre-round-16 contract.
-
-  private[graft] def writeIndexGeometry(spark: org.apache.spark.sql.SparkSession,
-                                        path: String,
-                                        geometry: Map[String, String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_geometry.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // real JSON writer (Jackson, already on the Spark classpath), not
-    // hand-rolled string assembly: a value containing a quote or
-    // comma (a Hamming alignCols column name, say) must round-trip
-    // exactly or the geometry check can spuriously fail — or worse,
-    // silently pass a real mismatch
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    geometry.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val out = fs.create(p, true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[graft] def requireIndexGeometry(spark: org.apache.spark.sql.SparkSession,
-                                          path: String,
-                                          expected: Map[String, String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_geometry.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      expected.foreach { case (k, v) =>
-        val stored = Option(node.get(k)).map(_.asText())
-        require(stored.forall(_ == v),
-          s"index at $path was built with $k=${stored.getOrElse("?")} but probed/" +
-            s"appended with $k=$v — a geometry mismatch prunes to (or appends " +
-            "under) the wrong partitions and silently misses matches; use the " +
-            "build's parameters or rebuild")
-      }
-    }
-  }
-
-  /** Appender-side geometry declaration: validate against any
-    * existing sidecar FIRST, then (re)write it. A pure appender
-    * (streaming index maintenance) that skipped the check would
-    * append rows under the wrong partitioning AND rebrand the
-    * sidecar, so later probes with the new parameters pass the
-    * geometry check while silently missing every previously-indexed
-    * row — exactly the failure class the sidecars exist to prevent.
-    * An unseeded destination (no sidecar yet) declares freely, the
-    * create path.
-    */
-  private[graft] def declareIndexGeometry(spark: org.apache.spark.sql.SparkSession,
-                                          path: String,
-                                          geometry: Map[String, String]): Unit = {
-    requireIndexGeometry(spark, path, geometry)
-    writeIndexGeometry(spark, path, geometry)
-  }
-
   /** Corpus-scale probe strategy switch (round 17). The on-disk
     * band indexes assume probes are BATCH-sized: the batch's band
     * rows collect into a `part IN` predicate and the index scan
@@ -325,256 +258,6 @@ object Dedup {
         "zero corpus-side exchange)")
   }
 
-  /** The replay-safe segment write: `df` lands under
-    * `dir/<partCols>/__batch=<batchId>/` with dynamic partition
-    * overwrite, replacing only its own segment.
-    */
-  private[graft] def writeBatch(df: DataFrame, dir: String, batchId: Long,
-                                partCols: String*): Unit =
-    df.withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols :+ "__batch": _*).parquet(dir)
-
-  /** Maintenance compaction for a streaming-maintained on-disk index
-    * layout (`<partCol>=<p>/__batch=<n>/` — the MinHash bands/sigs,
-    * Hamming bands, BM25 postings, IVF lists, exact-fingerprint
-    * store, and SemDeDup keepers all share it): merge the committed
-    * per-batch segments into the batch seed (`__batch=-1`), so a
-    * long-running firewall's per-probe listing cost stops growing
-    * with batch count. The round-17 appender fix bounds each batch to
-    * ONE file per partition; this bounds the TOTAL at one seed file
-    * per partition plus the recent uncompacted tail — the classic
-    * segment-merge an LSM index runs, as one partition-parallel
-    * rewrite.
-    *
-    * The HIGHEST batch id present is always left uncompacted: with
-    * `Trigger.AvailableNow` + checkpointing, only the latest batch
-    * can replay after a crash, and a replayed batch excludes exactly
-    * its own `__batch` partition from probes — folding it into the
-    * seed would let a replay see its own first attempt's rows and
-    * change its decisions. Everything below the tail is committed and
-    * merges safely. MUST run at a stream-quiescent point (between
-    * AvailableNow invocations — the natural maintenance window). The
-    * swap is not atomic for concurrent readers, but it IS
-    * crash-resumable (round 18): the merged rows materialize fully in
-    * a sibling temp directory, a manifest of the superseded segment
-    * ids plus a ready marker land in that tree BEFORE any live
-    * segment is touched, and a rerun after a crash at ANY point
-    * completes the pending swap instead of discarding the temp tree —
-    * the round-17 cut deleted the temp tree on entry, which after a
-    * crash between the segment deletes and the seed renames held the
-    * ONLY copy of the merged rows (judge-found data-loss path). Every
-    * `rename` result is checked and throws on failure. The geometry
-    * sidecar is untouched (compaction changes layout bookkeeping, not
-    * geometry).
-    *
-    * Returns the number of batch segments merged (0 = nothing to do).
-    */
-  def compactIndexSegments(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, partCol: String): Int =
-    compactIndexSegmentsImpl(spark, dir, partCol, failpoint = "")
-
-  // swap-state files inside the `<dir>__compacting` temp tree
-  // (underscore-prefixed — invisible to parquet readers):
-  private val MergedManifest   = "_MERGED_BATCHES" // superseded segment ids
-  private val SwapReadyMarker  = "_SWAP_READY"     // merge write completed
-  private val DeletesDoneMarker = "_DELETES_DONE"  // delete phase completed
-
-  private def writeSwapFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path, body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Implementation with a crash-injection seam: `failpoint` names a
-    * point at which a spec-simulated crash throws ("before-swap" =
-    * merge written + markers down, no live mutation yet; "mid-swap" =
-    * old segments deleted, seeds not yet renamed in — the data-loss
-    * window the round-17 cut had). Production path passes "".
-    */
-  private[graft] def compactIndexSegmentsImpl(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      partCol: String, failpoint: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
-    // crash recovery: a temp tree WITH the ready marker means a prior
-    // run crashed mid-swap and the temp tree may hold the only copy
-    // of the merged rows — complete that swap first. Without the
-    // marker the merge write never finished; the live tree is
-    // untouched and the partial temp tree is safe to discard.
-    if (fs.exists(tmp)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, SwapReadyMarker)))
-        completeSegmentSwap(fs, root, tmp, partCol, failpoint = "")
-      else fs.delete(tmp, true)
-    }
-    val df = spark.read.parquet(dir)
-    // partition values are path-inferred (int when they fit) — cast
-    val batches = df.select(col("__batch").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (batches.length <= 1) return 0
-    // keep the replay tail; everything else (including any existing
-    // seed) merges into the new seed
-    val tail = batches.max
-    val toMerge = batches.filter(_ != tail)
-    if (toMerge.sameElements(Array(-1L))) return 0 // already compact
-    df.filter(col("__batch").isin(toMerge: _*)).drop("__batch")
-      .repartition(col(partCol)) // one file per partition (the rule)
-      .withColumn("__batch", lit(-1L))
-      .write.mode("overwrite").partitionBy(partCol, "__batch")
-      .parquet(tmp.toString)
-    // manifest BEFORE the ready marker: recovery must know exactly
-    // which live segments the temp tree supersedes, so the marker's
-    // presence implies the manifest is complete
-    writeSwapFile(fs, new org.apache.hadoop.fs.Path(tmp, MergedManifest),
-      toMerge.mkString("\n"))
-    writeSwapFile(fs, new org.apache.hadoop.fs.Path(tmp, SwapReadyMarker), "")
-    if (failpoint == "before-swap")
-      throw new IllegalStateException("failpoint: before-swap")
-    completeSegmentSwap(fs, root, tmp, partCol, failpoint)
-    toMerge.length
-  }
-
-  /** The swap phase of [[compactIndexSegments]], idempotent so a
-    * rerun after a crash at any point finishes the job: (1) delete
-    * the superseded segments named by the temp tree's manifest
-    * (skipped wholesale once `_DELETES_DONE` is down — re-deleting
-    * after any rename landed would destroy a renamed-in seed);
-    * (2) rename each merged seed into the live tree (a seed already
-    * renamed is gone from the temp tree, so reruns skip it; a
-    * surviving destination seed at that point is impossible by the
-    * manifest discipline and fails loud rather than overwrite);
-    * (3) drop the temp tree.
-    */
-  private def completeSegmentSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                  root: org.apache.hadoop.fs.Path,
-                                  tmp: org.apache.hadoop.fs.Path,
-                                  partCol: String, failpoint: String): Unit = {
-    val manifestPath = new org.apache.hadoop.fs.Path(tmp, MergedManifest)
-    val in = fs.open(manifestPath)
-    val manifest =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
-    val deletesDone = new org.apache.hadoop.fs.Path(tmp, DeletesDoneMarker)
-    if (!fs.exists(deletesDone)) {
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(s"$partCol=")).foreach { p =>
-          fs.listStatus(p).map(_.getPath)
-            .filter { b =>
-              val n = b.getName
-              n.startsWith("__batch=") &&
-                manifest.contains(n.stripPrefix("__batch=").toLong)
-            }
-            .foreach { b =>
-              if (!fs.delete(b, true)) throw new java.io.IOException(
-                s"compaction: failed to delete superseded segment $b")
-            }
-        }
-      writeSwapFile(fs, deletesDone, "")
-    }
-    if (failpoint == "mid-swap")
-      throw new IllegalStateException("failpoint: mid-swap")
-    fs.listStatus(tmp).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(s"$partCol=")).foreach { p =>
-        val seed = new org.apache.hadoop.fs.Path(p, "__batch=-1")
-        if (fs.exists(seed)) {
-          val destPart = new org.apache.hadoop.fs.Path(root, p.getName)
-          if (!fs.exists(destPart)) fs.mkdirs(destPart)
-          val dest = new org.apache.hadoop.fs.Path(destPart, "__batch=-1")
-          if (fs.exists(dest)) throw new java.io.IOException(
-            s"compaction: $dest exists while the temp tree still holds a merged " +
-              s"seed for the same partition — refusing to overwrite; inspect $tmp")
-          if (!fs.rename(seed, dest)) throw new java.io.IOException(
-            s"compaction: rename $seed -> $dest failed")
-        }
-      }
-    fs.delete(tmp, true)
-  }
-
-  /** The two `(dir, partCol)` stores of the two-table MinHash
-    * band-index layout — the shape [[compactIndexSegments]],
-    * [[autoCompactIndexSegments]] and [[recoverPendingSwap]] take.
-    */
-  private[graft] def minhashStores(path: String): Seq[(String, String)] =
-    Seq(s"$path/bands" -> "part", s"$path/sigs" -> "spart")
-
-  /** [[compactIndexSegments]] over both tables of the two-table
-    * MinHash band-index layout.
-    */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Int =
-    minhashStores(path).map { case (dir, partCol) =>
-      compactIndexSegments(spark, dir, partCol)
-    }.max
-
-  /** Auto-compaction policy (round 18): the streaming firewalls call
-    * this at their natural quiescent point — after the AvailableNow
-    * query terminates, before the invocation returns — so a
-    * long-running deployment gets the LSM segment-merge the layout's
-    * scaladoc promises WITHOUT an operator remembering the chore
-    * (round-17 judge gap #2). Triggers when the `__batch` segment
-    * count reaches [[AutoCompactSegmentsKey]] (default 16; ≤ 0
-    * disables), counted with one shallow FS listing — no Spark job
-    * when below threshold. A pending crashed swap (ready-marked
-    * `__compacting` temp tree) always triggers, so auto mode is also
-    * self-healing: the recovery path completes the interrupted swap
-    * before anything probes a live tree that is missing merged
-    * segments. Per-probe listing cost is thereby bounded at one seed
-    * file per partition + at most `threshold` uncompacted batch
-    * segments, flat in stream lifetime.
-    */
-  val AutoCompactSegmentsKey = "spark.graft.index.autoCompactSegments"
-  val DefaultAutoCompactSegments = 16
-
-  def autoCompactIndexSegments(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, partCol: String): Int = {
-    val thresh = spark.conf
-      .get(AutoCompactSegmentsKey, DefaultAutoCompactSegments.toString).toInt
-    if (thresh <= 0) return 0
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val pendingSwap = fs.exists(new org.apache.hadoop.fs.Path(
-      dir + "__compacting/" + SwapReadyMarker))
-    val segments = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(s"$partCol="))
-      .flatMap(p => fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith("__batch=")))
-      .toSet.size
-    if (pendingSwap || segments >= thresh)
-      compactIndexSegments(spark, dir, partCol)
-    else 0
-  }
-
-  /** Complete a pending crashed compaction swap WITHOUT starting a
-    * new merge. The firewalls call this BEFORE each stream invocation
-    * (round 18): post-invocation auto-compaction alone would let a
-    * REPLAYED micro-batch probe a live tree that is missing the
-    * merged segments (the crash left them only in the temp tree), so
-    * its decisions could silently differ from the pre-crash attempt —
-    * the exactly-once-net-effect contract requires the index restored
-    * before any probe runs. A ready-marked temp tree completes its
-    * swap; a partial (unmarked) temp tree is discarded (the live tree
-    * is untouched in that case). Returns true iff a swap completed.
-    */
-  def recoverPendingSwap(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, partCol: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
-    if (!fs.exists(tmp)) return false
-    if (fs.exists(new org.apache.hadoop.fs.Path(tmp, SwapReadyMarker))) {
-      if (!fs.exists(root)) fs.mkdirs(root) // swap can recreate partitions
-      completeSegmentSwap(fs, root, tmp, partCol, failpoint = "")
-      true
-    } else {
-      fs.delete(tmp, true)
-      false
-    }
-  }
-
   private def partOf(nParts: Int): Column =
     pmod(xxhash64(col("band"), col("bucket")), lit(nParts)).cast("int")
 
@@ -605,31 +288,23 @@ object Dedup {
     (bandRows, sigRows)
   }
 
-  /** Materialize the LSH band index: slim band rows under
-    * `bands/part=<p>/__batch=<n>/`, per-doc signatures under
-    * `sigs/spart=<p>/__batch=<n>/` (batch seed at `__batch=-1`, the
-    * IVF/BM25 convention — a batch-built index can be incrementally
-    * maintained in place by the streaming appender). Probing never
-    * recomputes corpus-side signatures, which is what makes
-    * incremental dedup against a 100 TB indexed corpus batch-sized
-    * instead of corpus-sized.
+  /** Materialize the LSH band index as the seeds of two
+    * [[SegmentStore]]s: slim band rows under `bands/part=<p>/`,
+    * per-doc signatures under `sigs/spart=<p>/` (a batch-built index
+    * can be incrementally maintained in place by the streaming
+    * appender). Probing never recomputes corpus-side signatures,
+    * which is what makes incremental dedup against a 100 TB indexed
+    * corpus batch-sized instead of corpus-sized.
     */
   def writeMinhashIndex(toks: DataFrame, path: String, shingleLen: Int = 3,
                         bands: Int = 16, rowsPerBand: Int = 8,
                         nParts: Int = MinhashParts): Unit = {
     val (bandRows, sigRows) =
       minhashIndexFrames(toks, shingleLen, bands, rowsPerBand, nParts)
-    bandRows.withColumn("__batch", lit(-1L))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("band"), col("bucket"))
-      .write.mode("overwrite").partitionBy("part", "__batch")
-      .parquet(s"$path/bands")
-    sigRows.withColumn("__batch", lit(-1L))
-      .repartition(col("spart"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").partitionBy("spart", "__batch")
-      .parquet(s"$path/sigs")
-    writeIndexGeometry(toks.sparkSession, path,
+    val Seq(bandStore, sigStore) = SegmentStore.minhash(toks.sparkSession, path)
+    bandStore.build(bandRows, col("band"), col("bucket"))
+    sigStore.build(sigRows, col("doc_id"))
+    SegmentStore.writeGeometry(toks.sparkSession, path,
       minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
   }
 
@@ -665,7 +340,7 @@ object Dedup {
                                        shingleLen: Int, bands: Int,
                                        rowsPerBand: Int, nParts: Int,
                                        excludeBatch: Option[Long]): DataFrame = {
-    requireIndexGeometry(newToks.sparkSession, path,
+    SegmentStore.requireGeometry(newToks.sparkSession, path,
       minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
     minhashProbeCandsBanded(
       bandedSignatures(newToks, shingleLen, bands, rowsPerBand),
@@ -684,12 +359,8 @@ object Dedup {
     val partCounts = probe.groupBy("part").count().collect()
     val parts = partCounts.map(_.getInt(0)).toSeq
     val bandRows = partCounts.map(_.getLong(1)).sum
-    // excludeBatch: replay safety for the streaming firewall — a
-    // replayed micro-batch must not see its own appended rows
-    // (`__batch` is a partition level, so this prunes, not scans)
-    val scan = banded.sparkSession.read.parquet(s"$path/bands")
-      .filter(col("part").isin(parts: _*))
-    val idxBands = excludeBatch.fold(scan)(b => scan.filter(col("__batch") =!= b))
+    val idxBands = SegmentStore.minhash(banded.sparkSession, path).head
+      .scan(parts, excludeBatch)
       .select(col("band"), col("bucket"), col("doc_id").as("index_id"))
     val bcast = probe.drop("part")
     val joined =
@@ -713,7 +384,7 @@ object Dedup {
                    bands: Int = 16, rowsPerBand: Int = 8,
                    nParts: Int = MinhashParts,
                    excludeBatch: Option[Long] = None): DataFrame = {
-    requireIndexGeometry(newToks.sparkSession, path,
+    SegmentStore.requireGeometry(newToks.sparkSession, path,
       minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
     val numHashes = bands * rowsPerBand
     // the batch's signatures materialize ONCE (1 slim row per doc) and
@@ -733,9 +404,8 @@ object Dedup {
     val sparts = cands
       .select(sigPartOf(col("index_id"), nParts).as("spart")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val sigScan = newToks.sparkSession.read.parquet(s"$path/sigs")
-      .filter(col("spart").isin(sparts: _*))
-    val idxSigs = excludeBatch.fold(sigScan)(b => sigScan.filter(col("__batch") =!= b))
+    val idxSigs = SegmentStore.minhash(newToks.sparkSession, path).last
+      .scan(sparts, excludeBatch)
       .select(col("doc_id").as("index_id"), col("sig").as("index_sig"))
     cands.hint("shuffle_hash").join(idxSigs, Seq("index_id"))
       .join(probeSigs.hint("shuffle_hash"), Seq("probe_id"))
@@ -1720,22 +1390,18 @@ object Dedup {
 
   /** Materialize a 64-bit signature corpus (dHash/SimHash — any
     * [[hammingPairsOfSignatures]]-compatible frame) as an ON-DISK
-    * Hamming index under `bands/part=<p>/__batch=<n>/` (batch seed at
-    * `__batch=-1`, the IVF/BM25/MinHash convention — a batch-built
-    * index can be incrementally maintained in place by the streaming
-    * firewall). Probing never rescans the corpus: incremental image
-    * near-dup against a 100 TB indexed corpus is batch-sized.
+    * Hamming index, the seed of the [[SegmentStore]] under
+    * `bands/part=<p>/` (a batch-built index can be incrementally
+    * maintained in place by the streaming firewall). Probing never
+    * rescans the corpus: incremental image near-dup against a 100 TB
+    * indexed corpus is batch-sized.
     */
   def writeHammingIndex(sigs: DataFrame, path: String, maxDist: Int = 3,
                         nParts: Int = HammingParts,
                         alignCols: Seq[String] = Nil): Unit = {
-    hammingIndexRows(sigs, maxDist, nParts, alignCols)
-      .withColumn("__batch", lit(-1L))
-      .repartition(col("part"))
-      .sortWithinPartitions(col("chunk"), col("piece"))
-      .write.mode("overwrite").partitionBy("part", "__batch")
-      .parquet(s"$path/bands")
-    writeIndexGeometry(sigs.sparkSession, path,
+    SegmentStore.hamming(sigs.sparkSession, path).build(
+      hammingIndexRows(sigs, maxDist, nParts, alignCols), col("chunk"), col("piece"))
+    SegmentStore.writeGeometry(sigs.sparkSession, path,
       hammingGeometry(maxDist, nParts, alignCols))
   }
 
@@ -1758,7 +1424,7 @@ object Dedup {
     *
     * `excludeBatch`: replay safety for the streaming firewall — a
     * replayed micro-batch must not see its own appended rows
-    * (`__batch` is a partition level, so this prunes, not scans).
+    * ([[SegmentStore.scan]]).
     *
     * `alignCols` extend the band join (the
     * [[hammingPairsOfSignatures]] rule): probe and index rows match
@@ -1789,7 +1455,7 @@ object Dedup {
                    excludeBatch: Option[Long] = None,
                    alignCols: Seq[String] = Nil,
                    probeParts: Int = 0): DataFrame = {
-    requireIndexGeometry(sigs.sparkSession, path,
+    SegmentStore.requireGeometry(sigs.sparkSession, path,
       hammingGeometry(maxDist, nParts, alignCols))
     val jKeys = alignCols ++ Seq("chunk", "piece")
     val probe0 = hammingBanded(sigs, maxDist, alignCols)
@@ -1802,9 +1468,7 @@ object Dedup {
     val partCounts = probe0.groupBy("part").count().collect()
     val parts = partCounts.map(_.getInt(0)).toSeq
     val bandRows = partCounts.map(_.getLong(1)).sum
-    val scan = sigs.sparkSession.read.parquet(s"$path/bands")
-      .filter(col("part").isin(parts: _*))
-    val idx = excludeBatch.fold(scan)(b => scan.filter(col("__batch") =!= b))
+    val idx = SegmentStore.hamming(sigs.sparkSession, path).scan(parts, excludeBatch)
       .select(alignCols.map(col) ++ Seq(col("chunk"), col("piece"),
         col("doc_id").as("index_id"), col("sh").as("__shi")): _*)
     val bcast = probe0.drop("part")

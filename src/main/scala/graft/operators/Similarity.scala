@@ -622,16 +622,10 @@ object Similarity {
     * map-side pass over the corpus (native assignment + explode) +
     * the partitioned write; no shuffle.
     *
-    * The layout carries a constant `__batch=-1` second partition
-    * level so it is directory-compatible with the streaming appender
-    * ([[graft.streaming.Incremental.ivfIndexStream]], which writes
-    * `centroid=<id>/__batch=<n≥0>/`): a batch-built index can be
-    * seeded and then incrementally maintained in the SAME destDir
-    * without mixed partition depths breaking parquet partition
-    * discovery. Probes select explicit columns, so the extra level is
-    * invisible to them; micro-batch ids are ≥ 0, so the seed
-    * partition never collides with a replayed batch's dynamic
-    * overwrite.
+    * The lists are the seed of a [[graft.store.SegmentStore]], so a
+    * batch-built index can be seeded and then incrementally
+    * maintained in the SAME destDir by the streaming appender
+    * ([[graft.streaming.Incremental.ivfIndexStream]]).
     */
   def writeIvfIndex(corpus: DataFrame, centroids: DataFrame, path: String,
                     nAssign: Int = 1,
@@ -641,16 +635,9 @@ object Similarity {
     // the geometry checksum (round-17 advisor fix: ivfGeometry used to
     // re-collect the full centroid frame a second time)
     val q = collectQuantizerHier(centroids)
-    ivfIndexRowsQ(corpus, q, nAssign, corpusId, vecCol)
-      // one file per list: without the repartition every write task
-      // lands a file in every probed `centroid=` directory, so a
-      // probe of p lists reads p×tasks files instead of p (the
-      // round-17 file-compaction rule — at k=15k lists and a 1000-task
-      // cluster write, the difference is 15M files vs 15k)
-      .repartition(col("centroid"))
-      .withColumn("__batch", lit(-1L))
-      .write.mode("overwrite").partitionBy("centroid", "__batch").parquet(path)
-    graft.operators.Dedup.writeIndexGeometry(corpus.sparkSession, path,
+    graft.store.SegmentStore(corpus.sparkSession, path, "centroid")
+      .build(ivfIndexRowsQ(corpus, q, nAssign, corpusId, vecCol))
+    graft.store.SegmentStore.writeGeometry(corpus.sparkSession, path,
       ivfGeometryOf(q.ids, q.vecs))
   }
 
@@ -713,7 +700,7 @@ object Similarity {
     // (round-17 advisor fix: the checksum used to re-collect the full
     // centroid frame on every probe)
     val q = collectQuantizerHier(centroids)
-    graft.operators.Dedup.requireIndexGeometry(spark, path,
+    graft.store.SegmentStore.requireGeometry(spark, path,
       ivfGeometryOf(q.ids, q.vecs))
     // materialized once: the frame feeds BOTH the partition-pruning
     // collect below and the scoring join — without pinning it, a

@@ -196,19 +196,12 @@ object Retrieval {
 
   def writeBm25Index(toks: DataFrame, path: String,
                      nBuckets: Int = Bm25Buckets): Unit = {
-    // `__batch=-1` second partition level: directory-compatible with
-    // the streaming appender's `bucket=<b>/__batch=<n≥0>/` (same
-    // convention as the IVF layout), so a batch-built index can be
-    // seeded and then incrementally maintained in place. Probes
-    // select explicit columns, so the extra level is invisible.
-    bm25PostingRows(toks, nBuckets)
-      .withColumn("__batch", lit(-1L))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket", "__batch")
-      .parquet(s"$path/postings")
+    // the postings are a SegmentStore seed, so a batch-built index can
+    // be incrementally maintained in place by the streaming appender
+    graft.store.SegmentStore(toks.sparkSession, s"$path/postings", "bucket")
+      .build(bm25PostingRows(toks, nBuckets), col("term"), col("doc_id"))
     writeBm25Stats(toks.sparkSession, path)
-    graft.operators.Dedup.writeIndexGeometry(toks.sparkSession, path,
+    graft.store.SegmentStore.writeGeometry(toks.sparkSession, path,
       bm25Geometry(nBuckets))
   }
 
@@ -250,7 +243,7 @@ object Retrieval {
   def bm25TopKIndexed(spark: SparkSession, path: String,
                       queryBatch: Seq[(Int, Seq[String])], k: Int = TopK,
                       nBuckets: Int = Bm25Buckets): DataFrame = {
-    graft.operators.Dedup.requireIndexGeometry(spark, path, bm25Geometry(nBuckets))
+    graft.store.SegmentStore.requireGeometry(spark, path, bm25Geometry(nBuckets))
     val queryTerms = queryTermsDf(spark, queryBatch)
     val termSet = queryTerms.select("term").distinct()
     // the write side's hash, evaluated on the driver-bounded term

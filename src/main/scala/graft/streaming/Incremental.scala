@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.functions.{TextFns, TimeFns}
 import graft.operators.{Dedup, LanguageModel, Media, Similarity}
-import graft.operators.Dedup.writeBatch
+import graft.store.SegmentStore
+import graft.store.SegmentStore.writeBatch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
@@ -20,26 +21,26 @@ import org.apache.spark.storage.StorageLevel
   * Every stream this object runs to completion goes through one
   * runner, [[runAvailableNow]], whose contract the per-stream docs do
   * not restate:
-  *  - replay-safe `__batch` overwrite: `foreachBatch` is at-least-once
-  *    on side effects, so per-batch output lands under
-  *    `__batch=<batchId>/` with dynamic partition overwrite
-  *    ([[Dedup.writeBatch]]) and a batch replayed after a crash
-  *    between its write and its checkpoint commit rewrites its own partitions
-  *    instead of duplicating rows (readers that don't want the
-  *    provenance column just don't select it). Index probes exclude
-  *    the current `__batch`, so a replay reproduces its original
-  *    decisions instead of colliding with its own appended rows.
-  *    [[weightedReservoirStream]] and [[certifiedTopKStream]]
-  *    document their own sink layouts.
+  *  - replay-safe segments: `foreachBatch` is at-least-once on side
+  *    effects, so per-batch output is one `__batch=<batchId>` segment
+  *    ([[SegmentStore.writeBatch]], [[SegmentStore.append]]) and a
+  *    batch replayed after a crash between its write and its
+  *    checkpoint commit rewrites its own segment instead of
+  *    duplicating rows (readers that don't want the provenance column
+  *    just don't select it). Index probes leave out the current
+  *    batch's segment ([[SegmentStore.scan]]), so a replay reproduces
+  *    its original decisions instead of colliding with its own
+  *    appended rows. [[weightedReservoirStream]] and
+  *    [[certifiedTopKStream]] document their own sink layouts.
   *  - recovery before start: any crashed compaction swap of the
   *    stream's index stores is completed before the stream starts
-  *    ([[graft.operators.Dedup.recoverPendingSwap]]) — a replayed
-  *    batch must never probe a live tree missing merged segments.
+  *    ([[SegmentStore.recover]]) — a replayed batch must never probe
+  *    a live tree missing merged segments.
   *  - compaction after: once the stream ends, at its quiescent point,
-  *    each store is segment-merged when its committed batch count
-  *    reaches `spark.graft.index.autoCompactSegments`
-  *    ([[graft.operators.Dedup.autoCompactIndexSegments]]), bounding
-  *    the per-probe listing cost flat in stream lifetime.
+  *    each store is segment-merged when its segment count reaches
+  *    `spark.graft.index.autoCompactSegments`
+  *    ([[SegmentStore.autoCompact]]), bounding the per-probe listing
+  *    cost flat in stream lifetime.
   *
   * The composed firewalls ([[curationFirewallStream]],
   * [[mediaFirewallStream]]) call the same per-batch step functions as
@@ -62,15 +63,13 @@ object Incremental {
 
   /** The AvailableNow runner behind every stream this object runs to
     * completion (contract in the object doc). `stores` are the
-    * stream's on-disk index stores as `(dir, partCol)`.
+    * stream's on-disk index stores.
     */
   private def runAvailableNow(spark: SparkSession, srcDir: String,
                               schema: StructType, checkpointDir: String,
-                              stores: Seq[(String, String)] = Nil)(
+                              stores: Seq[SegmentStore] = Nil)(
                               body: (DataFrame, Long) => Unit): Unit = {
-    stores.foreach { case (dir, partCol) =>
-      Dedup.recoverPendingSwap(spark, dir, partCol)
-    }
+    stores.foreach(_.recover())
     spark.readStream.schema(schema).parquet(srcDir)
       .writeStream
       .trigger(Trigger.AvailableNow())
@@ -78,19 +77,7 @@ object Incremental {
       .foreachBatch(body)
       .start()
       .awaitTermination()
-    stores.foreach { case (dir, partCol) =>
-      Dedup.autoCompactIndexSegments(spark, dir, partCol)
-    }
-  }
-
-  /** Existence probe through the Hadoop FileSystem API — a
-    * java.io.File check only sees the local filesystem, so on HDFS/S3
-    * an existing index would read as absent and its probe would
-    * silently admit duplicates.
-    */
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    stores.foreach(_.autoCompact())
   }
 
   /** One micro-batch pass: consume new event files from `srcDir`,
@@ -593,7 +580,7 @@ object Incremental {
                          checkpointDir: String, shingleLen: Int = 3,
                          bands: Int = 16, rowsPerBand: Int = 8): Unit =
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
-        Dedup.minhashStores(indexDir)) { (batch, batchId) =>
+        SegmentStore.minhash(spark, indexDir)) { (batch, batchId) =>
       appendToMinhashIndex(
         batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")),
         indexDir, batchId, shingleLen, bands, rowsPerBand)
@@ -612,25 +599,13 @@ object Incremental {
     // against an EXISTING index must fail loud here — appending under
     // the wrong partitioning and relabeling the sidecar would make
     // every later probe silently miss the previously-indexed rows
-    Dedup.declareIndexGeometry(toks.sparkSession, indexDir,
+    SegmentStore.declareGeometry(toks.sparkSession, indexDir,
       Dedup.minhashGeometry(shingleLen, bands, rowsPerBand, Dedup.MinhashParts))
     val (bandRows, sigRows) = Dedup.minhashIndexFrames(
       toks, shingleLen, bands, rowsPerBand, Dedup.MinhashParts)
-    // repartition on the layout key before writing — the batch
-    // builder's discipline (writeMinhashIndex). Without it every
-    // session task writes into every `part=` directory, so each
-    // append lands up to tasks×parts files (the ×30 rehearsal
-    // measured 8,192 files for a 100 MB index after four waves —
-    // 12 KB/file) and every later probe pays listing + footer +
-    // tiny-split scheduling over all of them: at corpus scale the
-    // FILE COUNT, not the byte count, becomes the probe's wall.
-    // One batch-sized shuffle buys one file per partition per batch.
-    writeBatch(bandRows.repartition(col("part"))
-      .sortWithinPartitions(col("band"), col("bucket")),
-      s"$indexDir/bands", batchId, "part")
-    writeBatch(sigRows.repartition(col("spart"))
-      .sortWithinPartitions(col("doc_id")),
-      s"$indexDir/sigs", batchId, "spart")
+    val Seq(bandStore, sigStore) = SegmentStore.minhash(toks.sparkSession, indexDir)
+    bandStore.append(bandRows, batchId, col("band"), col("bucket"))
+    sigStore.append(sigRows, batchId, col("doc_id"))
   }
 
   /** Shared Hamming-index micro-batch append: banded survivor rows
@@ -643,14 +618,11 @@ object Incremental {
                                    batchId: Long, maxDist: Int,
                                    alignCols: Seq[String]): Unit = {
     // declared BEFORE the rows land — the appendToMinhashIndex rule
-    Dedup.declareIndexGeometry(sigs.sparkSession, indexDir,
+    SegmentStore.declareGeometry(sigs.sparkSession, indexDir,
       Dedup.hammingGeometry(maxDist, Dedup.HammingParts, alignCols))
-    writeBatch(Dedup.hammingIndexRows(sigs, maxDist, Dedup.HammingParts, alignCols)
-      // one file per partition per batch — the appendToMinhashIndex
-      // file-compaction rule (and writeHammingIndex's own layout)
-      .repartition(col("part"))
-      .sortWithinPartitions(col("chunk"), col("piece")),
-      s"$indexDir/bands", batchId, "part")
+    SegmentStore.hamming(sigs.sparkSession, indexDir).append(
+      Dedup.hammingIndexRows(sigs, maxDist, Dedup.HammingParts, alignCols),
+      batchId, col("chunk"), col("piece"))
   }
 
   /** The MinHash firewall step on a tokenized micro-batch
@@ -683,7 +655,7 @@ object Incremental {
       Seq("doc_id"), "left_anti")
     // an unseeded index means the first batch has nothing to collide with
     val indexHits =
-      if (!exists(toks.sparkSession, s"$indexDir/bands"))
+      if (!SegmentStore.minhash(toks.sparkSession, indexDir).head.exists)
         batchKept.limit(0).select(col("doc_id"))
       else Dedup.minhashProbe(
           batchKept.select(col("doc_id"), col("__toks")), indexDir,
@@ -719,7 +691,7 @@ object Incremental {
                          threshold: Double = 0.5, shingleLen: Int = 3,
                          bands: Int = 16, rowsPerBand: Int = 8): Unit =
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
-        Dedup.minhashStores(indexDir)) { (batch, batchId) =>
+        SegmentStore.minhash(spark, indexDir)) { (batch, batchId) =>
       val toks = batch.withColumn("__toks", TextFns.tokens(col("text")))
       writeBatch(minhashStep(toks, indexDir, batchId, threshold, shingleLen,
           bands, rowsPerBand).select(col("doc_id"), col("text")),
@@ -778,7 +750,8 @@ object Incremental {
     // driver list bounded by nCentroids
     val clusters = survivors.select(col("cluster")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val keepersExist = exists(s, keepersDir)
+    val keepers = SegmentStore(s, keepersDir, "centroid")
+    val keepersExist = keepers.exists
     val keeperDup =
       if (!keepersExist || clusters.isEmpty)
         survivors.limit(0).select(col("vec_id"))
@@ -786,10 +759,8 @@ object Incremental {
         // geometry check before the probe: a different quantizer
         // prunes to clusters the index never populated — fail loud
         // instead of silently admitting duplicates
-        Dedup.requireIndexGeometry(s, keepersDir, geometry)
-        s.read.parquet(keepersDir)
-          .filter(col("centroid").isin(clusters: _*) &&
-            col("__batch") =!= batchId)
+        SegmentStore.requireGeometry(s, keepersDir, geometry)
+        keepers.scan(clusters, Some(batchId))
           .select(col("centroid").cast("long").as("cluster"),
             col(vecCol).as("__kv"))
           .join(broadcast(survivors), Seq("cluster"))
@@ -803,22 +774,18 @@ object Incremental {
     // skip BOTH the declare and the write when the batch admits no
     // keepers (round 18): an unconditional declare on an empty batch
     // — e.g. an empty AvailableNow run against an unseeded stream —
-    // creates keepersDir containing only the geometry sidecar, the
-    // next batch's exists() guard then passes, and the data-less
-    // parquet read fails schema inference, wedging the stream.
+    // would create a keepersDir holding only the geometry sidecar.
     // Dynamic overwrite touches no partitions on empty data anyway.
     if (!admitted.isEmpty) {
       // declare-before-append: validates again (cheap, one FS read)
       // then stamps the quantizer checksum + eps the keepers now carry
-      Dedup.declareIndexGeometry(s, keepersDir, geometry)
-      writeBatch(admitted.select(col("vec_id").as(corpusId), col("__v").as(vecCol),
-          col("cluster").as("centroid"))
-        // one file per cluster per batch (file-compaction rule)
-        .repartition(col("centroid")), keepersDir, batchId, "centroid")
+      SegmentStore.declareGeometry(s, keepersDir, geometry)
+      keepers.append(admitted.select(col("vec_id").as(corpusId), col("__v").as(vecCol),
+        col("cluster").as("centroid")), batchId)
     } else if (keepersExist)
       // validate-only: a mis-parameterized stream must still fail
       // loud even when its batch happens to admit nothing
-      Dedup.requireIndexGeometry(s, keepersDir, geometry)
+      SegmentStore.requireGeometry(s, keepersDir, geometry)
     admitted
   }
 
@@ -899,11 +866,12 @@ object Incremental {
       if (decontamHoldout == null) null else freezeHoldout(decontamHoldout)
     val exactStatePath = s"$indexDir/exact"
     val keepPath = s"$indexDir/semkeep"
-    val stores = (exactStatePath -> "part") +: Dedup.minhashStores(indexDir) :+
-      (keepPath -> "centroid")
+    val stores = SegmentStore(spark, exactStatePath, "part") +:
+      SegmentStore.minhash(spark, indexDir) :+ SegmentStore(spark, keepPath, "centroid")
     runAvailableNow(spark, srcDir, EmbeddedDocsSchema, checkpointDir, stores) {
       (batch, batchId) =>
         val s = batch.sparkSession
+        val exactStore = SegmentStore(s, exactStatePath, "part")
         // pin the micro-batch once: the accounting count and the
         // stage chain consume it several times, and an unbuffered
         // batch frame re-reads the source files per consumer (the ×10
@@ -925,26 +893,22 @@ object Incremental {
           .withColumn("__fp", TextFns.fingerprint(col("text")))
           .withColumn("__part", pmod(col("__fp"), lit(ExactParts)).cast("int"))
           .localCheckpoint()
-        val exactGeometry = Map("kind" -> "exact_fp", "parts" -> ExactParts.toString)
+        val seeded = exactStore.exists
+        SegmentStore.declareGeometry(s, exactStatePath,
+          Map("kind" -> "exact_fp", "parts" -> ExactParts.toString))
         val exactKept =
-          if (!exists(s, exactStatePath)) within // already pinned above
+          if (!seeded) within // already pinned above
           else {
-            Dedup.requireIndexGeometry(s, exactStatePath, exactGeometry)
             // reads the pinned `within`, so the prune list costs one
             // scan of the materialized frame, not a pipeline re-run
             val parts = within.select(col("__part")).distinct()
               .collect().map(_.getInt(0)).toSeq
-            val seen = s.read.parquet(exactStatePath)
-              .filter(col("part").isin(parts: _*))
-              .filter(col("__batch") =!= batchId)
+            val seen = exactStore.scan(parts, Some(batchId))
               .select(col("fp").as("__fp"))
             within.join(seen, Seq("__fp"), "left_anti").localCheckpoint()
           }
-        writeBatch(exactKept.select(col("__fp").as("fp"), col("__part").as("part"))
-          // one file per partition per batch — the appendToMinhashIndex
-          // file-compaction rule (this store is probed every batch)
-          .repartition(col("part")), exactStatePath, batchId, "part")
-        Dedup.writeIndexGeometry(s, exactStatePath, exactGeometry)
+        exactStore.append(exactKept.select(col("__fp").as("fp"), col("__part").as("part")),
+          batchId)
 
         // ---- stage 2: near-dup ----------------------------------
         val nearKept = minhashStep(exactKept, indexDir, batchId, jaccard,
@@ -1040,7 +1004,7 @@ object Incremental {
       Dedup.componentLosers(pairs).withColumnRenamed("node", "doc_id"),
       Seq("doc_id"), "left_anti")
     val indexHits =
-      if (!exists(sig.sparkSession, s"$indexDir/bands"))
+      if (!SegmentStore.hamming(sig.sparkSession, indexDir).exists)
         batchKept.limit(0).select(col("doc_id"))
       else docPairs(Dedup.hammingProbe(batchKept, indexDir, maxDist,
           excludeBatch = Some(batchId), alignCols = alignCols), "probe_id", "index_id")
@@ -1085,7 +1049,7 @@ object Incremental {
                           minBrightness: Double = 0.0,
                           maxBrightness: Double = 255.0): Unit =
     runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
-        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+        Seq(SegmentStore.hamming(spark, indexDir))) { (batch, batchId) =>
       val s = batch.sparkSession
       // pin the raw batch once (the curationFirewallStream lesson:
       // the accounting count and the decode would otherwise each
@@ -1142,7 +1106,7 @@ object Incremental {
                        destDir: String, checkpointDir: String,
                        maxDist: Int = 3): Unit =
     runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
-        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+        Seq(SegmentStore.hamming(spark, indexDir))) { (batch, batchId) =>
       val sig = dhashSigs(Media.decodeImages(batch), col("id").as("doc_id"))
       writeBatch(hammingStep(sig, indexDir, batchId, maxDist), destDir, batchId)
     }
@@ -1163,7 +1127,7 @@ object Incremental {
                             indexDir: String, destDir: String,
                             checkpointDir: String, maxDist: Int = 3): Unit =
     runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
-        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+        Seq(SegmentStore.hamming(spark, indexDir))) { (batch, batchId) =>
       val sig = Media.decodeAudio(batch)
         .select(col("id").as("doc_id"),
           Media.audioHash64.as("sh"))
@@ -1192,7 +1156,7 @@ object Incremental {
                             checkpointDir: String, maxDist: Int = 3,
                             stride: Int = 2, minFrames: Int = 2): Unit =
     runAvailableNow(spark, srcDir, PayloadSchema, checkpointDir,
-        Seq(s"$indexDir/bands" -> "part")) { (batch, batchId) =>
+        Seq(SegmentStore.hamming(spark, indexDir))) { (batch, batchId) =>
       // composite key = clip·1000 + frame (the videoPhashPairsOf
       // contract, same in-plan assert_true guard rationale: the
       // fixture path samples ≤ a handful of frames; a longer clip
@@ -1232,21 +1196,17 @@ object Incremental {
                       checkpointDir: String,
                       nBuckets: Int = graft.queries.Retrieval.Bm25Buckets): Unit =
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
-        Seq(s"$indexDir/postings" -> "bucket")) { (batch, batchId) =>
+        Seq(SegmentStore(spark, s"$indexDir/postings", "bucket"))) { (batch, batchId) =>
       // declare-before-append (round 17): an appender running with a
       // different nBuckets against an existing index would bucket new
       // postings under the wrong partitioning AND rebrand the sidecar
       // — fail loud here, before any rows land
-      Dedup.declareIndexGeometry(batch.sparkSession, indexDir,
+      SegmentStore.declareGeometry(batch.sparkSession, indexDir,
         graft.queries.Retrieval.bm25Geometry(nBuckets))
-      writeBatch(graft.queries.Retrieval.bm25PostingRows(
-          batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")),
-          nBuckets)
-        // one term-sorted file per bucket per batch — the
-        // writeBm25Index layout (file-compaction rule)
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id")),
-        s"$indexDir/postings", batchId, "bucket")
+      SegmentStore(batch.sparkSession, s"$indexDir/postings", "bucket").append(
+        graft.queries.Retrieval.bm25PostingRows(
+          batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")), nBuckets),
+        batchId, col("term"), col("doc_id"))
     }
 
   /** Streaming IVF index maintenance: new vectors append into the
@@ -1282,16 +1242,15 @@ object Incremental {
     // (no second centroid collect — the round-17 advisor fix)
     val geometry = Similarity.ivfGeometryOf(cq.ids, cq.vecs)
     runAvailableNow(spark, srcDir, vectorSchema(corpusId, vecCol), checkpointDir,
-        Seq(destDir -> "centroid")) { (batch, batchId) =>
+        Seq(SegmentStore(spark, destDir, "centroid"))) { (batch, batchId) =>
       // declare-before-append (round 17): a re-trained/different
       // quantizer re-keys the layout — that is a REBUILD
       // (writeIvfIndex), never maintenance; appending under it and
       // rebranding the sidecar would make every later probe pass the
       // geometry check while missing the previously-indexed vectors
-      Dedup.declareIndexGeometry(batch.sparkSession, destDir, geometry)
-      writeBatch(Similarity.ivfIndexRowsQ(batch, cq, nAssign, corpusId, vecCol)
-        // one file per centroid per batch (file-compaction rule)
-        .repartition(col("centroid")), destDir, batchId, "centroid")
+      SegmentStore.declareGeometry(batch.sparkSession, destDir, geometry)
+      SegmentStore(batch.sparkSession, destDir, "centroid").append(
+        Similarity.ivfIndexRowsQ(batch, cq, nAssign, corpusId, vecCol), batchId)
     }
   }
 
@@ -1323,7 +1282,7 @@ object Incremental {
                           vecCol: String = "embedding"): Unit = {
     val geometry = keeperGeometry(centroids, eps)
     runAvailableNow(spark, srcDir, vectorSchema(corpusId, vecCol), checkpointDir,
-        Seq(keepersDir -> "centroid")) { (batch, batchId) =>
+        Seq(SegmentStore(spark, keepersDir, "centroid"))) { (batch, batchId) =>
       val embedded = batch
         .select(col(corpusId).as("vec_id"), col(vecCol).as("embedding"))
         .localCheckpoint() // micro-batch-sized

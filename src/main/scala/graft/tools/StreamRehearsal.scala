@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.Files
 
 import graft.GraftSession
+import graft.store.SegmentStore
 import graft.streaming.Incremental
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -408,8 +409,8 @@ object StreamRehearsal {
       val kept = spark.read.parquet(dest).count()
       println(s"""{"metric":"stream_state","scenario":"$label","kept":$kept,"input":${imgs.count()},"index_bytes":${fsSize(spark, idx)}}""")
       spark.read.option("mergeSchema", "true").parquet(s"$dest/_accounting")
-        .orderBy(col("__batch")).collect().foreach { r =>
-          println(s"""{"metric":"stream_acct","scenario":"$label","batch":${r.get(r.fieldIndex("__batch"))},"input":${r.getAs[Long]("input")},"decoded":${r.getAs[Long]("decoded")},"after_neardup":${r.getAs[Long]("after_neardup")},"after_feature":${r.getAs[Long]("after_feature")}}""")
+        .orderBy(col(SegmentStore.BatchCol)).collect().foreach { r =>
+          println(s"""{"metric":"stream_acct","scenario":"$label","batch":${r.get(r.fieldIndex(SegmentStore.BatchCol))},"input":${r.getAs[Long]("input")},"decoded":${r.getAs[Long]("decoded")},"after_neardup":${r.getAs[Long]("after_neardup")},"after_feature":${r.getAs[Long]("after_feature")}}""")
         }
     }
 
@@ -467,13 +468,25 @@ object StreamRehearsal {
       // and drop (or fail on) the new column. Old rows read as null
       // → printed as -1, the "stage off" convention.
       spark.read.option("mergeSchema", "true").parquet(s"$dest/_accounting")
-        .orderBy(col("__batch")).collect().foreach { r =>
+        .orderBy(col(SegmentStore.BatchCol)).collect().foreach { r =>
           def lng(f: String): Long =
             if (!r.schema.fieldNames.contains(f) ||
               r.isNullAt(r.fieldIndex(f))) -1L
             else r.getAs[Long](f)
-          println(s"""{"metric":"stream_acct","scenario":"$label","batch":${r.get(r.fieldIndex("__batch"))},"input":${lng("input")},"after_exact":${lng("after_exact")},"after_neardup":${lng("after_neardup")},"after_semdedup":${lng("after_semdedup")},"after_quality":${lng("after_quality")},"after_ppl":${lng("after_ppl")},"after_semantic":${lng("after_semantic")},"kept":${lng("kept")}}""")
+          println(s"""{"metric":"stream_acct","scenario":"$label","batch":${r.get(r.fieldIndex(SegmentStore.BatchCol))},"input":${lng("input")},"after_exact":${lng("after_exact")},"after_neardup":${lng("after_neardup")},"after_semdedup":${lng("after_semdedup")},"after_quality":${lng("after_quality")},"after_ppl":${lng("after_ppl")},"after_semantic":${lng("after_semantic")},"kept":${lng("kept")}}""")
         }
+    }
+
+    // (parquet files, segments) of the band index at `idx`
+    def indexFiles(idx: String): (Int, Int) = {
+      val p = new org.apache.hadoop.fs.Path(s"$idx/bands")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) return (0, 0)
+      def walk(q: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+        fs.listStatus(q).toSeq.flatMap(st =>
+          if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
+      val files = walk(p).filter(_.getName.endsWith(".parquet"))
+      (files.size, files.map(_.getParent.getName).toSet.size)
     }
 
     // ---- 11. auto-compaction soak (round 18) ----------------------
@@ -494,23 +507,13 @@ object StreamRehearsal {
         .select(col("doc_id"), col("text")).localCheckpoint()
       val src = s"$work/soak_src"; val idx = s"$work/soak_idx"
       val dest = s"$work/soak_kept"; val ck = s"$work/soak_ck"
-      def indexFiles(sub: String): (Int, Int) = {
-        val p = new org.apache.hadoop.fs.Path(s"$idx/$sub")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) return (0, 0)
-        def walk(q: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-          fs.listStatus(q).toSeq.flatMap(st =>
-            if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
-        val files = walk(p).filter(_.getName.endsWith(".parquet"))
-        (files.size, files.map(_.getParent.getName).toSet.size)
-      }
       for (w <- 0 until soakWaves) {
         docs.filter(pmod(col("doc_id"), lit(soakWaves)) === w)
           .write.mode("append").parquet(src)
         val t0 = System.nanoTime()
         Incremental.minhashDedupStream(spark, src, idx, dest, ck)
         val wall = (System.nanoTime() - t0) / 1e9
-        val (bandFiles, bandSegs) = indexFiles("bands")
+        val (bandFiles, bandSegs) = indexFiles(idx)
         println(f"""{"metric":"soak","scenario":"$label","wave":$w,"wall_sec":$wall%.2f,"bands_files":$bandFiles,"bands_segments":$bandSegs}""")
       }
       val kept = spark.read.parquet(dest).count()
@@ -549,16 +552,6 @@ object StreamRehearsal {
           graft.functions.TextFns.tokens(col("text")).as("__toks"))
         .localCheckpoint()
       val src = s"$work/ps_src"; val idx = s"$work/ps_idx"; val ck = s"$work/ps_ck"
-      def indexFiles(): (Int, Int) = {
-        val p = new org.apache.hadoop.fs.Path(s"$idx/bands")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) return (0, 0)
-        def walk(q: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-          fs.listStatus(q).toSeq.flatMap(st =>
-            if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
-        val files = walk(p).filter(_.getName.endsWith(".parquet"))
-        (files.size, files.map(_.getParent.getName).toSet.size)
-      }
       for (w <- 0 until soakWaves) {
         // wave w appends the (w % 5)-th fifth of the fixture, ids
         // offset by wave so every wave is NEW docs — corpus growth,
@@ -569,7 +562,7 @@ object StreamRehearsal {
           .write.mode("append").parquet(src)
         Incremental.minhashIndexStream(spark, src, idx, ck)
         if ((w + 1) % 5 == 0) {
-          val (bandFiles, bandSegs) = indexFiles()
+          val (bandFiles, bandSegs) = indexFiles(idx)
           org.apache.spark.sql.graftbridge.ListenerBus
             .drainListeners(spark.sparkContext)
           spill.set(0)

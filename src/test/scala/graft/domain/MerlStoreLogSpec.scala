@@ -1,43 +1,9 @@
 package graft.domain
 
-import graft.SparkSpec
-import graft.operators.Dedup
+import graft.{CrashFs, SparkSpec}
+import graft.store.SegmentStore
 import java.nio.file.{Files, Path => JPath}
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
-
-/** A local filesystem under the `crashfs:` scheme that simulates a
-  * process crash: once armed at step k, the k-th mutating call
-  * (create, mkdirs, rename, delete) and every one after it throw, as
-  * if the process had died there. Reads always pass.
-  */
-class CrashFs extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
-                      replication: Short, blockSize: Long,
-                      progress: Progressable): FSDataOutputStream = {
-    CrashFs.step(); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def mkdirs(f: Path): Boolean = { CrashFs.step(); super.mkdirs(f) }
-  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
-    CrashFs.step(); super.mkdirs(f, permission)
-  }
-  override def rename(src: Path, dst: Path): Boolean = { CrashFs.step(); super.rename(src, dst) }
-  override def delete(p: Path, recursive: Boolean): Boolean = {
-    CrashFs.step(); super.delete(p, recursive)
-  }
-}
-
-object CrashFs {
-  @volatile private var failAt = Long.MaxValue
-  private val calls = new java.util.concurrent.atomic.AtomicLong
-  def arm(k: Long): Unit = { calls.set(0); failAt = k }
-  def disarm(): Unit = failAt = Long.MaxValue
-  def step(): Unit =
-    if (calls.incrementAndGet() >= failAt) throw new java.io.IOException("simulated crash")
-}
 
 /** The bookkeeping tables (cursors, job audit) under crashes at every
   * filesystem step of a mutation, under concurrent writers, and over
@@ -70,14 +36,13 @@ class MerlStoreLogSpec extends SparkSpec {
     */
   private def sweep[S](setup: MerlStore => Unit, mutation: MerlStore => Unit,
                        state: MerlStore => S): Int = {
-    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
     val template = Files.createTempDirectory("crash_template")
-    setup(new MerlStore(spark, s"crashfs://$template"))
-    val before = state(new MerlStore(spark, s"crashfs://$template"))
+    setup(new MerlStore(spark, CrashFs.root(spark, template.toString)))
+    val before = state(new MerlStore(spark, CrashFs.root(spark, template.toString)))
     val done = Files.createTempDirectory("crash_done")
     Files.delete(done); copyTree(template, done)
-    mutation(new MerlStore(spark, s"crashfs://$done"))
-    val after = state(new MerlStore(spark, s"crashfs://$done"))
+    mutation(new MerlStore(spark, CrashFs.root(spark, done.toString)))
+    val after = state(new MerlStore(spark, CrashFs.root(spark, done.toString)))
     assert(after != before, "the mutation must change the state")
     var k = 1
     var crashed = true
@@ -85,7 +50,7 @@ class MerlStoreLogSpec extends SparkSpec {
       assert(k <= 500, "the mutation never completed uncrashed")
       val dir = Files.createTempDirectory("crash_k")
       Files.delete(dir); copyTree(template, dir)
-      val root = s"crashfs://$dir"
+      val root = CrashFs.root(spark, dir.toString)
       CrashFs.arm(k)
       crashed =
         try { mutation(new MerlStore(spark, root)); false }
@@ -102,11 +67,11 @@ class MerlStoreLogSpec extends SparkSpec {
   }
 
   private def withThreshold[T](n: Int)(body: => T): T = {
-    val prev = spark.conf.getOption(Dedup.AutoCompactSegmentsKey)
-    spark.conf.set(Dedup.AutoCompactSegmentsKey, n.toLong)
+    val prev = spark.conf.getOption(SegmentStore.AutoCompactSegmentsKey)
+    spark.conf.set(SegmentStore.AutoCompactSegmentsKey, n.toLong)
     try body
-    finally prev.fold(spark.conf.unset(Dedup.AutoCompactSegmentsKey))(
-      spark.conf.set(Dedup.AutoCompactSegmentsKey, _))
+    finally prev.fold(spark.conf.unset(SegmentStore.AutoCompactSegmentsKey))(
+      spark.conf.set(SegmentStore.AutoCompactSegmentsKey, _))
   }
 
   test("a crash at any filesystem step of a cursor merge or a job finish keeps the history") {
@@ -137,17 +102,28 @@ class MerlStoreLogSpec extends SparkSpec {
   }
 
   test("a compaction crashed before or during its swap completes on the next read") {
-    for (failpoint <- Seq("before-swap", "mid-swap")) {
-      val root = Files.createTempDirectory("graft_log").toString
+    // before-swap: the merge and its markers are down, no live segment
+    // touched; mid-swap: the superseded segments are deleted and the
+    // merged seed is not yet renamed in
+    for ((failpoint, marker) <- Seq("before-swap" -> "_SWAP_READY", "mid-swap" -> "_DELETES_DONE")) {
+      val root = CrashFs.root(spark, Files.createTempDirectory("graft_log").toString)
       val store = new MerlStore(spark, root)
       for (i <- 1 to 4) store.cursorUpsert("s", Some(i * 10L), Some(i), s"""{"v":$i}""")
       store.jobFinish(store.jobStart("alpha"), "success")
       val (cur, job) = (cursors(store), jobs(store))
       for (table <- Seq("ingestion_cursors", "job_runs")) {
-        val e = intercept[IllegalStateException] {
-          Dedup.compactIndexSegmentsImpl(spark, store.path(table), "__log", failpoint)
-        }
-        assert(e.getMessage.contains(failpoint))
+        val dir = new org.apache.hadoop.fs.Path(store.path(table))
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def segments() = fs.listStatus(new org.apache.hadoop.fs.Path(dir, "__log=0"))
+          .map(_.getPath.getName.stripPrefix("__batch=").toLong).toSet
+        val live = segments()
+        CrashFs.armAfter(marker)
+        try intercept[java.io.IOException](SegmentStore(spark, store.path(table), "__log").compact())
+        finally CrashFs.disarm()
+        assert(fs.exists(new org.apache.hadoop.fs.Path(s"${store.path(table)}__compacting/$marker")),
+          s"$failpoint: the crash must land after $marker")
+        if (failpoint == "before-swap") assert(segments() == live, s"$failpoint: live segments")
+        else assert(segments() == Set(live.max), s"$failpoint: only the tail must be left")
       }
       val restarted = new MerlStore(spark, root)
       assert(cursors(restarted) == cur, s"$failpoint: cursors")
@@ -177,8 +153,8 @@ class MerlStoreLogSpec extends SparkSpec {
   }
 
   test("40 cursor merges on one stream leave at most threshold + 1 segments") {
-    val threshold = spark.conf.get(Dedup.AutoCompactSegmentsKey,
-      Dedup.DefaultAutoCompactSegments.toString).toInt
+    val threshold = spark.conf.get(SegmentStore.AutoCompactSegmentsKey,
+      SegmentStore.DefaultAutoCompactSegments.toString).toInt
     val store = new MerlStore(spark, Files.createTempDirectory("graft_log").toString)
     val part = new java.io.File(store.path("ingestion_cursors"), "__log=0")
     var most = 0

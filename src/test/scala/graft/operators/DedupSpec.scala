@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.store.SegmentStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -631,19 +632,19 @@ class DedupSpec extends SparkSpec {
     // spuriously failed or silently passed on these (round-16 advisor
     // finding; the writer/parser are real-JSON now)
     val geo = Map("kind" -> "hamming", "align" -> """a"b,c\d""", "parts" -> "64")
-    Dedup.writeIndexGeometry(ss, dir, geo)
-    Dedup.requireIndexGeometry(ss, dir, geo) // exact round-trip
+    SegmentStore.writeGeometry(ss, dir, geo)
+    SegmentStore.requireGeometry(ss, dir, geo) // exact round-trip
     val e = intercept[IllegalArgumentException](
-      Dedup.requireIndexGeometry(ss, dir, geo.updated("align", """a"b""")))
+      SegmentStore.requireGeometry(ss, dir, geo.updated("align", """a"b""")))
     assert(e.getMessage.contains("align"))
     // declare = require-then-write: a matching declaration is
     // idempotent; a mismatched one throws BEFORE rebranding the
     // sidecar (the round-17 streaming-appender contract)
-    Dedup.declareIndexGeometry(ss, dir, geo)
+    SegmentStore.declareGeometry(ss, dir, geo)
     val e2 = intercept[IllegalArgumentException](
-      Dedup.declareIndexGeometry(ss, dir, geo.updated("parts", "32")))
+      SegmentStore.declareGeometry(ss, dir, geo.updated("parts", "32")))
     assert(e2.getMessage.contains("parts"))
-    Dedup.requireIndexGeometry(ss, dir, geo) // sidecar survived the failed declare
+    SegmentStore.requireGeometry(ss, dir, geo) // sidecar survived the failed declare
   }
 
   test("entropy guard: uncapped pigeonhole fails loud on fingerprint collapse, silent on healthy entropy (round 18)") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{CrashFs, SparkSpec, Tables}
+import graft.store.SegmentStore
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -790,7 +791,7 @@ class IncrementalSpec extends SparkSpec {
     val filesBefore = files("bands").size
     assert(batchDirs("bands") == Set("__batch=-1", "__batch=0", "__batch=1"),
       s"fixture sanity: ${batchDirs("bands")}")
-    val merged = Dedup.compactMinhashIndex(ss, idx)
+    val merged = SegmentStore.compactMinhashIndex(ss, idx)
     assert(merged == 2, s"seed + batch 0 must merge (batch 1 is the tail): $merged")
     assert(batchDirs("bands") == Set("__batch=-1", "__batch=1"),
       s"compaction must keep the replay tail: ${batchDirs("bands")}")
@@ -800,7 +801,7 @@ class IncrementalSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(probe2c == probe2, "compaction must not change probe results")
     // idempotent: only {seed, tail} left → nothing to merge
-    assert(Dedup.compactMinhashIndex(ss, idx) == 0)
+    assert(SegmentStore.compactMinhashIndex(ss, idx) == 0)
     // geometry sidecar survives compaction (mismatch still loud)
     val e = intercept[IllegalArgumentException](
       Dedup.minhashProbe(toToks(mkDocs(41 to 45)), idx, bands = 8))
@@ -831,7 +832,7 @@ class IncrementalSpec extends SparkSpec {
       docs.select(col("doc_id"),
         graft.functions.TextFns.tokens(col("text")).as("__toks"))
 
-    ss.conf.set(Dedup.AutoCompactSegmentsKey, "3")
+    ss.conf.set(SegmentStore.AutoCompactSegmentsKey, "3")
     try {
       Dedup.writeMinhashIndex(toToks(mkDocs(1 to 20)), idx)
       // invocation 1: segments {-1, 0} = 2 < 3 → untouched
@@ -858,7 +859,7 @@ class IncrementalSpec extends SparkSpec {
         .map { case (a, b) => if (a >= 36L) (a, b) else (b, a) }.toSet
       assert(probe == sweep,
         s"probe over the auto-compacted index diverged: $probe vs $sweep")
-    } finally ss.conf.unset(Dedup.AutoCompactSegmentsKey)
+    } finally ss.conf.unset(SegmentStore.AutoCompactSegmentsKey)
   }
 
   test("compaction crash-recovery: a rerun after a crash in the swap window restores the merged rows (minhash two-table + BM25 single-table)") {
@@ -867,7 +868,8 @@ class IncrementalSpec extends SparkSpec {
     import graft.operators.Dedup
     import graft.queries.Retrieval
     val base = Files.createTempDirectory("compact_crash").toString
-    val fs = new org.apache.hadoop.fs.Path(base)
+    val croot = CrashFs.root(ss, base)
+    val fs = new org.apache.hadoop.fs.Path(croot)
       .getFileSystem(ss.sparkContext.hadoopConfiguration)
     def batchDirs(table: String): Set[String] = {
       val p = new org.apache.hadoop.fs.Path(table)
@@ -878,8 +880,18 @@ class IncrementalSpec extends SparkSpec {
         .map(_.getParent.getName).toSet
     }
 
+    // crash the compaction of `dir` at the first filesystem mutation
+    // after the swap-state file `marker` is written
+    def crashCompaction(dir: String, partCol: String, marker: String): Unit = {
+      CrashFs.armAfter(marker)
+      try intercept[java.io.IOException](SegmentStore(ss, dir, partCol).compact())
+      finally CrashFs.disarm()
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"${dir}__compacting/$marker")),
+        s"the crash must land after $marker")
+    }
+
     // ---- minhash two-table layout --------------------------------
-    val src = base + "/src"; val idx = base + "/idx"; val ck = base + "/ck"
+    val src = base + "/src"; val idx = croot + "/idx"; val ck = base + "/ck"
     val body = (1 to 24).map(k => s"word$k").mkString(" ")
     def mkDocs(ids: Range) = ids.map { i =>
       (i.toLong, s"family ${i % 4} $body tail $i")
@@ -902,10 +914,7 @@ class IncrementalSpec extends SparkSpec {
     // crash in the data-loss window: the superseded segments are
     // already deleted from the live tree and the merged seed has NOT
     // been renamed in — the temp tree holds the only copy
-    val e1 = intercept[IllegalStateException](
-      Dedup.compactIndexSegmentsImpl(ss, s"$idx/bands", "part",
-        failpoint = "mid-swap"))
-    assert(e1.getMessage.contains("mid-swap"))
+    crashCompaction(s"$idx/bands", "part", "_DELETES_DONE")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands__compacting")),
       "crashed swap must leave the temp tree in place")
     assert(!batchDirs(s"$idx/bands").exists(
@@ -914,7 +923,7 @@ class IncrementalSpec extends SparkSpec {
     // the natural operator response — rerun the maintenance op — must
     // COMPLETE the pending swap (the round-17 cut deleted the temp
     // tree on entry here, permanently destroying the merged rows)
-    Dedup.compactMinhashIndex(ss, idx)
+    SegmentStore.compactMinhashIndex(ss, idx)
     assert(batchDirs(s"$idx/bands") == Set("__batch=-1", "__batch=1"),
       s"recovered bands layout: ${batchDirs(s"$idx/bands")}")
     assert(batchDirs(s"$idx/sigs") == Set("__batch=-1", "__batch=1"))
@@ -926,16 +935,15 @@ class IncrementalSpec extends SparkSpec {
     mkDocs(41 to 45).write.mode("append").parquet(src)
     Incremental.minhashIndexStream(ss, src, idx, ck)
     val before2 = probe(46 to 50)
-    val e2 = intercept[IllegalStateException](
-      Dedup.compactIndexSegmentsImpl(ss, s"$idx/bands", "part",
-        failpoint = "before-swap"))
-    assert(e2.getMessage.contains("before-swap"))
-    Dedup.compactMinhashIndex(ss, idx)
+    crashCompaction(s"$idx/bands", "part", "_SWAP_READY")
+    assert(batchDirs(s"$idx/bands") == Set("__batch=-1", "__batch=1", "__batch=2"),
+      s"crash must land BEFORE any live mutation: ${batchDirs(s"$idx/bands")}")
+    SegmentStore.compactMinhashIndex(ss, idx)
     assert(batchDirs(s"$idx/bands") == Set("__batch=-1", "__batch=2"))
     assert(probe(46 to 50) == before2)
 
     // ---- BM25 single-table layout (postings, partCol=bucket) -----
-    val bsrc = base + "/bsrc"; val bidx = base + "/bidx"; val bck = base + "/bck"
+    val bsrc = base + "/bsrc"; val bidx = croot + "/bidx"; val bck = base + "/bck"
     def mkB(ids: Range) = ids.map { i =>
       (i.toLong, s"alpha beta ${if (i % 3 == 0) "gamma gamma" else "delta"} w$i")
     }.toDF("doc_id", "text")
@@ -952,11 +960,10 @@ class IncrementalSpec extends SparkSpec {
     Retrieval.writeBm25Stats(ss, bidx)
     val bBefore = brows()
     assert(bBefore.nonEmpty)
-    val e3 = intercept[IllegalStateException](
-      Dedup.compactIndexSegmentsImpl(ss, s"$bidx/postings", "bucket",
-        failpoint = "mid-swap"))
-    assert(e3.getMessage.contains("mid-swap"))
-    assert(Dedup.compactIndexSegments(ss, s"$bidx/postings", "bucket") == 0,
+    crashCompaction(s"$bidx/postings", "bucket", "_DELETES_DONE")
+    assert(batchDirs(s"$bidx/postings") == Set("__batch=1"),
+      s"crash must land AFTER the segment deletes: ${batchDirs(s"$bidx/postings")}")
+    assert(SegmentStore(ss, s"$bidx/postings", "bucket").compact() == 0,
       "rerun recovers the crashed swap; the recovered tree is already compact")
     assert(brows() == bBefore,
       "BM25 probe after crash+rerun must equal the pre-compaction probe")
@@ -968,10 +975,9 @@ class IncrementalSpec extends SparkSpec {
     // would silently miss every merged indexed row
     mkDocs(46 to 50).write.mode("append").parquet(src)
     Incremental.minhashIndexStream(ss, src, idx, ck) // batch 3
-    val e4 = intercept[IllegalStateException](
-      Dedup.compactIndexSegmentsImpl(ss, s"$idx/bands", "part",
-        failpoint = "mid-swap"))
-    assert(e4.getMessage.contains("mid-swap"))
+    crashCompaction(s"$idx/bands", "part", "_DELETES_DONE")
+    assert(!batchDirs(s"$idx/bands").exists(d => d == "__batch=-1" || d == "__batch=2"),
+      s"crash must land AFTER the segment deletes: ${batchDirs(s"$idx/bands")}")
     mkDocs(51 to 55).write.mode("append").parquet(src)
     Incremental.minhashIndexStream(ss, src, idx, ck) // batch 4, recovers first
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/bands__compacting")),
@@ -1505,6 +1511,29 @@ class IncrementalSpec extends SparkSpec {
     val kept = ss.read.parquet(keep).count()
     assert(kept >= 2L && kept <= 6L,
       s"post-empty-batch run must admit keepers normally: $kept")
+  }
+
+  test("semanticDedupStream: a crash between the keepers' geometry declaration and their first append does not wedge the rerun") {
+    val ss = spark; import ss.implicits._
+    val base = Files.createTempDirectory("semdedup_declare_crash").toString
+    val cents = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
+      .toDF("centroid_id", "centroid")
+    Seq((1L, Array(1.0f, 0.05f)), (2L, Array(0.05f, 1.0f)), (3L, Array(0.06f, 1.0f)))
+      .toDF("vec_id", "embedding").write.parquet(base + "/src")
+    def keepers(dir: String) =
+      ss.read.parquet(dir).select("vec_id").collect().map(_.getLong(0)).toSet
+    Incremental.semanticDedupStream(ss, base + "/src", cents, base + "/want", base + "/ck0",
+      eps = 0.9)
+    // the keepers dir then holds only its sidecar: the rerun's probe
+    // must treat it as unseeded, not fail to infer its schema
+    val keep = CrashFs.root(ss, base) + "/keep"
+    CrashFs.armAfter("_graft_geometry.json")
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Incremental.semanticDedupStream(ss, base + "/src", cents, keep, base + "/ck", eps = 0.9))
+    finally CrashFs.disarm()
+    assert(!SegmentStore(ss, keep, "centroid").exists)
+    Incremental.semanticDedupStream(ss, base + "/src", cents, keep, base + "/ck", eps = 0.9)
+    assert(keepers(keep) == keepers(base + "/want"))
   }
 
   test("semanticDedupStream: eps-separated keepers, sound drops, across checkpointed runs") {
@@ -2189,6 +2218,103 @@ class IncrementalSpec extends SparkSpec {
     val keepers = ss.read.parquet(s"$idx/semkeep")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(keepers == Set(1L, 3L, 12L), s"keeper index diverged: $keepers")
+  }
+
+  /** Every row of each parquet table, sorted, for before/after
+    * comparison of a replay.
+    */
+  private def tableRows(dirs: Seq[String]): Seq[Seq[String]] =
+    dirs.map(d => spark.read.parquet(d).collect().map(_.toString).toSeq.sorted)
+
+  private def assertSameRows(dirs: Seq[String], before: Seq[Seq[String]]): Unit =
+    dirs.zip(before).zip(tableRows(dirs)).foreach { case ((d, b), a) =>
+      val same = a == b
+      assert(same, s"$d: the replay wrote ${a.diff(b).size} rows the first attempt " +
+        s"did not and lost ${b.diff(a).size}")
+    }
+
+  /** Undo the end of batch `n` as a crash after its index appends but
+    * before its output write leaves it: the checkpoint commit and the
+    * `dest` segment are gone, the batch's index rows stay, and the
+    * next run replays `n`. A replay that probed its own index rows
+    * would drop its survivors and never rewrite `dest`.
+    */
+  private def crashBeforeOutput(ck: String, dest: String, n: Int): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(ck).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ck/commits/$n"), false))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dest/__batch=$n"), true))
+  }
+
+  test("minhashDedupStream: a batch replayed after a crash between its index appends and its output reproduces every stored row") {
+    val ss = spark; import ss.implicits._
+    val base = Files.createTempDirectory("mh_replay").toString
+    val src = base + "/src"; val idx = base + "/idx"
+    val dest = base + "/kept"; val ck = base + "/ck"
+    // families continue across the batch boundary, so batch 1 drops
+    // against batch 0's index rows, and the unique docs are admitted
+    val body = (1 to 24).map(k => s"term$k").mkString(" ")
+    def mkDocs(ids: Range) = ids.map { i =>
+      if (i % 3 == 0) (i.toLong, s"unique standalone document $i " +
+        (1 to 10).map(k => s"only$i$k").mkString(" "))
+      else (i.toLong, s"family ${i % 5} $body tail $i")
+    }.toDF("doc_id", "text")
+    def run(): Unit = Incremental.minhashDedupStream(ss, src, idx, dest, ck)
+    mkDocs(1 to 20).write.parquet(src)
+    run()
+    mkDocs(21 to 40).write.mode("append").parquet(src)
+    run()
+    val tables = Seq(dest, s"$idx/bands", s"$idx/sigs")
+    val before = tableRows(tables)
+    val kept1 = ss.read.parquet(dest).filter(col("__batch") === 1).count()
+    assert(kept1 > 0 && kept1 < 20, s"batch 1 must admit some docs and drop some: $kept1")
+    crashBeforeOutput(ck, dest, 1)
+    run()
+    assertSameRows(tables, before)
+  }
+
+  test("curationFirewallStream with SemDeDup: a batch replayed after a crash between its index appends and its output reproduces every stored row") {
+    val ss = spark; import ss.implicits._
+    val base = Files.createTempDirectory("cur_replay").toString
+    val src = base + "/src"; val idx = base + "/idx"
+    val dest = base + "/kept"; val ck = base + "/ck"
+    val cents = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
+      .toDF("centroid_id", "centroid")
+    // exact copies, near-dup families and embedding directions all
+    // repeat across the batch boundary, so every store is probed for
+    // batch 1 with rows batch 0 wrote; directions 11.25° apart are
+    // semantic dups only of their own direction at eps 0.99
+    val body = (1 to 24).map(k => s"term$k").mkString(" ")
+    def mkDocs(ids: Range) = ids.map { i =>
+      val text = (i % 10) match {
+        case 0 => s"exact copy payload shared across waves group ${(i / 10) % 2}"
+        case 2 | 3 => s"family ${i % 3} $body tail $i"
+        case _ => s"unique standalone document $i " +
+          (1 to 10).map(k => s"only$i$k").mkString(" ")
+      }
+      val a = (i % 8) * math.Pi / 16
+      val emb = if (i % 10 == 4) null else Array(math.cos(a).toFloat, math.sin(a).toFloat)
+      (i.toLong, text, emb)
+    }.toDF("doc_id", "text", "embedding")
+    def run(): Unit = Incremental.curationFirewallStream(ss, src, idx, dest, ck,
+      semanticEps = 0.99, semanticCentroids = cents)
+    mkDocs(1 to 20).write.parquet(src)
+    run()
+    mkDocs(21 to 40).write.mode("append").parquet(src)
+    run()
+    val tables = Seq(dest, s"$dest/_accounting", s"$idx/exact", s"$idx/bands",
+      s"$idx/sigs", s"$idx/semkeep")
+    val before = tableRows(tables)
+    val acct1 = ss.read.parquet(s"$dest/_accounting").filter(col("__batch") === 1)
+      .collect().head
+    assert(acct1.getAs[Long]("after_exact") < acct1.getAs[Long]("input") &&
+      acct1.getAs[Long]("after_neardup") < acct1.getAs[Long]("after_exact") &&
+      acct1.getAs[Long]("after_semdedup") < acct1.getAs[Long]("after_neardup") &&
+      acct1.getAs[Long]("kept") > 0, s"every dedup stage must drop in batch 1: $acct1")
+    assert(ss.read.parquet(s"$idx/semkeep").filter(col("__batch") === 1).count() > 0,
+      "batch 1 must add keepers")
+    crashBeforeOutput(ck, dest, 1)
+    run()
+    assertSameRows(tables, before)
   }
 
   test("SemDeDup keeper indexes fail loud on a quantizer or eps mismatch") {
