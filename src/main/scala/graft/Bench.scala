@@ -147,25 +147,15 @@ object Bench {
     val steadyJobsJson = steady.map { case (n, (_, j, _)) => "\"" + n + "\":" + j }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"job_overhead_ms":$jobOverheadMs,"steady_jobs":$steadyJobs,"value_overhead_adj":$valueOverheadAdj,"queries_cold":${jsonNum(cold.map { case (n, (t, _, _)) => n -> t })},"errors":${jsonStr(errors)},"sf":"$sfDir","queries_steady":$steadyJson,"queries":$steadyJson}""")
-    // Round number for per-round artifacts: one past the newest
-    // BENCH_r{N}.json in cwd (this round's driver file doesn't exist
-    // yet while Bench is running). Run from a foreign cwd that
-    // inference silently resolves to round 1 and would clobber an
-    // artifact — so SPARK_GRAFT_ROUND overrides it explicitly, and a
-    // missing BENCH_r*.json warns to stderr instead of failing quiet.
+    // Round number for per-round artifacts (see nextRound);
+    // SPARK_GRAFT_ROUND pins it explicitly, and a cwd with no round
+    // artifact warns to stderr instead of failing quiet.
     val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-      val listing = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-      val newest =
-        try listing.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.matches("BENCH_r\\d+\\.json") =>
-            s.stripPrefix("BENCH_r").stripSuffix(".json").toInt }
-          .foldLeft(0)(math.max)
-        finally listing.close() // Files.list holds a directory fd
-      if (newest == 0) System.err.println(
-        "[bench] no BENCH_r*.json in cwd — round inferred as 1; set " +
+      val next = nextRound(java.nio.file.Paths.get("."))
+      if (next == 1) System.err.println(
+        "[bench] no round artifact in cwd — round inferred as 1; set " +
           "SPARK_GRAFT_ROUND to pin artifact names when running outside the repo root")
-      newest + 1
+      next
     }
 
     // Per-round QUALITY artifact, emitted from the run the driver
@@ -180,7 +170,7 @@ object Bench {
     if (!sys.env.contains("SPARK_GRAFT_NO_QUALITY") && only.isEmpty) {
       try {
         val out = f"QUALITY_r$round%02d.json"
-        val (allPass, _) = Quality.writeArtifact(spark, sfDir, out)
+        val (allPass, _) = Quality.writeArtifact(spark, sfDir, out, CreateNew)
         println(s"""{"metric":"quality","artifact":"$out","all_pass":$allPass}""")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] quality artifact failed: ${e.getMessage}")
@@ -193,7 +183,8 @@ object Bench {
     // record (both per-query maps, totals, errors) is also
     // written to a file the way Quality writes QUALITY_r{N}.json.
     // Named BENCH_FULL to never collide with the driver's own
-    // tail-capture artifact of the same round.
+    // tail-capture artifact of the same round. Both artifacts are
+    // created new: an existing file is refused, never replaced.
     if (only.isEmpty) {
       try {
         val path = f"BENCH_FULL_r$round%02d.json"
@@ -203,7 +194,7 @@ object Bench {
              |"queries_steady":$steadyJson,
              |"queries_steady_jobs":$steadyJobsJson,
              |"errors":${jsonStr(errors)}}
-             |""".stripMargin)
+             |""".stripMargin, CreateNew)
         System.err.println(s"[bench] full artifact: $path")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] full artifact failed: ${e.getMessage}")
@@ -222,5 +213,21 @@ object Bench {
     println(shortTotals)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  private val CreateNew = java.nio.file.StandardOpenOption.CREATE_NEW
+  private val RoundArtifact = """(?:BENCH|BENCH_FULL|QUALITY)_r(\d+)\.json""".r
+
+  /** One past the newest round of a BENCH_r, BENCH_FULL_r or
+    * QUALITY_r json in `dir`, or 1 if there is none: this round's
+    * driver file does not exist yet while Bench runs, and a round
+    * whose BENCH_FULL or QUALITY artifact is already committed must
+    * not be reused.
+    */
+  private[graft] def nextRound(dir: java.nio.file.Path): Int = {
+    val listing = java.nio.file.Files.list(dir)
+    try listing.iterator().asScala.map(_.getFileName.toString)
+      .collect { case RoundArtifact(n) => n.toInt }.foldLeft(0)(math.max) + 1
+    finally listing.close() // Files.list holds a directory fd
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, OpenOption, Paths}
 
 import org.apache.spark.sql.SparkSession
 
@@ -20,10 +20,11 @@ import org.apache.spark.sql.SparkSession
 object Quality {
 
   /** Compute the metrics table at `sfDir`, write it as JSON to
-    * `outPath`, and return (allPass, renderedJson).
+    * `outPath` (opened with `options`), and return (allPass,
+    * renderedJson).
     */
-  def writeArtifact(spark: SparkSession, sfDir: String,
-                    outPath: String): (Boolean, String) = {
+  def writeArtifact(spark: SparkSession, sfDir: String, outPath: String,
+                    options: OpenOption*): (Boolean, String) = {
     val rows = graft.queries.QualityMetrics.metrics(spark, sfDir).collect()
     val body = rows.map { r =>
       val numer = if (r.isNullAt(2)) "null" else r.getLong(2).toString
@@ -41,7 +42,7 @@ object Quality {
          |  }
          |}
          |""".stripMargin
-    Files.writeString(Paths.get(outPath), json)
+    Files.writeString(Paths.get(outPath), json, options: _*)
     (allPass, json)
   }
 

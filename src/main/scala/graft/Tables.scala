@@ -177,39 +177,48 @@ object Tables {
         // type), so it is saved/restored around resolution — same
         // discipline as registerCatalog — instead of permanently
         // flipping a foreign session's unrelated NTZ parquet reads.
-        val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-        val ntzPrev = spark.conf.getOption(ntzKey)
-        spark.conf.set(ntzKey, "false")
-        val raw =
-          try {
-            val df = spark.read.parquet(s"$dir/$name.parquet")
-            df.schema // force eager schema resolution under the conf
-            df
-          } finally ntzPrev match {
-            case Some(v) => spark.conf.set(ntzKey, v)
-            case None    => spark.conf.unset(ntzKey)
-          }
-        import org.apache.spark.sql.functions._
-        // ts encoding has varied across driver rounds: INT64
-        // TIMESTAMP(NANOS) (illegal for Spark's reader — read as Long
-        // via nanosAsLong, floor to micros like DuckDB) vs
-        // TIMESTAMP(MICROS) (TimestampType via the conf above; the
-        // NTZ branch remains only for a session that explicitly
-        // pinned inference on — that session's timezone is then its
-        // own choice). Dispatch on the resolved type so every vintage
-        // loads identically.
-        raw.withColumn("ts", raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            timestamp_micros(expr("ts div 1000"))
-          case org.apache.spark.sql.types.TimestampNTZType =>
-            col("ts").cast(org.apache.spark.sql.types.TimestampType)
-          case _ => col("ts")
-        })
+        val raw = withConfs(spark, NtzKey -> "false") {
+          val df = spark.read.parquet(s"$dir/$name.parquet")
+          df.schema // force eager schema resolution under the conf
+          df
+        }
+        raw.withColumn("ts", org.apache.spark.sql.functions.expr(eventsTs(raw)))
       } else spark.read.parquet(s"$dir/$name.parquet")
     val expected = schemas(name).fieldNames.toSeq
     require(df0.columns.toSeq == expected,
       s"$name schema drift: got ${df0.columns.mkString(",")}, want ${expected.mkString(",")}")
     df0
+  }
+
+  private val NtzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+  /** The events `ts` as a microsecond TIMESTAMP, a SQL expression over
+    * the resolved raw column. The encoding has varied across driver
+    * rounds: INT64 TIMESTAMP(NANOS) (illegal for Spark's reader — read
+    * as BIGINT via nanosAsLong, floored to micros like DuckDB) vs
+    * TIMESTAMP(MICROS) (TimestampType with NTZ inference off; the NTZ
+    * branch remains only for a session that explicitly pinned
+    * inference on — that session's timezone is then its own choice).
+    * Dispatch on the resolved type so every vintage loads identically.
+    */
+  private def eventsTs(raw: DataFrame): String = raw.schema("ts").dataType match {
+    case LongType         => "timestamp_micros(ts div 1000)"
+    case TimestampNTZType => "CAST(ts AS TIMESTAMP)"
+    case _                => "ts"
+  }
+
+  /** Run `body` with `confs` set on `spark`, then restore each key's
+    * previous value (or unset it), so a caller's session is never
+    * silently mutated.
+    */
+  private def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   /** Spread a frame across the cluster's cores for a CPU-dense stage
@@ -270,44 +279,19 @@ object Tables {
     schemas.keySet.filterNot(_ == "events").toSeq.sorted
       .foreach(n => registerAndAnalyze(n, s"$n.parquet"))
     // events: nanos TIMESTAMP — stats on the raw table, view converts.
-    // The conf is needed while ANALYZE scans the nanos file; save and
-    // restore it afterwards (same discipline as Decontam.buildBloom)
-    // so registration doesn't silently mutate a caller's session.
-    // SCANNING $db.events later needs it too — GraftSession sets it at
-    // build, and the Tables.load path set-if-absents it for foreign
-    // sessions; only ad-hoc SQL over the view on a session with the
-    // conf explicitly false would fail, which is that session's choice.
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val nanosPrev = spark.conf.getOption(nanosKey)
-    val ntzPrev = spark.conf.getOption(ntzKey)
-    spark.conf.set(nanosKey, "true")
-    // micros-vintage fixture: timezone-free TimestampType (see load)
-    spark.conf.set(ntzKey, "false")
-    try registerAndAnalyze("events_raw", "events.parquet")
-    finally {
-      nanosPrev match {
-        case Some(v) => spark.conf.set(nanosKey, v)
-        case None    => spark.conf.unset(nanosKey)
-      }
-      ntzPrev match {
-        case Some(v) => spark.conf.set(ntzKey, v)
-        case None    => spark.conf.unset(ntzKey)
-      }
-    }
-    // Same encoding dispatch as Tables.load: nanos vintages resolve
-    // ts as BIGINT (floor to micros); the round-11 micros fixture
-    // resolves as TIMESTAMP_NTZ (reinterpret under the UTC session).
-    val tsExpr = spark.table(s"$db.events_raw").schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        "timestamp_micros(ts div 1000)"
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        "CAST(ts AS TIMESTAMP)"
-      case _ => "ts"
+    // The confs are needed while ANALYZE scans the file (nanosAsLong;
+    // NTZ inference off for the micros vintage, see load), scoped so
+    // registration doesn't silently mutate a caller's session.
+    // SCANNING $db.events later needs nanosAsLong too — GraftSession
+    // sets it at build, and the Tables.load path set-if-absents it for
+    // foreign sessions; only ad-hoc SQL over the view on a session with
+    // the conf explicitly false would fail, which is that session's choice.
+    withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true", NtzKey -> "false") {
+      registerAndAnalyze("events_raw", "events.parquet")
     }
     spark.sql(
       s"""CREATE OR REPLACE VIEW $db.events AS
-         |SELECT event_id, $tsExpr AS ts,
+         |SELECT event_id, ${eventsTs(spark.table(s"$db.events_raw"))} AS ts,
          |       user_id, event_type, value, props
          |FROM $db.events_raw""".stripMargin)
     db

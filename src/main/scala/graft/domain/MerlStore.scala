@@ -55,8 +55,7 @@ class MerlStore(spark: SparkSession, root: String) {
   def read(table: String): DataFrame = Logs.get(table) match {
     case None => spark.read.parquet(path(table)).drop(SegmentStore.BatchCol)
     case Some(log) =>
-      segments(table).recover()
-      val events = spark.read.schema(log.schema.add("__seq", LongType)).parquet(path(table))
+      val events = segments(table).read(Some(log.schema.add("__seq", LongType)))
       log.resolve(events).select(log.schema.fieldNames.map(col).toSeq: _*)
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -294,25 +294,29 @@ object Dedup {
     * can be incrementally maintained in place by the streaming
     * appender). Probing never recomputes corpus-side signatures,
     * which is what makes incremental dedup against a 100 TB indexed
-    * corpus batch-sized instead of corpus-sized.
+    * corpus batch-sized instead of corpus-sized. The parameters are
+    * the stores' geometry ([[minhashIndex]]).
     */
   def writeMinhashIndex(toks: DataFrame, path: String, shingleLen: Int = 3,
                         bands: Int = 16, rowsPerBand: Int = 8,
                         nParts: Int = MinhashParts): Unit = {
     val (bandRows, sigRows) =
       minhashIndexFrames(toks, shingleLen, bands, rowsPerBand, nParts)
-    val Seq(bandStore, sigStore) = SegmentStore.minhash(toks.sparkSession, path)
+    val Seq(bandStore, sigStore) =
+      minhashIndex(toks.sparkSession, path, shingleLen, bands, rowsPerBand, nParts)
     bandStore.build(bandRows, col("band"), col("bucket"))
     sigStore.build(sigRows, col("doc_id"))
-    SegmentStore.writeGeometry(toks.sparkSession, path,
-      minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
   }
 
-  private[graft] def minhashGeometry(shingleLen: Int, bands: Int,
-                                     rowsPerBand: Int, nParts: Int): Map[String, String] =
-    Map("kind" -> "minhash", "shingleLen" -> shingleLen.toString,
-      "bands" -> bands.toString, "rowsPerBand" -> rowsPerBand.toString,
-      "parts" -> nParts.toString)
+  /** The two stores of the MinHash index at `path`, with these build
+    * parameters as their geometry.
+    */
+  private[graft] def minhashIndex(spark: SparkSession, path: String, shingleLen: Int,
+                                  bands: Int, rowsPerBand: Int,
+                                  nParts: Int): Seq[SegmentStore] =
+    SegmentStore.minhash(spark, path, Map("kind" -> "minhash",
+      "shingleLen" -> shingleLen.toString, "bands" -> bands.toString,
+      "rowsPerBand" -> rowsPerBand.toString, "parts" -> nParts.toString))
 
   /** Near-duplicate candidates of a NEW batch against an indexed
     * corpus: the batch's banded signatures (same derivation as the
@@ -339,15 +343,12 @@ object Dedup {
   private[graft] def minhashProbeCands(newToks: DataFrame, path: String,
                                        shingleLen: Int, bands: Int,
                                        rowsPerBand: Int, nParts: Int,
-                                       excludeBatch: Option[Long]): DataFrame = {
-    SegmentStore.requireGeometry(newToks.sparkSession, path,
-      minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
-    minhashProbeCandsBanded(
-      bandedSignatures(newToks, shingleLen, bands, rowsPerBand),
-      path, nParts, excludeBatch)
-  }
+                                       excludeBatch: Option[Long]): DataFrame =
+    minhashProbeCandsBanded(bandedSignatures(newToks, shingleLen, bands, rowsPerBand),
+      minhashIndex(newToks.sparkSession, path, shingleLen, bands, rowsPerBand, nParts).head,
+      nParts, excludeBatch)
 
-  private def minhashProbeCandsBanded(banded: DataFrame, path: String,
+  private def minhashProbeCandsBanded(banded: DataFrame, bandStore: SegmentStore,
                                       nParts: Int,
                                       excludeBatch: Option[Long]): DataFrame = {
     val probe = banded
@@ -359,8 +360,7 @@ object Dedup {
     val partCounts = probe.groupBy("part").count().collect()
     val parts = partCounts.map(_.getInt(0)).toSeq
     val bandRows = partCounts.map(_.getLong(1)).sum
-    val idxBands = SegmentStore.minhash(banded.sparkSession, path).head
-      .scan(parts, excludeBatch)
+    val idxBands = bandStore.scan(parts, excludeBatch)
       .select(col("band"), col("bucket"), col("doc_id").as("index_id"))
     val bcast = probe.drop("part")
     val joined =
@@ -368,7 +368,7 @@ object Dedup {
         bandRows, ProbeSweep.rowBytesOf(bcast))) {
         // corpus-scale batch: pruning degenerated — broadcast the
         // batch into the index scan so the corpus side never shuffles
-        ProbeSweep.logDecision("minhash", path, parts.length, nParts, bandRows)
+        ProbeSweep.logDecision("minhash", bandStore.dir, parts.length, nParts, bandRows)
         idxBands.join(broadcast(bcast), Seq("band", "bucket"))
       } else
         // trickle batch — the historical plan: pinned shuffle join,
@@ -384,8 +384,8 @@ object Dedup {
                    bands: Int = 16, rowsPerBand: Int = 8,
                    nParts: Int = MinhashParts,
                    excludeBatch: Option[Long] = None): DataFrame = {
-    SegmentStore.requireGeometry(newToks.sparkSession, path,
-      minhashGeometry(shingleLen, bands, rowsPerBand, nParts))
+    val Seq(bandStore, sigStore) =
+      minhashIndex(newToks.sparkSession, path, shingleLen, bands, rowsPerBand, nParts)
     val numHashes = bands * rowsPerBand
     // the batch's signatures materialize ONCE (1 slim row per doc) and
     // feed BOTH the banded candidate join and the probe-side signature
@@ -396,7 +396,7 @@ object Dedup {
     // collect below and the returned plan — without it the band join
     // (and the corpus-side scan) would execute twice per probe
     val cands = minhashProbeCandsBanded(bandedOfSigs(sigs, bands, rowsPerBand),
-      path, nParts, excludeBatch).localCheckpoint()
+      bandStore, nParts, excludeBatch).localCheckpoint()
     val probeSigs = sigs
       .select(col("doc_id").as("probe_id"), col("sig").as("probe_sig"))
     // signature fetch, pruned to the sparts the candidates hash into
@@ -404,8 +404,7 @@ object Dedup {
     val sparts = cands
       .select(sigPartOf(col("index_id"), nParts).as("spart")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val idxSigs = SegmentStore.minhash(newToks.sparkSession, path).last
-      .scan(sparts, excludeBatch)
+    val idxSigs = sigStore.scan(sparts, excludeBatch)
       .select(col("doc_id").as("index_id"), col("sig").as("index_sig"))
     cands.hint("shuffle_hash").join(idxSigs, Seq("index_id"))
       .join(probeSigs.hint("shuffle_hash"), Seq("probe_id"))
@@ -571,11 +570,11 @@ object Dedup {
   }
 
   /** The pre-round-15 join-based formulation of
-    * [[ngramJaccardPairsOfTokens]] — kept as the A/B contrast for the
-    * shared-pair-build optimization pass (ScaleRehearsal measures
-    * both; DedupSpec pins result equality). Shape: freq-filter join +
-    * pinned shuffled gram self-join, occurrence stream shuffled ~3×,
-    * singleton grams carried all the way into the pair exchange.
+    * [[ngramJaccardPairsOfTokens]], kept as the reference its result
+    * equality is tested against (DedupSpec; nothing else calls it).
+    * Shape: freq-filter join + pinned shuffled gram self-join,
+    * occurrence stream shuffled ~3×, singleton grams carried all the
+    * way into the pair exchange.
     */
   private[graft] def ngramJaccardPairsOfTokensJoined(
       toks: DataFrame, n: Int = 3, threshold: Double = 0.8,
@@ -1394,21 +1393,23 @@ object Dedup {
     * `bands/part=<p>/` (a batch-built index can be incrementally
     * maintained in place by the streaming firewall). Probing never
     * rescans the corpus: incremental image near-dup against a 100 TB
-    * indexed corpus is batch-sized.
+    * indexed corpus is batch-sized. The parameters are the store's
+    * geometry ([[hammingIndex]]).
     */
   def writeHammingIndex(sigs: DataFrame, path: String, maxDist: Int = 3,
                         nParts: Int = HammingParts,
-                        alignCols: Seq[String] = Nil): Unit = {
-    SegmentStore.hamming(sigs.sparkSession, path).build(
+                        alignCols: Seq[String] = Nil): Unit =
+    hammingIndex(sigs.sparkSession, path, maxDist, nParts, alignCols).build(
       hammingIndexRows(sigs, maxDist, nParts, alignCols), col("chunk"), col("piece"))
-    SegmentStore.writeGeometry(sigs.sparkSession, path,
-      hammingGeometry(maxDist, nParts, alignCols))
-  }
 
-  private[graft] def hammingGeometry(maxDist: Int, nParts: Int,
-                                     alignCols: Seq[String]): Map[String, String] =
-    Map("kind" -> "hamming", "maxDist" -> maxDist.toString,
-      "parts" -> nParts.toString, "align" -> alignCols.mkString(","))
+  /** The store of the Hamming index at `path`, with these build
+    * parameters as its geometry.
+    */
+  private[graft] def hammingIndex(spark: SparkSession, path: String, maxDist: Int,
+                                  nParts: Int, alignCols: Seq[String]): SegmentStore =
+    SegmentStore.hamming(spark, path, Map("kind" -> "hamming",
+      "maxDist" -> maxDist.toString, "parts" -> nParts.toString,
+      "align" -> alignCols.mkString(",")))
 
   /** Hamming-≤maxDist matches of a NEW batch of signatures against an
     * indexed corpus: the batch's chunk/piece rows (same derivation as
@@ -1455,8 +1456,6 @@ object Dedup {
                    excludeBatch: Option[Long] = None,
                    alignCols: Seq[String] = Nil,
                    probeParts: Int = 0): DataFrame = {
-    SegmentStore.requireGeometry(sigs.sparkSession, path,
-      hammingGeometry(maxDist, nParts, alignCols))
     val jKeys = alignCols ++ Seq("chunk", "piece")
     val probe0 = hammingBanded(sigs, maxDist, alignCols)
       .select(alignCols.map(col) ++ Seq(col("doc_id").as("probe_id"),
@@ -1468,7 +1467,8 @@ object Dedup {
     val partCounts = probe0.groupBy("part").count().collect()
     val parts = partCounts.map(_.getInt(0)).toSeq
     val bandRows = partCounts.map(_.getLong(1)).sum
-    val idx = SegmentStore.hamming(sigs.sparkSession, path).scan(parts, excludeBatch)
+    val idx = hammingIndex(sigs.sparkSession, path, maxDist, nParts, alignCols)
+      .scan(parts, excludeBatch)
       .select(alignCols.map(col) ++ Seq(col("chunk"), col("piece"),
         col("doc_id").as("index_id"), col("sh").as("__shi")): _*)
     val bcast = probe0.drop("part")

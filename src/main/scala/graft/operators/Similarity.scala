@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.store.SegmentStore
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -625,7 +626,8 @@ object Similarity {
     * The lists are the seed of a [[graft.store.SegmentStore]], so a
     * batch-built index can be seeded and then incrementally
     * maintained in the SAME destDir by the streaming appender
-    * ([[graft.streaming.Incremental.ivfIndexStream]]).
+    * ([[graft.streaming.Incremental.ivfIndexStream]]). The quantizer
+    * checksum is the store's geometry ([[ivfIndex]]).
     */
   def writeIvfIndex(corpus: DataFrame, centroids: DataFrame, path: String,
                     nAssign: Int = 1,
@@ -635,11 +637,15 @@ object Similarity {
     // the geometry checksum (round-17 advisor fix: ivfGeometry used to
     // re-collect the full centroid frame a second time)
     val q = collectQuantizerHier(centroids)
-    graft.store.SegmentStore(corpus.sparkSession, path, "centroid")
+    ivfIndex(corpus.sparkSession, path, ivfGeometryOf(q.ids, q.vecs))
       .build(ivfIndexRowsQ(corpus, q, nAssign, corpusId, vecCol))
-    graft.store.SegmentStore.writeGeometry(corpus.sparkSession, path,
-      ivfGeometryOf(q.ids, q.vecs))
   }
+
+  /** The store of the IVF index at `path`, lists by `centroid`, with
+    * its sidecar inside `path`. */
+  private[graft] def ivfIndex(spark: SparkSession, path: String,
+                              geometry: Map[String, String]): SegmentStore =
+    SegmentStore(spark, path, "centroid", Some(SegmentStore.Geometry(path, geometry)))
 
   /** IVF geometry = WHICH quantizer partitioned the lists: a
     * driver-side checksum of the (id, vector) centroid set. A probe
@@ -696,12 +702,9 @@ object Similarity {
                     queryId: String = "query_id",
                     corpusId: String = "neighbor_id",
                     vecCol: String = "embedding"): DataFrame = {
-    // one collect serves both the geometry check and the assignment
-    // (round-17 advisor fix: the checksum used to re-collect the full
-    // centroid frame on every probe)
+    // one collect serves both the assignment and the geometry check of
+    // the scan (the checksum must not re-collect the centroid frame)
     val q = collectQuantizerHier(centroids)
-    graft.store.SegmentStore.requireGeometry(spark, path,
-      ivfGeometryOf(q.ids, q.vecs))
     // materialized once: the frame feeds BOTH the partition-pruning
     // collect below and the scoring join — without pinning it, a
     // nondeterministic queries frame (sample, unordered limit) could
@@ -716,8 +719,7 @@ object Similarity {
     // that lets them broadcast into the scoring join)
     val probedIds = probes.select(col("__centroid")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val assigned = spark.read.parquet(path)
-      .filter(col("centroid").isin(probedIds: _*))
+    val assigned = ivfIndex(spark, path, ivfGeometryOf(q.ids, q.vecs)).scan(probedIds, None)
       .select(col(corpusId), col(vecCol).as("__cv"), norm(col(vecCol)).as("__cn"),
         col("centroid").cast("long").as("__centroid"))
     scoreProbedLists(assigned, probes, k, dedupe, queryId, corpusId)

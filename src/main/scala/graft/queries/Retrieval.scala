@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.store.SegmentStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -183,7 +184,8 @@ object Retrieval {
     * document-frequency table in the same bucket layout, and the
     * 1-row corpus stats. df/stats are fixed at build time — probing
     * never recomputes corpus statistics, which is what makes the
-    * probe's cost independent of corpus size.
+    * probe's cost independent of corpus size. The bucket count is the
+    * postings' geometry ([[bm25Postings]]).
     */
   /** The index-layout frame behind [[writeBm25Index]]: bucketed
     * posting rows, shared with the streaming appender
@@ -198,15 +200,17 @@ object Retrieval {
                      nBuckets: Int = Bm25Buckets): Unit = {
     // the postings are a SegmentStore seed, so a batch-built index can
     // be incrementally maintained in place by the streaming appender
-    graft.store.SegmentStore(toks.sparkSession, s"$path/postings", "bucket")
+    bm25Postings(toks.sparkSession, path, Some(nBuckets))
       .build(bm25PostingRows(toks, nBuckets), col("term"), col("doc_id"))
     writeBm25Stats(toks.sparkSession, path)
-    graft.store.SegmentStore.writeGeometry(toks.sparkSession, path,
-      bm25Geometry(nBuckets))
   }
 
-  private[graft] def bm25Geometry(nBuckets: Int): Map[String, String] =
-    Map("kind" -> "bm25", "buckets" -> nBuckets.toString)
+  /** The postings store of the BM25 index at `path`, by `bucket`, with
+    * `nBuckets` as its geometry if given. */
+  private[graft] def bm25Postings(spark: SparkSession, path: String,
+                                  nBuckets: Option[Int]): SegmentStore =
+    SegmentStore(spark, s"$path/postings", "bucket", nBuckets.map(n =>
+      SegmentStore.Geometry(path, Map("kind" -> "bm25", "buckets" -> n.toString))))
 
   /** (Re)compute the df table and corpus stats FROM the postings
     * layout — the "segment merge" of this index. The streaming
@@ -219,7 +223,7 @@ object Retrieval {
     * match a query either way.
     */
   def writeBm25Stats(spark: SparkSession, path: String): Unit = {
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = bm25Postings(spark, path, None).read()
       .select("term", "doc_id", "dl", "bucket")
     postings.groupBy("term", "bucket")
       .agg(countDistinct(col("doc_id")).cast("double").as("df"))
@@ -243,7 +247,6 @@ object Retrieval {
   def bm25TopKIndexed(spark: SparkSession, path: String,
                       queryBatch: Seq[(Int, Seq[String])], k: Int = TopK,
                       nBuckets: Int = Bm25Buckets): DataFrame = {
-    graft.store.SegmentStore.requireGeometry(spark, path, bm25Geometry(nBuckets))
     val queryTerms = queryTermsDf(spark, queryBatch)
     val termSet = queryTerms.select("term").distinct()
     // the write side's hash, evaluated on the driver-bounded term
@@ -252,8 +255,7 @@ object Retrieval {
       .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int").as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
 
-    val tf = spark.read.parquet(s"$path/postings")
-      .filter(col("bucket").isin(buckets: _*))
+    val tf = bm25Postings(spark, path, Some(nBuckets)).scan(buckets, None)
       .join(broadcast(termSet), "term")
       .select("term", "doc_id", "dl", "tf")
     val dfc = spark.read.parquet(s"$path/terms")

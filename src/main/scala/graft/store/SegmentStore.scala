@@ -3,6 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** An append-only table stored as segments:
   * `dir/<partCol>=<p>/__batch=<n>/`. Every append-only table in the
@@ -22,13 +23,31 @@ import org.apache.spark.sql.functions._
   *  - A probe leaves out the replaying batch's own segment
   *    ([[scan]]), so a replay reproduces its original decisions.
   *  - Compaction merges every segment below the newest into the seed,
-  *    through a crash-resumable swap ([[compact]], [[recover]]).
+  *    through a crash-resumable swap ([[compact]], [[recover]]). Every
+  *    read ([[read]], [[scan]]) first completes a pending crashed
+  *    swap, so no probe reads a live tree missing the merged segments.
+  *
+  * An index store carries its `geometry`: the build parameters its
+  * probes prune by (parts, band shape, radius, quantizer, eps). A
+  * probe run with other parameters prunes to the wrong partitions and
+  * silently misses matches, the worst failure an exactness-gated index
+  * can have. So [[build]] writes the geometry to the sidecar
+  * `<geometry.dir>/_graft_geometry.json` (underscore-prefixed,
+  * invisible to parquet readers), [[scan]] fails loud on a mismatch,
+  * and [[append]] checks before any rows land, then (re)writes the
+  * sidecar: an appender that skipped the check would append under the
+  * wrong partitioning and relabel the sidecar, so later probes with
+  * its parameters would pass the check while missing every row indexed
+  * before. With no sidecar yet (an index built before sidecars
+  * existed, or an unseeded stream's first append) the caller is
+  * trusted. The stores of one index share one sidecar.
   *
   * Filesystem calls go through `sparkContext.hadoopConfiguration`.
   * Parquet readers see `__batch` as a partition column; probes select
   * explicit columns, so it is invisible to them.
   */
-final case class SegmentStore(spark: SparkSession, dir: String, partCol: String) {
+final case class SegmentStore(spark: SparkSession, dir: String, partCol: String,
+                              geometry: Option[SegmentStore.Geometry] = None) {
   import SegmentStore._
 
   private val root = new Path(dir)
@@ -48,10 +67,13 @@ final case class SegmentStore(spark: SparkSession, dir: String, partCol: String)
 
   /** Replace the whole store with `df` as its seed segment
     * (`__batch=-1`), one file per partition (for [[append]]'s reason),
-    * sorted within each file by `sortBy`.
+    * sorted within each file by `sortBy`, then write the geometry
+    * sidecar.
     */
-  def build(df: DataFrame, sortBy: Column*): Unit =
+  def build(df: DataFrame, sortBy: Column*): Unit = {
     writeSeed(clustered(df, sortBy), dir)
+    geometry.foreach(writeGeometry)
+  }
 
   /** Append `df` as segment `batchId`, replay-safe (see
     * [[SegmentStore.writeBatch]]), one file per partition, sorted
@@ -66,8 +88,10 @@ final case class SegmentStore(spark: SparkSession, dir: String, partCol: String)
     * scale the file count, not the byte count, becomes the probe's
     * wall. One batch-sized shuffle buys one file per partition.
     */
-  def append(df: DataFrame, batchId: Long, sortBy: Column*): Unit =
+  def append(df: DataFrame, batchId: Long, sortBy: Column*): Unit = {
+    geometry.foreach { g => requireGeometry(g); writeGeometry(g) }
     writeBatch(clustered(df, sortBy), dir, batchId, partCol)
+  }
 
   private def clustered(df: DataFrame, sortBy: Seq[Column]): DataFrame = {
     val byPart = df.repartition(col(partCol))
@@ -78,27 +102,38 @@ final case class SegmentStore(spark: SparkSession, dir: String, partCol: String)
     df.withColumn(BatchCol, lit(SeedBatch))
       .write.mode("overwrite").partitionBy(partCol, BatchCol).parquet(to)
 
+  /** Every row of the store, read with `schema` if given (else
+    * inferred), after completing a pending crashed swap.
+    */
+  def read(schema: Option[StructType] = None): DataFrame = {
+    recover()
+    schema.fold(spark.read)(spark.read.schema).parquet(dir)
+  }
+
   /** The store's rows in partitions `parts`, without segment
     * `excludeBatch`: a replayed micro-batch must not see the rows its
     * first attempt appended. Both are partition filters, so the scan
-    * prunes directories and reads no other file.
+    * prunes directories and reads no other file. Fails loud on a
+    * geometry mismatch, even when `parts` is empty.
     */
   def scan(parts: Seq[Any], excludeBatch: Option[Long]): DataFrame = {
-    val pruned = spark.read.parquet(dir).filter(col(partCol).isin(parts: _*))
+    geometry.foreach(requireGeometry)
+    val pruned = read().filter(col(partCol).isin(parts: _*))
     excludeBatch.fold(pruned)(b => pruned.filter(col(BatchCol) =!= b))
   }
 
   /** Complete a pending crashed compaction swap without starting a new
-    * merge. Stream runners call this before each invocation: a
-    * replayed micro-batch probing a live tree that is missing the
-    * merged segments (a crash left them only in the temp tree) could
-    * silently decide differently from its first attempt. A
-    * ready-marked temp tree completes its swap; a partial (unmarked)
-    * one is discarded, since the live tree is untouched in that case.
+    * merge: a probe of a live tree missing the merged segments (a
+    * crash left them only in the temp tree) would silently miss
+    * matches, and a replayed micro-batch would decide differently from
+    * its first attempt. A ready-marked temp tree completes its swap; a
+    * partial (unmarked) one is discarded, since the live tree is
+    * untouched in that case. The JVM-wide lock is taken only when a
+    * temp tree exists, so a read never waits on another store's merge.
     * Returns true iff a swap completed.
     */
-  def recover(): Boolean = Maintenance.synchronized {
-    if (!fs.exists(tmp)) false
+  def recover(): Boolean = fs.exists(tmp) && Maintenance.synchronized {
+    if (!fs.exists(tmp)) false // completed meanwhile by another thread
     else if (fs.exists(new Path(tmp, SwapReadyMarker))) {
       if (!fs.exists(root)) fs.mkdirs(root) // the swap can recreate partitions
       completeSwap()
@@ -229,6 +264,35 @@ final case class SegmentStore(spark: SparkSession, dir: String, partCol: String)
     fs.delete(tmp, true)
   }
 
+  private def writeGeometry(g: Geometry): Unit = {
+    // a real JSON writer (Jackson, on the Spark classpath): a value
+    // with a quote or comma (a Hamming alignCols name, say) must
+    // round-trip exactly, or the check can spuriously fail or, worse,
+    // silently pass a real mismatch
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.createObjectNode()
+    g.params.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
+    val out = fs.create(g.path, true)
+    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private def requireGeometry(g: Geometry): Unit =
+    if (fs.exists(g.path)) {
+      val in = fs.open(g.path)
+      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      g.params.foreach { case (k, v) =>
+        val stored = Option(node.get(k)).map(_.asText())
+        require(stored.forall(_ == v),
+          s"index at ${g.dir} was built with $k=${stored.getOrElse("?")} but probed/" +
+            s"appended with $k=$v — a geometry mismatch prunes to (or appends " +
+            "under) the wrong partitions and silently misses matches; use the " +
+            "build's parameters or rebuild")
+      }
+    }
+
   private def partitions(tree: Path): Seq[Path] =
     fs.listStatus(tree).filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith(s"$partCol=")).toSeq
@@ -267,75 +331,34 @@ object SegmentStore {
       .partitionBy(partCols :+ BatchCol: _*).parquet(dir)
 
   /** The two stores of the MinHash band index at `path`: slim band
-    * rows by `part`, per-doc signatures by `spart`.
+    * rows by `part`, per-doc signatures by `spart`. A non-empty
+    * `geometry` is kept in the sidecar at `path`.
     */
-  def minhash(spark: SparkSession, path: String): Seq[SegmentStore] =
-    Seq(SegmentStore(spark, s"$path/bands", "part"), SegmentStore(spark, s"$path/sigs", "spart"))
+  def minhash(spark: SparkSession, path: String,
+              geometry: Map[String, String] = Map.empty): Seq[SegmentStore] = {
+    val g = sidecar(path, geometry)
+    Seq(SegmentStore(spark, s"$path/bands", "part", g),
+      SegmentStore(spark, s"$path/sigs", "spart", g))
+  }
 
-  /** The one store of the Hamming index at `path`: banded rows by `part`. */
-  def hamming(spark: SparkSession, path: String): SegmentStore =
-    SegmentStore(spark, s"$path/bands", "part")
+  /** The one store of the Hamming index at `path`: banded rows by
+    * `part`. A non-empty `geometry` is kept in the sidecar at `path`.
+    */
+  def hamming(spark: SparkSession, path: String,
+              geometry: Map[String, String] = Map.empty): SegmentStore =
+    SegmentStore(spark, s"$path/bands", "part", sidecar(path, geometry))
+
+  private def sidecar(path: String, geometry: Map[String, String]): Option[Geometry] =
+    Option.when(geometry.nonEmpty)(Geometry(path, geometry))
 
   /** [[SegmentStore.compact]] over both stores of the MinHash index. */
   def compactMinhashIndex(spark: SparkSession, path: String): Int =
     minhash(spark, path).map(_.compact()).max
 
-  // ---- index-geometry sidecar -------------------------------------
-  // Every on-disk index prunes probes by partitions derived from its
-  // BUILD parameters (parts, band shape, radius, quantizer). A probe
-  // run with different parameters prunes to the WRONG partitions and
-  // silently misses matches, the worst failure an exactness-gated
-  // index can have. The build writes its geometry to
-  // `<path>/_graft_geometry.json` (underscore-prefixed, invisible to
-  // parquet readers) and probes fail loud on any mismatch. Indexes
-  // built before the sidecar existed have no file; probes then trust
-  // the caller.
-
-  private def geometryPath(path: String): Path = new Path(s"$path/_graft_geometry.json")
-
-  def writeGeometry(spark: SparkSession, path: String, geometry: Map[String, String]): Unit = {
-    val p = geometryPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a real JSON writer (Jackson, on the Spark classpath): a value
-    // with a quote or comma (a Hamming alignCols name, say) must
-    // round-trip exactly, or the check can spuriously fail or, worse,
-    // silently pass a real mismatch
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    geometry.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val out = fs.create(p, true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  def requireGeometry(spark: SparkSession, path: String, expected: Map[String, String]): Unit = {
-    val p = geometryPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      expected.foreach { case (k, v) =>
-        val stored = Option(node.get(k)).map(_.asText())
-        require(stored.forall(_ == v),
-          s"index at $path was built with $k=${stored.getOrElse("?")} but probed/" +
-            s"appended with $k=$v — a geometry mismatch prunes to (or appends " +
-            "under) the wrong partitions and silently misses matches; use the " +
-            "build's parameters or rebuild")
-      }
-    }
-  }
-
-  /** Appender-side declaration: validate against any existing sidecar
-    * FIRST, then (re)write it. An appender that skipped the check
-    * would append rows under the wrong partitioning AND rebrand the
-    * sidecar, so later probes with the new parameters would pass the
-    * check while silently missing every previously indexed row. An
-    * unseeded destination (no sidecar yet) declares freely.
+  /** An index's build parameters and the directory of its sidecar,
+    * `<dir>/_graft_geometry.json` (see the class doc).
     */
-  def declareGeometry(spark: SparkSession, path: String, geometry: Map[String, String]): Unit = {
-    requireGeometry(spark, path, geometry)
-    writeGeometry(spark, path, geometry)
+  final case class Geometry(dir: String, params: Map[String, String]) {
+    private[SegmentStore] def path: Path = new Path(s"$dir/_graft_geometry.json")
   }
 }

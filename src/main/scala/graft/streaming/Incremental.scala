@@ -34,8 +34,13 @@ import org.apache.spark.storage.StorageLevel
   *    [[certifiedTopKStream]] document their own sink layouts.
   *  - recovery before start: any crashed compaction swap of the
   *    stream's index stores is completed before the stream starts
-  *    ([[SegmentStore.recover]]) — a replayed batch must never probe
-  *    a live tree missing merged segments.
+  *    ([[SegmentStore.recover]]), as every probe's read does too — a
+  *    replayed batch must never probe a live tree missing merged
+  *    segments.
+  *  - geometry: each index store carries its build parameters, so its
+  *    appends declare and its probes check them in the store itself
+  *    (see [[SegmentStore]]); a mis-parameterized stream fails before
+  *    any of its rows land.
   *  - compaction after: once the stream ends, at its quiescent point,
   *    each store is segment-merged when its segment count reaches
   *    `spark.graft.index.autoCompactSegments`
@@ -593,17 +598,10 @@ object Incremental {
   private def appendToMinhashIndex(toks: DataFrame, indexDir: String,
                                    batchId: Long, shingleLen: Int,
                                    bands: Int, rowsPerBand: Int): Unit = {
-    // geometry sidecar, declared BEFORE any rows land (round 17): an
-    // unseeded firewall CREATES the index (declares freely, the
-    // writeMinhashIndex parameters), but a mis-parameterized appender
-    // against an EXISTING index must fail loud here — appending under
-    // the wrong partitioning and relabeling the sidecar would make
-    // every later probe silently miss the previously-indexed rows
-    SegmentStore.declareGeometry(toks.sparkSession, indexDir,
-      Dedup.minhashGeometry(shingleLen, bands, rowsPerBand, Dedup.MinhashParts))
     val (bandRows, sigRows) = Dedup.minhashIndexFrames(
       toks, shingleLen, bands, rowsPerBand, Dedup.MinhashParts)
-    val Seq(bandStore, sigStore) = SegmentStore.minhash(toks.sparkSession, indexDir)
+    val Seq(bandStore, sigStore) = Dedup.minhashIndex(toks.sparkSession, indexDir,
+      shingleLen, bands, rowsPerBand, Dedup.MinhashParts)
     bandStore.append(bandRows, batchId, col("band"), col("bucket"))
     sigStore.append(sigRows, batchId, col("doc_id"))
   }
@@ -616,14 +614,10 @@ object Incremental {
     */
   private def appendToHammingIndex(sigs: DataFrame, indexDir: String,
                                    batchId: Long, maxDist: Int,
-                                   alignCols: Seq[String]): Unit = {
-    // declared BEFORE the rows land — the appendToMinhashIndex rule
-    SegmentStore.declareGeometry(sigs.sparkSession, indexDir,
-      Dedup.hammingGeometry(maxDist, Dedup.HammingParts, alignCols))
-    SegmentStore.hamming(sigs.sparkSession, indexDir).append(
-      Dedup.hammingIndexRows(sigs, maxDist, Dedup.HammingParts, alignCols),
-      batchId, col("chunk"), col("piece"))
-  }
+                                   alignCols: Seq[String]): Unit =
+    Dedup.hammingIndex(sigs.sparkSession, indexDir, maxDist, Dedup.HammingParts, alignCols)
+      .append(Dedup.hammingIndexRows(sigs, maxDist, Dedup.HammingParts, alignCols),
+        batchId, col("chunk"), col("piece"))
 
   /** The MinHash firewall step on a tokenized micro-batch
     * (doc_id, __toks, …), shared by [[minhashDedupStream]] and
@@ -750,42 +744,27 @@ object Incremental {
     // driver list bounded by nCentroids
     val clusters = survivors.select(col("cluster")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val keepers = SegmentStore(s, keepersDir, "centroid")
-    val keepersExist = keepers.exists
+    val keepers = Similarity.ivfIndex(s, keepersDir, geometry)
+    // an existing index is scanned even when no cluster is probed: the
+    // scan's geometry check fails a mis-parameterized stream on any batch
     val keeperDup =
-      if (!keepersExist || clusters.isEmpty)
-        survivors.limit(0).select(col("vec_id"))
-      else {
-        // geometry check before the probe: a different quantizer
-        // prunes to clusters the index never populated — fail loud
-        // instead of silently admitting duplicates
-        SegmentStore.requireGeometry(s, keepersDir, geometry)
-        keepers.scan(clusters, Some(batchId))
-          .select(col("centroid").cast("long").as("cluster"),
-            col(vecCol).as("__kv"))
-          .join(broadcast(survivors), Seq("cluster"))
-          // round-6 comparison — the same quantization the batch
-          // pair rule applies (Similarity.cosinePairsBlocked)
-          .filter(round(Similarity.cosine(col("__v"), col("__kv")), 6) >= eps)
-          .select(col("vec_id")).distinct()
-      }
+      if (!keepers.exists) survivors.limit(0).select(col("vec_id"))
+      else keepers.scan(clusters, Some(batchId))
+        .select(col("centroid").cast("long").as("cluster"),
+          col(vecCol).as("__kv"))
+        .join(broadcast(survivors), Seq("cluster"))
+        // round-6 comparison — the same quantization the batch
+        // pair rule applies (Similarity.cosinePairsBlocked)
+        .filter(round(Similarity.cosine(col("__v"), col("__kv")), 6) >= eps)
+        .select(col("vec_id")).distinct()
     val admitted = survivors.join(keeperDup, Seq("vec_id"), "left_anti")
       .localCheckpoint() // micro-batch-sized; read twice below
-    // skip BOTH the declare and the write when the batch admits no
-    // keepers (round 18): an unconditional declare on an empty batch
-    // — e.g. an empty AvailableNow run against an unseeded stream —
-    // would create a keepersDir holding only the geometry sidecar.
-    // Dynamic overwrite touches no partitions on empty data anyway.
-    if (!admitted.isEmpty) {
-      // declare-before-append: validates again (cheap, one FS read)
-      // then stamps the quantizer checksum + eps the keepers now carry
-      SegmentStore.declareGeometry(s, keepersDir, geometry)
+    // no append when the batch admits no keepers: its declaration
+    // would create a keepersDir holding only the geometry sidecar
+    // (an empty AvailableNow run against an unseeded stream, say)
+    if (!admitted.isEmpty)
       keepers.append(admitted.select(col("vec_id").as(corpusId), col("__v").as(vecCol),
         col("cluster").as("centroid")), batchId)
-    } else if (keepersExist)
-      // validate-only: a mis-parameterized stream must still fail
-      // loud even when its batch happens to admit nothing
-      SegmentStore.requireGeometry(s, keepersDir, geometry)
     admitted
   }
 
@@ -871,7 +850,8 @@ object Incremental {
     runAvailableNow(spark, srcDir, EmbeddedDocsSchema, checkpointDir, stores) {
       (batch, batchId) =>
         val s = batch.sparkSession
-        val exactStore = SegmentStore(s, exactStatePath, "part")
+        val exactStore = SegmentStore(s, exactStatePath, "part", Some(SegmentStore.Geometry(
+          exactStatePath, Map("kind" -> "exact_fp", "parts" -> ExactParts.toString))))
         // pin the micro-batch once: the accounting count and the
         // stage chain consume it several times, and an unbuffered
         // batch frame re-reads the source files per consumer (the ×10
@@ -893,11 +873,8 @@ object Incremental {
           .withColumn("__fp", TextFns.fingerprint(col("text")))
           .withColumn("__part", pmod(col("__fp"), lit(ExactParts)).cast("int"))
           .localCheckpoint()
-        val seeded = exactStore.exists
-        SegmentStore.declareGeometry(s, exactStatePath,
-          Map("kind" -> "exact_fp", "parts" -> ExactParts.toString))
         val exactKept =
-          if (!seeded) within // already pinned above
+          if (!exactStore.exists) within // already pinned above
           else {
             // reads the pinned `within`, so the prune list costs one
             // scan of the materialized frame, not a pipeline re-run
@@ -1196,14 +1173,8 @@ object Incremental {
                       checkpointDir: String,
                       nBuckets: Int = graft.queries.Retrieval.Bm25Buckets): Unit =
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir,
-        Seq(SegmentStore(spark, s"$indexDir/postings", "bucket"))) { (batch, batchId) =>
-      // declare-before-append (round 17): an appender running with a
-      // different nBuckets against an existing index would bucket new
-      // postings under the wrong partitioning AND rebrand the sidecar
-      // — fail loud here, before any rows land
-      SegmentStore.declareGeometry(batch.sparkSession, indexDir,
-        graft.queries.Retrieval.bm25Geometry(nBuckets))
-      SegmentStore(batch.sparkSession, s"$indexDir/postings", "bucket").append(
+        Seq(graft.queries.Retrieval.bm25Postings(spark, indexDir, None))) { (batch, batchId) =>
+      graft.queries.Retrieval.bm25Postings(batch.sparkSession, indexDir, Some(nBuckets)).append(
         graft.queries.Retrieval.bm25PostingRows(
           batch.select(col("doc_id"), TextFns.tokens(col("text")).as("__toks")), nBuckets),
         batchId, col("term"), col("doc_id"))
@@ -1238,18 +1209,13 @@ object Incremental {
     // driver job, and (for a two-level frame) the same approximate
     // assignment as the batch builder
     val cq = Similarity.collectQuantizerHier(centroids)
-    // geometry sidecar computed once, from the SAME collected arrays
-    // (no second centroid collect — the round-17 advisor fix)
+    // geometry computed once, from the SAME collected arrays (no
+    // second centroid collect); a re-trained quantizer re-keys the
+    // layout, which is a rebuild (writeIvfIndex), so the append fails
     val geometry = Similarity.ivfGeometryOf(cq.ids, cq.vecs)
     runAvailableNow(spark, srcDir, vectorSchema(corpusId, vecCol), checkpointDir,
         Seq(SegmentStore(spark, destDir, "centroid"))) { (batch, batchId) =>
-      // declare-before-append (round 17): a re-trained/different
-      // quantizer re-keys the layout — that is a REBUILD
-      // (writeIvfIndex), never maintenance; appending under it and
-      // rebranding the sidecar would make every later probe pass the
-      // geometry check while missing the previously-indexed vectors
-      SegmentStore.declareGeometry(batch.sparkSession, destDir, geometry)
-      SegmentStore(batch.sparkSession, destDir, "centroid").append(
+      Similarity.ivfIndex(batch.sparkSession, destDir, geometry).append(
         Similarity.ivfIndexRowsQ(batch, cq, nAssign, corpusId, vecCol), batchId)
     }
   }

@@ -632,19 +632,25 @@ class DedupSpec extends SparkSpec {
     // spuriously failed or silently passed on these (round-16 advisor
     // finding; the writer/parser are real-JSON now)
     val geo = Map("kind" -> "hamming", "align" -> """a"b,c\d""", "parts" -> "64")
-    SegmentStore.writeGeometry(ss, dir, geo)
-    SegmentStore.requireGeometry(ss, dir, geo) // exact round-trip
+    // a store with its sidecar at `dir`: build writes the sidecar,
+    // scan checks it, append checks it and then rewrites it
+    def store(g: Map[String, String]) =
+      SegmentStore(ss, s"$dir/rows", "part", Some(SegmentStore.Geometry(dir, g)))
+    val rows = ss.range(1).selectExpr("id", "0 AS part")
+    store(geo).build(rows)
+    store(geo).scan(Nil, None) // exact round-trip
     val e = intercept[IllegalArgumentException](
-      SegmentStore.requireGeometry(ss, dir, geo.updated("align", """a"b""")))
+      store(geo.updated("align", """a"b""")).scan(Nil, None))
     assert(e.getMessage.contains("align"))
-    // declare = require-then-write: a matching declaration is
-    // idempotent; a mismatched one throws BEFORE rebranding the
-    // sidecar (the round-17 streaming-appender contract)
-    SegmentStore.declareGeometry(ss, dir, geo)
+    // an append's declaration is require-then-write: a matching one
+    // is idempotent; a mismatched one throws BEFORE rebranding the
+    // sidecar or landing a row (the streaming-appender contract)
+    store(geo).append(rows, 0)
     val e2 = intercept[IllegalArgumentException](
-      SegmentStore.declareGeometry(ss, dir, geo.updated("parts", "32")))
+      store(geo.updated("parts", "32")).append(rows, 1))
     assert(e2.getMessage.contains("parts"))
-    SegmentStore.requireGeometry(ss, dir, geo) // sidecar survived the failed declare
+    store(geo).scan(Nil, None) // sidecar survived the failed declare
+    assert(store(geo).scan(Seq(0), None).count() == 2)
   }
 
   test("entropy guard: uncapped pigeonhole fails loud on fingerprint collapse, silent on healthy entropy (round 18)") {

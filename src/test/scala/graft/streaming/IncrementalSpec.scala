@@ -12,6 +12,23 @@ class IncrementalSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** A 9×8 single-channel IMG0 whose dHash is EXACTLY fp: each row
+    * walks ±8 from 120, so gray(x+1) > gray(x) iff bit y·8+x is set —
+    * fingerprints are directly programmable, near-dups are bit flips.
+    */
+  private def imgOf(fp: Long): Array[Byte] = {
+    val px = new Array[Byte](72)
+    for (y <- 0 until 8) {
+      var v = 120
+      px(y * 9) = v.toByte
+      for (x <- 0 until 8) {
+        v = if (((fp >>> (y * 8 + x)) & 1L) == 1L) v + 8 else v - 8
+        px(y * 9 + x + 1) = v.toByte
+      }
+    }
+    graft.operators.Media.ImageMagic ++ Array[Byte](0, 9, 0, 8, 1) ++ px
+  }
+
   test("ingestIncrement consumes each file exactly once across runs") {
     val src = Files.createTempDirectory("inc_src").toString
     val dest = Files.createTempDirectory("inc_dest").toString + "/t"
@@ -1082,21 +1099,6 @@ class IncrementalSpec extends SparkSpec {
     val dest = base + "/kept"; val ck = base + "/ck"
     val maxDist = 3
 
-    // a 9×8 single-channel IMG0 whose dHash is EXACTLY fp: each row
-    // walks ±8 from 120, so gray(x+1) > gray(x) iff bit y·8+x is set —
-    // fingerprints are directly programmable, near-dups are bit flips
-    def imgOf(fp: Long): Array[Byte] = {
-      val px = new Array[Byte](72)
-      for (y <- 0 until 8) {
-        var v = 120
-        px(y * 9) = v.toByte
-        for (x <- 0 until 8) {
-          v = if (((fp >>> (y * 8 + x)) & 1L) == 1L) v + 8 else v - 8
-          px(y * 9 + x + 1) = v.toByte
-        }
-      }
-      Media.ImageMagic ++ Array[Byte](0, 9, 0, 8, 1) ++ px
-    }
     val f1 = 0x0123456789abcdefL
     val farA = 0x5555aaaa3333cccdL
     val farB = 0x9966cc33aa55ff00L
@@ -1252,20 +1254,6 @@ class IncrementalSpec extends SparkSpec {
     val src = base + "/src"; val idx = base + "/idx"
     val dest = base + "/kept"; val ck = base + "/ck"
 
-    // programmable 9x8x1 frame — dHash is exactly fp (the imgOf idiom
-    // of the image firewall spec)
-    def imgOf(fp: Long): Array[Byte] = {
-      val px = new Array[Byte](72)
-      for (y <- 0 until 8) {
-        var v = 120
-        px(y * 9) = v.toByte
-        for (x <- 0 until 8) {
-          v = if (((fp >>> (y * 8 + x)) & 1L) == 1L) v + 8 else v - 8
-          px(y * 9 + x + 1) = v.toByte
-        }
-      }
-      Media.ImageMagic ++ Array[Byte](0, 9, 0, 8, 1) ++ px
-    }
     // a 6-frame VID0 whose SAMPLED frames (0, 2, 4 at stride 2) carry
     // the three given fingerprints; odd frames carry filler
     def vidOf(fp0: Long, fp2: Long, fp4: Long): Array[Byte] = {
@@ -2366,5 +2354,101 @@ class IncrementalSpec extends SparkSpec {
       curate(centsB))
     assert(e3.getCause.getMessage.contains("quantizer"),
       s"composed mismatch must name the quantizer checksum: ${e3.getCause.getMessage}")
+  }
+
+  test("compaction crash window: every index probe reads the merged rows with no rerun of the compaction or the stream") {
+    val ss = spark; import ss.implicits._
+    import graft.operators.{Dedup, Similarity}
+    import graft.queries.Retrieval
+    import org.apache.spark.sql.DataFrame
+    val base = Files.createTempDirectory("probe_crash").toString
+    val croot = CrashFs.root(ss, base)
+    val fs = new org.apache.hadoop.fs.Path(croot)
+      .getFileSystem(ss.sparkContext.hadoopConfiguration)
+    def toToks(docs: DataFrame) =
+      docs.select(col("doc_id"), graft.functions.TextFns.tokens(col("text")).as("__toks"))
+    // each index: a batch build (segment -1), then two stream runs
+    // (segments 0 and 1), so compaction merges -1 and 0 and keeps 1
+    def twoRuns(name: String, waves: Seq[DataFrame])(run: (String, String) => Unit): Unit =
+      waves.foreach { w =>
+        w.write.mode("append").parquet(s"$base/$name-src")
+        run(s"$base/$name-src", s"$base/$name-ck")
+      }
+
+    // MinHash: bands and sigs
+    val mh = croot + "/mh"
+    val body = (1 to 24).map(k => s"word$k").mkString(" ")
+    def mkDocs(ids: Range) = ids.map { i =>
+      (i.toLong, s"family ${i % 4} $body tail $i")
+    }.toDF("doc_id", "text")
+    Dedup.writeMinhashIndex(toToks(mkDocs(1 to 20)), mh)
+    twoRuns("mh", Seq(mkDocs(21 to 30), mkDocs(31 to 40)))(
+      Incremental.minhashIndexStream(ss, _, mh, _))
+    def mhProbe() = Dedup.minhashProbe(toToks(mkDocs(41 to 45)), mh)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // Hamming: a signature seed, then images admitted by the firewall
+    val hm = croot + "/hm"
+    val rnd = new scala.util.Random(11)
+    val fps = (1L to 12L).map(_ -> rnd.nextLong()).toMap
+    Dedup.writeHammingIndex(fps.toSeq.filter(_._1 <= 4L).toDF("doc_id", "sh"), hm)
+    twoRuns("hm", Seq(5L to 8L, 9L to 12L).map(ids =>
+      ids.map(i => (i, imgOf(fps(i)))).toDF("id", "payload")))(
+      Incremental.phashDedupStream(ss, _, hm, s"$base/hm-kept", _))
+    val hmQueries = fps.toSeq.map { case (i, fp) => (i + 100L, fp ^ 1L) }.toDF("doc_id", "sh")
+    def hmProbe() = Dedup.hammingProbe(hmQueries, hm)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+    // BM25: postings
+    val bm = croot + "/bm"
+    def mkB(ids: Range) = ids.map { i =>
+      (i.toLong, s"alpha beta ${if (i % 3 == 0) "gamma gamma" else "delta"} w$i")
+    }.toDF("doc_id", "text")
+    Retrieval.writeBm25Index(toToks(mkB(1 to 20)), bm)
+    twoRuns("bm", Seq(mkB(21 to 30), mkB(31 to 40)))(
+      Incremental.bm25IndexStream(ss, _, bm, _))
+    val bmQueries = Seq(1 -> Seq("gamma"), 2 -> Seq("alpha", "delta"))
+    def bmProbe() = Retrieval.bm25TopKIndexed(ss, bm, bmQueries, k = 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+    // IVF: lists
+    val ivf = croot + "/ivf"
+    val vrnd = new scala.util.Random(13)
+    def mkVecs(ids: Range) = ids.map { i =>
+      (i.toLong, Array.tabulate(4)(_ => (vrnd.nextFloat() - 0.5f) * 2f))
+    }
+    val waves = Seq(mkVecs(1 to 20), mkVecs(21 to 30), mkVecs(31 to 40))
+    val cents = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)),
+      (2L, Array(0f, 0f, 1f, 0f)), (3L, Array(0f, 0f, 0f, 1f)))
+      .toDF("centroid_id", "centroid")
+    Similarity.writeIvfIndex(waves.head.toDF("neighbor_id", "embedding"), cents, ivf)
+    twoRuns("ivf", waves.tail.map(_.toDF("neighbor_id", "embedding")))(
+      Incremental.ivfIndexStream(ss, _, cents, ivf, _))
+    val ivfQueries = waves.flatten.filter(_._1 % 5 == 0).toDF("query_id", "embedding")
+    def ivfProbe() = Similarity.probeIvfIndex(ss, ivf, ivfQueries, cents, k = 3, nProbe = 2)
+      .select(col("query_id"), col("neighbor_id"), col("rank"))
+      .as[(Long, Long, Int)].collect().toSet
+
+    val probes = Seq[(String, () => Set[_ <: Product])](
+      "minhash" -> (() => mhProbe()), "hamming" -> (() => hmProbe()),
+      "bm25" -> (() => bmProbe()), "ivf" -> (() => ivfProbe()))
+    val recorded = probes.map { case (name, probe) => name -> probe() }.toMap
+    recorded.foreach { case (name, rows) => assert(rows.nonEmpty, s"$name fixture probes nothing") }
+
+    // crash every store's compaction after its deletes: the live tree
+    // lacks the merged seed, which only the temp tree holds
+    Seq(s"$mh/bands" -> "part", s"$mh/sigs" -> "spart", s"$hm/bands" -> "part",
+      s"$bm/postings" -> "bucket", ivf -> "centroid").foreach { case (dir, partCol) =>
+      CrashFs.armAfter("_DELETES_DONE")
+      try intercept[java.io.IOException](SegmentStore(ss, dir, partCol).compact())
+      finally CrashFs.disarm()
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"${dir}__compacting/_DELETES_DONE")),
+        s"the crash of $dir must land in the window after its deletes")
+    }
+    val missed = probes.collect {
+      case (name, probe) if scala.util.Try(probe()).toOption != Some(recorded(name)) => name
+    }
+    assert(missed.isEmpty,
+      s"direct probes that lost the merged segments: ${missed.mkString(", ")}")
   }
 }
