@@ -25,6 +25,15 @@ import scala.jdk.CollectionConverters._
   *    query, not to whatever Map iteration order put in front of it.
   */
 object Bench {
+  /** The session's per-job floor: mean ms of 50 one-task jobs. */
+  def probeJobOverheadMs(spark: org.apache.spark.sql.SparkSession): Double = {
+    spark.sparkContext.parallelize(Seq(1), 1).count() // warm
+    val t0 = System.nanoTime()
+    var i = 0
+    while (i < 50) { spark.sparkContext.parallelize(Seq(1), 1).count(); i += 1 }
+    math.round((System.nanoTime() - t0) / 1e6 / 50 * 100) / 100.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -118,13 +127,7 @@ object Bench {
     // the cheapest queries. 50 one-task jobs quantify that floor;
     // compare this field across rounds before reading any sub-second
     // query as a regression.
-    val jobOverheadMs = {
-      spark.sparkContext.parallelize(Seq(1), 1).count() // warm
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 50) { spark.sparkContext.parallelize(Seq(1), 1).count(); i += 1 }
-      math.round((System.nanoTime() - t0) / 1e6 / 50 * 100) / 100.0
-    }
+    val jobOverheadMs = probeJobOverheadMs(spark)
     // Field order matters: the driver keeps only the TAIL of this
     // line, so the STEADY per-query map (the official numbers) goes
     // LAST and the cold map first — truncation then eats cold detail,

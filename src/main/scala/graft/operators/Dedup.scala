@@ -250,12 +250,35 @@ object Dedup {
       2 * partsCovered >= nParts &&
         bandRows >= minRows && bandRows * rowBytes <= maxBytes
     }
-    def logDecision(kind: String, path: String, partsCovered: Int,
-                    nParts: Int, bandRows: Long): Unit =
+    private def logDecision(kind: String, path: String, partsCovered: Int,
+                            nParts: Int, bandRows: Long): Unit =
       log.info(s"$kind probe at $path: batch covers $partsCovered/$nParts index " +
         s"partitions with $bandRows band rows — partition pruning is degenerate; " +
         "switching to the broadcast-batch sweep join (index side scans in place, " +
         "zero corpus-side exchange)")
+
+    /** Join `probe` (band rows with their index partition `part`) to
+      * `store`'s pruned scan, projected by `index`, on `keys`. ONE
+      * bounded job (≤ nParts rows) yields both the prune list and the
+      * band-row count. A trickle batch keeps the pinned shuffle join
+      * (the corpus-sized index side must never broadcast), with
+      * `shuffleSide` applied to the probe; a corpus-scale batch
+      * broadcasts into the index scan, which then never shuffles.
+      */
+    def join(kind: String, probe: DataFrame, store: SegmentStore, nParts: Int,
+             excludeBatch: Option[Long], keys: Seq[String],
+             shuffleSide: DataFrame => DataFrame = identity)(
+             index: DataFrame => DataFrame): DataFrame = {
+      val partCounts = probe.groupBy("part").count().collect()
+      val parts = partCounts.map(_.getInt(0)).toSeq
+      val bandRows = partCounts.map(_.getLong(1)).sum
+      val idx = index(store.scan(parts, excludeBatch))
+      val bcast = probe.drop("part")
+      if (sweeps(probe.sparkSession, parts.length, nParts, bandRows, rowBytesOf(bcast))) {
+        logDecision(kind, store.dir, parts.length, nParts, bandRows)
+        idx.join(broadcast(bcast), keys)
+      } else shuffleSide(probe).hint("shuffle_hash").join(idx, keys)
+    }
   }
 
   private def partOf(nParts: Int): Column =
@@ -318,21 +341,6 @@ object Dedup {
       "shingleLen" -> shingleLen.toString, "bands" -> bands.toString,
       "rowsPerBand" -> rowsPerBand.toString, "parts" -> nParts.toString))
 
-  /** Near-duplicate candidates of a NEW batch against an indexed
-    * corpus: the batch's banded signatures (same derivation as the
-    * index — [[bandedSignatures]]) equi-join the slim band rows on
-    * (band, bucket), both scans restricted up front to the ≤ nParts
-    * partitions the batch hashes into; the surviving candidate pairs
-    * then fetch the index side's stored signatures (a second
-    * candidate-bounded join). Returns `(probe_id, index_id,
-    * est_jaccard)` — est_jaccard from the same signature-agreement
-    * fold as the batch sweep, bit-identical (DedupSpec asserts probe
-    * ≡ sweep). Docs already in the index probe as their own trivial
-    * match; `probe_id != index_id` filtering is left to the caller.
-    * Corpus-scale batches that degenerate the partition prune switch
-    * the candidate join to the broadcast-batch sweep automatically —
-    * see [[ProbeSweep]].
-    */
   /** The probe's candidate stage, un-checkpointed — the (band,
     * bucket)-join of the batch's slim band rows against the pruned
     * index band scan. Split out so DedupSpec can plan-assert the
@@ -354,32 +362,28 @@ object Dedup {
     val probe = banded
       .select(col("doc_id").as("probe_id"), col("band"), col("bucket"),
         partOf(nParts).as("part"))
-    // ONE bounded job (≤ nParts rows — see [[MinhashParts]]) yields
-    // BOTH the partition-prune list and the batch's band-row count,
-    // the [[ProbeSweep]] strategy discriminator
-    val partCounts = probe.groupBy("part").count().collect()
-    val parts = partCounts.map(_.getInt(0)).toSeq
-    val bandRows = partCounts.map(_.getLong(1)).sum
-    val idxBands = bandStore.scan(parts, excludeBatch)
-      .select(col("band"), col("bucket"), col("doc_id").as("index_id"))
-    val bcast = probe.drop("part")
-    val joined =
-      if (ProbeSweep.sweeps(banded.sparkSession, parts.length, nParts,
-        bandRows, ProbeSweep.rowBytesOf(bcast))) {
-        // corpus-scale batch: pruning degenerated — broadcast the
-        // batch into the index scan so the corpus side never shuffles
-        ProbeSweep.logDecision("minhash", bandStore.dir, parts.length, nParts, bandRows)
-        idxBands.join(broadcast(bcast), Seq("band", "bucket"))
-      } else
-        // trickle batch — the historical plan: pinned shuffle join,
-        // because the index side is corpus-sized and must never
-        // broadcast; the probe side may be small, but correctness of
-        // the pin does not depend on it
-        probe.hint("shuffle_hash").join(idxBands, Seq("band", "bucket"))
-    joined.select(col("probe_id"), col("index_id"))
+    ProbeSweep.join("minhash", probe, bandStore, nParts, excludeBatch,
+        Seq("band", "bucket")) {
+      _.select(col("band"), col("bucket"), col("doc_id").as("index_id"))
+    }.select(col("probe_id"), col("index_id"))
       .dropDuplicates("probe_id", "index_id")
   }
 
+  /** Near-duplicate candidates of a NEW batch against an indexed
+    * corpus: the batch's banded signatures (same derivation as the
+    * index — [[bandedSignatures]]) equi-join the slim band rows on
+    * (band, bucket), both scans restricted up front to the ≤ nParts
+    * partitions the batch hashes into; the surviving candidate pairs
+    * then fetch the index side's stored signatures (a second
+    * candidate-bounded join). Returns `(probe_id, index_id,
+    * est_jaccard)` — est_jaccard from the same signature-agreement
+    * fold as the batch sweep, bit-identical (DedupSpec asserts probe
+    * ≡ sweep). Docs already in the index probe as their own trivial
+    * match; `probe_id != index_id` filtering is left to the caller.
+    * Corpus-scale batches that degenerate the partition prune switch
+    * the candidate join to the broadcast-batch sweep automatically —
+    * see [[ProbeSweep]].
+    */
   def minhashProbe(newToks: DataFrame, path: String, shingleLen: Int = 3,
                    bands: Int = 16, rowsPerBand: Int = 8,
                    nParts: Int = MinhashParts,
@@ -1461,34 +1465,13 @@ object Dedup {
       .select(alignCols.map(col) ++ Seq(col("doc_id").as("probe_id"),
         col("sh").as("__shp"), col("chunk"), col("piece"),
         hpartOf(nParts).as("part")): _*)
-    // ONE bounded job (≤ nParts rows — see [[HammingParts]]) yields
-    // BOTH the partition-prune list and the batch's banded-row count,
-    // the [[ProbeSweep]] strategy discriminator
-    val partCounts = probe0.groupBy("part").count().collect()
-    val parts = partCounts.map(_.getInt(0)).toSeq
-    val bandRows = partCounts.map(_.getLong(1)).sum
-    val idx = hammingIndex(sigs.sparkSession, path, maxDist, nParts, alignCols)
-      .scan(parts, excludeBatch)
-      .select(alignCols.map(col) ++ Seq(col("chunk"), col("piece"),
+    val joined = ProbeSweep.join("hamming", probe0,
+        hammingIndex(sigs.sparkSession, path, maxDist, nParts, alignCols), nParts,
+        excludeBatch, jKeys, shuffleSide = p =>
+          if (probeParts > 0) p.repartition(probeParts, jKeys.map(col): _*) else p) {
+      _.select(alignCols.map(col) ++ Seq(col("chunk"), col("piece"),
         col("doc_id").as("index_id"), col("sh").as("__shi")): _*)
-    val bcast = probe0.drop("part")
-    val joined =
-      if (ProbeSweep.sweeps(sigs.sparkSession, parts.length, nParts,
-        bandRows, ProbeSweep.rowBytesOf(bcast))) {
-        // corpus-scale batch: pruning degenerated — broadcast the
-        // batch into the index scan so the corpus side never shuffles
-        // (the byte-sized budget accounts for the alignCols width —
-        // see [[ProbeSweep.DefaultMaxBroadcastBytes]])
-        ProbeSweep.logDecision("hamming", path, parts.length, nParts, bandRows)
-        idx.join(broadcast(bcast), jKeys)
-      } else {
-        // trickle batch — the historical plan: pinned shuffle join
-        // (the index side is corpus-sized and must never broadcast;
-        // see minhashProbeCandsBanded), at probeParts width if set
-        val probe = if (probeParts > 0)
-          probe0.repartition(probeParts, jKeys.map(col): _*) else probe0
-        probe.hint("shuffle_hash").join(idx, jKeys)
-      }
+    }
     val matches = joined
       .select(alignCols.map(col) ++ Seq(col("probe_id"), col("index_id"),
         bit_count(col("__shp").bitwiseXOR(col("__shi"))).as("hamming")): _*)

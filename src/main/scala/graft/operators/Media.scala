@@ -274,19 +274,32 @@ object Media {
     */
   def mixAudio(seed: Long, n: Int = 130, rate: Int = 16000,
                perturbAt: Int = -1, perturbBy: Int = 0): Array[Byte] = {
-    def mix(z0: Long): Long = {
-      var z = z0 * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 27); z *= 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    val samples = Array.tabulate(n)(i => (mix(seed * n + i) % 2000L).toInt)
+    val samples = Array.tabulate(n)(i => (splitmix64(seed * n + i) % 2000L).toInt)
     if (perturbAt >= 0) samples(perturbAt) += perturbBy
     val hdr = AudioMagic ++ Array(
       ((rate >> 8) & 0xff).toByte, (rate & 0xff).toByte, 1.toByte,
       ((n >> 8) & 0xff).toByte, (n & 0xff).toByte)
     hdr ++ samples.flatMap(v =>
       Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte))
+  }
+
+  /** Full-entropy synthetic 8×8 RGB image, the [[mixAudio]] twin:
+    * a seed ≡ 4 (mod 5) is an EDITED copy of seed − 1 (one channel
+    * bumped), a planted near-dup at distance ≤ 2.
+    */
+  def mixImage(seed: Long): Array[Byte] = {
+    val base = if (seed % 5 == 4) seed - 1 else seed
+    val px = Array.tabulate(8 * 8 * 3)(i => (splitmix64(base * 192 + i) & 0xff).toByte)
+    if (seed % 5 == 4) px(60) = ((px(60) & 0xff) + 120).toByte
+    ImageMagic ++ Array[Byte](0, 8, 0, 8, 3) ++ px
+  }
+
+  /** The splitmix64 output mix, the synthetic generators' source. */
+  private[graft] def splitmix64(z0: Long): Long = {
+    var z = z0 * 0x9E3779B97F4A7C15L
+    z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
+    z ^= (z >>> 27); z *= 0x94D049BB133111EBL
+    z ^ (z >>> 31)
   }
 
   /** Audio codec seam — same per-partition `open()` lifecycle as

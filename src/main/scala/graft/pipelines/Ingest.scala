@@ -48,8 +48,7 @@ object Ingest {
     */
   def blockByTime(spark: SparkSession, store: MerlStore, client: ExplorerClient,
                   unixTs: Long, closest: String = "after"): BlockByTimeResult = {
-    val jobId = store.jobStart("block_check_hourly")
-    try {
+    audited(store, "block_check_hourly") {
       val env = client.blockByTime(unixTs, closest)
       val block = env.resultScalar.flatMap(parseLong)
       import spark.implicits._
@@ -57,13 +56,23 @@ object Ingest {
         .toDF("unix_ts", "closest", "block_number", "api_status", "api_message")
         .withColumn("ts_utc", timestamp_seconds(col("unix_ts")))
         .withColumn("inserted_at", current_timestamp()))
-      store.jobFinish(jobId, "success",
-        stats = Some(
-          s"""{"block_number":${block.getOrElse(-1L)},"status":${Json.str(env.status)}}"""))
-      BlockByTimeResult(block, env.status, env.message)
+      (BlockByTimeResult(block, env.status, env.message),
+        s"""{"block_number":${block.getOrElse(-1L)},"status":${Json.str(env.status)}}""")
+    }
+  }
+
+  /** The job audit bracket (`merlin_etl.py:218-235`): `body`'s result
+    * and stats JSON are recorded as a success, or its error before the
+    * rethrow.
+    */
+  private def audited[T](store: MerlStore, jobName: String)(body: => (T, String)): T = {
+    val jobId = store.jobStart(jobName)
+    try {
+      val (result, stats) = body
+      store.jobFinish(jobId, "success", stats = Some(stats))
+      result
     } catch {
-      case e: Throwable =>
-        store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
+      case e: Throwable => store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
     }
   }
 
@@ -79,8 +88,7 @@ object Ingest {
                       token: String, bucketStartUtc: java.time.Instant, triggerId: String,
                       pageSize: Int = 100, maxPages: Int = 10000,
                       defaultDecimals: Int = 18): SnapshotResult = {
-    val jobId = store.jobStart("holders_6h")
-    try {
+    audited(store, "holders_6h") {
       var decimals = defaultDecimals
       val rows = ArrayBuffer.empty[Row]
       var pages = 0
@@ -115,13 +123,8 @@ object Ingest {
         .withColumn("bucket_unix", unix_timestamp(col("bucket_start_utc")))
         .withColumn("quantity_18d", AmountFns.scale18(col("quantity_raw")))
       if (rows.nonEmpty) store.upsertHolders(df)
-      store.jobFinish(jobId, "success",
-        stats = Some(
-          s"""{"rows":${rows.size},"pages":$pages,"token":${Json.str(token)},"decimals":$decimals}"""))
-      SnapshotResult(rows.size, pages, token, decimals)
-    } catch {
-      case e: Throwable =>
-        store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
+      (SnapshotResult(rows.size, pages, token, decimals),
+        s"""{"rows":${rows.size},"pages":$pages,"token":${Json.str(token)},"decimals":$decimals}""")
     }
   }
 
@@ -187,18 +190,17 @@ object Ingest {
     val stream = s"tokentx:${wallet.toLowerCase}:${token.toLowerCase}"
     var lastBlock = store.cursorGet(stream).map(_._1).filter(_ > 0)
       .map(math.max(_, startBlock)).getOrElse(startBlock)
-    val jobId = store.jobStart("wallet_tx_hourly")
-    val buffered = ArrayBuffer.empty[Row]
-    var pages = 0
-    var totalRows = 0L
-    def flush(lastDonePage: Int, meta: String): Unit = if (buffered.nonEmpty) {
-      store.appendWalletTransactions(txFrame(spark, buffered.toSeq),
-        contracts = Some(Seq(token.toLowerCase)))
-      store.cursorUpsert(stream, Some(lastBlock), Some(lastDonePage), meta)
-      totalRows += buffered.size
-      buffered.clear()
-    }
-    try {
+    audited(store, "wallet_tx_hourly") {
+      val buffered = ArrayBuffer.empty[Row]
+      var pages = 0
+      var totalRows = 0L
+      def flush(lastDonePage: Int, meta: String): Unit = if (buffered.nonEmpty) {
+        store.appendWalletTransactions(txFrame(spark, buffered.toSeq),
+          contracts = Some(Seq(token.toLowerCase)))
+        store.cursorUpsert(stream, Some(lastBlock), Some(lastDonePage), meta)
+        totalRows += buffered.size
+        buffered.clear()
+      }
       var page = 1
       var lastDonePage = 0
       var meta = "{}"
@@ -245,13 +247,9 @@ object Ingest {
       // merlin_etl.py:463). This branch also covers no-new-rows runs.
       if (buffered.nonEmpty) flush(lastDonePage, meta)
       else store.cursorUpsert(stream, Some(lastBlock), Some(lastDonePage), meta)
-      store.jobFinish(jobId, "success", stats = Some(
+      (TokenTxResult(totalRows, pages, wallet, token, lastBlock),
         s"""{"rows":$totalRows,"pages":$pages,"wallet":${Json.str(wallet)},""" +
-          s""""token":${Json.str(token)},"last_block":$lastBlock}"""))
-      TokenTxResult(totalRows, pages, wallet, token, lastBlock)
-    } catch {
-      case e: Throwable =>
-        store.jobFinish(jobId, "error", error = Some(e.toString)); throw e
+          s""""token":${Json.str(token)},"last_block":$lastBlock}""")
     }
   }
 

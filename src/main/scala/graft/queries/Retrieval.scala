@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.store.SegmentStore
+import graft.store.{SegmentStore, VersionStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -179,14 +179,6 @@ object Retrieval {
     */
   val Bm25Buckets = 64
 
-  /** Materialize the inverted index: term-bucketed postings (sorted
-    * by term within each bucket for row-group pruning), a per-term
-    * document-frequency table in the same bucket layout, and the
-    * 1-row corpus stats. df/stats are fixed at build time — probing
-    * never recomputes corpus statistics, which is what makes the
-    * probe's cost independent of corpus size. The bucket count is the
-    * postings' geometry ([[bm25Postings]]).
-    */
   /** The index-layout frame behind [[writeBm25Index]]: bucketed
     * posting rows, shared with the streaming appender
     * ([[graft.streaming.Incremental.bm25IndexStream]]) so batch build
@@ -196,6 +188,14 @@ object Retrieval {
     postingsOf(toks)
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
 
+  /** Materialize the inverted index: term-bucketed postings (sorted
+    * by term within each bucket for row-group pruning), a per-term
+    * document-frequency table in the same bucket layout, and the
+    * 1-row corpus stats. df/stats are fixed at build time — probing
+    * never recomputes corpus statistics, which is what makes the
+    * probe's cost independent of corpus size. The bucket count is the
+    * postings' geometry ([[bm25Postings]]).
+    */
   def writeBm25Index(toks: DataFrame, path: String,
                      nBuckets: Int = Bm25Buckets): Unit = {
     // the postings are a SegmentStore seed, so a batch-built index can
@@ -221,28 +221,39 @@ object Retrieval {
     * Docs are counted from distinct posting (doc_id, dl) pairs, so a
     * zero-token doc leaves the denominators at refresh — it can never
     * match a query either way.
+    * df (`terms`) and stats land together as the next version of the
+    * index's `df/` [[graft.store.VersionStore]]; reading only the
+    * postings, one call also upgrades an unversioned index.
     */
   def writeBm25Stats(spark: SparkSession, path: String): Unit = {
     val postings = bm25Postings(spark, path, None).read()
       .select("term", "doc_id", "dl", "bucket")
-    postings.groupBy("term", "bucket")
-      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/terms")
-    postings.select("doc_id", "dl").distinct()
-      .agg(
-        count(lit(1)).cast("double").as("n_docs"),
-        avg(col("dl")).as("avgdl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    val store = bm25Stats(spark, path)
+    store.commit(store.latest.fold(0L)(_ + 1)) { dir =>
+      postings.groupBy("term", "bucket")
+        .agg(countDistinct(col("doc_id")).cast("double").as("df"))
+        .repartition(col("bucket"))
+        .sortWithinPartitions(col("term"))
+        .write.partitionBy("bucket").parquet(s"$dir/terms")
+      postings.select("doc_id", "dl").distinct()
+        .agg(
+          count(lit(1)).cast("double").as("n_docs"),
+          avg(col("dl")).as("avgdl"))
+        .coalesce(1).write.parquet(s"$dir/stats")
+    }
   }
+
+  private def bm25Stats(spark: SparkSession, path: String): VersionStore =
+    VersionStore(spark, s"$path/df")
 
   /** BM25 top-k against a [[writeBm25Index]] layout. The query terms'
     * buckets are computed driver-side (bounded by |terms|) and become
     * a partition-pruning `bucket IN (...)` predicate on both the
     * postings and the df scans; the term equi-filter pushes into the
-    * pruned row groups. Identical scorer to [[bm25]] —
-    * RetrievalSpec gates indexed ≡ direct.
+    * pruned row groups. df and corpus stats come from the newest
+    * committed [[writeBm25Stats]] refresh; an index with none fails
+    * loud. Identical scorer to [[bm25]] — RetrievalSpec gates
+    * indexed ≡ direct.
     */
   def bm25TopKIndexed(spark: SparkSession, path: String,
                       queryBatch: Seq[(Int, Seq[String])], k: Int = TopK,
@@ -258,11 +269,15 @@ object Retrieval {
     val tf = bm25Postings(spark, path, Some(nBuckets)).scan(buckets, None)
       .join(broadcast(termSet), "term")
       .select("term", "doc_id", "dl", "tf")
-    val dfc = spark.read.parquet(s"$path/terms")
+    val statsStore = bm25Stats(spark, path)
+    val dir = statsStore.path(statsStore.latest.getOrElse(throw new IllegalStateException(
+      s"BM25 index at $path has no committed df/stats version; run " +
+        "Retrieval.writeBm25Stats(spark, path) once to build it from the postings")))
+    val dfc = spark.read.parquet(s"$dir/terms")
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(termSet), "term")
       .select("term", "df")
-    val stats = spark.read.parquet(s"$path/stats")
+    val stats = spark.read.parquet(s"$dir/stats")
     scoreAndRank(tf, dfc, stats, queryTerms, k)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.{TextFns, TimeFns}
 import graft.operators.{Dedup, LanguageModel, Media, Similarity}
-import graft.store.SegmentStore
+import graft.store.{SegmentStore, VersionStore}
 import graft.store.SegmentStore.writeBatch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,17 +21,16 @@ import org.apache.spark.storage.StorageLevel
   * Every stream this object runs to completion goes through one
   * runner, [[runAvailableNow]], whose contract the per-stream docs do
   * not restate:
-  *  - replay-safe segments: `foreachBatch` is at-least-once on side
-  *    effects, so per-batch output is one `__batch=<batchId>` segment
-  *    ([[SegmentStore.writeBatch]], [[SegmentStore.append]]) and a
-  *    batch replayed after a crash between its write and its
-  *    checkpoint commit rewrites its own segment instead of
-  *    duplicating rows (readers that don't want the provenance column
-  *    just don't select it). Index probes leave out the current
-  *    batch's segment ([[SegmentStore.scan]]), so a replay reproduces
-  *    its original decisions instead of colliding with its own
-  *    appended rows. [[weightedReservoirStream]] and
-  *    [[certifiedTopKStream]] document their own sink layouts.
+  *  - replay-safe storage: `foreachBatch` is at-least-once on side
+  *    effects, so a batch replayed after a crash between its writes
+  *    and its checkpoint commit must rewrite, never duplicate, through
+  *    one of two protocols. Segments: appended output is one
+  *    `__batch=<batchId>` segment ([[SegmentStore.append]],
+  *    [[SegmentStore.writeBatch]]), and index probes leave out the
+  *    current batch's segment ([[SegmentStore.scan]]), so a replay
+  *    reproduces its original decisions. Versions: a small table
+  *    replaced whole is version `batchId` of a [[VersionStore]], which
+  *    a replay rebuilds from the same kept predecessor.
   *  - recovery before start: any crashed compaction swap of the
   *    stream's index stores is completed before the stream starts
   *    ([[SegmentStore.recover]]), as every probe's read does too — a
@@ -345,139 +344,49 @@ object Incremental {
     * [[graft.operators.Packing.weightedSample]] over all documents
     * seen so far (spec-asserted across checkpointed restarts).
     *
-    * State is the K-row reservoir parquet itself — bounded by K at
-    * any stream length, no keyed state store; the merge is
-    * idempotent (duplicate re-deliveries carry identical keys and
-    * dedup by id), so replay after a checkpoint loss converges to
-    * the same reservoir.
-    *
-    * Crash safety: each batch writes a NEW `__v=<batchId>` snapshot
-    * directory and the merge reads the latest COMMITTED one
-    * (marker-carrying — [[readReservoir]]), never overwriting the
-    * file set it is reading. An in-place overwrite (the first-cut
-    * form) had a delete-then-write window in which a crash lost the
-    * reservoir unrecoverably — committed source batches are never
-    * re-read, so offset replay could not reconstruct it. A replayed
-    * batch whose own snapshot is NOT yet committed re-merges onto the
-    * pre-batch snapshot and writes its `__v` dir fresh; a replayed
-    * batch whose snapshot IS already committed (crash landed between
-    * the marker write and the streaming checkpoint commit — by then
-    * the pre-batch snapshot may already be pruned) is SKIPPED: the
-    * committed `__v=batchId` dir is byte-for-byte the merge this
-    * replay would recompute (the E-S key is a pure function of the
-    * data), so re-running it would only read-and-overwrite the same
-    * path, which Spark rejects. Older snapshots are pruned
-    * best-effort after each commit.
+    * State is the K-row reservoir itself, bounded by K at any stream
+    * length: version n of a [[VersionStore]] at `reservoirDir` is the
+    * reservoir after batch n. A replay re-merges onto the same kept
+    * predecessor, and the pure key makes the result identical.
     */
   def weightedReservoirStream(spark: SparkSession, srcDir: String,
                               reservoirDir: String, checkpointDir: String,
                               k: Int = 50): Unit =
     runAvailableNow(spark, srcDir, DocsSchema, checkpointDir) { (batch, batchId) =>
-      val prev = latestReservoirVersion(batch.sparkSession, reservoirDir)
-      // replay wedge guard: a committed __v == batchId means this
-      // batch's merge already landed (the crash fell between the
-      // marker write and the checkpoint commit). Re-merging would
-      // read __v=batchId while overwriting the same path — Spark
-      // rejects that — and the pre-batch snapshot may be pruned;
-      // the committed snapshot IS this batch's deterministic
-      // result, so the replay is a no-op. (if/else, NOT an early
-      // return — `return` in a closure throws NonLocalReturnControl,
-      // which on the streaming thread would fail the query.)
-      //
-      // ONLY equality is a legitimate replay: under the documented
-      // crash window prev can never be strictly ahead of the batch
-      // being delivered. prev > batchId means the streaming
-      // checkpoint was lost/reset while the reservoir dir survived
-      // (batch ids restarted at 0) — silently skipping would commit
-      // every new batch up to the old version as processed and DROP
-      // its data, so fail loudly instead.
-      if (prev.exists(_ > batchId)) {
-        throw new IllegalStateException(
-          s"weightedReservoirStream: committed reservoir snapshot __v=${prev.get} " +
-          s"is ahead of delivered batch $batchId — streaming checkpoint and " +
-          s"reservoir dir '$reservoirDir' are out of sync (checkpoint reset/loss " +
-          "with a surviving reservoir). Refusing to skip new data: clear the " +
-          "reservoir dir or restore the matching checkpoint.")
-      } else if (!prev.contains(batchId)) {
-        val staged = batch.select(col("doc_id"),
-          size(TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
-        // weight clamped to MaxSampleWeight, NOT normalize=true: the
-        // merge compares key_micro ACROSS batches, so the key must
-        // stay a pure function of (id, weight) — a per-batch max
-        // rescale would make keys incomparable between batches. The
-        // clamp keeps the key pure and defuses the poison pill a
-        // single ≥1e6-token doc would otherwise arm (raise_error in
-        // the key → batch never commits → every restart replays and
-        // re-raises); docs at/beyond the clamp tie at max weight
-        // (id-ordered among themselves), which is the documented
-        // resolution limit, not data loss.
-        val batchTop = graft.operators.Packing.weightedSample(
-          staged, col("doc_id"),
-          least(col("n_tokens") + 1,
-            lit(graft.operators.Packing.MaxSampleWeight.toLong)), k)
-          .select(col("doc_id"), col("n_tokens"), col("key_micro"))
-        val merged = prev match {
-          case None => batchTop
-          case Some(v) => batchTop.unionByName(
-              batch.sparkSession.read.parquet(s"$reservoirDir/__v=$v"))
-            .dropDuplicates("doc_id")
-            .orderBy(col("key_micro").desc, col("doc_id").asc)
-            .limit(k)
-        }
-        // new snapshot dir — the read set above is never touched, so
-        // a crash at ANY point leaves the previous committed snapshot
-        // intact and the replayed batch simply re-merges onto it. The
-        // explicit marker (created only after the write returns) is
-        // the commit record — the session disables _SUCCESS files
-        merged.write.mode("overwrite").parquet(s"$reservoirDir/__v=$batchId")
-        val fs = new org.apache.hadoop.fs.Path(reservoirDir)
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        fs.createNewFile(new org.apache.hadoop.fs.Path(
-          s"$reservoirDir/__v=$batchId", CommitMarker))
-        // prune superseded snapshots (best-effort: a crash here only
-        // leaves extra committed dirs; reads always pick the latest)
-        reservoirVersions(batch.sparkSession, reservoirDir)
-          .filter(_ < batchId)
-          .foreach(v => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$reservoirDir/__v=$v"), true))
-      }
+      val s = batch.sparkSession
+      val store = VersionStore(s, reservoirDir)
+      val prev = store.before(batchId)
+      val staged = batch.select(col("doc_id"),
+        size(TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
+      // weight clamped to MaxSampleWeight, NOT normalize=true: the
+      // merge compares key_micro ACROSS batches, so the key must stay
+      // a pure function of (id, weight). The clamp also defuses the
+      // poison pill of one ≥1e6-token doc (raise_error in the key on
+      // every replay); docs at the clamp tie at max weight, id-ordered.
+      val batchTop = graft.operators.Packing.weightedSample(
+        staged, col("doc_id"),
+        least(col("n_tokens") + 1,
+          lit(graft.operators.Packing.MaxSampleWeight.toLong)), k)
+        .select(col("doc_id"), col("n_tokens"), col("key_micro"))
+      val merged = prev.fold(batchTop)(v => batchTop.unionByName(s.read.parquet(store.path(v)))
+        .dropDuplicates("doc_id")
+        .orderBy(col("key_micro").desc, col("doc_id").asc)
+        .limit(k))
+      store.commit(batchId)(merged.write.parquet)
     }
 
-  /** Marker file recording a fully-written reservoir snapshot
-    * (written AFTER the parquet write returns — the session disables
-    * the committer's own _SUCCESS files).
+  /** The current reservoir — the latest committed version (empty
+    * K-schema frame if none yet).
     */
-  private val CommitMarker = "_graft_committed"
-
-  /** Committed (marker-carrying) reservoir snapshot versions under
-    * `reservoirDir/__v=<batchId>/`, ascending.
-    */
-  private def reservoirVersions(spark: SparkSession, reservoirDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(reservoirDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__v="))
-      .filter(s => fs.exists(new org.apache.hadoop.fs.Path(s.getPath, CommitMarker)))
-      .map(_.getPath.getName.stripPrefix("__v=").toLong)
-      .sorted
-  }
-
-  private def latestReservoirVersion(spark: SparkSession,
-                                     reservoirDir: String): Option[Long] =
-    reservoirVersions(spark, reservoirDir).lastOption
-
-  /** The current reservoir — the latest committed snapshot (empty
-    * K-schema frame if none yet). The read-side twin of
-    * [[weightedReservoirStream]]'s versioned layout.
-    */
-  def readReservoir(spark: SparkSession, reservoirDir: String): DataFrame =
-    latestReservoirVersion(spark, reservoirDir) match {
-      case Some(v) => spark.read.parquet(s"$reservoirDir/__v=$v")
+  def readReservoir(spark: SparkSession, reservoirDir: String): DataFrame = {
+    val store = VersionStore(spark, reservoirDir)
+    store.latest match {
+      case Some(v) => spark.read.parquet(store.path(v))
       case None => spark.emptyDataFrame
         .withColumn("doc_id", lit(0L)).withColumn("n_tokens", lit(0L))
         .withColumn("key_micro", lit(0L)).limit(0)
     }
+  }
 
   /** Streaming exact-substring scrub firewall — the frozen-model twin
     * of the batch ExactSubstr removal
@@ -1310,20 +1219,23 @@ object Incremental {
     * conditions — so unlike [[heavyHittersStream]]'s lower bounds, the
     * emitted ranks are EXACT or the batch refuses loudly.
     *
-    * Per micro-batch, inside `foreachBatch`:
+    * Per micro-batch, inside `foreachBatch`, after the summaries'
+    * out-of-sync check ([[VersionStore.before]]; after a checkpoint
+    * reset, lake segment 0 would double-count the surviving segments):
     *  1. the batch lands in `stateDir/lake` through the replay-safe
     *     `__batch` write, keeping lake counts exact;
-    *  2. the per-group MG summary table is advanced as a VERSION
-    *     `stateDir/summaries/v=<batchId>` = COMBINE(previous version,
-    *     batch MG aggregate): counters add per (group, item), then the
-    *     (capacity+1)-th largest weight subtracts from all and
-    *     non-positive entries drop — the Misra–Gries merge of Agarwal
-    *     et al., "Mergeable Summaries" (PODS'12), as three relational
-    *     ops. Versioning makes replay idempotent: a re-run of batch n
-    *     rebuilds v=n from v<n deterministically instead of
-    *     double-merging. Summary error after any merge sequence stays
-    *     ≤ N/capacity, so every item with true frequency > N/capacity
-    *     is a candidate — the certification bar below;
+    *  2. the per-group MG summary table, a [[VersionStore]] at
+    *     `stateDir/summaries`, is advanced to version `batchId` =
+    *     COMBINE(previous version, batch MG aggregate): counters add
+    *     per (group, item), then the (capacity+1)-th largest weight
+    *     subtracts from all and non-positive entries drop — the
+    *     Misra–Gries merge of Agarwal et al., "Mergeable Summaries"
+    *     (PODS'12), as three relational ops. Versioning makes replay
+    *     idempotent: a re-run of batch n rebuilds version n from its
+    *     kept predecessor instead of double-merging. Summary error
+    *     after any merge sequence stays ≤ N/capacity, so every item
+    *     with true frequency > N/capacity is a candidate — the
+    *     certification bar below;
     *  3. groups TOUCHED by the batch are recounted exactly against the
     *     full lake (semi-join on candidates — only candidate rows
     *     shuffle), certified per group (full coverage, or k-th count
@@ -1342,20 +1254,13 @@ object Incremental {
     val schema = StructType(Seq(
       StructField("grp", StringType), StructField("item", StringType)))
     val lakeDir = s"$stateDir/lake"
-    val summDir = s"$stateDir/summaries"
-
-    def versions(s: SparkSession): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(summDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
-    }
 
     runAvailableNow(spark, srcDir, schema, checkpointDir) { (batch0, batchId) =>
       val s = batch0.sparkSession
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
+      val summaries = VersionStore(s, s"$stateDir/summaries")
+      val prevV = summaries.before(batchId)
       // micro-batch-sized; consumed by the lake write, the summary
       // merge, and the touched-group set
       val batch = batch0.filter(col("item").isNotNull).localCheckpoint()
@@ -1364,8 +1269,7 @@ object Incremental {
       writeBatch(batch, lakeDir, batchId)
 
       // 2. versioned MG COMBINE
-      val prevV = versions(s).filter(_ < batchId).sorted.lastOption
-      val prev = prevV.map(v => s.read.parquet(s"$summDir/v=$v"))
+      val prev = prevV.map(v => s.read.parquet(summaries.path(v)))
         .getOrElse(Seq.empty[(String, String, Long)].toDF("grp", "item", "w"))
       val bSumm = batch.groupBy(col("grp"))
         .agg(graft.operators.HeavyHitters.mgSketch(col("item"), capacity).as("__mg"))
@@ -1381,20 +1285,14 @@ object Incremental {
           max(when(col("__rnk") === capacity + 1, col("w"))).over(wGrp))
         .withColumn("w", col("w") - coalesce(col("__wth"), lit(0L)))
         .filter(col("w") > 0).select(col("grp"), col("item"), col("w"))
-      merged.write.mode("overwrite").parquet(s"$summDir/v=$batchId")
-      // GC: keep the current and one prior version (the only one a
-      // restart can replay from under AvailableNow's one-batch redo)
-      versions(s).filter(v => v < batchId && !prevV.contains(v)).foreach { v =>
-        val p = new org.apache.hadoop.fs.Path(s"$summDir/v=$v")
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+      summaries.commit(batchId)(merged.write.parquet)
 
       // 3. exact recount + certification for touched groups
       val touched = batch.select(col("grp")).distinct()
       val lake = s.read.parquet(lakeDir)
         .join(touched, Seq("grp"), "left_semi")
         .filter(col("item").isNotNull)
-      val cands = s.read.parquet(s"$summDir/v=$batchId")
+      val cands = s.read.parquet(summaries.path(batchId))
         .join(touched, Seq("grp"), "left_semi").select(col("grp"), col("item"))
       val confirmed = lake.join(cands, Seq("grp", "item"), "left_semi")
         .groupBy(col("grp"), col("item")).agg(count(lit(1)).as("n"))

@@ -288,14 +288,7 @@ object ScaleRehearsal {
     // the per-query ANCHOR (the sf0.1 run in this same session) is
     // what makes the ratios comparable across rounds without session
     // forensics — BASELINE.md tables record ratios, not walls.
-    def probeOverheadMs(): Double = {
-      spark.sparkContext.parallelize(Seq(1), 1).count() // warm
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 50) { spark.sparkContext.parallelize(Seq(1), 1).count(); i += 1 }
-      math.round((System.nanoTime() - t0) / 1e6 / 50 * 100) / 100.0
-    }
-    val overheadPreMs = probeOverheadMs()
+    val overheadPreMs = graft.Bench.probeJobOverheadMs(spark)
 
     val mem = new MemListener
     spark.sparkContext.addSparkListener(mem)
@@ -333,7 +326,7 @@ object ScaleRehearsal {
         println(s"""{"metric":"scale_rehearsal","dir":"$dir","query":"$name","error":${graft.Json.str(msg)}}""")
       }
     }
-    val overheadPostMs = probeOverheadMs()
+    val overheadPostMs = graft.Bench.probeJobOverheadMs(spark)
     // the self-contained summary: every ×R wall ships WITH its
     // same-session sf0.1 anchor and both ratios (first-run: includes
     // per-scale one-time costs; steady: pure compute). Cross-round

@@ -261,22 +261,9 @@ object StreamRehearsal {
     // (~4/5·families admitted, not a degenerate singleton).
     label = "phash_dedup_stream"
     if (wanted(label)) locally {
-      def mix(z0: Long): Long = {
-        var z = z0 * 0x9E3779B97F4A7C15L
-        z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
-        z ^= (z >>> 27); z *= 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
-      def imgOf(seed: Long): Array[Byte] = {
-        val base = if (seed % 5 == 4) seed - 1 else seed
-        val px = Array.tabulate(8 * 8 * 3)(i => (mix(base * 192 + i) & 0xff).toByte)
-        if (seed % 5 == 4) px(60) = ((px(60) & 0xff) + 120).toByte
-        graft.operators.Media.ImageMagic ++
-          Array[Byte](0, 8, 0, 8, 3) ++ px
-      }
       val imgs = spark.read.parquet(s"$fixture/events.parquet")
         .select(col("event_id").as("id")).filter(col("id") % 40 === 0)
-        .as[Long].map(id => (id, imgOf(id / 160)))
+        .as[Long].map(id => (id, graft.operators.Media.mixImage(id / 160)))
         .toDF("id", "payload")
         .localCheckpoint()
       val src = s"$work/ph_src"; val idx = s"$work/ph_idx"
@@ -333,17 +320,11 @@ object StreamRehearsal {
     // unique frame 4 — a 2-of-3 ALIGNED near-dup across waves
     label = "video_phash_dedup_stream"
     if (wanted(label)) locally {
-      def mix(z0: Long): Long = {
-        var z = z0 * 0x9E3779B97F4A7C15L
-        z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
-        z ^= (z >>> 27); z *= 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
       def frameOf(clipSeed: Long, f: Int): Array[Byte] = {
         val dup = clipSeed % 5 == 4 && f < 3
         val base = if (dup) clipSeed - 1 else clipSeed
         val px = Array.tabulate(8 * 8 * 3)(i =>
-          (mix((base * 6 + f) * 192 + i) & 0xff).toByte)
+          (graft.operators.Media.splitmix64((base * 6 + f) * 192 + i) & 0xff).toByte)
         if (dup) px(60) = ((px(60) & 0xff) + 120).toByte
         graft.operators.Media.ImageMagic ++
           Array[Byte](0, 8, 0, 8, 3) ++ px
@@ -377,24 +358,11 @@ object StreamRehearsal {
     // exercising the stage without fixture-specific tuning.
     label = "media_firewall_stream"
     if (wanted(label)) locally {
-      def mix(z0: Long): Long = {
-        var z = z0 * 0x9E3779B97F4A7C15L
-        z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
-        z ^= (z >>> 27); z *= 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
-      def imgOf(seed: Long): Array[Byte] = {
-        val base = if (seed % 5 == 4) seed - 1 else seed
-        val px = Array.tabulate(8 * 8 * 3)(i => (mix(base * 192 + i) & 0xff).toByte)
-        if (seed % 5 == 4) px(60) = ((px(60) & 0xff) + 120).toByte
-        graft.operators.Media.ImageMagic ++
-          Array[Byte](0, 8, 0, 8, 3) ++ px
-      }
       val imgs = spark.read.parquet(s"$fixture/events.parquet")
         .select(col("event_id").as("id")).filter(col("id") % 40 === 0)
         .as[Long].map(id =>
           (id, if (id % 440 == 0) "not an image".getBytes("UTF-8")
-               else imgOf(id / 160)))
+               else graft.operators.Media.mixImage(id / 160)))
         .toDF("id", "payload")
         .localCheckpoint()
       val src = s"$work/mf_src"; val idx = s"$work/mf_idx"

@@ -276,6 +276,81 @@ class IncrementalSpec extends SparkSpec {
       s"expected the certification refusal, got: $e")
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  /** The equality case's two certified runs (batches 0 and 1) under
+    * `base`; returns (src, state, out, ck) and the snapshot function
+    * of out, the lake rows with their segment ids and the newest
+    * summary version.
+    */
+  private def certifiedTwoRuns(base: String)
+      : ((String, String, String, String), () => (Seq[String], Seq[String], Seq[String])) = {
+    val ss = spark; import ss.implicits._
+    val (src, state, out, ck) = (base + "/src", base + "/state", base + "/out", base + "/ck")
+    (Seq.fill(30)(("A", "a")) ++ Seq.fill(20)(("A", "b")) ++ Seq.fill(10)(("A", "c")) ++
+      (1 to 20).map(i => ("A", s"noise$i")) ++ Seq.fill(5)(("B", "x")) ++
+      Seq.fill(3)(("B", "y")) ++ Seq(("B", "z"))).toDF("grp", "item").write.parquet(src)
+    Incremental.certifiedTopKStream(ss, src, state, out, ck, k = 3, capacity = 16)
+    (Seq.fill(25)(("A", "c")) ++ Seq.fill(4)(("A", "a"))).toDF("grp", "item")
+      .write.mode("append").parquet(src)
+    Incremental.certifiedTopKStream(ss, src, state, out, ck, k = 3, capacity = 16)
+    def snapshot() = {
+      val summaries = new java.io.File(s"$state/summaries")
+      val newest = summaries.listFiles().filter(_.isDirectory).map(_.getName)
+        .maxBy(_.split('=').last.toLong)
+      (sortedRows(ss.read.parquet(out).select("grp", "item", "n", "rnk")),
+        sortedRows(ss.read.parquet(s"$state/lake").select("grp", "item", "__batch")),
+        sortedRows(ss.read.parquet(s"$summaries/$newest").select("grp", "item", "w")))
+    }
+    ((src, state, out, ck), () => snapshot())
+  }
+
+  test("certifiedTopKStream: a replayed last batch leaves out, the lake and the newest summary identical") {
+    val base = Files.createTempDirectory("cert_topk_replay").toString
+    val ((src, state, out, ck), snapshot) = certifiedTwoRuns(base)
+    val committed = snapshot()
+    // a crash between the batch's writes and its checkpoint commit:
+    // batch 1 is delivered again over the state it already wrote
+    val commit = new org.apache.hadoop.fs.Path(s"$ck/commits/1")
+    assert(commit.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(commit, false))
+    Incremental.certifiedTopKStream(spark, src, state, out, ck, k = 3, capacity = 16)
+    assert(snapshot() == committed)
+  }
+
+  test("certifiedTopKStream: a checkpoint reset with surviving state fails out of sync before any write") {
+    val base = Files.createTempDirectory("cert_topk_desync").toString
+    val ((src, state, out, ck), snapshot) = certifiedTwoRuns(base)
+    val committed = snapshot()
+    // batch ids restart at 0 and batch 0 now carries every source file:
+    // rewriting lake segment 0 beside the surviving segment 1 would
+    // count batch 1's rows twice
+    new scala.reflect.io.Directory(new java.io.File(ck)).deleteRecursively()
+    val e = intercept[Exception] {
+      Incremental.certifiedTopKStream(spark, src, state, out, ck, k = 3, capacity = 16)
+    }
+    assert(messages(e).exists(_.contains("out of sync")), s"expected out of sync, got: $e")
+    assert(snapshot() == committed, "the refused batch must write nothing")
+  }
+
+  test("certifiedTopKStream refuses summaries in the unmarked v=<n> layout") {
+    val ss = spark; import ss.implicits._
+    val base = Files.createTempDirectory("cert_topk_layout").toString
+    Seq(("A", "a"), ("A", "b")).toDF("grp", "item").write.parquet(base + "/src")
+    Seq(("A", "a", 3L)).toDF("grp", "item", "w").write.parquet(base + "/state/summaries/v=0")
+    val e = intercept[Exception] {
+      Incremental.certifiedTopKStream(ss, base + "/src", base + "/state", base + "/out",
+        base + "/ck", k = 3, capacity = 16)
+    }
+    assert(messages(e).exists(_.contains("not a version directory")),
+      s"expected the layout refusal, got: $e")
+    assert(!new java.io.File(base + "/state/lake").exists() &&
+      !new java.io.File(base + "/out").exists(), "the refused batch must write nothing")
+  }
+
   test("qualityFilterStream equals the batch Pareto filter across incremental runs") {
     val ss = spark; import ss.implicits._
     import org.apache.spark.sql.functions._
@@ -480,7 +555,7 @@ class IncrementalSpec extends SparkSpec {
     fs.delete(torn, true)
   }
 
-  test("weightedReservoirStream: a replayed batch whose snapshot already committed is skipped, not re-merged") {
+  test("weightedReservoirStream: a replayed batch whose snapshot already committed re-derives it from the kept predecessor") {
     val ss = spark; import ss.implicits._
     import org.apache.spark.sql.functions._
     val base = Files.createTempDirectory("wres_replay").toString
@@ -495,15 +570,13 @@ class IncrementalSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(committed.size == 10)
 
-    // the advisor's wedge: a crash lands BETWEEN the snapshot's
-    // commit-marker write and the streaming checkpoint commit, so on
-    // restart the replayed batch sees its own snapshot as the latest
-    // committed version (and the pre-batch snapshot is already
-    // pruned). Simulated by dropping the checkpoint: batch 0 replays
-    // over a reservoir that already committed batch 0. Pre-fix this
-    // threw "Cannot overwrite a path that is also being read from"
-    // on EVERY restart; the fix skips the batch (the committed
-    // snapshot IS the deterministic merge this replay would redo).
+    // a crash lands BETWEEN the snapshot's commit-marker write and
+    // the streaming checkpoint commit, so on restart the replayed
+    // batch sees its own snapshot as the latest committed version.
+    // Simulated by dropping the checkpoint: batch 0 replays over a
+    // reservoir that already committed batch 0. The replay rebuilds
+    // its version from the kept predecessor (none for batch 0), and
+    // the pure E-S key makes the rebuilt snapshot the committed one.
     val fs = new org.apache.hadoop.fs.Path(ck)
       .getFileSystem(ss.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(ck), true)
@@ -1338,6 +1411,87 @@ class IncrementalSpec extends SparkSpec {
     val direct2 = Retrieval.bm25(toToks(mkDocs(1 to 45)), queries, k = 50)
     assert(rows(probe2) == rows(direct2), "post-refresh probe diverged after run 2")
     assert(rows(probe2) != rows(probe1), "run 2 must actually add indexed docs")
+  }
+
+  private def bm25Docs(ids: Range): org.apache.spark.sql.DataFrame = {
+    val ss = spark; import ss.implicits._
+    ids.map { i =>
+      (i.toLong, s"alpha beta ${if (i % 3 == 0) "gamma gamma" else "delta"} w$i")
+    }.toDF("doc_id", "text")
+  }
+
+  private def bm25Toks(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(col("doc_id"), graft.functions.TextFns.tokens(col("text")).as("__toks"))
+
+  private def bm25Rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+  test("writeBm25Stats: a crash at any filesystem step leaves probes on the old or the new statistics") {
+    import graft.queries.Retrieval
+    val nB = 4 // few bucket directories keep the step count small
+    val queries = Seq(1 -> Seq("gamma"), 2 -> Seq("alpha", "delta"))
+    def probe(idx: String) =
+      bm25Rows(Retrieval.bm25TopKIndexed(spark, idx, queries, k = 50, nBuckets = nB))
+    val base = Files.createTempDirectory("bm25_refresh_crash")
+    val template = base.resolve("template")
+    val tidx = CrashFs.root(spark, template.toString) + "/idx"
+    Retrieval.writeBm25Index(bm25Toks(bm25Docs(1 to 20)), tidx, nB)
+    bm25Docs(21 to 35).write.parquet(s"$base/src")
+    Incremental.bm25IndexStream(spark, s"$base/src", tidx, s"$base/ck", nB)
+    // before: new postings scored with the build's df/stats; after:
+    // the direct scorer over every document
+    val before = probe(tidx)
+    val after = bm25Rows(Retrieval.bm25(bm25Toks(bm25Docs(1 to 35)), queries, k = 50))
+    assert(before != after, "the refresh must change the ranking")
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val s = Files.walk(from)
+      try s.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+      finally s.close()
+    }
+    var k = 1
+    var crashed = true
+    while (crashed) {
+      assert(k <= 500, "writeBm25Stats never completed uncrashed")
+      val dir = base.resolve(s"k$k")
+      copyTree(template, dir)
+      val idx = CrashFs.root(spark, dir.toString) + "/idx"
+      CrashFs.arm(k)
+      crashed =
+        try { Retrieval.writeBm25Stats(spark, idx); false }
+        catch { case _: Exception => true }
+        finally CrashFs.disarm()
+      val got = probe(idx)
+      assert(got == before || got == after,
+        s"crash at filesystem step $k: the probe mixed old and new statistics")
+      if (!crashed) assert(got == after, "the completed refresh must restore direct parity")
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+      k += 1
+    }
+    info(s"crash points swept: ${k - 2}")
+    assert(k - 2 > 1)
+    new scala.reflect.io.Directory(base.toFile).deleteRecursively()
+  }
+
+  test("a BM25 index without a committed df/stats version fails naming writeBm25Stats; one refresh upgrades it") {
+    import graft.queries.Retrieval
+    val idx = Files.createTempDirectory("bm25_layout").toString
+    val queries = Seq(1 -> Seq("gamma"), 2 -> Seq("alpha", "delta"))
+    Retrieval.writeBm25Index(bm25Toks(bm25Docs(1 to 20)), idx)
+    // the unversioned layout: df and corpus stats written in place at
+    // the index root
+    new scala.reflect.io.Directory(new java.io.File(s"$idx/df")).deleteRecursively()
+    val postings = spark.read.parquet(s"$idx/postings")
+    postings.groupBy("term", "bucket")
+      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$idx/terms")
+    postings.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
+      .write.mode("overwrite").parquet(s"$idx/stats")
+    val e = intercept[Exception](Retrieval.bm25TopKIndexed(spark, idx, queries, k = 50).collect())
+    assert(messages(e).exists(_.contains("writeBm25Stats")), s"expected the named refusal, got: $e")
+    Retrieval.writeBm25Stats(spark, idx)
+    assert(bm25Rows(Retrieval.bm25TopKIndexed(spark, idx, queries, k = 50)) ==
+      bm25Rows(Retrieval.bm25(bm25Toks(bm25Docs(1 to 20)), queries, k = 50)))
   }
 
   test("bm25IndexStream appender fails loud (before appending) on a bucket-count mismatch") {
